@@ -132,6 +132,9 @@ case class VecSum(child: Expression) extends UnaryExpression {
   *
   * `offset`/`count` must be foldable ints (they are structural literals —
   * which plane table slice and how many planes), pinned at analysis time.
+  * A slice past the end of the plane table, or a null plane inside it,
+  * fails with an IllegalArgumentException naming hp_sig (interpreted and
+  * codegen alike) instead of an index or null-pointer error.
   */
 case class HyperplaneSig(emb: Expression, planes: Expression,
     offset: Expression, count: Expression) extends Expression {
@@ -154,6 +157,11 @@ case class HyperplaneSig(emb: Expression, planes: Expression,
 
   private lazy val offsetVal: Int = offset.eval().asInstanceOf[Int]
   private lazy val countVal: Int = count.eval().asInstanceOf[Int]
+  // error-message prefixes shared by eval and the generated code (no
+  // quotes or backslashes, so they embed as Java string literals as-is)
+  private lazy val slicePrefix: String =
+    s"hp_sig: planes slice [$offsetVal, ${offsetVal + countVal}) exceeds the plane table's "
+  private val nullPlanePrefix = "hp_sig: null plane at index "
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val e = emb.eval(input)
@@ -162,9 +170,13 @@ case class HyperplaneSig(emb: Expression, planes: Expression,
     if (p == null) return null
     val ea = e.asInstanceOf[ArrayData]
     val pa = p.asInstanceOf[ArrayData]
+    if (offsetVal < 0 || offsetVal + countVal > pa.numElements())
+      throw new IllegalArgumentException(slicePrefix + pa.numElements() + " rows")
     var acc = 0L
     var k = 0
     while (k < countVal) {
+      if (pa.isNullAt(offsetVal + k))
+        throw new IllegalArgumentException(nullPlanePrefix + (offsetVal + k))
       val plane = pa.getArray(offsetVal + k)
       val n = math.min(ea.numElements(), plane.numElements())
       var sm = 0.0
@@ -197,8 +209,15 @@ case class HyperplaneSig(emb: Expression, planes: Expression,
         boolean ${ev.isNull} = ${embCode.isNull} || ${plCode.isNull};
         long ${ev.value} = 0L;
         if (!${ev.isNull}) {
+          if ($offsetVal < 0 || ${offsetVal + countVal} > ${plCode.value}.numElements()) {
+            throw new IllegalArgumentException(
+              "$slicePrefix" + ${plCode.value}.numElements() + " rows");
+          }
           long $acc = 0L;
           for (int $k = 0; $k < $countVal; $k++) {
+            if (${plCode.value}.isNullAt($offsetVal + $k)) {
+              throw new IllegalArgumentException("$nullPlanePrefix" + ($offsetVal + $k));
+            }
             $ad $pl = ${plCode.value}.getArray($offsetVal + $k);
             int $n = java.lang.Math.min(${embCode.value}.numElements(), $pl.numElements());
             double $sm = 0.0;

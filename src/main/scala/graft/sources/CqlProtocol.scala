@@ -14,6 +14,11 @@ import org.apache.spark.sql.types._
   * container has no C* server, so the protocol is pinned against an
   * in-JVM socket stub (CqlStubServer) speaking the same spec.
   *
+  * Each frame crosses the socket in one write, and the client turns
+  * Nagle's algorithm off (TCP_NODELAY), as a real C* node and every C*
+  * driver do. A frame split over several small writes meets Nagle ×
+  * delayed ACK: the tail waits ~40 ms per direction per exchange.
+  *
   * Value domain mapping (same columns the graft-sync store carries):
   * int↔int(0x0009), long↔bigint(0x0002), float↔float(0x0008),
   * double↔double(0x0007), boolean↔boolean(0x0004), string↔varchar
@@ -208,15 +213,18 @@ private[graft] object CqlProtocol {
     def remaining: Int = in.available()
   }
 
-  /** Write one v4 frame (request version 0x04). */
+  /** Write one v4 frame (request version 0x04, response 0x84): header
+    * and body in a single `write`, so no part of it waits on Nagle. */
   def writeFrame(out: DataOutputStream, opcode: Int, stream: Int,
       body: Array[Byte], response: Boolean = false): Unit = {
-    out.writeByte(if (response) 0x84 else 0x04)
-    out.writeByte(0) // flags: none (no compression, no tracing)
-    out.writeShort(stream)
-    out.writeByte(opcode)
-    out.writeInt(body.length)
-    out.write(body)
+    val frame = java.nio.ByteBuffer.allocate(9 + body.length)
+      .put((if (response) 0x84 else 0x04).toByte)
+      .put(0.toByte) // flags: none (no compression, no tracing)
+      .putShort(stream.toShort)
+      .put(opcode.toByte)
+      .putInt(body.length)
+      .put(body)
+    out.write(frame.array())
     out.flush()
   }
 
@@ -296,6 +304,7 @@ private[graft] object CqlProtocol {
   final class Client(host: String, port: Int) extends AutoCloseable {
     private val socket = new Socket(host, port)
     socket.setSoTimeout(120000)
+    socket.setTcpNoDelay(true) // as every C* driver: frames are whole writes
     private val out = new DataOutputStream(socket.getOutputStream)
     private val in = new DataInputStream(socket.getInputStream)
 

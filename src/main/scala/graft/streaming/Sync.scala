@@ -1012,24 +1012,41 @@ object Sync {
     * (key × cell), no window, no join; at 100 TB this is a single shuffle
     * on the key (and none at all once the snapshot is bucketed on it). */
   def mergeCellLww(rows: DataFrame, keyCol: String,
-      dataCols: Seq[String]): DataFrame = {
+      dataCols: Seq[String]): DataFrame =
+    mergeCellLww(rows, keyCol, dataCols, Nil)
+
+  /** [[mergeCellLww]] plus `extra` (name, aggregate) columns computed in
+    * the same aggregation and appended after the merged columns. */
+  private def mergeCellLww(rows: DataFrame, keyCol: String, dataCols: Seq[String],
+      extra: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
     require(dataCols.nonEmpty, "mergeCellLww needs at least one data column")
     val aggs = dataCols.flatMap { c =>
       val ord = when(col(s"${c}_wt").isNotNull, struct(col(s"${c}_wt"), col(c)))
       Seq(max_by(col(c), ord).as(c), max(col(s"${c}_wt")).as(s"${c}_wt"))
-    } :+ max(col("ts")).as("ts")
+    } ++ (max(col("ts")).as("ts") +: extra.map { case (n, e) => e.as(n) })
     rows.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
       .select(col(keyCol) +: col("ts") +:
-        dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
+        (dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))) ++
+          extra.map { case (n, _) => col(n) }): _*)
   }
 
   /** The wire loop's per-cell sink (SyncJob `merge: cell`): each
     * micro-batch of wide change rows folds by [[mergeCellLww]] into the
-    * parquet snapshot(s), then `writeback` receives the merged rows of
-    * the keys this batch touched — SyncJob relays them to the opposite
-    * store(s). Identical batches re-merge to identical snapshots and
-    * identical writeback rows, so a replayed round converges on every
-    * surface (the same guarantee lwwSink gives row-granular). */
+    * parquet snapshot(s), and `writeback` receives the merged rows of
+    * the keys this batch CHANGED — SyncJob relays them to the opposite
+    * store(s); it is not called when there are none. A key whose every
+    * incoming row already equals its committed snapshot row (same cells,
+    * same stamps) is the echo of an earlier relay and is not relayed
+    * again.
+    *
+    * The writeback runs BEFORE the snapshots are replaced, so a
+    * committed snapshot row always implies its relay landed: a crash
+    * before the commit replays the batch against the old snapshot and
+    * relays again (both relays are idempotent); a crash after it replays
+    * against the new one, whose rows the stores already hold. Identical
+    * batches re-merge to identical snapshots, so a replayed round
+    * converges on every surface (the guarantee lwwSink gives
+    * row-granular). */
   def cellSyncSink(changes: DataFrame, keyCol: String, dataCols: Seq[String],
       snapshotDirs: Seq[String], checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
@@ -1040,43 +1057,56 @@ object Sync {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val slice = mergeCellLww(batch, keyCol, dataCols)
-        if (!slice.isEmpty) {
-          // a MISSING snapshot is the first round; a snapshot with the
-          // WRONG columns is a reconfigured `cells:` list pointed at an
-          // old state dir — silently dropping it would discard every
-          // previously merged cell, so that case fails loudly instead
-          val base =
-            try {
-              val b = spark.read.parquet(snapshotDirs.head)
-              require(b.columns.sameElements(slice.columns),
-                s"cell snapshot ${snapshotDirs.head} has columns " +
-                  s"[${b.columns.mkString(", ")}] but the configured cells need " +
-                  s"[${slice.columns.mkString(", ")}] — refusing to overwrite " +
-                  "existing state; point the snapshot at a fresh directory")
-              Some(spark.read.schema(slice.schema).parquet(snapshotDirs.head))
-            } catch {
-              case _: org.apache.spark.sql.AnalysisException => None // first round
-            }
-          val merged =
-            base.fold(slice)(b => mergeCellLww(b.unionByName(slice), keyCol, dataCols))
-              .cache()
-          merged.count() // materialize before overwriting the input path
+        val shape = mergeCellLww(batch, keyCol, dataCols) // schema only
+        // a MISSING snapshot is the first round; a snapshot with the
+        // WRONG columns is a reconfigured `cells:` list pointed at an
+        // old state dir — silently dropping it would discard every
+        // previously merged cell, so that case fails loudly instead
+        val base =
+          try {
+            val b = spark.read.parquet(snapshotDirs.head)
+            require(b.columns.sameElements(shape.columns),
+              s"cell snapshot ${snapshotDirs.head} has columns " +
+                s"[${b.columns.mkString(", ")}] but the configured cells need " +
+                s"[${shape.columns.mkString(", ")}] — refusing to overwrite " +
+                "existing state; point the snapshot at a fresh directory")
+            Some(spark.read.schema(shape.schema).parquet(snapshotDirs.head))
+          } catch {
+            case _: org.apache.spark.sql.AnalysisException => None // first round
+          }
+        // ONE aggregation reads each feed once, merges the batch into the
+        // snapshot and marks the keys the batch touched and the keys to
+        // relay: those with an incoming row whose cells or stamps differ
+        // from the committed row (every incoming row equals it iff the
+        // least and the greatest incoming cell tuples both do)
+        val (isNew, touched, toRelay) = ("_graft_new", "_graft_touched", "_graft_relay")
+        val cells = struct(dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
+        val incoming = batch.select(shape.columns.map(col): _*).withColumn(isNew, lit(true))
+        val old = max(when(!col(isNew), cells))
+        val lo = min(when(col(isNew), cells))
+        val hi = max(when(col(isNew), cells))
+        val merged = mergeCellLww(
+          base.fold(incoming)(_.withColumn(isNew, lit(false)).unionByName(incoming)),
+          keyCol, dataCols,
+          Seq(touched -> lo.isNotNull, toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old))))
+          .cache()
+        // materializes the merge before the input path is overwritten
+        val counts = merged.agg(count_if(col(touched)), count_if(col(toRelay))).head()
+        if (counts.getLong(0) > 0) {
+          // relay the merged row, not the raw change, so a relay can never
+          // regress the other store
+          if (counts.getLong(1) > 0)
+            writeback(merged.where(col(toRelay)).drop(touched, toRelay))
           val fs = org.apache.hadoop.fs.FileSystem.get(
             spark.sparkContext.hadoopConfiguration)
           snapshotDirs.foreach { dir =>
-            merged.write.mode("overwrite").parquet(dir + ".tmp")
+            merged.drop(touched, toRelay).write.mode("overwrite").parquet(dir + ".tmp")
             val dst = new org.apache.hadoop.fs.Path(dir)
             fs.delete(dst, true)
             fs.rename(new org.apache.hadoop.fs.Path(dir + ".tmp"), dst)
           }
-          // relay ONLY the keys this batch touched — the merged row (not
-          // the raw change) so a relay can never regress the other store
-          val affected = merged.join(
-            slice.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
-          writeback(affected)
-          merged.unpersist()
         }
+        merged.unpersist()
         ()
       }
       .start()

@@ -139,6 +139,64 @@ class CqlProtocolSpec extends AnyFunSuite {
     } finally stub.stop()
   }
 
+  /** An OutputStream that counts the write calls reaching it — what a
+    * socket stream would turn into separate sends. */
+  private final class CountingOut extends java.io.OutputStream {
+    val bytes = new java.io.ByteArrayOutputStream()
+    var writes = 0
+    override def write(b: Int): Unit = { writes += 1; bytes.write(b) }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      writes += 1; bytes.write(b, off, len)
+    }
+  }
+
+  test("writeFrame issues one write per frame; header pinned; readFrame round-trips") {
+    val big = Array.tabulate[Byte](70000)(i => (i * 31).toByte) // > 64 KiB
+    for ((body, response, stream, opcode) <- Seq(
+        (Array.empty[Byte], false, 0, CqlProtocol.OpOptions),
+        (Array[Byte](1, 2, 3), true, 0x1234, CqlProtocol.OpResult),
+        (big, false, 7, CqlProtocol.OpBatch))) {
+      val sink = new CountingOut
+      CqlProtocol.writeFrame(new java.io.DataOutputStream(sink),
+        opcode, stream, body, response)
+      assert(sink.writes === 1, s"frame of ${body.length} B took ${sink.writes} writes")
+      val wire = sink.bytes.toByteArray
+      val hdr = java.nio.ByteBuffer.wrap(wire, 0, 9)
+      assert(hdr.get() === (if (response) 0x84 else 0x04).toByte, "version")
+      assert(hdr.get() === 0, "flags")
+      assert(hdr.getShort() === stream.toShort, "stream")
+      assert((hdr.get() & 0xff) === opcode, "opcode")
+      assert(hdr.getInt() === body.length, "length")
+      assert(wire.length === 9 + body.length)
+      val (op, st, rb) = CqlProtocol.readFrame(
+        new java.io.DataInputStream(new java.io.ByteArrayInputStream(wire)))
+      assert((op, st) === ((opcode, stream)))
+      assert(rb.toSeq === body.toSeq)
+    }
+  }
+
+  test("200 sequential EXECUTE exchanges finish in well under a delayed-ACK stall each") {
+    val stub = new CqlStubServer().start()
+    try {
+      stub.createTable("ks", "t", Seq(("id", "bigint"), ("v", "text")), pk = "id")
+      val client = new CqlProtocol.Client("127.0.0.1", stub.port)
+      try {
+        client.batchPrepared((1L to 5L).map(i =>
+          ("INSERT INTO ks.t (id, v) VALUES (?, ?)", Seq(
+            CqlProtocol.encode(i, LongType), CqlProtocol.encode(s"v$i", StringType)))))
+        val sel = "SELECT id, v FROM ks.t WHERE " +
+          s"token(id) >= ${Long.MinValue} AND token(id) <= ${Long.MaxValue}"
+        client.prepare(sel)
+        val t0 = System.nanoTime()
+        (1 to 200).foreach(_ => assert(client.execute(sel).get.rows.size === 5))
+        val secs = (System.nanoTime() - t0) / 1e9
+        // a ~40 ms delayed-ACK stall per direction puts 200 exchanges past 15 s
+        assert(secs < 4.0, f"200 exchanges took $secs%.2f s")
+        assert(stub.executeRequests.get() === 200)
+      } finally client.close()
+    } finally stub.stop()
+  }
+
   test("type mapping is total over the connector value domain and rejects outside it") {
     assert(CqlProtocol.sparkTypeOf("list<double>") === ArrayType(DoubleType))
     assert(CqlProtocol.cqlTypeOf(TimestampNTZType) === "bigint")

@@ -14,6 +14,7 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double, props: String)
 case class Doc(doc_id: Long, text: String, ts: Timestamp)
 case class Vec(vec_id: Long, embedding: Array[Float], ts: Timestamp)
+case class CellRow(key: Long, ts: Long, status: Option[String], status_wt: Option[Long])
 
 /** Streaming semantics the oracle can't see: watermark late-drop (i4),
   * within-watermark dedup (i5), the foreachBatch LWW sink (i6 streaming
@@ -437,6 +438,42 @@ class StreamingSpec extends AnyFunSuite {
       val snap2 = spark.read.parquet(target)
         .select($"key", $"payload").as[(Long, String)].collect().toMap
       assert(snap2 === Map(1L -> "v2", 2L -> "w1"))
+    } finally q.stop()
+  }
+
+  test("cellSyncSink relays the keys whose incoming row differs from the committed row, and only those") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val snap = tmp("cell-target") + "/snap"
+    val mem = MemoryStream[CellRow]
+    val relays = scala.collection.mutable.ArrayBuffer.empty[Map[Long, String]]
+    val q = Sync.cellSyncSink(mem.toDF(), "key", Seq("status"), Seq(snap),
+        tmp("cell-ckpt"), Trigger.ProcessingTime(0)) { df =>
+      relays += df.select($"key", $"status").as[(Long, String)].collect().toMap
+    }
+    def row(k: Long, ts: Long, v: String, wt: Long) = CellRow(k, ts, Some(v), Some(wt))
+    // the writeback's rows for one batch; None when it was not called
+    def round(rows: CellRow*): Option[Map[Long, String]] = {
+      val n = relays.size
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+      assert(relays.size <= n + 1)
+      relays.drop(n).headOption
+    }
+    try {
+      assert(round(row(1, 10, "a", 10), row(2, 10, "b", 10)) ===
+        Some(Map(1L -> "a", 2L -> "b")))
+      // the echo of that relay, one row with a new poll cursor `ts`: the
+      // cells and stamps equal the committed rows, so nothing is relayed
+      assert(round(row(1, 10, "a", 10), row(2, 77, "b", 10)) === None)
+      // a store holding an older cell gets the committed (newer) row back
+      assert(round(row(1, 5, "old", 5)) === Some(Map(1L -> "a")))
+      // one echoed and one new row for the same key: the key is relayed
+      assert(round(row(2, 10, "b", 10), row(2, 20, "c", 20)) === Some(Map(2L -> "c")))
+      val merged = spark.read.parquet(snap).select($"key", $"status")
+        .as[(Long, String)].collect().toMap
+      assert(merged === Map(1L -> "a", 2L -> "c"))
     } finally q.stop()
   }
 

@@ -1,7 +1,12 @@
 package graft
 
-import graft.functions.VectorExpressions
+import graft.functions.{HyperplaneSig, VectorExpressions}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native vec_dot Expression: bit-identical to the higher-order-
@@ -93,6 +98,33 @@ class VectorExprSpec extends AnyFunSuite {
     }
     assert(err.getMessage.toLowerCase.contains("hp_sig") ||
       err.getMessage.toLowerCase.contains("datatype_mismatch"))
+  }
+
+  /** hp_sig over one (embedding, planes) row, interpreted and through
+    * the generated code; each must fail with hp_sig's own error. */
+  private def hpSigErrors(planes: Array[Any], offset: Int, count: Int): Seq[String] = {
+    val sig = HyperplaneSig(
+      BoundReference(0, ArrayType(FloatType), nullable = true),
+      BoundReference(1, ArrayType(ArrayType(DoubleType)), nullable = true),
+      Literal(offset), Literal(count))
+    val row = InternalRow(new GenericArrayData(Array[Any](1.0f, -1.0f)),
+      new GenericArrayData(planes))
+    Seq(
+      intercept[IllegalArgumentException](sig.eval(row)),
+      intercept[IllegalArgumentException](
+        GenerateUnsafeProjection.generate(Seq(sig), false).apply(row))
+    ).map(_.getMessage)
+  }
+  private def plane: Any = new GenericArrayData(Array[Any](1.0, 0.5))
+
+  test("hp_sig fails clearly when offset + count runs past the plane table") {
+    for (msg <- hpSigErrors(Array(plane, plane, plane), offset = 2, count = 2))
+      assert(msg === "hp_sig: planes slice [2, 4) exceeds the plane table's 3 rows")
+  }
+
+  test("hp_sig fails clearly on a null plane inside the slice") {
+    for (msg <- hpSigErrors(Array(plane, null, plane), offset = 0, count = 3))
+      assert(msg === "hp_sig: null plane at index 1")
   }
 
   test("hp_sig is null-safe") {

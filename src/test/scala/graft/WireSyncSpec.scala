@@ -459,4 +459,97 @@ class WireSyncSpec extends AnyFunSuite {
       assert(liveDocs() === Map(1L -> "a2", 3L -> "c2"))
     } finally { cql.stop(); es.stop() }
   }
+
+  /** A `merge: cell` loop over fresh stubs: C* table ks.t and ES index t,
+    * both keyed by `key` with cells status,val. `body` gets the stubs,
+    * the config, the snapshot root and a C* writer stamping by `ts`. */
+  private def cellLoop(body: (CqlStubServer, EsStubServer, SyncConfig, String,
+      Seq[(Long, Long, String, Long)] => Unit) => Unit): Unit = {
+    val cql = new CqlStubServer().start()
+    val es = new EsStubServer().start()
+    val base = java.nio.file.Files.createTempDirectory("cellloop").toString
+    try {
+      cql.createTable("ks", "t", Seq(
+        ("key", "bigint"), ("ts", "bigint"), ("status", "text"),
+        ("val", "bigint")), pk = "key")
+      val (c, _) = graft.sources.EsHttp.request("PUT", s"${es.url}/t", Some(
+        """{"mappings":{"properties":{
+          |  "key":{"type":"long"},"ts":{"type":"long"},
+          |  "status":{"type":"keyword"},"status_wt":{"type":"long"},
+          |  "val":{"type":"long"},"val_wt":{"type":"long"}}}}""".stripMargin))
+      assert(c === 200)
+      val cfg = SyncConfig.fromYaml(
+        s"""cassandra:
+           |  feed: cql://${cql.host}/ks/t?pk=key
+           |  snapshot: $base/snapA
+           |  format: graft-cql
+           |elasticsearch:
+           |  feed: es://127.0.0.1:${es.url.split(":").last}/t
+           |  snapshot: $base/snapB
+           |  format: graft-es
+           |checkpoint_dir: $base/ckpt
+           |merge: cell
+           |cells: status,val
+           |""".stripMargin)
+      def cqlWrite(rows: Seq[(Long, Long, String, Long)]): Unit =
+        rows.toDF("key", "ts", "status", "val")
+          .write.format("graft-cql").option("host", cql.host)
+          .option("keyspace", "ks").option("table", "t")
+          .option("using-timestamp-column", "ts")
+          .mode("append").save()
+      body(cql, es, cfg, base, cqlWrite)
+    } finally { cql.stop(); es.stop() }
+  }
+
+  test("merge: cell — a round reads each feed from the wire once, not once per job") {
+    cellLoop { (_, es, cfg, _, cqlWrite) =>
+      cqlWrite((1L to 40L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg) // relays the 40 C* rows into ES
+      assert(es.docCount("t") === 40)
+
+      // the PITs one batch scan of the index opens (one per read slice)
+      es.pitOpens.set(0)
+      assert(spark.read.format("graft-es").option("nodes", es.url)
+        .option("index", "t").load().count() === 40)
+      val perScan = es.pitOpens.get()
+      assert(perScan > 0)
+
+      // the next round's ES feed holds the 40 relayed docs: the merge, the
+      // echo filter and the snapshot writes must share ONE read of it
+      es.pitOpens.set(0); es.pitDeletes.set(0)
+      SyncJob.runOnce(spark, cfg)
+      assert(es.pitOpens.get() === perScan,
+        s"a round opened ${es.pitOpens.get()} PITs; one scan opens $perScan")
+      assert(es.pitDeletes.get() === es.pitOpens.get())
+    }
+  }
+
+  test("merge: cell — a relay that fails mid-round leaves the snapshot uncommitted; the replay relays again") {
+    cellLoop { (_, es, cfg, base, cqlWrite) =>
+      def esStatus(k: Long): String =
+        spark.read.format("graft-es").option("nodes", es.url).option("index", "t")
+          .load().where($"key" === k).select("status").as[String].collect().head
+      def snapStatus(k: Long): String =
+        spark.read.parquet(s"$base/snapA").where($"key" === k)
+          .select("status").as[String].collect().head
+
+      cqlWrite((1L to 10L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+      assert(es.docCount("t") === 10 && esStatus(1L) === "s1")
+
+      // key 1 changes in C*; ES rejects every relay item past the retry cap
+      cqlWrite(Seq((1L, 500L, "gold", 1L)))
+      es.inject429Items.set(1000000)
+      intercept[Exception](SyncJob.runOnce(spark, cfg))
+      es.inject429Items.set(0)
+      assert(snapStatus(1L) === "s1",
+        "the snapshot must not commit a merge whose relay did not land")
+      assert(esStatus(1L) === "s1")
+
+      // the replayed batch merges against the old snapshot, so it relays
+      SyncJob.runOnce(spark, cfg)
+      assert(esStatus(1L) === "gold" && snapStatus(1L) === "gold")
+    }
+  }
 }
