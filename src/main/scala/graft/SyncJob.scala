@@ -241,15 +241,13 @@ object SyncJob {
         "(cassandra.format: graft-cql, elasticsearch.format: graft-es)")
     val a = new java.net.URI(cfg.sideA)
     val Array(ks, tbl) = a.getPath.stripPrefix("/").split("/")
-    val pk = uriParam(a, "pk").getOrElse(throw new IllegalArgumentException(
-      s"graft-cql feed needs ?pk=<partition key column>: ${cfg.sideA}"))
+    val columns = cellColumns(cfg)
+    val pk = columns.head
     val cqlHost = s"${a.getHost}:${a.getPort}"
     val b = new java.net.URI(cfg.sideB)
     val esNodes = s"http://${b.getHost}:${b.getPort}"
     val esIndex = b.getPath.stripPrefix("/")
-    val cellCols = cfg.cells.flatMap(c => Seq(col(c), col(s"${c}_wt")))
-    val shape = (df: org.apache.spark.sql.DataFrame) =>
-      df.select(col(pk) +: col("ts") +: cellCols: _*)
+    val shape = (df: org.apache.spark.sql.DataFrame) => df.select(columns.map(col): _*)
 
     val feedA = {
       val raw = spark.readStream.format("graft-cql")
@@ -294,6 +292,14 @@ object SyncJob {
       }
     }
   }
+
+  /** The `merge: cell` snapshot's columns: the C* partition key (the
+    * feed's `?pk=`), the poll cursor `ts`, then each cell and its stamp. */
+  private def cellColumns(cfg: SyncConfig): Seq[String] =
+    uriParam(new java.net.URI(cfg.sideA), "pk").getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-cql feed needs ?pk=<partition key column>: ${cfg.sideA}")) +:
+      "ts" +: cfg.cells.flatMap(c => Seq(c, s"${c}_wt"))
 
   /** One side's change feed as a stream in [[Sync.changeSchema]] shape.
     * `graft-sync` feeds carry `ts` as epoch-micros longs (the connector's
@@ -356,13 +362,9 @@ object SyncJob {
     val (qa, qb) = start(spark, cfg)
     try { qa.processAllAvailable(); qb.processAllAvailable() }
     finally { qa.stop(); qb.stop() }
-    // cell mode's snapshot schema is the configured wide shape, not the
-    // row loop's fixed change schema
-    def read(dir: String): Long =
-      try {
-        if (cfg.merge == "cell") spark.read.parquet(dir).count()
-        else spark.read.schema(Sync.changeSchema).parquet(dir).count()
-      } catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    val columns =
+      if (cfg.merge == "cell") cellColumns(cfg) else Sync.changeSchema.fieldNames.toSeq
+    def read(dir: String) = Sync.readSnapshot(spark, dir, columns).fold(0L)(_.count())
     (read(cfg.snapshotA), read(cfg.snapshotB))
   }
 }

@@ -298,6 +298,10 @@ object PipelineOps {
         (coalesce(col(s"c_$lg"), lit(0L)) + 1) /
           (col(s"cl_$lg") + $"v"))), 6).as(s"s_$lg")
     }
+    // Invariant that makes this INNER join lossless: prof derives from
+    // the same tf0 as tf, so the profile covers every token of tf and no
+    // tf row (nor its add-one smoothing term) is dropped. A profile from
+    // any other source (an external dictionary) would need a left join.
     val perDoc = tf
       .join(prof, Seq("token"))
       .crossJoin(broadcast(lrow))

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
@@ -962,6 +964,62 @@ object Sync {
       sum(col("n_changes")).as("n_changes"),
       max(col("row_ts_us")).as("row_ts_us"))
 
+  /** Runs `f` on each micro-batch of `df` and its epoch id, checkpointed
+    * at `checkpointDir`. */
+  private def eachBatch(df: DataFrame, checkpointDir: String, trigger: Trigger)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream.outputMode("append").option("checkpointLocation", checkpointDir)
+      .trigger(trigger).foreachBatch(f).start()
+
+  /** Snapshot state of the three LWW sinks, one protocol for all of
+    * them. A round writes the new state to `<dir>.tmp` (Spark's job commit
+    * marks it complete with `_SUCCESS`), then swaps it in: delete `<dir>`,
+    * rename `<dir>.tmp`. Offsets commit after the sink, so a crash replays
+    * the round. Recovery, before every read: a missing `<dir>` beside a
+    * complete `<dir>.tmp` is a swap that died between delete and rename,
+    * so the rename is finished; any other `<dir>.tmp` is an uncommitted
+    * write the replay overwrites. Returns `None` only when no snapshot
+    * exists; one that cannot be read, or whose columns are not `columns`,
+    * fails the batch and is left as it is. */
+  private[graft] def readSnapshot(spark: SparkSession, dir: String,
+      columns: Seq[String]): Option[DataFrame] = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path) && fs.exists(new Path(tmpOf(dir), "_SUCCESS"))) swapIn(fs, dir)
+    if (!fs.exists(path)) None
+    else {
+      def refuse(found: String) = s"snapshot $dir $found but the sink needs " +
+        s"[${columns.mkString(", ")}] — refusing to overwrite existing state; " +
+        "point the snapshot at a fresh directory"
+      val snap =
+        try spark.read.parquet(dir)
+        catch { case e @ (_: AnalysisException | _: SparkException) =>
+          throw new IllegalStateException(refuse("cannot be read"), e) }
+      require(snap.columns.toSeq == columns,
+        refuse(s"has columns [${snap.columns.mkString(", ")}]"))
+      Some(snap)
+    }
+  }
+
+  /** Commit `df` to every one of `dirs` ([[readSnapshot]] has the
+    * protocol): all `<dir>.tmp` are written before any is swapped in, so
+    * no write reads a snapshot that has already been replaced. */
+  private def commitSnapshot(df: DataFrame, dirs: Seq[String]): Unit = {
+    dirs.foreach(dir => df.write.mode("overwrite").parquet(tmpOf(dir)))
+    dirs.foreach(dir => swapIn(
+      new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), dir))
+  }
+
+  private def tmpOf(dir: String): String = dir + ".tmp"
+
+  private def swapIn(fs: FileSystem, dir: String): Unit = {
+    val path = new Path(dir)
+    if (fs.exists(path) && !fs.delete(path, true))
+      throw new java.io.IOException(s"snapshot commit: could not delete $dir")
+    if (!fs.rename(new Path(tmpOf(dir)), path))
+      throw new java.io.IOException(s"snapshot commit: could not rename ${tmpOf(dir)} to $dir")
+  }
+
   /** i20 streaming form — Cassandra's per-CELL LWW as the sync loop's
     * upsert: each microbatch of events (the eventsStream shape) folds to
     * per-key cell states (SyncOps.cellMergeSlice — the SAME aggregate as
@@ -969,33 +1027,20 @@ object Sync {
     * the parquet snapshot at `targetDir` by per-cell argmax. Contrast
     * [[lwwSink]]: the row-granular merge keeps ONE winning change per
     * key; this merge keeps one winning change PER CELL — a losing row's
-    * newer cells survive, which is C*'s actual WRITETIME semantics. */
+    * newer cells survive, which is C*'s actual WRITETIME semantics.
+    * State commits and recovers by [[readSnapshot]]'s protocol; a snapshot
+    * without the cell-state columns fails the batch. */
   def cellLwwSink(events: DataFrame, targetDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val slice = graft.ops.SyncOps.cellMergeSlice(
-          graft.ops.SyncOps.cellChangesFrom(
-            batch.withColumn("ts_us", expr("unix_micros(cast(ts as timestamp))"))))
-        val base =
-          try Some(spark.read.parquet(targetDir)).filter(_.columns.contains("s_ord"))
-          catch { case _: Exception => None }
-        val merged = base.fold(slice)(b => cellCompose(b.unionByName(slice))).cache()
-        merged.count() // materialize before overwriting the input path
-        merged.write.mode("overwrite").parquet(targetDir + ".tmp")
-        merged.unpersist()
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(targetDir)
-        fs.delete(dst, true)
-        fs.rename(new org.apache.hadoop.fs.Path(targetDir + ".tmp"), dst)
-        ()
-      }
-      .start()
+    eachBatch(events, checkpointDir, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      val slice = graft.ops.SyncOps.cellMergeSlice(
+        graft.ops.SyncOps.cellChangesFrom(
+          batch.withColumn("ts_us", expr("unix_micros(cast(ts as timestamp))"))))
+      val merged = readSnapshot(spark, targetDir, slice.columns)
+        .fold(slice)(b => cellCompose(b.unionByName(slice)))
+      commitSnapshot(merged, Seq(targetDir))
+    }
 
   /** Generic per-CELL LWW merge over WIDE rows — the wire loop's form of
     * i20's conflict rule. Input rows carry `keyCol`, a `ts` bigint (the
@@ -1046,99 +1091,60 @@ object Sync {
     * against the new one, whose rows the stores already hold. Identical
     * batches re-merge to identical snapshots, so a replayed round
     * converges on every surface (the guarantee lwwSink gives
-    * row-granular). */
+    * row-granular). State commits and recovers by [[readSnapshot]]'s
+    * protocol, based on `snapshotDirs.head`: a crash between two swaps
+    * leaves the head new, so the replay re-merges into it and rewrites
+    * every directory. A snapshot with other columns (a reconfigured
+    * `cells:` list pointed at an old state dir) fails loudly. */
   def cellSyncSink(changes: DataFrame, keyCol: String, dataCols: Seq[String],
       snapshotDirs: Seq[String], checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
       writeback: DataFrame => Unit): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val shape = mergeCellLww(batch, keyCol, dataCols) // schema only
-        // a MISSING snapshot is the first round; a snapshot with the
-        // WRONG columns is a reconfigured `cells:` list pointed at an
-        // old state dir — silently dropping it would discard every
-        // previously merged cell, so that case fails loudly instead
-        val base =
-          try {
-            val b = spark.read.parquet(snapshotDirs.head)
-            require(b.columns.sameElements(shape.columns),
-              s"cell snapshot ${snapshotDirs.head} has columns " +
-                s"[${b.columns.mkString(", ")}] but the configured cells need " +
-                s"[${shape.columns.mkString(", ")}] — refusing to overwrite " +
-                "existing state; point the snapshot at a fresh directory")
-            Some(spark.read.schema(shape.schema).parquet(snapshotDirs.head))
-          } catch {
-            case _: org.apache.spark.sql.AnalysisException => None // first round
-          }
-        // ONE aggregation reads each feed once, merges the batch into the
-        // snapshot and marks the keys the batch touched and the keys to
-        // relay: those with an incoming row whose cells or stamps differ
-        // from the committed row (every incoming row equals it iff the
-        // least and the greatest incoming cell tuples both do)
-        val (isNew, touched, toRelay) = ("_graft_new", "_graft_touched", "_graft_relay")
-        val cells = struct(dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
-        val incoming = batch.select(shape.columns.map(col): _*).withColumn(isNew, lit(true))
-        val old = max(when(!col(isNew), cells))
-        val lo = min(when(col(isNew), cells))
-        val hi = max(when(col(isNew), cells))
-        val merged = mergeCellLww(
-          base.fold(incoming)(_.withColumn(isNew, lit(false)).unionByName(incoming)),
-          keyCol, dataCols,
-          Seq(touched -> lo.isNotNull, toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old))))
-          .cache()
-        // materializes the merge before the input path is overwritten
-        val counts = merged.agg(count_if(col(touched)), count_if(col(toRelay))).head()
-        if (counts.getLong(0) > 0) {
-          // relay the merged row, not the raw change, so a relay can never
-          // regress the other store
-          if (counts.getLong(1) > 0)
-            writeback(merged.where(col(toRelay)).drop(touched, toRelay))
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          snapshotDirs.foreach { dir =>
-            merged.drop(touched, toRelay).write.mode("overwrite").parquet(dir + ".tmp")
-            val dst = new org.apache.hadoop.fs.Path(dir)
-            fs.delete(dst, true)
-            fs.rename(new org.apache.hadoop.fs.Path(dir + ".tmp"), dst)
-          }
-        }
-        merged.unpersist()
-        ()
+    eachBatch(changes, checkpointDir, trigger) { (batch, _) =>
+      val spark = batch.sparkSession
+      val shape = mergeCellLww(batch, keyCol, dataCols) // schema only
+      val base = readSnapshot(spark, snapshotDirs.head, shape.columns)
+      // ONE aggregation reads each feed once, merges the batch into the
+      // snapshot and marks the keys the batch touched and the keys to
+      // relay: those with an incoming row whose cells or stamps differ
+      // from the committed row (every incoming row equals it iff the
+      // least and the greatest incoming cell tuples both do)
+      val (isNew, touched, toRelay) = ("_graft_new", "_graft_touched", "_graft_relay")
+      val cells = struct(dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
+      val incoming = batch.select(shape.columns.map(col): _*).withColumn(isNew, lit(true))
+      val old = max(when(!col(isNew), cells))
+      val lo = min(when(col(isNew), cells))
+      val hi = max(when(col(isNew), cells))
+      val merged = mergeCellLww(
+        base.fold(incoming)(_.withColumn(isNew, lit(false)).unionByName(incoming)),
+        keyCol, dataCols,
+        Seq(touched -> lo.isNotNull, toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old))))
+        .cache()
+      // one pass over the cached merge counts the touched and relayed keys
+      val counts = merged.agg(count_if(col(touched)), count_if(col(toRelay))).head()
+      if (counts.getLong(0) > 0) {
+        // relay the merged row, not the raw change, so a relay can never
+        // regress the other store
+        if (counts.getLong(1) > 0)
+          writeback(merged.where(col(toRelay)).drop(touched, toRelay))
+        commitSnapshot(merged.drop(touched, toRelay), snapshotDirs)
       }
-      .start()
+      merged.unpersist()
+    }
 
   /** i6 streaming form — the sync loop: each microbatch is LWW-merged into
     * the parquet snapshot at `targetDir` (read-modify-write per batch, the
     * foreachBatch upsert idiom; at scale this would be a MERGE INTO a
-    * bucketed table). */
+    * bucketed table). State commits and recovers by [[readSnapshot]]'s
+    * protocol; a snapshot without [[changeSchema]]'s columns fails. */
   def lwwSink(changes: DataFrame, targetDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (delta: DataFrame, _: Long) =>
-        val spark = delta.sparkSession
-        val base =
-          try spark.read.schema(changeSchema).parquet(targetDir)
-          catch { case _: Exception => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], changeSchema) }
-        val merged = mergeLww(base, delta).cache()
-        merged.count() // materialize before overwriting the input path
-        merged.write.mode("overwrite").parquet(targetDir + ".tmp")
-        merged.unpersist()
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(targetDir)
-        fs.delete(dst, true)
-        fs.rename(new org.apache.hadoop.fs.Path(targetDir + ".tmp"), dst)
-        ()
-      }
-      .start()
+    eachBatch(changes, checkpointDir, trigger) { (delta, _) =>
+      val spark = delta.sparkSession
+      val base = readSnapshot(spark, targetDir, changeSchema.fieldNames.toSeq)
+        .getOrElse(spark.createDataFrame(java.util.List.of[Row](), changeSchema))
+      commitSnapshot(mergeLww(base, delta), Seq(targetDir))
+    }
 
   /** i18 — the storage-backed rollup's incremental updater (batch j262's
     * streaming half): each microbatch of events folds to PARTIAL hourly
@@ -1154,26 +1160,20 @@ object Sync {
     * Input frame must carry event_type/ts_us/value (the eventsUs shape). */
   def rollupSink(events: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // page-tag = the epoch: an idempotency KEY, not just a naming
-        // scheme — the store keeps exactly one committed generation per
-        // tag, and a replayed batch (post-crash re-execution) SUPERSEDES
-        // the first attempt's generation even when the replay shuffles
-        // into a different partition layout and lands the same rows
-        // under different page names (GraftSyncStore.supersedeTag).
-        // Exactly-once composition without sink-side state; a bare
-        // append would double-count the partials on replay.
-        graft.ops.NestedOps.hourlyRollup(graft.ops.NestedOps.hourlyCents(batch))
-          .write.format("graft-sync").mode("append")
-          .option("page-tag", s"rollup-epoch-$epochId")
-          .save(storeDir)
-        ()
-      }
-      .start()
+    eachBatch(events, checkpointDir, trigger) { (batch, epochId) =>
+      // page-tag = the epoch: an idempotency KEY, not just a naming
+      // scheme — the store keeps exactly one committed generation per
+      // tag, and a replayed batch (post-crash re-execution) SUPERSEDES
+      // the first attempt's generation even when the replay shuffles
+      // into a different partition layout and lands the same rows
+      // under different page names (GraftSyncStore.supersedeTag).
+      // Exactly-once composition without sink-side state; a bare
+      // append would double-count the partials on replay.
+      graft.ops.NestedOps.hourlyRollup(graft.ops.NestedOps.hourlyCents(batch))
+        .write.format("graft-sync").mode("append")
+        .option("page-tag", s"rollup-epoch-$epochId")
+        .save(storeDir)
+    }
 
   /** i19 — the TS metrics-store ingest path (ES TSDB downsampling as a
     * stream): each microbatch of the ordered change feed folds to
@@ -1191,16 +1191,10 @@ object Sync {
     * a compaction. */
   def tsRollupSink(events: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        graft.ops.Esql.tsCellPartials(batch)
-          .write.format("graft-sync").mode("append")
-          .option("page-tag", s"ts-rollup-epoch-$epochId")
-          .save(storeDir)
-        ()
-      }
-      .start()
+    eachBatch(events, checkpointDir, trigger) { (batch, epochId) =>
+      graft.ops.Esql.tsCellPartials(batch)
+        .write.format("graft-sync").mode("append")
+        .option("page-tag", s"ts-rollup-epoch-$epochId")
+        .save(storeDir)
+    }
 }

@@ -73,6 +73,11 @@ object Probe16 {
           spark.catalog.clearCache()
           println(f"[floor] rep=$r plan=${(t1 - t0) / 1e6}%7.1f ms exec=${(t2 - t1) / 1e6}%7.1f ms (${plan.nodeName})")
         }
+      case other =>
+        System.err.println(s"unknown mode '$other'; usage: Probe16 " +
+          "(occupancy | jobs | floor) <dataDir> [query, for jobs]")
+        spark.stop()
+        sys.exit(2)
     }
     spark.stop()
   }

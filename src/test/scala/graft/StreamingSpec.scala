@@ -477,6 +477,156 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  // ---- the snapshot commit protocol under fault injection: each
+  // post-crash disk state is built by hand between two rounds of a running
+  // sink, then the next round must recover from it
+
+  /** A running snapshot sink: `round(keys)` feeds one micro-batch writing
+    * each key and waits for it; `keys()` reads the committed snapshot. */
+  private final class SinkRun(val dir: String, val keyCol: String,
+      val round: Seq[Long] => Unit, val stop: () => Unit) {
+    def keys(): Set[Long] = TestSpark.spark.read.parquet(dir).select(keyCol)
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  private def runLwwSink(): SinkRun = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("lww-fault") + "/snap"
+    val mem = MemoryStream[Change]
+    val q = Sync.lwwSink(mem.toDF(), dir, tmp("lww-fault-ckpt"), Trigger.ProcessingTime(0))
+    new SinkRun(dir, "key", { ks =>
+      mem.addData(ks.map(k => Change(k, ts("2024-01-01 10:00:00"), k, s"v$k")): _*)
+      q.processAllAvailable()
+    }, () => q.stop())
+  }
+
+  private def runCellLwwSink(): SinkRun = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("cell-lww-fault") + "/snap"
+    val mem = MemoryStream[Ev]
+    val q = Sync.cellLwwSink(mem.toDF(), dir, tmp("cell-lww-fault-ckpt"),
+      Trigger.ProcessingTime(0))
+    var eventId = 0L
+    new SinkRun(dir, "user_id", { ks =>
+      mem.addData(ks.map { k =>
+        eventId += 1; Ev(eventId, ts("2024-01-01 10:00:00"), k, "click", 1.0, "")
+      }: _*)
+      q.processAllAvailable()
+    }, () => q.stop())
+  }
+
+  private def runCellSyncSink(): SinkRun = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("cell-sync-fault") + "/snap"
+    val mem = MemoryStream[CellRow]
+    val q = Sync.cellSyncSink(mem.toDF(), "key", Seq("status"), Seq(dir),
+      tmp("cell-sync-fault-ckpt"), Trigger.ProcessingTime(0))(_ => ())
+    new SinkRun(dir, "key", { ks =>
+      mem.addData(ks.map(k => CellRow(k, 10, Some(s"s$k"), Some(10))): _*)
+      q.processAllAvailable()
+    }, () => q.stop())
+  }
+
+  for ((name, start) <- Seq[(String, () => SinkRun)](
+      "lwwSink" -> (() => runLwwSink()),
+      "cellLwwSink" -> (() => runCellLwwSink()),
+      "cellSyncSink (one dir)" -> (() => runCellSyncSink()))) {
+
+    test(s"$name: a crash between the snapshot delete and the rename loses no merged key") {
+      val run = start()
+      try {
+        run.round(Seq(1L, 2L))
+        // the crash: <dir> deleted, its complete replacement left in <dir>.tmp
+        assert(new java.io.File(run.dir).renameTo(new java.io.File(run.dir + ".tmp")))
+        run.round(Seq(3L))
+        assert(run.keys() === Set(1L, 2L, 3L))
+        assert(!new java.io.File(run.dir + ".tmp").exists())
+      } finally run.stop()
+    }
+
+    test(s"$name: a torn <dir>.tmp beside an intact snapshot is ignored and overwritten") {
+      val run = start()
+      try {
+        run.round(Seq(1L, 2L))
+        // the crash: a write to <dir>.tmp that never reached its job commit
+        TestSpark.spark.read.parquet(run.dir).withColumn(run.keyCol, lit(99L))
+          .write.parquet(run.dir + ".tmp")
+        assert(new java.io.File(run.dir + ".tmp/_SUCCESS").delete())
+        run.round(Seq(3L))
+        assert(run.keys() === Set(1L, 2L, 3L))
+        assert(!new java.io.File(run.dir + ".tmp").exists())
+      } finally run.stop()
+    }
+  }
+
+  /** Every file under `dir` with its bytes. */
+  private def filesOf(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
+  /** Runs one micro-batch of `rows` through `sink` over the prepared
+    * snapshot at `dir`: the batch must fail with the refusal and leave
+    * every file of the snapshot as it was. */
+  private def assertRefused(what: String, dir: String)(
+      sink: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val before = filesOf(dir)
+    val q = sink(tmp("loud-ckpt"))
+    val e =
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      finally q.stop()
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("refusing to overwrite existing state")),
+      s"$what: ${msgs(e).mkString(" | ").take(400)}")
+    assert(filesOf(dir) === before, s"$what: the snapshot's files must be untouched")
+  }
+
+  test("lwwSink fails the batch on a snapshot it cannot read or whose columns differ, and leaves it untouched") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def put(d: String, name: String, bytes: Array[Byte]): Unit = {
+      Files.createDirectories(java.nio.file.Paths.get(d))
+      Files.write(java.nio.file.Paths.get(d, name), bytes)
+    }
+    Seq[(String, String => Unit)](
+      "wrong columns" -> (d => Seq((1L, "x")).toDF("id", "other").write.parquet(d)),
+      "no data file" -> (d => put(d, "_SUCCESS", Array.emptyByteArray)),
+      "corrupt data file" -> (d => put(d, "part-00000.parquet", "not parquet".getBytes))
+    ).foreach { case (what, make) =>
+      val dir = tmp("lww-loud") + "/snap"
+      make(dir)
+      val mem = MemoryStream[Change]
+      mem.addData(Change(1, ts("2024-01-01 10:00:00"), 1, "v1"))
+      assertRefused(what, dir)(ckpt =>
+        Sync.lwwSink(mem.toDF(), dir, ckpt, Trigger.ProcessingTime(0)))
+    }
+  }
+
+  test("cellLwwSink fails the batch on a snapshot that lacks s_ord instead of dropping it") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tmp("cell-lww-loud") + "/snap"
+    Seq((1L, "gold")).toDF("user_id", "status").write.parquet(dir)
+    val mem = MemoryStream[Ev]
+    mem.addData(Ev(1, ts("2024-01-01 10:00:00"), 2, "click", 1.0, ""))
+    assertRefused("no s_ord", dir)(ckpt =>
+      Sync.cellLwwSink(mem.toDF(), dir, ckpt, Trigger.ProcessingTime(0)))
+  }
+
   test("i18 streaming: rollup increments append as partial pages — the stored table serves the composed day answer") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -552,4 +552,57 @@ class WireSyncSpec extends AnyFunSuite {
       assert(esStatus(1L) === "gold" && snapStatus(1L) === "gold")
     }
   }
+
+  test("merge: cell — a crash between the two snapshot swaps replays to the state of an uninterrupted run") {
+    cellLoop { (cql, es, cfg, base, cqlWrite) =>
+      import org.apache.commons.io.FileUtils
+      def f(p: String) = new java.io.File(p)
+      def copy(from: String, to: String): Unit = {
+        FileUtils.deleteDirectory(f(to)); FileUtils.copyDirectory(f(from), f(to))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("key").collect().map(_.toSeq).toSeq
+      // both snapshots and both stores, cell stamps included
+      def state() = (
+        rows(spark.read.parquet(s"$base/snapA")),
+        rows(spark.read.parquet(s"$base/snapB")),
+        rows(spark.read.format("graft-cql").option("host", cql.host)
+          .option("keyspace", "ks").option("table", "t")
+          .option("partition-key", "key").option("writetime-of", "status,val").load()),
+        rows(spark.read.format("graft-es").option("nodes", es.url)
+          .option("index", "t").load()))
+
+      cqlWrite((1L to 10L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+      copy(s"$base/snapB", s"$base/saved/snapB")
+
+      // the round under test, uninterrupted, then run until quiet
+      cqlWrite(Seq((1L, 500L, "gold", 1L), (11L, 510L, "s11", 11L)))
+      SyncJob.runOnce(spark, cfg)
+      Seq("snapA", "snapB", "ckpt").foreach(d => copy(s"$base/$d", s"$base/round/$d"))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg)
+      val uninterrupted = state()
+      assert(uninterrupted._1.size === 11 && uninterrupted._4.size === 11)
+
+      // the crash, built by hand: the round relayed, wrote both <dir>.tmp,
+      // swapped snapA in and died before swapping snapB and before its
+      // offsets committed (snapA new, snapB old, the round uncommitted)
+      copy(s"$base/round/snapA", s"$base/snapA")
+      copy(s"$base/saved/snapB", s"$base/snapB")
+      copy(s"$base/round/snapB", s"$base/snapB.tmp")
+      copy(s"$base/round/ckpt", s"$base/ckpt")
+      val commits = f(s"$base/ckpt/cell/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(f(s"$commits/$last").delete())
+      f(s"$commits/.$last.crc").delete()
+
+      SyncJob.runOnce(spark, cfg) // replays the round
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg)
+      assert(state() === uninterrupted)
+      assert(!f(s"$base/snapB.tmp").exists())
+    }
+  }
 }
