@@ -3,16 +3,13 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft-cql` — the reference's ACTUAL Cassandra I/O layer as a
   * DataSource V2 connector speaking the CQL native protocol v4 over a
@@ -186,92 +183,56 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
     s"CqlScan $ks.$table token-splits=$splits " +
       s"ReadSchema: ${required.catalogString}"
 
+  override def planInputPartitions(): Array[InputPartition] = partitions(None)
+
   /** Contiguous token ranges covering the full Murmur3 ring. The ring is
     * a CLOSED circle: the first range uses >= Long.Min so the minimum
-    * token itself is not dropped (every other range is (a, b]). */
-  override def planInputPartitions(): Array[InputPartition] = {
+    * token itself is not dropped (every other range is (a, b]). A
+    * micro-batch's (tsCol, from, to] `window` rides on every range. */
+  private def partitions(window: Option[(String, Long, Long)]): Array[InputPartition] = {
     val step = java.lang.Long.divideUnsigned(-1L, splits.toLong) max 1L
     val bounds = (0 until splits).map(i => Long.MinValue + step * i) :+ Long.MaxValue
     (0 until splits).map { i =>
       CqlTokenRange(host, port, ks, table, pk, bounds(i), bounds(i + 1),
-        i == 0, pageSize, None, writetimeOf): InputPartition
+        i == 0, pageSize, window, writetimeOf): InputPartition
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CqlReaderFactory(required)
 
+  /** The poll-by-timestamp stream ([[TsWindowStream]]) over the native
+    * protocol: mark = `SELECT max(ts)` (a scan-aggregate server-side — the
+    * honest cost of poll-by-timestamp on C*; real deployments index the ts
+    * or use CDC, the reference scans exactly like this). The window
+    * conjunct rides WITH the token-range predicate, which requires ALLOW
+    * FILTERING — C*'s own spelling for a non-key predicate, again the
+    * reference's actual query shape. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     val col = incrementalCol.getOrElse(throw new IllegalArgumentException(
       "graft-cql: streaming reads need .option(\"incremental-column\", <bigint col>)"))
     require(required.fieldNames.contains(col),
       s"graft-cql: incremental-column '$col' is not in the read schema")
-    new CqlMicroBatchStream(host, port, ks, table, required, pk, splits,
-      pageSize, col, writetimeOf)
-  }
-}
-
-/** The reference's CHANGE-POLLING loop over the native protocol: each
-  * micro-batch is the half-open update-timestamp window (prev, mark],
-  * mark = `SELECT max(ts)` (a scan-aggregate server-side — the honest
-  * cost of poll-by-timestamp on C*; real deployments index the ts or use
-  * CDC, the reference scans exactly like this). The window conjunct
-  * rides WITH the token-range predicate, which requires ALLOW FILTERING
-  * — C*'s own spelling for a non-key predicate, again the reference's
-  * actual query shape. Deterministic replay under the CDC contract
-  * (append-monotone ts): a committed (from, to] window re-reads the same
-  * rows; late rows with ts ≤ a committed mark are missed — the
-  * documented limitation of every poll-by-timestamp sync. */
-private[sources] class CqlMicroBatchStream(host: String, port: Int,
-    ks: String, table: String, required: StructType, pk: String,
-    splits: Int, pageSize: Int, tsCol: String,
-    writetimeOf: Option[String] = None) extends MicroBatchStream {
-
-  private case class TsOffset(ts: Long) extends Offset {
-    override def json(): String = ts.toString
+    new TsWindowStream(() => maxTs(col),
+      (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }
 
-  override def initialOffset(): Offset = TsOffset(Long.MinValue)
-
-  override def latestOffset(): Offset = {
+  private def maxTs(col: String): Option[Long] = {
     val client = new CqlProtocol.Client(host, port)
     try {
-      val res = client.query(s"SELECT max($tsCol) FROM $ks.$table")
+      val res = client.query(s"SELECT max($col) FROM $ks.$table")
         .getOrElse(throw new java.io.IOException("graft-cql: Void for max()"))
-      val v = res.rows.headOption.flatMap(r => Option(r(0)))
+      res.rows.headOption.flatMap(r => Option(r(0)))
         .map(b => java.nio.ByteBuffer.wrap(b).getLong)
-      TsOffset(v.getOrElse(Long.MinValue))
     } finally client.close()
   }
-
-  override def deserializeOffset(json: String): Offset =
-    TsOffset(json.trim.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[TsOffset].ts, end.asInstanceOf[TsOffset].ts)
-    if (e <= s) Array.empty
-    else {
-      val step = java.lang.Long.divideUnsigned(-1L, splits.toLong) max 1L
-      val bounds = (0 until splits).map(i => Long.MinValue + step * i) :+ Long.MaxValue
-      (0 until splits).map { i =>
-        CqlTokenRange(host, port, ks, table, pk, bounds(i), bounds(i + 1),
-          i == 0, pageSize, Some((tsCol, s, e)), writetimeOf): InputPartition
-      }.toArray
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CqlReaderFactory(required)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** One token range = one split (the C* drivers' scan parallelism). */
 private[sources] case class CqlTokenRange(host: String, port: Int, ks: String,
     table: String, pk: String, lo: Long, hi: Long, includeLo: Boolean,
-    pageSize: Int, window: Option[(String, Long, Long)] = None,
-    writetimeOf: Option[String] = None)
+    pageSize: Int, window: Option[(String, Long, Long)],
+    writetimeOf: Option[String])
   extends InputPartition
 
 private[sources] class CqlReaderFactory(required: StructType)
@@ -329,25 +290,12 @@ private[sources] class CqlRangeReader(range: CqlTokenRange,
     while (!page.hasNext && !exhausted) fetch()
     if (!page.hasNext) return false
     val raw = page.next()
-    val out = new Array[Any](fields.length)
-    var i = 0
-    while (i < fields.length) {
-      out(i) = toCatalyst(CqlProtocol.decode(raw(i), fields(i).dataType),
-        fields(i).dataType)
-      i += 1
-    }
-    row = new GenericInternalRow(out)
+    val vals = Array.tabulate[Any](fields.length)(i =>
+      CqlProtocol.decode(raw(i), fields(i).dataType))
+    row = GraftSyncStore.internalRow(vals, fields)
     true
   }
 
   override def get(): InternalRow = row
   override def close(): Unit = client.close()
-
-  private def toCatalyst(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (a: Array[Any], ArrayType(et, _)) =>
-      new GenericArrayData(a.map(toCatalyst(_, et)))
-    case (x, _) => x
-  }
 }

@@ -6,33 +6,33 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft-es` — the reference's ACTUAL Elasticsearch I/O layer as a
   * DataSource V2 connector speaking the real ES REST protocol over HTTP:
-  * `_bulk` NDJSON writes on the sink side, SLICED SCROLL paging on the
-  * read side (`_search?scroll` + `_search/scroll` continuation), mapping
-  * inference from `GET /{index}/_mapping`. The zero-egress container has
-  * no ES server, so the protocol is pinned against an in-JVM HTTP stub
-  * (EsRestConnectorSpec / EsStubServer) that implements exactly the
-  * endpoint surface this connector consumes — the connector itself
-  * carries no test hooks and would run against a real cluster unchanged.
+  * `_bulk` NDJSON writes on the sink side, sliced point-in-time scans on
+  * the read side (`_pit` + `search_after` paging — the only scan; a
+  * cluster without PIT, before ES 7.10, fails at "open PIT failed"),
+  * mapping inference from `GET /{index}/_mapping`. The zero-egress
+  * container has no ES server, so the protocol is pinned against an
+  * in-JVM HTTP stub (EsRestConnectorSpec / EsStubServer) that implements
+  * exactly the endpoint surface this connector consumes — the connector
+  * itself carries no test hooks and would run against a real cluster
+  * unchanged.
   *
   * Scale shape (the 1000-executor story):
-  *   - READ: one InputPartition per scroll SLICE (`slice: {id, max}` —
+  *   - READ: one InputPartition per PIT SLICE (`slice: {id, max}` —
   *     ES's server-side partitioning of a scan); each executor drains
-  *     its slice independently, `read-slices` controls the fan-out, and
-  *     `scroll-size` bounds per-request memory. planInputPartitions
+  *     its slice independently, `read-slices` controls the fan-out,
+  *     `scroll-size` bounds each page (per-request memory) and
+  *     `scroll-keepalive` is the PIT keep-alive. planInputPartitions
   *     ships (node, index, sliceId) tuples, never data.
   *   - WRITE: each task batches rows into bounded `_bulk` bodies
   *     (`bulk-size` rows per request) — writer memory is constant in
@@ -46,7 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     duplicate on retry, so they require an explicit
   *     `allow-auto-ids=true` opt-in.
   *   - Filter pushdown is DATA-SKIPPING ONLY, never claimed: pushable
-  *     predicates translate to a `bool.filter` prefilter in the scroll
+  *     predicates translate to a `bool.filter` prefilter in the search
   *     body, but every filter is also returned as residual so Spark
   *     re-verifies — ES analyzed-text `term` semantics differ from SQL
   *     equality on text fields, and a claimed filter is never
@@ -232,23 +232,15 @@ private[sources] class EsRestTable(node: String, index: String,
       Option(options.get("read-slices")).map(_.toInt).getOrElse(4),
       Option(options.get("scroll-size")).map(_.toInt).getOrElse(1000),
       Option(options.get("scroll-keepalive")).getOrElse("1m"),
-      Option(options.get("incremental-column")),
-      // scan-api: pit (default — scroll is discouraged since ES 7.10 and
-      // PIT+search_after holds no server-side per-scan context to leak)
-      // or scroll (the legacy API, kept selectable)
-      Option(options.get("scan-api")).getOrElse("pit") match {
-        case api @ ("pit" | "scroll") => api
-        case other => throw new IllegalArgumentException(
-          s"graft-es: scan-api must be pit or scroll, got '$other'")
-      })
+      Option(options.get("incremental-column")))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new EsRestWriteBuilder(node, index, info)
 }
 
 private[sources] class EsRestScanBuilder(node: String, index: String,
-    fullSchema: StructType, slices: Int, scrollSize: Int, keepalive: String,
-    incrementalCol: Option[String] = None, scanApi: String = "pit")
+    fullSchema: StructType, slices: Int, pageSize: Int, keepalive: String,
+    incrementalCol: Option[String] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -268,14 +260,13 @@ private[sources] class EsRestScanBuilder(node: String, index: String,
     required = requiredSchema
 
   override def build(): Scan =
-    new EsRestScan(node, index, required, pushed, slices, scrollSize,
-      keepalive, incrementalCol, scanApi)
+    new EsRestScan(node, index, required, pushed, slices, pageSize,
+      keepalive, incrementalCol)
 }
 
 private[sources] class EsRestScan(node: String, index: String,
     required: StructType, pushed: Array[Filter], slices: Int,
-    scrollSize: Int, keepalive: String, incrementalCol: Option[String] = None,
-    scanApi: String = "pit")
+    pageSize: Int, keepalive: String, incrementalCol: Option[String] = None)
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -304,194 +295,58 @@ private[sources] class EsRestScan(node: String, index: String,
       rows.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
+  override def planInputPartitions(): Array[InputPartition] = partitions(None)
+
+  /** One slice per partition; a micro-batch's (tsCol, from, to] `window`
+    * rides on every slice. */
+  private def partitions(window: Option[(String, Long, Long)]): Array[InputPartition] =
     (0 until slices)
-      .map(i => EsSlice(node, index, i, slices, scrollSize, keepalive,
-        scanApi = scanApi): InputPartition)
+      .map(i => EsSlice(node, index, i, slices, pageSize, keepalive,
+        window): InputPartition)
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new EsRestReaderFactory(required, pushed)
 
+  /** The poll-by-timestamp stream ([[TsWindowStream]]) over the real
+    * wire — exactly how the reference detects changed rows (the update-ts
+    * column it reads from `_timestamp`-style fields). The mark comes from
+    * a size-0 `max` aggregation; each window still reads as sliced PIT
+    * scans, the batch scan's parallelism. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     val col = incrementalCol.getOrElse(throw new IllegalArgumentException(
       "graft-es: streaming reads need .option(\"incremental-column\", <epoch-µs long col>)"))
     require(required.fieldNames.contains(col),
       s"graft-es: incremental-column '$col' is not in the read schema")
-    new EsMicroBatchStream(node, index, required, pushed, slices,
-      scrollSize, keepalive, col, scanApi)
-  }
-}
-
-/** The reference's CHANGE-POLLING loop over the real wire: each
-  * micro-batch is the half-open update-timestamp window (prev, mark] —
-  * exactly how the reference detects changed rows (the update-ts column
-  * it reads from `_timestamp`-style fields). The mark comes from a
-  * size-0 `max` aggregation, so an offset pins its batch exactly and a
-  * checkpointed replay re-issues the same window (deterministic under
-  * the CDC contract: the ts column is append-monotone — late rows with
-  * ts ≤ a committed mark would be missed, the documented limitation of
-  * EVERY poll-by-timestamp sync including the reference's). Each window
-  * still reads as sliced scrolls — the batch scan's parallelism. */
-private[sources] class EsMicroBatchStream(node: String, index: String,
-    required: StructType, pushed: Array[Filter], slices: Int,
-    scrollSize: Int, keepalive: String, tsCol: String,
-    scanApi: String = "pit")
-    extends MicroBatchStream {
-
-  private case class TsOffset(ts: Long) extends Offset {
-    override def json(): String = ts.toString
+    new TsWindowStream(() => maxTs(col),
+      (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }
 
-  override def initialOffset(): Offset = TsOffset(Long.MinValue)
-
-  override def latestOffset(): Offset = {
+  private def maxTs(col: String): Option[Long] = {
     val m = new ObjectMapper()
     val body = m.createObjectNode()
     body.put("size", 0)
-    body.putObject("aggs").putObject("m").putObject("max").put("field", tsCol)
+    body.putObject("aggs").putObject("m").putObject("max").put("field", col)
     val (code, resp) = EsHttp.request("POST", s"$node/$index/_search",
       Some(m.writeValueAsString(body)))
     if (code != 200) throw new java.io.IOException(
-      s"graft-es: max-$tsCol poll failed ($code): $resp")
+      s"graft-es: max-$col poll failed ($code): $resp")
     val v = m.readTree(resp).path("aggregations").path("m").path("value")
-    TsOffset(if (v.isNumber) v.asLong() else Long.MinValue)
+    if (v.isNumber) Some(v.asLong()) else None
   }
-
-  override def deserializeOffset(json: String): Offset =
-    TsOffset(json.trim.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[TsOffset].ts, end.asInstanceOf[TsOffset].ts)
-    if (e <= s) Array.empty
-    else (0 until slices).map(i =>
-      EsSlice(node, index, i, slices, scrollSize, keepalive,
-        Some((tsCol, s, e)), scanApi): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EsRestReaderFactory(required, pushed)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** One scan slice = one split (ES partitions the scan server-side).
-  * `window` (tsCol, from, to] narrows a micro-batch to its offset range;
-  * `scanApi` picks PIT+search_after (default) or legacy scroll. */
+  * `window` (tsCol, from, to] narrows a micro-batch to its offset range. */
 private[sources] case class EsSlice(node: String, index: String,
-    sliceId: Int, maxSlices: Int, scrollSize: Int, keepalive: String,
-    window: Option[(String, Long, Long)] = None, scanApi: String = "pit")
+    sliceId: Int, maxSlices: Int, pageSize: Int, keepalive: String,
+    window: Option[(String, Long, Long)])
   extends InputPartition
 
 private[sources] class EsRestReaderFactory(required: StructType,
     pushed: Array[Filter]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val slice = partition.asInstanceOf[EsSlice]
-    if (slice.scanApi == "pit") new EsPitReader(slice, required, pushed)
-    else new EsScrollReader(slice, required, pushed)
-  }
-}
-
-/** Drains one scroll slice: initial `_search?scroll` with the slice
-  * clause, prefilter query and `_source` pruning, then `_search/scroll`
-  * continuations until the page comes back empty; the scroll context is
-  * DELETEd on close (a leaked context pins ES segment memory). */
-private[sources] class EsScrollReader(slice: EsSlice, required: StructType,
-    pushed: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private val mapper = new ObjectMapper()
-  private val fields = required.fields
-  private var scrollId: String = _
-  private var page: Iterator[JsonNode] = Iterator.empty
-  private var exhausted = false
-  private var row: InternalRow = _
-
-  private def searchBody(): String = {
-    val body = mapper.createObjectNode()
-    body.put("size", slice.scrollSize)
-    if (slice.maxSlices > 1) {
-      val s = body.putObject("slice")
-      s.put("id", slice.sliceId)
-      s.put("max", slice.maxSlices)
-    }
-    val base = EsRest.queryJson(mapper, pushed)
-    val query = slice.window match {
-      case None => base
-      case Some((col, from, to)) =>
-        // the offset window rides WITH the prefilters in one bool.filter
-        val q = mapper.createObjectNode()
-        val fs = q.putObject("bool").putArray("filter")
-        fs.add(base)
-        val r = fs.addObject().putObject("range").putObject(col)
-        r.put("gt", from)
-        r.put("lte", to)
-        q
-    }
-    body.set[JsonNode]("query", query)
-    val src = body.putObject("_source")
-    val inc = src.putArray("includes")
-    fields.foreach(f => inc.add(f.name))
-    mapper.writeValueAsString(body)
-  }
-
-  private def takePage(respBody: String): Unit = {
-    val resp = mapper.readTree(respBody)
-    scrollId = resp.path("_scroll_id").asText(scrollId)
-    val hits = resp.path("hits").path("hits")
-    if (!hits.isArray || hits.size() == 0) { exhausted = true; page = Iterator.empty }
-    else page = hits.elements().asScala.map(_.path("_source")).toSeq.iterator
-  }
-
-  private def fetch(): Unit = {
-    val (code, respBody) =
-      if (scrollId == null)
-        EsHttp.request("POST",
-          s"${slice.node}/${slice.index}/_search?scroll=${slice.keepalive}",
-          Some(searchBody()))
-      else {
-        val b = mapper.createObjectNode()
-        b.put("scroll", slice.keepalive)
-        b.put("scroll_id", scrollId)
-        EsHttp.request("POST", s"${slice.node}/_search/scroll",
-          Some(mapper.writeValueAsString(b)))
-      }
-    if (code != 200) throw new java.io.IOException(
-      s"graft-es: scroll request failed ($code): $respBody")
-    takePage(respBody)
-  }
-
-  override def next(): Boolean = {
-    while (!page.hasNext && !exhausted) fetch()
-    if (!page.hasNext) return false
-    val vals = GraftSyncStore.parseNode(page.next(), fields)
-    val out = new Array[Any](fields.length)
-    var i = 0
-    while (i < fields.length) {
-      out(i) = convert(vals(i), fields(i).dataType)
-      i += 1
-    }
-    row = new GenericInternalRow(out)
-    true
-  }
-
-  override def get(): InternalRow = row
-
-  override def close(): Unit = if (scrollId != null) {
-    val b = mapper.createObjectNode()
-    b.putArray("scroll_id").add(scrollId)
-    try EsHttp.request("DELETE", s"${slice.node}/_search/scroll",
-      Some(mapper.writeValueAsString(b)))
-    catch { case _: Exception => () } // best-effort: keepalive expires it
-  }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (a: Array[Any], ArrayType(et, _)) =>
-      new GenericArrayData(a.map(convert(_, et)))
-    case (x, _) => x
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new EsPitReader(partition.asInstanceOf[EsSlice], required, pushed)
 }
 
 /** Drains one slice over PIT + search_after — the documented replacement
@@ -532,7 +387,7 @@ private[sources] class EsPitReader(slice: EsSlice, required: StructType,
 
   private def searchBody(): String = {
     val body = mapper.createObjectNode()
-    body.put("size", slice.scrollSize)
+    body.put("size", slice.pageSize)
     if (slice.maxSlices > 1) {
       val s = body.putObject("slice")
       s.put("id", slice.sliceId)
@@ -583,14 +438,8 @@ private[sources] class EsPitReader(slice: EsSlice, required: StructType,
   override def next(): Boolean = {
     while (!page.hasNext && !exhausted) fetch()
     if (!page.hasNext) return false
-    val vals = GraftSyncStore.parseNode(page.next(), fields)
-    val out = new Array[Any](fields.length)
-    var i = 0
-    while (i < fields.length) {
-      out(i) = convert(vals(i), fields(i).dataType)
-      i += 1
-    }
-    row = new GenericInternalRow(out)
+    row = GraftSyncStore.internalRow(
+      GraftSyncStore.parseNode(page.next(), fields), fields)
     true
   }
 
@@ -602,13 +451,5 @@ private[sources] class EsPitReader(slice: EsSlice, required: StructType,
     try EsHttp.request("DELETE", s"${slice.node}/_pit",
       Some(mapper.writeValueAsString(b)))
     catch { case _: Exception => () } // best-effort: keep-alive expires it
-  }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (a: Array[Any], ArrayType(et, _)) =>
-      new GenericArrayData(a.map(convert(_, et)))
-    case (x, _) => x
   }
 }

@@ -6,8 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -282,7 +280,6 @@ private[sources] class GraftSyncPageReader(path: java.nio.file.Path,
     required.fields ++ filterCols.map(c => fullSchema(fullSchema.fieldIndex(c)))
   private val colIndex: Map[String, Int] =
     parseFields.map(_.name).zipWithIndex.toMap
-  private val nRequired = required.fields.length
 
   private val reader = java.nio.file.Files.newBufferedReader(path)
   private var row: InternalRow = _
@@ -304,7 +301,7 @@ private[sources] class GraftSyncPageReader(path: java.nio.file.Path,
           }
         def get(c: String): Any = vals(colIndex(c))
         if (pushed.forall(GraftSyncFilters.eval(_, get))) {
-          row = toCatalyst(vals)
+          row = GraftSyncStore.internalRow(vals, required.fields)
           emitted += 1
           return true
         }
@@ -316,24 +313,6 @@ private[sources] class GraftSyncPageReader(path: java.nio.file.Path,
 
   override def get(): InternalRow = row
   override def close(): Unit = reader.close()
-
-  private def toCatalyst(vals: Array[Any]): InternalRow = {
-    val out = new Array[Any](nRequired)
-    var i = 0
-    while (i < nRequired) {
-      out(i) = convert(vals(i), required.fields(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(out)
-  }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (a: Array[Any], ArrayType(et, _)) =>
-      new GenericArrayData(a.map(convert(_, et)))
-    case (x, _) => x // int/long/float/double/boolean pass through
-  }
 }
 
 /** Offsets are positions in the committed-page list: the feed is

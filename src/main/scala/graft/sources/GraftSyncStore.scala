@@ -6,7 +6,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** On-disk layout of the `graft-sync` store — the zero-egress stand-in for
   * the external systems the reference syncs (a paged CQL table scan on the
@@ -499,7 +503,7 @@ private[sources] object GraftSyncStore {
   /** Parse one JSONL line into column values for `fields` (null-safe;
     * a field absent from the JSON object reads as SQL NULL — the dynamic-
     * document semantics of the ES side). Returns raw JVM values; the
-    * caller converts to Catalyst form. */
+    * caller converts to Catalyst form with [[internalRow]]. */
   def parseLine(mapper: ObjectMapper, line: String,
       fields: Array[StructField]): Array[Any] =
     parseNode(mapper.readTree(line), fields)
@@ -515,6 +519,29 @@ private[sources] object GraftSyncStore {
       i += 1
     }
     out
+  }
+
+  /** The row every connector reader emits: the first `fields.length` raw
+    * values (from [[parseNode]] or the CQL decoder) in Catalyst form —
+    * strings become UTF8String, arrays GenericArrayData, and the numeric,
+    * boolean and epoch-µs values pass through. Values past `fields` (a
+    * reader's filter-only columns) are dropped. */
+  def internalRow(vals: Array[Any], fields: Array[StructField]): InternalRow = {
+    val out = new Array[Any](fields.length)
+    var i = 0
+    while (i < fields.length) {
+      out(i) = toCatalyst(vals(i), fields(i).dataType)
+      i += 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  private def toCatalyst(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (s: String, StringType) => UTF8String.fromString(s)
+    case (a: Array[Any], ArrayType(et, _)) =>
+      new GenericArrayData(a.map(toCatalyst(_, et)))
+    case (x, _) => x
   }
 
   /** STRICT decode: a value of the wrong JSON kind throws instead of

@@ -9,9 +9,16 @@ import org.apache.spark.sql.functions._
   * 8-plane signature — the r15 verdict's watch item on the SHUFFLE_HASH
   * hint (a skewed bucket would concentrate one hash build).
   *
+  * Mode "jobs <dataDir> [query...]": wall time and Spark-job count of
+  * three reps of each named declared query (default
+  * j282_transition_pagerank), cache cleared between reps — the
+  * single-query timing loop for optimization work.
+  *
   * Mode "floor <dataDir>": splits a trivial query's wall time into
   * plan/analysis vs first-action execution, averaged over reps — the
   * session-floor breakdown the r15 verdict asked for (item 8).
+  *
+  * Plan dumps of declared queries are MultiExplain's job.
   */
 object Probe16 {
   def main(args: Array[String]): Unit = {
@@ -42,9 +49,10 @@ object Probe16 {
           s"total=${occ.getLong(2)} median=${occ.get(3)} " +
           f"max_share=${occ.getLong(1).toDouble / occ.getLong(2)}%.4f")
       case "jobs" =>
-        // Spark-job count for one query run — the r15 verdict item 7
+        // Spark-job count per query run — the r15 verdict item 7
         // "job count per round drops by 1" evidence for j282
-        val q = if (args.length > 2) args(2) else "j282_transition_pagerank"
+        val qs = if (args.length > 2) args.drop(2).toSeq
+          else Seq("j282_transition_pagerank")
         val counter = new java.util.concurrent.atomic.AtomicInteger(0)
         spark.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
@@ -53,7 +61,7 @@ object Probe16 {
               counter.incrementAndGet(); ()
             }
           })
-        for (r <- 1 to 3) {
+        for (q <- qs; r <- 1 to 3) {
           counter.set(0)
           val t0 = System.nanoTime()
           graft.SparkEntry.queries(q)(spark, d).count()
@@ -75,7 +83,7 @@ object Probe16 {
         }
       case other =>
         System.err.println(s"unknown mode '$other'; usage: Probe16 " +
-          "(occupancy | jobs | floor) <dataDir> [query, for jobs]")
+          "(occupancy | jobs | floor) <dataDir> [query..., for jobs]")
         spark.stop()
         sys.exit(2)
     }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `graft-es` wire connector (graft.sources.EsRest*) against the
-  * in-JVM ES protocol stub: bulk round-trip through sliced scroll,
+  * in-JVM ES protocol stub: bulk round-trip through sliced PIT scans,
   * mapping inference, id-upsert replay convergence (the sync loop's
-  * idempotency contract), `_source` pruning + prefilter shipping, scroll
+  * idempotency contract), `_source` pruning + prefilter shipping, PIT
   * lifecycle cleanup, and loud bulk-error surfacing. */
 class EsRestConnectorSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -40,15 +40,14 @@ class EsRestConnectorSpec extends AnyFunSuite {
       .mode("append").save()
   }
 
-  private def read(stub: EsStubServer, slices: Int = 3, api: String = "pit") =
+  private def read(stub: EsStubServer, slices: Int = 3) =
     spark.read.format("graft-es")
       .option("nodes", stub.url).option("index", "docs")
       .option("read-slices", slices.toString)
       .option("scroll-size", "64")
-      .option("scan-api", api)
       .load()
 
-  test("bulk round-trip through sliced scroll: rows, schema and types survive") {
+  test("bulk round-trip through sliced PIT scans: rows, schema and types survive") {
     withStub { stub =>
       val src = sample(500)
       write(stub, src, Map("bulk-size" -> "100"))
@@ -94,7 +93,7 @@ class EsRestConnectorSpec extends AnyFunSuite {
       val got = read(stub).filter($"id" > 250L).select($"id", $"name")
         .orderBy($"id").collect()
       assert(got.map(_.getLong(0)).toSeq === (251L to 300L))
-      // pruning: the scroll request asked for exactly the needed columns
+      // pruning: the search request asked for exactly the needed columns
       assert(stub.lastSourceIncludes.toSet === Set("id", "name"))
       // prefilter: the range clause reached the stub's query body
       assert(stub.lastQuery.contains("\"range\"") &&
@@ -106,22 +105,12 @@ class EsRestConnectorSpec extends AnyFunSuite {
     }
   }
 
-  test("read parallelism = one scroll slice per input partition") {
+  test("read parallelism = one PIT slice per input partition") {
     withStub { stub =>
       write(stub, sample(100))
       val df = read(stub, slices = 5)
       assert(df.rdd.getNumPartitions === 5)
       assert(df.count() === 100) // slices partition, never duplicate/drop
-    }
-  }
-
-  test("scroll contexts are DELETEd when the scan finishes (legacy scan-api: scroll)") {
-    withStub { stub =>
-      write(stub, sample(100))
-      read(stub, slices = 3, api = "scroll").count()
-      assert(stub.scrollDeletes.get() >= 3,
-        s"each slice must clean its scroll context, saw ${stub.scrollDeletes.get()}")
-      assert(stub.pitOpens.get() === 0, "scroll mode must not open PITs")
     }
   }
 
@@ -136,18 +125,19 @@ class EsRestConnectorSpec extends AnyFunSuite {
     }
   }
 
-  test("PIT and scroll scans return identical results (equivalence over the same stub state)") {
+  test("PIT scans return exactly the rows written, whole and prefiltered") {
     withStub { stub =>
-      write(stub, sample(257))
-      def canon(api: String) = read(stub, slices = 4, api = api)
-        .orderBy($"id").collect().map(_.toString).toSeq
-      assert(canon("pit") === canon("scroll"))
-      // prefiltered + pruned reads agree too
-      def filtered(api: String) = read(stub, slices = 2, api = api)
-        .filter($"id" > 200L).select($"id", $"name")
-        .orderBy($"id").collect().map(_.toString).toSeq
-      assert(filtered("pit") === filtered("scroll"))
-      assert(filtered("pit").size === 57)
+      val src = sample(257)
+      write(stub, src)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy($"id").collect().map(_.toString).toSeq
+      val back = read(stub, slices = 4)
+      assert(rows(back) === rows(src.select(back.columns.map(col): _*)))
+      // prefiltered + pruned reads return exactly the matching rows too
+      val filtered = rows(read(stub, slices = 2)
+        .filter($"id" > 200L).select($"id", $"name"))
+      assert(filtered === rows(src.filter($"id" > 200L).select($"id", $"name")))
+      assert(filtered.size === 57)
     }
   }
 

@@ -460,6 +460,76 @@ class WireSyncSpec extends AnyFunSuite {
     } finally { cql.stop(); es.stop() }
   }
 
+  test("graft-cql and graft-es share one ts stream: full first read, idle triggers stay off the wire, restarts resume past the mark") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val cql = new CqlStubServer().start()
+    val es = new EsStubServer().start()
+    val base = java.nio.file.Files.createTempDirectory("tswindow").toString
+    try {
+      cql.createTable("ks", "t", Seq(
+        ("key", "bigint"), ("ts", "bigint"), ("val", "text")), pk = "key")
+      val (c, _) = graft.sources.EsHttp.request("PUT", s"${es.url}/t", Some(
+        """{"mappings":{"properties":{"key":{"type":"long"},
+          |"ts":{"type":"long"},"val":{"type":"keyword"}}}}""".stripMargin))
+      assert(c === 200)
+      def rows(keys: Seq[Long]): DataFrame =
+        keys.map(k => (k, k * 10L, s"v$k")).toDF("key", "ts", "val")
+      // per connector: its writer, its ts stream, and the wire counter of
+      // its partition reads (the CQL prepared range read, the ES PIT open)
+      val wires = Seq[(String, DataFrame => Unit, () => DataFrame, () => Int)](
+        ("graft-cql",
+          df => df.write.format("graft-cql").option("host", cql.host)
+            .option("keyspace", "ks").option("table", "t").mode("append").save(),
+          () => spark.readStream.format("graft-cql").option("host", cql.host)
+            .option("keyspace", "ks").option("table", "t")
+            .option("partition-key", "key").option("incremental-column", "ts").load(),
+          () => cql.executeRequests.get()),
+        ("graft-es",
+          df => df.write.format("graft-es").option("nodes", es.url)
+            .option("index", "t").option("id-column", "key").mode("append").save(),
+          () => spark.readStream.format("graft-es").option("nodes", es.url)
+            .option("index", "t").option("incremental-column", "ts").load(),
+          () => es.pitOpens.get()))
+      for ((name, write, stream, reads) <- wires) {
+        val ckpt = s"$base/$name"
+        // one restart of the query: drain what is there, then stop
+        def trigger(): Seq[Long] = {
+          val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+          stream().writeStream.option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow())
+            .foreachBatch { (b: DataFrame, _: Long) =>
+              b.select("key").collect().foreach(r => seen.add(r.getLong(0)))
+            }.start().awaitTermination()
+          seen.asScala.toSeq.sorted
+        }
+        // the source's entry in the newest offsets/ file (its last line)
+        def committedMark(): String = {
+          val dir = new java.io.File(s"$ckpt/offsets")
+          val newest = dir.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+            .maxBy(_.toLong)
+          java.nio.file.Files.readAllLines(new java.io.File(dir, newest).toPath)
+            .asScala.last
+        }
+
+        write(rows(0L to 20L)) // key 0 has ts 0: a fresh query starts below it
+        assert(trigger() === (0L to 20L), s"$name: the first trigger reads every row")
+        assert(committedMark() === "200", s"$name: the offset is the bare max ts")
+
+        val before = reads()
+        assert(trigger().isEmpty, s"$name: no new ts, no rows")
+        assert(reads() === before, s"$name: a trigger with no new ts plans no partitions")
+
+        write(rows(21L to 25L))
+        assert(trigger() === (21L to 25L),
+          s"$name: a restart reads only the rows past the committed mark")
+        assert(reads() > before)
+        assert(committedMark() === "250")
+      }
+    } finally { cql.stop(); es.stop() }
+  }
+
   /** A `merge: cell` loop over fresh stubs: C* table ks.t and ES index t,
     * both keyed by `key` with cells status,val. `body` gets the stubs,
     * the config, the snapshot root and a C* writer stamping by `ts`. */
