@@ -1,7 +1,9 @@
 package graft
 
+import graft.sources.Cql
 import graft.streaming.Sync
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The reference's user-facing surface: a configured, periodic,
@@ -217,12 +219,13 @@ object SyncJob {
     *     merged state), polled incrementally on its update-ts column;
     *     side B is the ES index whose docs carry `<cell>_wt` stamp fields
     *     beside the data fields.
-    *   - writeback to C* goes per CELL with `USING TIMESTAMP <stamp>`
-    *     (using-timestamp-virtual — the stamp rides only as the cell
-    *     writetime), so the SERVER re-resolves by the same rule and a
-    *     replayed or reordered relay can never regress a newer cell. The
-    *     relay deliberately never touches the update-ts column: relayed
-    *     data must not echo back through A's own feed.
+    *   - writeback to C* is ONE graft-cql write per round with
+    *     `writetime-of` over every cell: each cell rides its own
+    *     `INSERT … USING TIMESTAMP <stamp>` in the same batches, so the
+    *     SERVER re-resolves by the same rule and a replayed or reordered
+    *     relay can never regress a newer cell. The relay deliberately
+    *     never touches the update-ts column: relayed data must not echo
+    *     back through A's own feed.
     *   - writeback to ES sends the MERGED doc guarded by external_gte
     *     versioning (version = the row's greatest stamp), ES's only
     *     regress guard — a relay planned before a local ES write lands as
@@ -239,122 +242,102 @@ object SyncJob {
     require(cfg.formatA == "graft-cql" && cfg.formatB == "graft-es",
       "sync config: merge=cell is the C*⟷ES topology " +
         "(cassandra.format: graft-cql, elasticsearch.format: graft-es)")
-    val a = new java.net.URI(cfg.sideA)
-    val Array(ks, tbl) = a.getPath.stripPrefix("/").split("/")
-    val columns = cellColumns(cfg)
-    val pk = columns.head
-    val cqlHost = s"${a.getHost}:${a.getPort}"
-    val b = new java.net.URI(cfg.sideB)
-    val esNodes = s"http://${b.getHost}:${b.getPort}"
-    val esIndex = b.getPath.stripPrefix("/")
-    val shape = (df: org.apache.spark.sql.DataFrame) => df.select(columns.map(col): _*)
+    val a = cqlEndpoint(cfg.sideA)
+    val b = esEndpoint(cfg.sideB)
+    val columns = Sync.cellColumns(a.pk, cfg.cells)
+    // the connector's stamp column for each `<cell>_wt`, read and write
+    val writetimeOf = cfg.cells.mkString(",")
+    val stampOf = Cql.writetimeCols(Some(writetimeOf)).map { case (s, c) => s"${c}_wt" -> s }
 
-    val feedA = {
-      val raw = spark.readStream.format("graft-cql")
-        .option("host", cqlHost)
-        .option("keyspace", ks).option("table", tbl)
-        .option("partition-key", pk)
-        .option("incremental-column", "ts")
-        .option("writetime-of", cfg.cells.mkString(","))
-        .load()
-      // single-cell reads keep the connector's legacy synthetic name
-      val renamed = cfg.cells.foldLeft(raw) { (df, c) =>
-        val syn = if (cfg.cells.length == 1) "writetime" else s"writetime_$c"
-        df.withColumnRenamed(syn, s"${c}_wt")
-      }
-      shape(renamed)
-    }
-    val feedB = shape(spark.readStream.format("graft-es")
-      .option("nodes", esNodes).option("index", esIndex)
-      .option("incremental-column", "ts")
-      .load())
+    val feedA = cqlStream(spark, a).option("writetime-of", writetimeOf).load()
+      .select(columns.map(n => col(stampOf.getOrElse(n, n)).as(n)): _*)
+    val feedB = esStream(spark, b).load().select(columns.map(col): _*)
 
-    Sync.cellSyncSink(feedA.unionByName(feedB), pk, cfg.cells,
+    Sync.cellSyncSink(feedA.unionByName(feedB), a.pk, cfg.cells,
       Seq(cfg.snapshotA, cfg.snapshotB),
       s"${cfg.checkpointDir}/cell", cfg.interval) { affected =>
       // one stable version per merged row: its greatest stamp. Stable
       // across echo rounds, so relays converge instead of ping-ponging.
       val docs = affected.withColumn("ts",
         greatest(col("ts") +: cfg.cells.map(c => col(s"${c}_wt")): _*))
-      docs.write.format("graft-es")
-        .option("nodes", esNodes).option("index", esIndex)
-        .option("id-column", pk).option("version-column", "ts")
+      docs.write.format("graft-es").options(b.options)
+        .option("id-column", a.pk).option("version-column", "ts")
         .mode("append").save()
-      cfg.cells.foreach { c =>
-        affected.select(col(pk), col(c), col(s"${c}_wt"))
-          .where(col(s"${c}_wt").isNotNull)
-          .write.format("graft-cql")
-          .option("host", cqlHost)
-          .option("keyspace", ks).option("table", tbl)
-          .option("using-timestamp-column", s"${c}_wt")
-          .option("using-timestamp-virtual", "true")
-          .mode("append").save()
-      }
+      affected.select(col(a.pk) +: cfg.cells.flatMap(c =>
+          Seq(col(c), col(s"${c}_wt").as(stampOf(s"${c}_wt")))): _*)
+        .write.format("graft-cql").options(a.options)
+        .option("writetime-of", writetimeOf)
+        .mode("append").save()
     }
   }
 
-  /** The `merge: cell` snapshot's columns: the C* partition key (the
-    * feed's `?pk=`), the poll cursor `ts`, then each cell and its stamp. */
-  private def cellColumns(cfg: SyncConfig): Seq[String] =
-    uriParam(new java.net.URI(cfg.sideA), "pk").getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-cql feed needs ?pk=<partition key column>: ${cfg.sideA}")) +:
-      "ts" +: cfg.cells.flatMap(c => Seq(c, s"${c}_wt"))
-
   /** One side's change feed as a stream in [[Sync.changeSchema]] shape.
-    * `graft-sync` feeds carry `ts` as epoch-micros longs (the connector's
-    * value domain) and are re-homed to TimestampType here, so every
-    * downstream operator sees one schema regardless of the endpoint. */
+    * The non-parquet feeds carry `ts` as epoch-micros longs (the
+    * connectors' value domain) and are re-homed to TimestampType here, so
+    * every downstream operator sees one schema regardless of the
+    * endpoint. The wire feeds poll by that ts column — exactly the
+    * reference's poll-by-update-timestamp rounds. */
   private def changeFeed(spark: SparkSession, dir: String,
-      format: String): org.apache.spark.sql.DataFrame = format match {
-    case "parquet" => Sync.changeStream(spark, dir)
-    case "graft-sync" =>
-      spark.readStream.format("graft-sync").load(dir)
-        .withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts)"))
-        .select("key", "ts", "uid", "payload")
-    case "graft-cql" =>
-      // the REAL wire: feed = cql://host:port/keyspace/table?pk=<col>;
-      // the change feed polls by the ts column (epoch-µs bigint) —
-      // exactly the reference's poll-by-update-timestamp rounds
-      val u = new java.net.URI(dir)
-      require(u.getScheme == "cql",
-        s"graft-cql feed must be cql://host:port/ks/table?pk=..., got $dir")
-      val Array(ks, tbl) = u.getPath.stripPrefix("/").split("/")
-      val pk = uriParam(u, "pk").getOrElse(throw new IllegalArgumentException(
-        s"graft-cql feed needs ?pk=<partition key column>: $dir"))
-      spark.readStream.format("graft-cql")
-        .option("host", s"${u.getHost}:${u.getPort}")
-        .option("keyspace", ks).option("table", tbl)
-        .option("partition-key", pk)
-        .option("incremental-column", "ts")
-        .load()
-        .withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts)"))
-        .select("key", "ts", "uid", "payload")
-    case "graft-es" =>
-      // the REAL wire: feed = es://host:port/index (http assumed — the
-      // harness stub; a TLS deployment would extend the scheme)
-      val u = new java.net.URI(dir)
-      require(u.getScheme == "es",
-        s"graft-es feed must be es://host:port/index, got $dir")
-      spark.readStream.format("graft-es")
-        .option("nodes", s"http://${u.getHost}:${u.getPort}")
-        .option("index", u.getPath.stripPrefix("/"))
-        .option("incremental-column", "ts")
-        .load()
-        .withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts)"))
-        .select("key", "ts", "uid", "payload")
-    case other => throw new IllegalArgumentException(
-      s"sync config: unknown feed format '$other' " +
-        "(parquet | graft-sync | graft-cql | graft-es)")
+      format: String): DataFrame = {
+    def fromMicros(df: DataFrame) =
+      df.withColumn("ts", expr("timestamp_micros(ts)")).select("key", "ts", "uid", "payload")
+    format match {
+      case "parquet" => Sync.changeStream(spark, dir)
+      case "graft-sync" => fromMicros(spark.readStream.format("graft-sync").load(dir))
+      case "graft-cql" => fromMicros(cqlStream(spark, cqlEndpoint(dir)).load())
+      case "graft-es" => fromMicros(esStream(spark, esEndpoint(dir)).load())
+      case other => throw new IllegalArgumentException(
+        s"sync config: unknown feed format '$other' " +
+          "(parquet | graft-sync | graft-cql | graft-es)")
+    }
   }
 
-  private def uriParam(u: java.net.URI, key: String): Option[String] =
-    Option(u.getQuery).flatMap(_.split("&").collectFirst {
-      case kv if kv.startsWith(s"$key=") => kv.stripPrefix(s"$key=")
-    })
+  /** A `cql://host:port/keyspace/table?pk=<col>` feed: the reference's
+    * contact-points/keyspace/table config lines. */
+  private final case class CqlEndpoint(host: String, ks: String, table: String,
+      pk: String) {
+    def options: Map[String, String] = Map("host" -> host, "keyspace" -> ks, "table" -> table)
+  }
+
+  /** An `es://host:port/index` feed (http assumed — a TLS deployment
+    * would extend the scheme): the reference's ES-URL/index line. */
+  private final case class EsEndpoint(nodes: String, index: String) {
+    def options: Map[String, String] = Map("nodes" -> nodes, "index" -> index)
+  }
+
+  /** `uri`'s `host:port`, non-empty path segments and query parameters,
+    * if it is a `scheme://host:port/…` URI. */
+  private def uriParts(uri: String,
+      scheme: String): Option[(String, Seq[String], Map[String, String])] =
+    scala.util.Try(new java.net.URI(uri)).toOption
+      .filter(u => u.getScheme == scheme && u.getHost != null && u.getPort >= 0)
+      .map { u =>
+        val query = Option(u.getQuery).toSeq.flatMap(_.split("&")).map(_.split("=", 2))
+          .collect { case Array(k, v) if v.nonEmpty => k -> v }.toMap
+        (s"${u.getHost}:${u.getPort}",
+          Option(u.getPath).toSeq.flatMap(_.split("/")).filter(_.nonEmpty), query)
+      }
+
+  private def cqlEndpoint(uri: String): CqlEndpoint = uriParts(uri, "cql") match {
+    case Some((host, Seq(ks, table), query)) if query.contains("pk") =>
+      CqlEndpoint(host, ks, table, query("pk"))
+    case _ => throw new IllegalArgumentException("graft-cql feed must be " +
+      s"cql://host:port/keyspace/table?pk=<partition key column>, got '$uri'")
+  }
+
+  private def esEndpoint(uri: String): EsEndpoint = uriParts(uri, "es") match {
+    case Some((host, Seq(index), _)) => EsEndpoint(s"http://$host", index)
+    case _ => throw new IllegalArgumentException(
+      s"graft-es feed must be es://host:port/index, got '$uri'")
+  }
+
+  private def cqlStream(spark: SparkSession, a: CqlEndpoint) =
+    spark.readStream.format("graft-cql").options(a.options)
+      .option("partition-key", a.pk).option("incremental-column", "ts")
+
+  private def esStream(spark: SparkSession, b: EsEndpoint) =
+    spark.readStream.format("graft-es").options(b.options)
+      .option("incremental-column", "ts")
 
   /** One batch round (the reference's non-streaming mode): read whatever
     * is in both feeds now, merge both directions once, return row counts. */
@@ -363,7 +346,8 @@ object SyncJob {
     try { qa.processAllAvailable(); qb.processAllAvailable() }
     finally { qa.stop(); qb.stop() }
     val columns =
-      if (cfg.merge == "cell") cellColumns(cfg) else Sync.changeSchema.fieldNames.toSeq
+      if (cfg.merge == "cell") Sync.cellColumns(cqlEndpoint(cfg.sideA).pk, cfg.cells)
+      else Sync.changeSchema.fieldNames.toSeq
     def read(dir: String) = Sync.readSnapshot(spark, dir, columns).fold(0L)(_.count())
     (read(cfg.snapshotA), read(cfg.snapshotB))
   }

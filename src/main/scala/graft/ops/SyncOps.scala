@@ -81,7 +81,7 @@ object SyncOps {
     * tombstone. Keep each key's newest change; a key whose newest change
     * is a tombstone is absent from the view. `event_type = 'error'`
     * stands in for the payload-NULL tombstone of the streaming layer.
-    * Batch twin of `Sync.liveView(Sync.mergeLwwWithDeletes(...))` — NOT
+    * Batch twin of `Sync.liveView(Sync.mergeLww(...))` — NOT
     * of the merge alone: the merge must RETAIN winning tombstones (or a
     * replayed older update would resurrect the key, see Sync.scala); only
     * the read-side view drops them, which is what this query computes.

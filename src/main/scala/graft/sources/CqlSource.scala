@@ -81,15 +81,16 @@ class CqlProvider extends TableProvider
   }
 }
 
-private[sources] object Cql {
+private[graft] object Cql {
   def of(options: CaseInsensitiveStringMap, key: String): String = {
     val v = options.get(key)
     require(v != null && v.nonEmpty, s"graft-cql: .option(\"$key\", ...) is required")
     v
   }
-  /** The synthetic-column map a `writetime-of` option value induces:
-    * synthetic field name → data column whose WRITETIME it reads.
-    * Insertion-ordered (schema order = option order). */
+  /** The stamp-column map a `writetime-of` option value induces: stamp
+    * column name → the data column whose WRITETIME a read exposes in it
+    * and a write binds from it as `USING TIMESTAMP`. Insertion-ordered
+    * (schema order = option order). */
   def writetimeCols(writetimeOf: Option[String]): scala.collection.immutable.ListMap[String, String] =
     writetimeOf match {
       case None => scala.collection.immutable.ListMap.empty

@@ -8,109 +8,125 @@ import org.apache.spark.sql.types._
   * INSERTs over the native protocol. C* INSERT is an UPSERT by primary
   * key, so the write is at-least-once with exactly-once EFFECT — a
   * retried task or replayed job re-applies the same primary-keyed rows
-  * (the ES sink's `_id` contract, C*-side). `batch-rows` bounds each
-  * request (writer memory constant in partition size; C* itself rejects
-  * oversized batches — the reference's bulk loop uses the same knob).
-  * UNLOGGED because the rows of one Spark partition do not need C*'s
-  * atomic-batch log (they are independent upserts — the log would add a
-  * coordinator round-trip per batch for a guarantee replays already
-  * provide). Abort deletes nothing: applied upserts converge on retry. */
+  * (the ES sink's `_id` contract, C*-side). `batch-rows` bounds the rows
+  * of each request (writer memory constant in partition size; C* itself
+  * rejects oversized batches — the reference's bulk loop uses the same
+  * knob). UNLOGGED because the rows of one Spark partition do not need
+  * C*'s atomic-batch log (they are independent upserts — the log would
+  * add a coordinator round-trip per batch for a guarantee replays
+  * already provide). Abort deletes nothing: applied upserts converge on
+  * retry.
+  *
+  * Write stamps, the reference's actual C* write path (it stamps writes
+  * with the SOURCE timestamp so C*'s per-cell LWW resolves conflicts by
+  * origin time, not arrival order):
+  *   - `using-timestamp-column=<col>`: each row is one INSERT of every
+  *     column `USING TIMESTAMP <col>` (epoch-µs bigint/timestamp_ntz; a
+  *     null stamp fails the write).
+  *   - `writetime-of=<c1,c2,…>`: per-CELL stamps, the read side's option
+  *     and stamp-column names ([[Cql.writetimeCols]]: `writetime` for one
+  *     cell, `writetime_<c>` for several). Each row becomes one
+  *     `INSERT (<other columns>, c) … USING TIMESTAMP <stamp of c>` per
+  *     listed cell whose stamp is non-null; the stamp columns are not
+  *     table data. All of a row's statements ride the same batch, so one
+  *     Spark write relays every cell under its own writetime. */
 private[sources] class CqlWriteBuilder(host: String, port: Int, ks: String,
     table: String, info: LogicalWriteInfo) extends WriteBuilder {
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = {
-      GraftSyncStore.checkSchema(info.schema())
-      // USING TIMESTAMP <col>: each INSERT carries the row's own epoch-µs
-      // write stamp — the reference's actual C* write path (it stamps
-      // writes with the SOURCE timestamp so C*'s per-cell LWW resolves
-      // conflicts correctly instead of by arrival order)
+      val schema = info.schema()
+      GraftSyncStore.checkSchema(schema)
+      def field(c: String, what: String): StructField =
+        schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
+          s"graft-cql: $what '$c' is not in the written schema"))
+      def insert(cols: Seq[StructField], stamp: Option[String]) = CqlInsert(
+        s"INSERT INTO $ks.$table (${cols.map(_.name).mkString(", ")}) " +
+          s"VALUES (${cols.map(_ => "?").mkString(", ")})" +
+          stamp.fold("")(_ => " USING TIMESTAMP ?"),
+        cols.map(f => (schema.fieldIndex(f.name), f.dataType)),
+        stamp.map(schema.fieldIndex))
       val tsCol = Option(info.options().get("using-timestamp-column"))
+      val stamps = Cql.writetimeCols(Option(info.options().get("writetime-of")))
+      require(tsCol.isEmpty || stamps.isEmpty,
+        "graft-cql: writetime-of and using-timestamp-column are exclusive")
       tsCol.foreach { c =>
-        require(info.schema().fieldNames.contains(c),
-          s"graft-cql: using-timestamp-column '$c' is not in the written schema")
-        val dt = info.schema()(c).dataType
-        require(dt == org.apache.spark.sql.types.LongType ||
-          dt == org.apache.spark.sql.types.TimestampNTZType,
+        val dt = field(c, "using-timestamp-column").dataType
+        require(dt == LongType || dt == TimestampNTZType,
           s"graft-cql: using-timestamp-column must be bigint/timestamp_ntz µs, got ${dt.simpleString}")
       }
-      // using-timestamp-virtual=true: the stamp column rides ONLY as the
-      // USING TIMESTAMP bind and is NOT inserted as table data — the
-      // per-cell sync relay's shape (the target table has no column for
-      // another store's stamp; C* itself keeps it as the cell writetime)
-      val tsVirtual = Option(info.options().get("using-timestamp-virtual"))
-        .exists(_.toBoolean)
-      require(!tsVirtual || tsCol.isDefined,
-        "graft-cql: using-timestamp-virtual requires using-timestamp-column")
-      new CqlBatchWrite(host, port, ks, table, info.schema(), tsCol, tsVirtual,
-        Option(info.options().get("batch-rows")).map(_.toInt).getOrElse(64))
+      stamps.foreach { case (stamp, c) =>
+        field(c, "writetime-of column")
+        val dt = field(stamp, "writetime-of stamp column").dataType
+        require(dt == LongType,
+          s"graft-cql: writetime-of stamp column '$stamp' must be bigint µs, got ${dt.simpleString}")
+      }
+      val inserts =
+        if (stamps.isEmpty) Seq(insert(schema.fields.toSeq, tsCol))
+        else {
+          val stamped = stamps.keySet ++ stamps.values
+          val other = schema.fields.toSeq.filterNot(f => stamped(f.name))
+          stamps.toSeq.map { case (stamp, c) => insert(other :+ schema(c), Some(stamp)) }
+        }
+      new CqlBatchWrite(CqlWriterFactory(host, port, inserts, tsCol,
+        Option(info.options().get("batch-rows")).map(_.toInt).getOrElse(64)))
     }
   }
 }
 
-private[sources] class CqlBatchWrite(host: String, port: Int, ks: String,
-    table: String, schema: StructType, tsCol: Option[String],
-    tsVirtual: Boolean, batchRows: Int)
+/** One INSERT a written row expands to: its text, the (ordinal, type) of
+  * each bound value, and the ordinal bound to `USING TIMESTAMP ?`. */
+private[sources] case class CqlInsert(cql: String,
+    values: Seq[(Int, DataType)], stamp: Option[Int])
+
+private[sources] class CqlBatchWrite(factory: CqlWriterFactory)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    CqlWriterFactory(host, port, ks, table, schema, tsCol, tsVirtual, batchRows)
+    factory
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
+/** A null stamp fails the write under `using-timestamp-column` (`tsCol`);
+  * under `writetime-of` it drops that statement (a cell the row does not
+  * carry). */
 private[sources] case class CqlWriterFactory(host: String, port: Int,
-    ks: String, table: String, schema: StructType, tsCol: Option[String],
-    tsVirtual: Boolean, batchRows: Int) extends DataWriterFactory {
+    inserts: Seq[CqlInsert], tsCol: Option[String], batchRows: Int)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CqlBatchWriter(host, port, ks, table, schema, tsCol, tsVirtual, batchRows)
+    new CqlBatchWriter(this)
 }
 
 private[sources] case class CqlCommit(rows: Long) extends WriterCommitMessage
 
-private[sources] class CqlBatchWriter(host: String, port: Int, ks: String,
-    table: String, schema: StructType, tsCol: Option[String],
-    tsVirtual: Boolean, batchRows: Int)
+private[sources] class CqlBatchWriter(f: CqlWriterFactory)
     extends DataWriter[InternalRow] {
 
-  private val client = new CqlProtocol.Client(host, port)
-  // a virtual stamp column is bound to USING TIMESTAMP only — it is not
-  // one of the inserted data columns
-  private val fields = schema.fields.filter(f =>
-    !(tsVirtual && tsCol.contains(f.name)))
-  private val fieldIdx = fields.map(f => schema.fieldIndex(f.name))
-  private val tsIdx = tsCol.map(schema.fieldIndex)
-  private val insert = {
-    val cols = fields.map(_.name).mkString(", ")
-    val marks = fields.map(_ => "?").mkString(", ")
-    s"INSERT INTO $ks.$table ($cols) VALUES ($marks)" +
-      (if (tsIdx.isDefined) " USING TIMESTAMP ?" else "")
-  }
+  private val client = new CqlProtocol.Client(f.host, f.port)
   private val buf = Seq.newBuilder[(String, Seq[Array[Byte]])]
   private var inBatch = 0
   private var total = 0L
 
   override def write(row: InternalRow): Unit = {
-    val values = fields.zip(fieldIdx).map { case (f, i) =>
-      CqlProtocol.encode(raw(row, i, f.dataType), f.dataType)
-    }.toSeq ++ tsIdx.map { i =>
-      require(!row.isNullAt(i),
-        s"graft-cql: null write timestamp in '${tsCol.get}'")
-      CqlProtocol.encode(row.getLong(i),
-        org.apache.spark.sql.types.LongType)
+    f.inserts.foreach { ins =>
+      if (ins.stamp.exists(row.isNullAt))
+        require(f.tsCol.isEmpty, s"graft-cql: null write timestamp in '${f.tsCol.get}'")
+      else buf += ((ins.cql, ins.values.map { case (i, dt) =>
+        CqlProtocol.encode(raw(row, i, dt), dt)
+      } ++ ins.stamp.map(i => CqlProtocol.encode(row.getLong(i), LongType))))
     }
-    buf += ((insert, values))
     inBatch += 1
     total += 1
-    if (inBatch >= batchRows) flush()
+    if (inBatch >= f.batchRows) flush()
   }
 
   private def flush(): Unit = {
-    if (inBatch == 0) return
+    val stmts = buf.result()
+    buf.clear()
+    inBatch = 0
     // prepared-id batches: the INSERT text crossed the wire once in
     // PREPARE; each batch entry is the 16-byte id + values (the driver's
     // hot-path write shape — re-prepared transparently on UNPREPARED)
-    client.batchPrepared(buf.result())
-    buf.clear()
-    inBatch = 0
+    if (stmts.nonEmpty) client.batchPrepared(stmts)
   }
 
   override def commit(): WriterCommitMessage = { flush(); CqlCommit(total) }

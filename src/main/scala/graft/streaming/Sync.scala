@@ -45,7 +45,20 @@ object Sync {
     spark.readStream.schema(changeSchema).parquet(dir)
 
   /** LWW merge: newest row per key wins; ties broken by uid so the merge is
-    * total-ordered and deterministic. Works on batch or inside foreachBatch. */
+    * total-ordered and deterministic. Works on batch or inside foreachBatch.
+    *
+    * Deletes propagate: a NULL payload is a tombstone, and if the winner
+    * is a tombstone the key disappears from the [[liveView]]. This is the
+    * extension the reference lacks (SURVEY §1.1 — deletes were believed
+    * unhandled): tombstones participate in the same total order, so
+    * late-arriving updates older than the delete stay deleted, and the
+    * merge keeps its idempotence/batch-split properties.
+    *
+    * Note: the snapshot must RETAIN winning tombstones for the reference's
+    * retention window (or forever, absent compaction) — dropping them
+    * immediately would resurrect a key if an older update replays later.
+    * [[compactTombstones]] is the explicit retention step.
+    */
   def mergeLww(base: DataFrame, delta: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("key"))
       .orderBy(col("ts").desc, col("uid").desc)
@@ -54,22 +67,6 @@ object Sync {
       .filter(col("rn") === 1)
       .drop("rn")
   }
-
-  /** LWW merge with delete propagation: a NULL payload is a tombstone.
-    * Newest row per key wins as in [[mergeLww]]; if the winner is a
-    * tombstone the key disappears from the snapshot. This is the extension
-    * the reference lacks (SURVEY §1.1 — deletes were believed unhandled):
-    * tombstones participate in the same total order, so late-arriving
-    * updates older than the delete stay deleted, and the merge keeps the
-    * idempotence/batch-split properties of [[mergeLww]].
-    *
-    * Note: the snapshot must RETAIN winning tombstones for the reference's
-    * retention window (or forever, absent compaction) — dropping them
-    * immediately would resurrect a key if an older update replays later.
-    * [[compactTombstones]] is the explicit retention step.
-    */
-  def mergeLwwWithDeletes(base: DataFrame, delta: DataFrame): DataFrame =
-    mergeLww(base, delta)
 
   /** Drop tombstones older than the given watermark — safe because the
     * stream can no longer deliver rows with ts below it. */
@@ -1060,6 +1057,12 @@ object Sync {
       dataCols: Seq[String]): DataFrame =
     mergeCellLww(rows, keyCol, dataCols, Nil)
 
+  /** The per-cell snapshot layout — [[mergeCellLww]]'s input and output
+    * columns: the key, the poll cursor `ts`, then each cell and its
+    * `<cell>_wt` stamp. */
+  def cellColumns(keyCol: String, dataCols: Seq[String]): Seq[String] =
+    keyCol +: "ts" +: dataCols.flatMap(c => Seq(c, s"${c}_wt"))
+
   /** [[mergeCellLww]] plus `extra` (name, aggregate) columns computed in
     * the same aggregation and appended after the merged columns. */
   private def mergeCellLww(rows: DataFrame, keyCol: String, dataCols: Seq[String],
@@ -1070,9 +1073,7 @@ object Sync {
       Seq(max_by(col(c), ord).as(c), max(col(s"${c}_wt")).as(s"${c}_wt"))
     } ++ (max(col("ts")).as("ts") +: extra.map { case (n, e) => e.as(n) })
     rows.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .select(col(keyCol) +: col("ts") +:
-        (dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))) ++
-          extra.map { case (n, _) => col(n) }): _*)
+      .select((cellColumns(keyCol, dataCols) ++ extra.map(_._1)).map(col): _*)
   }
 
   /** The wire loop's per-cell sink (SyncJob `merge: cell`): each
@@ -1102,8 +1103,8 @@ object Sync {
       writeback: DataFrame => Unit): StreamingQuery =
     eachBatch(changes, checkpointDir, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      val shape = mergeCellLww(batch, keyCol, dataCols) // schema only
-      val base = readSnapshot(spark, snapshotDirs.head, shape.columns)
+      val columns = cellColumns(keyCol, dataCols)
+      val base = readSnapshot(spark, snapshotDirs.head, columns)
       // ONE aggregation reads each feed once, merges the batch into the
       // snapshot and marks the keys the batch touched and the keys to
       // relay: those with an incoming row whose cells or stamps differ
@@ -1111,7 +1112,7 @@ object Sync {
       // least and the greatest incoming cell tuples both do)
       val (isNew, touched, toRelay) = ("_graft_new", "_graft_touched", "_graft_relay")
       val cells = struct(dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
-      val incoming = batch.select(shape.columns.map(col): _*).withColumn(isNew, lit(true))
+      val incoming = batch.select(columns.map(col): _*).withColumn(isNew, lit(true))
       val old = max(when(!col(isNew), cells))
       val lo = min(when(col(isNew), cells))
       val hi = max(when(col(isNew), cells))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted plans for many queries in one JVM.
   * Usage: runMain graft.tools.MultiExplain <outDir> <suffix> <dataDir> <q1> [q2...]
   * Core count / shuffle partitions come from SPARK_GRAFT_CPUS (default 4)
@@ -10,12 +8,7 @@ object MultiExplain {
   def main(args: Array[String]): Unit = {
     val outDir = args(0); val suf = args(1); val dataDir = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     for (n <- names) {
       try {
         val df = graft.SparkEntry.queries(n)(spark, dataDir)

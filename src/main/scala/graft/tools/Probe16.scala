@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r16 measurement probe (read-only; not part of any query path).
@@ -23,12 +22,7 @@ import org.apache.spark.sql.functions._
 object Probe16 {
   def main(args: Array[String]): Unit = {
     val mode = args(0); val d = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     import spark.implicits._
     mode match {
       case "occupancy" =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scaling probe — times the near-dup trio on scaled corpora to
   * measure the growth slope (tools/ docs how the inputs are generated).
   * Usage: runMain graft.tools.ScaleProbe <dir1> [dir2 ...] */
@@ -57,14 +55,7 @@ object ScaleProbe {
     val (onlyArgs, args) = args0.partition(_.startsWith("only="))
     val only: Option[Set[String]] =
       onlyArgs.headOption.map(_.stripPrefix("only=").split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // UTC like every other entry point: events probes go through
-      // Tables.eventsUs, whose ntz→epoch mapping asserts the zone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("WARN")
     // warmup: run the pipeline once on the smallest dir so JIT/codegen
     // costs don't land on the first measured point
     graft.ops.TextOps.j2(spark, args.head).count()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe for the STREAMING serve paths (r13 verdict item 6): the
@@ -18,12 +17,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val counts = if (args.length > 1) args.tail.map(_.toInt).toSeq else Seq(3, 12, 48)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("WARN")
     // the ordered change feed, materialized once (the CDC contract the
     // RATE boundary-delta composition relies on)
     // coalesce(1) keeps the global sort order so monotonically_increasing

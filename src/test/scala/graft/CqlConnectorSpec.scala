@@ -156,6 +156,54 @@ class CqlConnectorSpec extends AnyFunSuite {
     }
   }
 
+  test("writetime-of on write: each cell lands under its own stamp; a null stamp leaves that cell alone") {
+    withStub { stub =>
+      def put(df: org.apache.spark.sql.DataFrame, opt: (String, String)): Unit =
+        df.write.format("graft-cql")
+          .option("host", stub.host).option("keyspace", "ks")
+          .option("table", "events").option(opt._1, opt._2)
+          .mode("append").save()
+      // the earlier state: both cells of keys 1 and 2 at stamp 100
+      put(Seq((1L, "a1", 1.0, 100L), (2L, "a2", 2.0, 100L)).toDF("id", "name", "v", "ts"),
+        "using-timestamp-column" -> "ts")
+      // a 2-cell write: key 2 carries no stamp for v
+      put(Seq((1L, "b1", 5.0, Some(300L), Some(400L)), (2L, "b2", 9.0, Some(500L), None))
+        .toDF("id", "name", "v", "writetime_name", "writetime_v"),
+        "writetime-of" -> "name,v")
+      val got = spark.read.format("graft-cql")
+        .option("host", stub.host).option("keyspace", "ks")
+        .option("table", "events").option("partition-key", "id")
+        .option("writetime-of", "name,v").load()
+        .select($"id", $"name", $"writetime_name", $"v", $"writetime_v")
+        .orderBy($"id").collect().map(_.toSeq).toSeq
+      assert(got === Seq(Seq(1L, "b1", 300L, 5.0, 400L), Seq(2L, "b2", 500L, 2.0, 100L)))
+    }
+  }
+
+  test("writetime-of on write: a bad config fails with a graft-cql: message before writing") {
+    withStub { stub =>
+      def fails(df: org.apache.spark.sql.DataFrame, opts: (String, String)*): String = {
+        val e = intercept[Exception](df.write.format("graft-cql")
+          .option("host", stub.host).option("keyspace", "ks")
+          .option("table", "events").options(opts.toMap).mode("append").save())
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(_.getMessage).find(m => m != null && m.contains("graft-cql:"))
+          .getOrElse(fail(s"no graft-cql: message in $e"))
+      }
+      val wt = "writetime-of" -> "name,v"
+      assert(fails(Seq((1L, "a", 5L, 6L)).toDF("id", "name", "writetime_name", "writetime_v"), wt)
+        .contains("'v'"), "a listed cell is missing")
+      assert(fails(Seq((1L, "a", 1.0, 5L)).toDF("id", "name", "v", "writetime_name"), wt)
+        .contains("'writetime_v'"), "a stamp column is missing")
+      assert(fails(Seq((1L, "a", 1.0, 5L, "6")).toDF("id", "name", "v", "writetime_name", "writetime_v"), wt)
+        .contains("bigint"), "a stamp column is not bigint")
+      assert(fails(Seq((1L, "a", 5L, 6L)).toDF("id", "name", "writetime", "ts"),
+        "writetime-of" -> "name", "using-timestamp-column" -> "ts")
+        .contains("exclusive"), "writetime-of with using-timestamp-column")
+      assert(stub.rowCount("ks", "events") === 0)
+    }
+  }
+
   test("prepared statements: one PREPARE serves every batch; ids are reused across batches") {
     withStub { stub =>
       write(stub, sample(200), batchRows = 20) // 10 batches, one INSERT shape

@@ -486,7 +486,7 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
       .writeStream
       .foreachBatch { (delta: org.apache.spark.sql.DataFrame, _: Long) =>
         snapshot = graft.streaming.Sync
-          .mergeLwwWithDeletes(snapshot, delta).localCheckpoint()
+          .mergeLww(snapshot, delta).localCheckpoint()
         ()
       }
       .option("checkpointLocation", ck)
@@ -497,7 +497,7 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
       .select(col("key"), col("payload"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val batchWant = graft.streaming.Sync.liveView(
-      graft.streaming.Sync.mergeLwwWithDeletes(
+      graft.streaming.Sync.mergeLww(
         gen1.toDF(cols: _*), gen2.toDF(cols: _*)))
       .select(col("key"), col("payload"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet

@@ -21,11 +21,11 @@ class SinksAndDeletesSpec extends AnyFunSuite {
       Change(2, ts("2024-01-01 10:00:00"), 2, "w1")).toDF()
     val delete = Seq(
       Change(1, ts("2024-01-01 11:00:00"), 3, null)).toDF() // tombstone for key 1
-    val snap = Sync.mergeLwwWithDeletes(base, delete)
+    val snap = Sync.mergeLww(base, delete)
     assert(Sync.liveView(snap).select($"key").as[Long].collect().toSet === Set(2L))
     // an UPDATE for key 1 that is OLDER than the delete replays late:
     val staleReplay = Seq(Change(1, ts("2024-01-01 10:30:00"), 4, "resurrect?")).toDF()
-    val snap2 = Sync.mergeLwwWithDeletes(snap, staleReplay)
+    val snap2 = Sync.mergeLww(snap, staleReplay)
     assert(Sync.liveView(snap2).select($"key").as[Long].collect().toSet === Set(2L),
       "a stale update resurrected a deleted key")
     // compaction keeps winning tombstones until the watermark passes them
@@ -51,7 +51,7 @@ class SinksAndDeletesSpec extends AnyFunSuite {
     // a NEWER write for key 1 carries its own TTL — the key comes back
     val rewrite = Seq(Change(1, ts("2024-01-01 12:00:00"), 4, "v2")).toDF()
       .withColumn("ttl_s", lit(7200L))
-    val snap2 = Sync.mergeLwwWithDeletes(base, rewrite)
+    val snap2 = Sync.mergeLww(base, rewrite)
     assert(Sync.liveViewTtl(snap2, "ttl_s", ts("2024-01-01 13:00:00"))
       .filter($"key" === 1).select($"payload").as[String].collect().toSeq === Seq("v2"))
     // ...and lapses again once ITS ttl passes

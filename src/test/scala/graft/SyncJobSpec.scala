@@ -162,4 +162,27 @@ class SyncJobSpec extends AnyFunSuite {
       .select($"key", $"payload").as[(Long, String)].collect().toMap
     assert(snapB3 === snapB2)
   }
+
+  test("malformed wire feed URIs fail naming the expected shape, before any connection") {
+    val spark = TestSpark.spark
+    val root = tmp("badwire")
+    def cfg(feedA: String, feedB: String, merge: String) = SyncConfig(
+      sideA = feedA, sideB = feedB, snapshotA = s"$root/snapA",
+      snapshotB = s"$root/snapB", checkpointDir = s"$root/ckpt",
+      formatA = "graft-cql", formatB = "graft-es", merge = merge,
+      cells = if (merge == "cell") Seq("status") else Nil)
+    val cqlShape = "cql://host:port/keyspace/table?pk="
+    val es = "es://127.0.0.1:1/t"
+    for ((feedA, feedB, merge, shape) <- Seq(
+        ("cql://127.0.0.1:1/ks", es, "row", cqlShape),           // no table
+        ("cql://127.0.0.1:1/ks", es, "cell", cqlShape),
+        ("cql://127.0.0.1:1/ks/t", es, "cell", cqlShape),        // no ?pk=
+        ("cql://127.0.0.1/ks/t?pk=key", es, "row", cqlShape),    // no port
+        ("es://127.0.0.1:1/ks/t?pk=key", es, "cell", cqlShape),  // wrong scheme
+        ("cql://127.0.0.1:1/ks/t?pk=key", "es://127.0.0.1:1", "cell", "es://host:port/index"),
+        ("cql://127.0.0.1:1/ks/t?pk=key", "cql://127.0.0.1:1/t", "cell", "es://host:port/index"))) {
+      val e = intercept[IllegalArgumentException](SyncJob.start(spark, cfg(feedA, feedB, merge)))
+      assert(e.getMessage.contains(shape), s"$feedA | $feedB ($merge): ${e.getMessage}")
+    }
+  }
 }

@@ -675,4 +675,67 @@ class WireSyncSpec extends AnyFunSuite {
       assert(!f(s"$base/snapB.tmp").exists())
     }
   }
+
+  /** How many graft-cql writes `body` runs: AppendData plans on a
+    * `graft-cql:` table, seen by a QueryExecutionListener. */
+  private def cqlWrites(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.logical.AppendData
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        n.addAndGet(qe.logical.collect {
+          case a: AppendData if a.table.name.startsWith("graft-cql:") => a
+        }.size)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener events arrive asynchronously on the shared queue; a fence
+    // job's start event queues behind every event `body` posted
+    val sc = spark.sparkContext
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val fence = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "fence"))
+          fenced.countDown()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      sc.addSparkListener(fence)
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(fence)
+      spark.listenerManager.unregister(listener)
+    }
+    n.get
+  }
+
+  test("merge: cell — a round relays every cell to C* in ONE graft-cql write, each under its own stamp") {
+    cellLoop { (cql, es, cfg, _, cqlWrite) =>
+      cqlWrite((1L to 5L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+
+      // ES-side writes to BOTH cells of key 1 under different stamps: the
+      // next round's C* relay carries both cells
+      Seq((1L, 900L, "es", 800L, 77L, 900L))
+        .toDF("key", "ts", "status", "status_wt", "val", "val_wt")
+        .write.format("graft-es").option("nodes", es.url).option("index", "t")
+        .option("id-column", "key").option("version-column", "ts")
+        .mode("append").save()
+      assert(cqlWrites(SyncJob.runOnce(spark, cfg)) === 1)
+
+      val r = spark.read.format("graft-cql").option("host", cql.host)
+        .option("keyspace", "ks").option("table", "t")
+        .option("partition-key", "key").option("writetime-of", "status,val").load()
+        .where($"key" === 1L)
+        .select("status", "writetime_status", "val", "writetime_val", "ts").collect()
+      assert(r.map(_.toSeq).toSeq === Seq(Seq("es", 800L, 77L, 900L, 10L)),
+        "each cell lands under its own stamp; the update-ts column is not relayed")
+    }
+  }
 }
