@@ -18,9 +18,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Sinks {
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Directory-partitioned parquet (partition pruning on `cols`). */
   def writePartitioned(df: DataFrame, path: String, cols: String*): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the vector hot path.
   *
@@ -236,6 +237,66 @@ case class HyperplaneSig(emb: Expression, planes: Expression,
       offset = newChildren(2), count = newChildren(3))
 }
 
+/** `span_pos(toks, 'term'[, prefix])` — the span family's one position
+  * scan: the ascending 1-based positions where the token array equals
+  * `term` or, with the prefix flag `true`, starts with it (span_multi's
+  * rewritten term disjunction). A null array gives null, an empty array
+  * an empty one, and a null token never matches. `term` must be a string
+  * literal and `prefix` a boolean literal, pinned at analysis time.
+  *
+  * Replaces the interpreted `filter(sequence(1, size(toks)), i ->
+  * element_at(toks, i) = 'term')`: one pass over the array, no boxed
+  * index sequence, no lambda. No `doGenCode`: the span operators'
+  * combinator lambdas keep their projections out of whole-stage codegen
+  * regardless. */
+case class SpanPositions(toks: Expression, term: Expression, prefix: Expression)
+    extends TernaryExpression with CodegenFallback {
+
+  override def prettyName: String = "span_pos"
+  override def first: Expression = toks
+  override def second: Expression = term
+  override def third: Expression = prefix
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = toks.nullable
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = toks.dataType match {
+    case ArrayType(StringType, _) if term.foldable && term.dataType == StringType &&
+        term.eval() != null && prefix.foldable && prefix.dataType == BooleanType &&
+        prefix.eval() != null =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      "span_pos expects (array<string>, string literal[, boolean literal]), " +
+        s"got (${toks.dataType}, $term, $prefix)")
+  }
+
+  private lazy val termVal: UTF8String = term.eval().asInstanceOf[UTF8String]
+  private lazy val prefixVal: Boolean = prefix.eval().asInstanceOf[Boolean]
+
+  override protected def nullSafeEval(t: Any, unusedTerm: Any, unusedPrefix: Any): Any = {
+    val a = t.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    val pos = new Array[Int](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i)) {
+        val tok = a.getUTF8String(i)
+        if (if (prefixVal) tok.startsWith(termVal) else tok == termVal) {
+          pos(m) = i + 1
+          m += 1
+        }
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(pos, m))
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): SpanPositions =
+    copy(toks = newFirst, term = newSecond, prefix = newThird)
+}
+
 object VectorExpressions {
   private val ident = FunctionIdentifier("vec_dot")
   private val info = new ExpressionInfo(classOf[DotProduct].getName, "vec_dot")
@@ -250,11 +311,21 @@ object VectorExpressions {
   private val sumInfo = new ExpressionInfo(classOf[VecSum].getName, "vec_sum")
   private val sumBuilder: Seq[Expression] => Expression = es => VecSum(es(0))
 
+  private val spanIdent = FunctionIdentifier("span_pos")
+  private val spanInfo = new ExpressionInfo(classOf[SpanPositions].getName, "span_pos")
+  private val spanBuilder: Seq[Expression] => Expression = {
+    case Seq(toks, term) => SpanPositions(toks, term, Literal(false))
+    case Seq(toks, term, prefix) => SpanPositions(toks, term, prefix)
+    case es => throw new IllegalArgumentException(
+      s"span_pos expects 2 or 3 arguments, got ${es.size}")
+  }
+
   /** Imperative registration — used by query functions (idempotent). */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     spark.sessionState.functionRegistry.registerFunction(sigIdent, sigInfo, sigBuilder)
     spark.sessionState.functionRegistry.registerFunction(sumIdent, sumInfo, sumBuilder)
+    spark.sessionState.functionRegistry.registerFunction(spanIdent, spanInfo, spanBuilder)
   }
 
   /** `spark.sql.extensions`-style injection for cluster deployments. */
@@ -263,6 +334,7 @@ object VectorExpressions {
       ext.injectFunction((ident, info, builder))
       ext.injectFunction((sigIdent, sigInfo, sigBuilder))
       ext.injectFunction((sumIdent, sumInfo, sumBuilder))
+      ext.injectFunction((spanIdent, spanInfo, spanBuilder))
     }
   }
 }

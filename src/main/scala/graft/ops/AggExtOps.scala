@@ -209,30 +209,16 @@ object AggExtOps {
     * (span_not exclusion) — the positional-constraint queries between
     * j84's span_near and j36's phrase.
     *
-    * Scale shape: j36/j84's discipline — both span tests run INSIDE the
-    * row (filters over token positions + a bounded 2-token slice), zero
-    * hash exchanges before the presentation sort, pure codegen. */
-  def j99(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", split($"text", " ").as("toks"))
-      .filter(size($"toks") >= 1)
-      .withColumn("all_hits", expr(TextOps.spanPos("spark")))
-      .withColumn("n_first", expr("size(filter(all_hits, i -> i <= 5))").cast("long"))
-      .withColumn("n_clean", expr(
-        """size(filter(all_hits,
-          |  i -> size(filter(slice(toks, i + 1, 2), t -> t = 'join')) = 0))"""
-          .stripMargin).cast("long"))
-      // match predicate as a generate, NOT a Filter: a pushed Filter
-      // re-evaluates the position scan beside the Project (j145's lesson)
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_hits', CAST(size(all_hits) AS BIGINT),
-          |  'n_first', n_first, 'n_clean', n_clean)),
-          |  s -> s.n_hits >= 1)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_first".as("n_first"), $"r.n_clean".as("n_clean"))
-      .orderBy($"doc_id")
-  }
+    * Scale shape: both span tests run INSIDE the row over
+    * [[TextOps.spanMatches]] (filters over token positions + a bounded
+    * 2-token slice), zero hash exchanges before the presentation sort. */
+  def j99(s: SparkSession, d: String): DataFrame =
+    TextOps.spanMatches(s, d,
+      Seq("all_hits" -> "span_pos(toks, 'spark')"),
+      Seq("n_first" -> "size(filter(all_hits, i -> i <= 5))",
+        "n_clean" -> """size(filter(all_hits,
+          |  i -> size(filter(slice(toks, i + 1, 2), t -> t = 'join')) = 0))""".stripMargin),
+      keep = "size(all_hits) >= 1")
 
   /** j100_zipf_fit — token-distribution Zipf-law fit: OLS of ln(freq) on
     * ln(rank) over the corpus vocabulary — slope (the Zipf exponent,

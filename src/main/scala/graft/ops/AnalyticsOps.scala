@@ -453,26 +453,13 @@ object AnalyticsOps {
     * total 'key' occurrences and how many are enclosed.
     *
     * Scale shape: j145's family — row-local HOF position algebra, zero
-    * exchanges before the presentation sort. The match predicate is an
-    * `explode(filter(array(...)))` generate, not a Filter — j145's
-    * single-evaluation discipline (a pushed Filter re-evaluates the
-    * position algebra; measured ~10× on this family at sf0.1). */
-  def j159(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .withColumn("toks", split($"text", " "))
-      .withColumn("keys", expr(TextOps.spanPos("key")))
-      .withColumn("tbls", expr(TextOps.spanPos("table")))
-      .withColumn("n_within", expr(
-        "size(filter(keys, x -> exists(tbls, y -> x > y AND x <= y + 5)))"))
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_key', CAST(size(keys) AS BIGINT),
-          |  'n_within', CAST(n_within AS BIGINT))),
-          |  s -> s.n_within > 0)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_key".as("n_key"), $"r.n_within".as("n_within"))
-      .orderBy($"doc_id")
-  }
+    * exchanges before the presentation sort ([[TextOps.spanMatches]]). */
+  def j159(s: SparkSession, d: String): DataFrame =
+    TextOps.spanMatches(s, d,
+      Seq("keys" -> "span_pos(toks, 'key')", "tbls" -> "span_pos(toks, 'table')"),
+      Seq("n_key" -> "size(keys)",
+        "n_within" -> "size(filter(keys, x -> exists(tbls, y -> x > y AND x <= y + 5)))"),
+      keep = "n_within > 0")
 
   // ---------- j160 bucket correlation ----------
 

@@ -319,31 +319,17 @@ object BucketOps {
     * position — the proximity query between `match` (any distance) and
     * `match_phrase` (adjacent, j36).
     *
-    * Scale shape: j36's discipline — the span test runs INSIDE the row
-    * (filter over token positions + a bounded 4-token slice), zero hash
-    * exchanges before the presentation sort, pure codegen. */
-  def j84(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", split($"text", " ").as("toks"))
-      .filter(size($"toks") >= 1) // sequence(1, 0) would infer step -1
-      // slop-3 in-order = ordered position pairs within distance 4,
-      // over the shared spanPos extraction (the j169 intervals algebra)
-      .withColumn("hits", expr(
-        s"""filter(${TextOps.spanPos("spark")},
-           |  i -> exists(${TextOps.spanPos("join")},
-           |    j -> j > i AND j - i <= 4))""".stripMargin))
-      // match predicate as a generate, NOT a Filter: a pushed Filter
-      // re-evaluates the span scan beside the Project (j145's lesson)
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_matches', CAST(size(hits) AS BIGINT),
-          |  'first_pos', CAST(if(size(hits) >= 1, element_at(hits, 1), 0) AS BIGINT))),
-          |  s -> s.n_matches >= 1)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_matches".as("n_matches"),
-        $"r.first_pos".as("first_pos"))
-      .orderBy($"doc_id")
-  }
+    * Scale shape: the span test runs INSIDE the row over
+    * [[TextOps.spanMatches]] (filter over token positions), zero hash
+    * exchanges before the presentation sort. */
+  def j84(s: SparkSession, d: String): DataFrame =
+    // slop-3 in-order = ordered position pairs within distance 4
+    TextOps.spanMatches(s, d,
+      Seq("hits" -> """filter(span_pos(toks, 'spark'),
+        |  i -> exists(span_pos(toks, 'join'), j -> j > i AND j - i <= 4))""".stripMargin),
+      Seq("n_matches" -> "size(hits)",
+        "first_pos" -> "if(size(hits) >= 1, element_at(hits, 1), 0)"),
+      keep = "n_matches >= 1")
 
   /** j85_wildcard_query — ES `wildcard` on a keyword field: `src1*` over
     * `source`, bucketed per matching source with doc_count + sum metric.

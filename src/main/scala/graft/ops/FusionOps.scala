@@ -299,38 +299,18 @@ object FusionOps {
     * survives. Reports per matching doc the total, surviving, and
     * excluded occurrence counts.
     *
-    * Scale shape: the j84/j99/j125 corpus-linear family — position lists
-    * and the exclusion test are row-local higher-order functions inside
-    * whole-stage codegen; ZERO exchanges before the final presentation
-    * sort (PlanSpec-pinned). Cost per row is O(|spark| · |slow|) on
-    * per-doc occurrence counts, not document length squared.
-    *
-    * Plan note: the match predicate is an `explode(filter(array(...)))`
-    * GENERATE, not a Filter — a deterministic Filter on a computed
-    * column is pushed to the scan, where it re-evaluates the whole
-    * position algebra beside the Project (measured 2× the row-local
-    * cost at sf0.1: 4.7 s → 2.4 s from this change alone); a generator
-    * is never pushed, so the chain evaluates once per row. */
-  def j145(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .withColumn("toks", split($"text", " "))
-      .withColumn("inc",
-        expr(TextOps.spanPos("spark")))
-      .withColumn("exc",
-        expr(TextOps.spanPos("slow")))
-      .withColumn("n_kept", expr(
-        "size(filter(inc, x -> !exists(exc, y -> abs(x - y) <= 2)))"))
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_spark', CAST(size(inc) AS BIGINT),
-          |  'n_kept', CAST(n_kept AS BIGINT),
-          |  'n_excluded', CAST(size(inc) - n_kept AS BIGINT))),
-          |  s -> s.n_kept > 0)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_spark".as("n_spark"),
-        $"r.n_kept".as("n_kept"), $"r.n_excluded".as("n_excluded"))
-      .orderBy($"doc_id")
-  }
+    * Scale shape: the j84/j99/j125 corpus-linear family over
+    * [[TextOps.spanMatches]] — position lists and the exclusion test are
+    * row-local; ZERO exchanges before the final presentation sort
+    * (PlanSpec-pinned). Cost per row is O(|spark| · |slow|) on per-doc
+    * occurrence counts, not document length squared. */
+  def j145(s: SparkSession, d: String): DataFrame =
+    TextOps.spanMatches(s, d,
+      Seq("inc" -> "span_pos(toks, 'spark')", "exc" -> "span_pos(toks, 'slow')"),
+      Seq("n_spark" -> "size(inc)",
+        "n_kept" -> "size(filter(inc, x -> !exists(exc, y -> abs(x - y) <= 2)))",
+        "n_excluded" -> "size(inc) - n_kept"),
+      keep = "n_kept > 0")
 
   // ---------- j146 inter-arrival statistics ----------
 

@@ -396,44 +396,23 @@ object NestedOps {
     * interval's start (0 when only the unordered leg fires).
     *
     * Scale shape: all position algebra is row-local HOFs over
-    * [[graft.ops.TextOps.spanPos]] lists (the span family's shared
-    * extraction — j36/j84/j99/j125/j145/j159 are expressed over the
-    * same fragment as of r7); the match predicate is an
-    * `explode(filter(array(...)))` generate, never a pushed Filter
-    * (the r6 single-evaluation rule); zero exchanges before the
-    * presentation sort. */
-  def j169(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .withColumn("toks", split($"text", " "))
-      .withColumn("pa", expr(TextOps.spanPos("spark")))
-      .withColumn("pb", expr(TextOps.spanPos("join")))
-      .withColumn("pv", expr(TextOps.spanPos("vector")))
-      .withColumn("pd", expr(TextOps.spanPos("dup")))
-      // array_max(empty) is NULL -> NULL predicate -> filter drops: the
-      // size() guard keeps the semantics explicit, not load-bearing
-      .withColumn("ord_hits", expr(
-        """filter(pb, j -> size(filter(pa, i -> i < j)) > 0
-          |  AND j - array_max(filter(pa, i -> i < j)) <= 3)""".stripMargin))
-      .withColumn("n_ordered", expr("CAST(size(ord_hits) AS BIGINT)"))
-      .withColumn("first_start", expr(
-        """CAST(CASE WHEN size(ord_hits) > 0 THEN
+    * `span_pos` lists in the span family's one skeleton
+    * ([[TextOps.spanMatches]]); zero exchanges before the presentation
+    * sort. */
+  def j169(s: SparkSession, d: String): DataFrame =
+    TextOps.spanMatches(s, d,
+      Seq("pa" -> "span_pos(toks, 'spark')", "pb" -> "span_pos(toks, 'join')",
+        "pv" -> "span_pos(toks, 'vector')", "pd" -> "span_pos(toks, 'dup')",
+        // array_max(empty) is NULL -> NULL predicate -> filter drops: the
+        // size() guard keeps the semantics explicit, not load-bearing
+        "ord_hits" -> """filter(pb, j -> size(filter(pa, i -> i < j)) > 0
+          |  AND j - array_max(filter(pa, i -> i < j)) <= 3)""".stripMargin),
+      Seq("n_ordered" -> "size(ord_hits)",
+        "n_unordered" -> "size(filter(pd, j -> exists(pv, i -> i != j AND abs(i - j) <= 2)))",
+        "first_start" -> """CASE WHEN size(ord_hits) > 0 THEN
           |  array_max(filter(pa, i -> i < element_at(ord_hits, 1)))
-          |ELSE 0 END AS BIGINT)""".stripMargin))
-      .withColumn("n_unordered", expr(
-        """CAST(size(filter(pd,
-          |  j -> exists(pv, i -> i != j AND abs(i - j) <= 2))) AS BIGINT)"""
-          .stripMargin))
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_ordered', n_ordered, 'n_unordered', n_unordered,
-          |  'first_start', first_start)),
-          |  s -> s.n_ordered > 0 OR s.n_unordered > 0)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_ordered".as("n_ordered"),
-        $"r.n_unordered".as("n_unordered"),
-        $"r.first_start".as("first_start"))
-      .orderBy($"doc_id")
-  }
+          |ELSE 0 END""".stripMargin),
+      keep = "n_ordered > 0 OR n_unordered > 0")
 
   // ---------- j173 span_or + span_multi ----------
 
@@ -445,29 +424,16 @@ object NestedOps {
     * can't match both legs here, but the union dedups by contract), and
     * the first matching position.
     *
-    * Scale shape: the span family's row-local discipline over the
-    * shared [[graft.ops.TextOps.spanPos]]/`spanPosPrefix` extractions;
-    * match predicate is a generate; zero exchanges before the
-    * presentation sort. */
-  def j173(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .withColumn("toks", split($"text", " "))
-      .withColumn("psp", expr(TextOps.spanPosPrefix("sp")))
-      .withColumn("pk", expr(TextOps.spanPos("key")))
-      .withColumn("pu", expr("array_sort(array_union(psp, pk))"))
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_prefix', CAST(size(psp) AS BIGINT),
-          |  'n_key', CAST(size(pk) AS BIGINT),
-          |  'n_or', CAST(size(pu) AS BIGINT),
-          |  'first_pos', CAST(if(size(pu) > 0, element_at(pu, 1), 0) AS BIGINT))),
-          |  s -> s.n_or > 0)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_prefix".as("n_prefix"),
-        $"r.n_key".as("n_key"), $"r.n_or".as("n_or"),
-        $"r.first_pos".as("first_pos"))
-      .orderBy($"doc_id")
-  }
+    * Scale shape: [[TextOps.spanMatches]] with `span_pos`'s prefix form
+    * for the multi-term leg; zero exchanges before the presentation
+    * sort. */
+  def j173(s: SparkSession, d: String): DataFrame =
+    TextOps.spanMatches(s, d,
+      Seq("psp" -> "span_pos(toks, 'sp', true)", "pk" -> "span_pos(toks, 'key')",
+        "pu" -> "array_sort(array_union(psp, pk))"),
+      Seq("n_prefix" -> "size(psp)", "n_key" -> "size(pk)", "n_or" -> "size(pu)",
+        "first_pos" -> "if(size(pu) > 0, element_at(pu, 1), 0)"),
+      keep = "n_or > 0")
 
   // ---------- j186 rollup / downsampling ----------
 

@@ -131,39 +131,21 @@ object RankOps {
     * Scale shape: the entire position algebra runs INSIDE the row
     * (nested filter/transform over token positions, the j36/j84/j99
     * discipline) — zero hash exchanges; the only exchange is the
-    * presentation sort. The inner sequences are guarded (CASE on the
-    * range bounds) against Spark's sequence(a, b<a)-descends trap. */
-  def j125(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+    * presentation sort ([[TextOps.spanMatches]]). */
+  def j125(s: SparkSession, d: String): DataFrame =
     // big span = ordered ('table', 'key') pair within distance 5; the
-    // little 'row' span must sit strictly inside — all three position
-    // lists come from the shared spanPos extraction (the j169 algebra)
-    val nBig = expr(
-      """CAST(aggregate(transform(tbls, i ->
-        |  size(filter(keyps, j -> j > i AND j - i <= 5))),
-        |  0, (a, x) -> a + x) AS BIGINT)""".stripMargin)
-    val nCont = expr(
-      """CAST(aggregate(transform(tbls, i ->
-        |  size(filter(keyps, j -> j > i AND j - i <= 5
-        |    AND exists(rws, k -> k > i AND k < j)))),
-        |  0, (a, x) -> a + x) AS BIGINT)""".stripMargin)
-    Tables.documents(s, d)
-      .select($"doc_id", split($"text", " ").as("toks"))
-      .withColumn("tbls", expr(graft.ops.TextOps.spanPos("table")))
-      .withColumn("keyps", expr(graft.ops.TextOps.spanPos("key")))
-      .withColumn("rws", expr(graft.ops.TextOps.spanPos("row")))
-      .select($"doc_id", nBig.as("n_big"), nCont.as("n_containing"))
-      // match predicate as a generate, NOT a Filter: a deterministic
-      // Filter on these computed columns is pushed to the scan, where it
-      // re-evaluates both position aggregates beside the Project (j145's
-      // lesson — measured ~3× on this query at sf0.1)
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct('n_big', n_big, 'n_containing', n_containing)),
-          |  s -> s.n_big >= 1)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_big".as("n_big"),
-        $"r.n_containing".as("n_containing"))
-      .orderBy($"doc_id")
-  }
+    // little 'row' span must sit strictly inside
+    TextOps.spanMatches(s, d,
+      Seq("tbls" -> "span_pos(toks, 'table')", "keyps" -> "span_pos(toks, 'key')",
+        "rws" -> "span_pos(toks, 'row')"),
+      Seq("n_big" -> """aggregate(transform(tbls, i ->
+          |  size(filter(keyps, j -> j > i AND j - i <= 5))),
+          |  0, (a, x) -> a + x)""".stripMargin,
+        "n_containing" -> """aggregate(transform(tbls, i ->
+          |  size(filter(keyps, j -> j > i AND j - i <= 5
+          |    AND exists(rws, k -> k > i AND k < j)))),
+          |  0, (a, x) -> a + x)""".stripMargin),
+      keep = "n_big >= 1")
 
   /** j126_phrase_suggester — the ES `phrase` suggester for the input
     * "merge tble": candidate corrections are vocabulary terms within

@@ -44,23 +44,35 @@ object TextOps {
   private[graft] def shingle3(toksCol: String): String =
     s"concat(element_at($toksCol, i), ' ', element_at($toksCol, i + 1), ' ', element_at($toksCol, i + 2))"
 
-  /** Span-family position algebra — THE canonical position-list
-    * extraction shared by j36/j84/j99/j125/j145/j159 and the `intervals`
-    * query (j169): a SQL fragment evaluating to the ascending 1-based
-    * positions where `toksCol` equals `term`. Every span operator
-    * derives its matching from these lists with row-local HOF
-    * combinators (exists/filter over position pairs), so the position
-    * convention lives in exactly one place. Caller contract: the array
-    * must be non-empty (sequence(1, 0) DESCENDS in Spark — split("",
-    * " ") returns [""], so any split-of-text array qualifies). */
-  private[graft] def spanPos(term: String, toksCol: String = "toks"): String =
-    s"filter(sequence(1, size($toksCol)), i -> element_at($toksCol, i) = '$term')"
-
-  /** [[spanPos]]'s multi-term-expansion sibling (span_multi / j173):
-    * positions of every token with the given PREFIX — the row-local
-    * analog of Lucene's rewritten term disjunction. */
-  private[graft] def spanPosPrefix(prefix: String, toksCol: String = "toks"): String =
-    s"filter(sequence(1, size($toksCol)), i -> startswith(element_at($toksCol, i), '$prefix'))"
+  /** The span family's one skeleton (j36/j84/j99/j125/j145/j159/j169/
+    * j173): split each document's `text` into `toks`, add the `lets`
+    * columns (position lists from `span_pos(toks, 'term')` and
+    * intermediates over them), then the named `outs` as BIGINT, each
+    * column in order and evaluated once per document, and keep the
+    * documents where `keep` — a predicate over any of those columns —
+    * holds. Returns `doc_id` plus the outputs, ordered by `doc_id`.
+    *
+    * The keep predicate runs as a generate (`explode` of a one-element
+    * array filtered by it), never as a Filter: a deterministic Filter on
+    * these computed columns is pushed into the parquet scan's
+    * DataFilters, where it evaluates the whole position algebra a second
+    * time beside the Project (measured 2–4× per query at sf0.1, still so
+    * on Spark 4.1.2). A generator is never pushed, so every column is
+    * evaluated once per row; PlanSpec pins this for all eight queries. */
+  private[graft] def spanMatches(s: SparkSession, d: String,
+      lets: Seq[(String, String)], outs: Seq[(String, String)],
+      keep: String): DataFrame = {
+    graft.functions.VectorExpressions.register(s) // span_pos
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val cols = lets.map { case (n, e) => n -> expr(e) } ++
+      outs.map { case (n, e) => n -> expr(e).cast("long") }
+    cols.foldLeft(docs) { case (df, (n, c)) => df.withColumn(n, c) }
+      .select(col("doc_id") +: outs.map(o => col(o._1)) :+
+        explode(expr(s"filter(array($keep), k -> k)")).as("_keep"): _*)
+      .drop("_keep")
+      .orderBy(col("doc_id"))
+  }
 
   private def shingles(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -670,35 +682,16 @@ object TextOps {
 
   /** j36_phrase_search — ES `match_phrase`: documents containing the exact
     * adjacent token sequence, with per-doc occurrence counts. Positional
-    * adjacency is evaluated inside the row (a transform over token
-    * positions — zero shuffles, pure codegen'd array arithmetic), which is
-    * what a positional inverted index gives a search engine without the
-    * index build. The only exchange is the presentation ORDER BY. */
-  def j36(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, d)
-      .select($"doc_id", split($"text", " ").as("toks"))
-      // a <2-token doc cannot contain a 2-token phrase — and without this
-      // guard sequence(1, size-1) would be sequence(1, 0) = [1, 0] (Spark
-      // infers step −1), making element_at(toks, 0) throw
-      .filter(size($"toks") >= 2)
-      // adjacency = the ordered position pair with zero gap, expressed
-      // over the shared spanPos extraction (the j169 intervals algebra)
-      .withColumn("n_matches", expr(
-        s"""size(filter(${spanPos("hash")},
-           |  i -> i < size(toks) AND element_at(toks, i + 1) = 'join'))"""
-          .stripMargin).cast("long"))
-      // match predicate as a generate, NOT a Filter: a pushed Filter
-      // re-evaluates the adjacency scan beside the Project (j145's lesson)
-      .select($"doc_id", explode(expr(
-        """filter(array(named_struct(
-          |  'n_matches', n_matches,
-          |  'n_tokens', CAST(size(toks) AS BIGINT))),
-          |  s -> s.n_matches >= 1)""".stripMargin)).as("r"))
-      .select($"doc_id", $"r.n_matches".as("n_matches"),
-        $"r.n_tokens".as("n_tokens"))
-      .orderBy($"doc_id")
-  }
+    * adjacency is evaluated inside the row (a 'hash' position whose next
+    * token is 'join', over [[spanMatches]]), which is what a positional
+    * inverted index gives a search engine without the index build. The
+    * only exchange is the presentation ORDER BY. */
+  def j36(s: SparkSession, d: String): DataFrame =
+    spanMatches(s, d, Nil,
+      Seq("n_matches" -> """size(filter(span_pos(toks, 'hash'),
+          |  i -> i < size(toks) AND element_at(toks, i + 1) = 'join'))""".stripMargin,
+        "n_tokens" -> "size(toks)"),
+      keep = "n_matches >= 1")
 
   /** j37_significant_terms — ES `significant_terms`: tokens
     * overrepresented in a foreground slice (lang = 'zh') relative to the

@@ -4,7 +4,14 @@ import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The CQL native protocol v4 (the public Cassandra binary protocol
   * spec): frame codec, the type serialization subset matching the
@@ -124,6 +131,35 @@ private[graft] object CqlProtocol {
       bb.array()
     case (x, t) => throw new IllegalArgumentException(
       s"graft-cql: cannot encode ${x.getClass.getSimpleName} as ${t.simpleString}")
+  }
+
+  /** Catalyst value → [[encode]]'s raw JVM domain (strings and arrays
+    * convert; a null array slot stays null, framed as length −1). */
+  def rawOf(v: Any, dt: DataType): Any = (v, dt) match {
+    case (s: UTF8String, StringType) => s.toString
+    case (a: ArrayData, ArrayType(et, _)) =>
+      Array.tabulate[Any](a.numElements())(j => if (a.isNullAt(j)) null else rawOf(a.get(j, et), et))
+    case _ => v
+  }
+
+  /** The order C* breaks a writetime tie by, as a Spark column: the
+    * cell's [[encode]] bytes as BinaryType. Spark orders binary exactly
+    * as C* compares cell values — unsigned bytes, a shorter prefix first
+    * — so −1 (0xFF…) ranks above 1 and 2.0 above −2.0, where Spark's own
+    * numeric order says the opposite. A null cell gives null (lowest). A
+    * type with no CQL encoding fails analysis. */
+  def orderKey(c: Column): Column = GraftShim.mapExpr(c)(CqlOrderKey)
+
+  private case class CqlOrderKey(child: Expression)
+      extends UnaryExpression with CodegenFallback {
+    override def dataType: DataType = BinaryType
+    override def nullIntolerant: Boolean = true
+    override def checkInputDataTypes(): TypeCheckResult =
+      try { cqlTypeOf(child.dataType); TypeCheckResult.TypeCheckSuccess }
+      catch { case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage) }
+    override protected def nullSafeEval(v: Any): Any =
+      encode(rawOf(v, child.dataType), child.dataType)
+    override protected def withNewChildInternal(c: Expression): CqlOrderKey = copy(child = c)
   }
 
   /** Decode one value's bytes for its Spark type (null bytes = SQL NULL). */

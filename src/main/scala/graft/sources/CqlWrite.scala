@@ -111,7 +111,7 @@ private[sources] class CqlBatchWriter(f: CqlWriterFactory)
       if (ins.stamp.exists(row.isNullAt))
         require(f.tsCol.isEmpty, s"graft-cql: null write timestamp in '${f.tsCol.get}'")
       else buf += ((ins.cql, ins.values.map { case (i, dt) =>
-        CqlProtocol.encode(raw(row, i, dt), dt)
+        CqlProtocol.encode(CqlProtocol.rawOf(row.get(i, dt), dt), dt)
       } ++ ins.stamp.map(i => CqlProtocol.encode(row.getLong(i), LongType))))
     }
     inBatch += 1
@@ -132,32 +132,4 @@ private[sources] class CqlBatchWriter(f: CqlWriterFactory)
   override def commit(): WriterCommitMessage = { flush(); CqlCommit(total) }
   override def abort(): Unit = () // applied upserts converge on retry
   override def close(): Unit = client.close()
-
-  /** Catalyst value → the codec's raw JVM domain. */
-  private def raw(row: InternalRow, i: Int, dt: DataType): Any =
-    if (row.isNullAt(i)) null
-    else dt match {
-      case IntegerType => row.getInt(i)
-      case LongType | TimestampNTZType => row.getLong(i)
-      case FloatType => row.getFloat(i)
-      case DoubleType => row.getDouble(i)
-      case BooleanType => row.getBoolean(i)
-      case StringType => row.getUTF8String(i).toString
-      case ArrayType(et, _) =>
-        val a = row.getArray(i)
-        // Null slots must surface as null (codec frames them as length -1):
-        // a.getInt on a null slot silently yields 0 and a.getUTF8String NPEs.
-        Array.tabulate[Any](a.numElements()) { j =>
-          if (a.isNullAt(j)) null
-          else et match {
-            case IntegerType => a.getInt(j)
-            case LongType => a.getLong(j)
-            case FloatType => a.getFloat(j)
-            case DoubleType => a.getDouble(j)
-            case StringType => a.getUTF8String(j).toString
-            case other => throw new IllegalStateException(s"unreachable: $other")
-          }
-        }
-      case other => throw new IllegalStateException(s"unreachable: $other")
-    }
 }

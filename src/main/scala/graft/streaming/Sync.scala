@@ -1044,11 +1044,13 @@ object Sync {
     * poll cursor), and for every data column `c` a stamp column `c_wt`
     * (epoch-µs bigint; NULL = this row does not carry that cell). Each
     * cell resolves independently to the value under the greatest stamp;
-    * stamp ties break by the VALUE (greater wins, NULL/tombstone loses) —
-    * C*'s own tie-break, so the Spark-side merge and a real Cassandra
-    * server resolve identically. Output has the same shape as the input
-    * (compose ∘ compose = compose), which is what lets [[cellSyncSink]]
-    * fold any number of micro-batches and re-merge snapshots.
+    * a stamp tie goes to the value whose CQL bytes compare greater
+    * unsigned ([[graft.sources.CqlProtocol.orderKey]]: −1 beats 1, as in
+    * C*), and a live value beats a NULL/tombstone at an equal stamp (the
+    * rule the CQL stub shares; USAGE `merge: cell`). Output has the same
+    * shape as the input (compose ∘ compose = compose), which is what lets
+    * [[cellSyncSink]] fold any number of micro-batches and re-merge
+    * snapshots.
     *
     * Scale shape: ONE map-combined keyed aggregation — constant state per
     * (key × cell), no window, no join; at 100 TB this is a single shuffle
@@ -1069,7 +1071,8 @@ object Sync {
       extra: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
     require(dataCols.nonEmpty, "mergeCellLww needs at least one data column")
     val aggs = dataCols.flatMap { c =>
-      val ord = when(col(s"${c}_wt").isNotNull, struct(col(s"${c}_wt"), col(c)))
+      val ord = when(col(s"${c}_wt").isNotNull,
+        struct(col(s"${c}_wt"), graft.sources.CqlProtocol.orderKey(col(c))))
       Seq(max_by(col(c), ord).as(c), max(col(s"${c}_wt")).as(s"${c}_wt"))
     } ++ (max(col("ts")).as("ts") +: extra.map { case (n, e) => e.as(n) })
     rows.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)

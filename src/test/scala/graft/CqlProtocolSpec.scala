@@ -204,4 +204,43 @@ class CqlProtocolSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       CqlProtocol.encode(Map.empty, MapType(StringType, StringType)) }
   }
+
+  test("orderKey orders every cell type exactly as C* does: encode bytes compared unsigned") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    val spark = TestSpark.spark
+    val rnd = new scala.util.Random(11)
+    val texts = Array("", "a", "ab", "b", "z", "é", "日本", "\uD83D\uDE00", "A")
+    def text() = Seq.fill(rnd.nextInt(3))(texts(rnd.nextInt(texts.length))).mkString
+    val domains: Seq[(DataType, Seq[Any], () => Any)] = Seq(
+      (IntegerType, Seq(0, 1, -1, Int.MinValue, Int.MaxValue), () => rnd.nextInt()),
+      (LongType, Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue), () => rnd.nextLong()),
+      (FloatType, Seq(0.0f, -0.0f, 1.0f, -1.0f, Float.NaN, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MinPositiveValue), () => (rnd.nextFloat() - 0.5f) * 1e6f),
+      (DoubleType, Seq(0.0, -0.0, 1.0, -1.0, Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.MinPositiveValue), () => (rnd.nextDouble() - 0.5) * 1e12),
+      (BooleanType, Seq(true, false), () => rnd.nextBoolean()),
+      (StringType, texts.toSeq, () => text()))
+    for ((dt, edges, draw) <- domains) {
+      val values = edges ++ Seq.fill(60)(draw())
+      val pairs = for (a <- values; b <- values) yield Row(a, b)
+      val df = spark.createDataFrame(java.util.Arrays.asList(pairs: _*),
+        StructType(Seq(StructField("a", dt), StructField("b", dt))))
+      val (ka, kb) = (CqlProtocol.orderKey(col("a")), CqlProtocol.orderKey(col("b")))
+      val got = df.select(col("a"), col("b"),
+        when(ka < kb, -1).when(ka > kb, 1).otherwise(0)).collect()
+      assert(got.length === pairs.length)
+      for (r <- got) {
+        val want = Integer.signum(java.util.Arrays.compareUnsigned(
+          CqlProtocol.encode(r.get(0), dt), CqlProtocol.encode(r.get(1), dt)))
+        assert(r.getInt(2) === want, s"$dt: ${r.get(0)} vs ${r.get(1)}")
+      }
+    }
+    // the key is not Spark's value order: −1 ranks above 1, as in C*
+    val signed = spark.range(1).select(CqlProtocol.orderKey(lit(-1L)) > CqlProtocol.orderKey(lit(1L)),
+      CqlProtocol.orderKey(lit(null).cast("bigint")).isNull).head()
+    assert(signed.getBoolean(0) && signed.getBoolean(1))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(CqlProtocol.orderKey(current_date())).collect() }
+  }
 }

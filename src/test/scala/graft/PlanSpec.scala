@@ -1184,4 +1184,26 @@ class PlanSpec extends AnyFunSuite {
     // codegen'd stages render as "*(n) Operator" in the plan string
     assert(p.contains("*(1)"), p)
   }
+
+  test("span family: the keep predicate runs only inside the Generate — no Filter or scan DataFilters carry span_pos or a lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    def spanOrLambda(e: Expression): Boolean = e.exists {
+      case _: LambdaFunction | _: functions.SpanPositions => true
+      case _ => false
+    }
+    for (q <- Seq("j36_phrase_search", "j84_span_near", "j99_span_first", "j125_span_containing",
+        "j145_span_not", "j159_span_within", "j169_intervals_query", "j173_span_or_multi")) {
+      val p = SparkEntry.queries(q)(TestSpark.spark, TestSpark.sf0001).queryExecution.executedPlan
+      // a Filter on the computed columns is pushed into the scan and
+      // evaluates the position algebra a second time
+      assert(Plans.collect(p) { case f: FilterExec if spanOrLambda(f.condition) => f }.isEmpty, s"$q: $p")
+      assert(Plans.collect(p) { case s: FileSourceScanExec => s.dataFilters }
+        .flatten.forall(!spanOrLambda(_)), s"$q: $p")
+      val gens = Plans.collect(p) { case g: GenerateExec => g }
+      assert(gens.size === 1 && spanOrLambda(gens.head.generator), s"$q: $p")
+    }
+  }
 }

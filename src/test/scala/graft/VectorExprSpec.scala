@@ -133,4 +133,46 @@ class VectorExprSpec extends AnyFunSuite {
       .collect()
     assert(r.head.isNullAt(0))
   }
+
+  /** The interpreted position scan span_pos replaced, kept as its
+    * reference (valid only on non-empty arrays: sequence(1, 0) descends). */
+  private def oldSpanPos(term: String, prefix: Boolean): String =
+    if (prefix) s"filter(sequence(1, size(toks)), i -> startswith(element_at(toks, i), '$term'))"
+    else s"filter(sequence(1, size(toks)), i -> element_at(toks, i) = '$term')"
+
+  test("span_pos equals the filter(sequence(...)) scan it replaced, exact and prefix, on random token arrays") {
+    import spark.implicits._
+    val vocab = Array("", "spark", "sp", "spa", "sparkle", "key", "日本", "日本語", "ü", "über", null)
+    val rnd = new scala.util.Random(7)
+    val arrays = Seq(Seq(""), Seq(null), Seq("spark", "spark", "spark")) ++
+      Seq.fill(400)(Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.length))))
+    val df = arrays.toDF("toks")
+    for (term <- Seq("spark", "sp", "", "日本", "ü"); prefix <- Seq(false, true)) {
+      val native = expr(s"span_pos(toks, '$term', $prefix)")
+      val diff = df.where(!(native <=> expr(oldSpanPos(term, prefix))))
+      assert(diff.count() === 0L, s"term '$term' prefix=$prefix: ${diff.head(3).toSeq}")
+      assert(df.where(size(native) >= 2).count() > 0, s"term '$term' prefix=$prefix: no repeats drawn")
+    }
+  }
+
+  test("span_pos: a null array gives null, an empty array an empty one; null tokens never match") {
+    val r = spark.sql("""SELECT span_pos(CAST(NULL AS ARRAY<STRING>), 'a') AS n,
+      |  span_pos(CAST(array() AS ARRAY<STRING>), 'a') AS e,
+      |  span_pos(array('a', NULL, 'b', 'a'), 'a') AS m,
+      |  span_pos(array('ab', NULL, 'b', 'a'), 'a', true) AS p""".stripMargin).head()
+    assert(r.isNullAt(0))
+    assert(r.getSeq[Int](1) === Seq.empty[Int])
+    assert(r.getSeq[Int](2) === Seq(1, 4))
+    assert(r.getSeq[Int](3) === Seq(1, 4))
+  }
+
+  test("span_pos rejects a non-literal or non-string term, or a non-array input, at analysis time") {
+    import spark.implicits._
+    val df = Seq((Seq("a"), "a")).toDF("toks", "t")
+    for (bad <- Seq("span_pos(toks, t)", "span_pos(toks, 1)", "span_pos(toks, CAST(NULL AS STRING))",
+        "span_pos(toks, 'a', t = 'a')", "span_pos(t, 'a')", "span_pos(toks)")) {
+      val err = intercept[Exception](df.select(expr(bad)).collect())
+      assert(err.getMessage.contains("span_pos"), s"$bad: ${err.getMessage}")
+    }
+  }
 }

@@ -738,4 +738,33 @@ class WireSyncSpec extends AnyFunSuite {
         "each cell lands under its own stamp; the update-ts column is not relayed")
     }
   }
+
+  test("merge: cell — a stamp tie resolves in C*'s byte order on both stores and both snapshots") {
+    cellLoop { (cql, es, cfg, base, cqlWrite) =>
+      // the same cells written at the same stamp from both sides: C*'s
+      // tie-break compares the CQL bytes unsigned, so −1 (0xFF…) beats 1
+      // and −7 beats 7, where Spark's signed order says the opposite;
+      // text compares as UTF-8 bytes ('é' = 0xC3A9 beats 'z')
+      cqlWrite(Seq((1L, 500L, "apple", -1L), (2L, 500L, "zebra", 7L)))
+      Seq((1L, 500L, "banana", 500L, 1L, 500L), (2L, 500L, "éclair", 500L, -7L, 500L))
+        .toDF("key", "ts", "status", "status_wt", "val", "val_wt")
+        .write.format("graft-es").option("nodes", es.url).option("index", "t")
+        .option("id-column", "key").option("version-column", "ts")
+        .mode("append").save()
+      (1 to 3).foreach(_ => SyncJob.runOnce(spark, cfg))
+
+      def cells(df: org.apache.spark.sql.DataFrame, statusWt: String, valWt: String) =
+        df.select(col("key"), col("status"), col(statusWt), col("val"), col(valWt))
+          .orderBy("key").collect().map(_.toSeq).toSeq
+      val want = Seq(Seq(1L, "banana", 500L, -1L, 500L), Seq(2L, "éclair", 500L, -7L, 500L))
+      val cqlRows = spark.read.format("graft-cql").option("host", cql.host)
+        .option("keyspace", "ks").option("table", "t")
+        .option("partition-key", "key").option("writetime-of", "status,val").load()
+      assert(cells(cqlRows, "writetime_status", "writetime_val") === want, "C*")
+      assert(cells(spark.read.format("graft-es").option("nodes", es.url)
+        .option("index", "t").load(), "status_wt", "val_wt") === want, "ES")
+      for (snap <- Seq("snapA", "snapB"))
+        assert(cells(spark.read.parquet(s"$base/$snap"), "status_wt", "val_wt") === want, snap)
+    }
+  }
 }

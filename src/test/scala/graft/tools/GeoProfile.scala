@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.ops.Esql
 
 /** Dev-loop profiler for the j260 pipeline — times cumulative stage
@@ -7,12 +6,7 @@ import graft.ops.Esql
 object GeoProfile {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/tmp/scale/x10")
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSession("WARN")
     val evalLL = "EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0"
     val stages = Seq(
       "baseline-ll" -> s"""FROM events | $evalLL | STATS n = COUNT(*), m = MIN(lat) BY event_type""",
