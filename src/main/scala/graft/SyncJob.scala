@@ -340,7 +340,9 @@ object SyncJob {
       .option("incremental-column", "ts")
 
   /** One batch round (the reference's non-streaming mode): read whatever
-    * is in both feeds now, merge both directions once, return row counts. */
+    * is in both feeds now, merge both directions once, return row counts.
+    * The counts are the snapshots' parquet footer row counts, so nothing
+    * runs after the query stops. */
   def runOnce(spark: SparkSession, cfg: SyncConfig): (Long, Long) = {
     val (qa, qb) = start(spark, cfg)
     try { qa.processAllAvailable(); qb.processAllAvailable() }
@@ -348,7 +350,7 @@ object SyncJob {
     val columns =
       if (cfg.merge == "cell") Sync.cellColumns(cqlEndpoint(cfg.sideA).pk, cfg.cells)
       else Sync.changeSchema.fieldNames.toSeq
-    def read(dir: String) = Sync.readSnapshot(spark, dir, columns).fold(0L)(_.count())
-    (read(cfg.snapshotA), read(cfg.snapshotB))
+    (Sync.snapshotRows(spark, cfg.snapshotA, columns),
+      Sync.snapshotRows(spark, cfg.snapshotB, columns))
   }
 }

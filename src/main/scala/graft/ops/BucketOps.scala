@@ -323,10 +323,15 @@ object BucketOps {
     * [[TextOps.spanMatches]] (filter over token positions), zero hash
     * exchanges before the presentation sort. */
   def j84(s: SparkSession, d: String): DataFrame =
-    // slop-3 in-order = ordered position pairs within distance 4
+    // slop-3 in-order = ordered position pairs within distance 4. A doc
+    // without 'join' has no hits and skips the 'spark' scan; that second
+    // reference to join_pos also keeps it a column of its own; with one
+    // reference, CollapseProject inlines its scan into the lambda, where
+    // it re-runs once per 'spark' hit (PlanSpec pins this)
     TextOps.spanMatches(s, d,
-      Seq("hits" -> """filter(span_pos(toks, 'spark'),
-        |  i -> exists(span_pos(toks, 'join'), j -> j > i AND j - i <= 4))""".stripMargin),
+      Seq("join_pos" -> "span_pos(toks, 'join')",
+        "hits" -> """if(size(join_pos) = 0, join_pos, filter(span_pos(toks, 'spark'),
+        |  i -> exists(join_pos, j -> j > i AND j - i <= 4)))""".stripMargin),
       Seq("n_matches" -> "size(hits)",
         "first_pos" -> "if(size(hits) >= 1, element_at(hits, 1), 0)"),
       keep = "n_matches >= 1")

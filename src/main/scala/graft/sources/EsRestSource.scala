@@ -430,6 +430,9 @@ private[sources] class EsPitReader(slice: EsSlice, required: StructType,
     val hits = resp.path("hits").path("hits")
     if (!hits.isArray || hits.size() == 0) { exhausted = true; page = Iterator.empty }
     else {
+      // a page shorter than `size` is the slice's last: a PIT does not
+      // change under the reader, so another search would come back empty
+      exhausted = hits.size() < slice.pageSize
       searchAfter = hits.get(hits.size() - 1).path("sort")
       page = hits.elements().asScala.map(_.path("_source")).toSeq.iterator
     }

@@ -1,13 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.SparkException
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** The reference's bidirectional sync loop, made declarative on Structured
   * Streaming.
@@ -977,24 +981,74 @@ object Sync {
     * so the rename is finished; any other `<dir>.tmp` is an uncommitted
     * write the replay overwrites. Returns `None` only when no snapshot
     * exists; one that cannot be read, or whose columns are not `columns`,
-    * fails the batch and is left as it is. */
+    * fails the batch and is left as it is.
+    *
+    * The schema comes from the data files' parquet footers
+    * ([[snapshotFooters]]), so the read plans without a schema-inference
+    * job. */
   private[graft] def readSnapshot(spark: SparkSession, dir: String,
-      columns: Seq[String]): Option[DataFrame] = {
+      columns: Seq[String]): Option[DataFrame] =
+    snapshotFooters(spark, dir, columns).map { case (schema, _) =>
+      spark.read.schema(schema).parquet(dir)
+    }
+
+  /** Rows of the snapshot at `dir` (0 when there is none), summed from its
+    * parquet footers on the driver: no Spark job. Recovers and refuses as
+    * [[readSnapshot]] does. */
+  private[graft] def snapshotRows(spark: SparkSession, dir: String,
+      columns: Seq[String]): Long =
+    snapshotFooters(spark, dir, columns).fold(0L)(_._2)
+
+  /** The key under which Spark's parquet writer stores the row schema in
+    * every file footer. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Recovery as in [[readSnapshot]], then the footer of every data file
+    * of `dir` (a name not starting with `_` or `.`, the rule of Spark's
+    * file index): the Spark schema they all carry and their summed row
+    * count. No data file, an unreadable footer, a footer without Spark's
+    * schema, footers that disagree, or columns other than `columns` fail
+    * with the refusal and touch nothing. */
+  private def snapshotFooters(spark: SparkSession, dir: String,
+      columns: Seq[String]): Option[(StructType, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(conf)
     if (!fs.exists(path) && fs.exists(new Path(tmpOf(dir), "_SUCCESS"))) swapIn(fs, dir)
     if (!fs.exists(path)) None
     else {
-      def refuse(found: String) = s"snapshot $dir $found but the sink needs " +
-        s"[${columns.mkString(", ")}] — refusing to overwrite existing state; " +
-        "point the snapshot at a fresh directory"
-      val snap =
-        try spark.read.parquet(dir)
-        catch { case e @ (_: AnalysisException | _: SparkException) =>
-          throw new IllegalStateException(refuse("cannot be read"), e) }
-      require(snap.columns.toSeq == columns,
-        refuse(s"has columns [${snap.columns.mkString(", ")}]"))
-      Some(snap)
+      def refuse(found: String, cause: Throwable = null) = new IllegalStateException(
+        s"snapshot $dir $found but the sink needs [${columns.mkString(", ")}] — " +
+          "refusing to overwrite existing state; point the snapshot at a fresh directory",
+        cause)
+      val files = fs.listStatus(path).toSeq.filterNot { f =>
+        val name = f.getPath.getName
+        name.startsWith("_") || name.startsWith(".")
+      }
+      if (files.isEmpty) throw refuse("has no data file")
+      val footers = files.map { f =>
+        val name = f.getPath.getName
+        val footer =
+          try {
+            // options built from `conf`: the plain builder makes a fresh
+            // configuration per file, ~10 ms each
+            val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+              HadoopReadOptions.builder(conf, f.getPath).build())
+            try reader.getFooter finally reader.close()
+          } catch { case NonFatal(e) =>
+            throw refuse(s"cannot be read ($name)", e) }
+        val json = Option(footer.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+          .getOrElse(throw refuse(s"has a data file without Spark's schema ($name)"))
+        (json, footer.getBlocks.asScala.map(_.getRowCount).sum)
+      }
+      if (footers.map(_._1).distinct.size > 1)
+        throw refuse("has data files that disagree on the schema")
+      val schema =
+        try DataType.fromJson(footers.head._1).asInstanceOf[StructType]
+        catch { case NonFatal(e) => throw refuse("cannot be read", e) }
+      if (schema.fieldNames.toSeq != columns)
+        throw refuse(s"has columns [${schema.fieldNames.mkString(", ")}]")
+      Some((schema, footers.map(_._2).sum))
     }
   }
 
@@ -1088,6 +1142,11 @@ object Sync {
     * same stamps) is the echo of an earlier relay and is not relayed
     * again.
     *
+    * The snapshots are rewritten only when some merged row differs from
+    * its committed row in a cell, a stamp or the cursor `ts`, or when a
+    * `<dir>.tmp` of `snapshotDirs` is left over; a batch that changes no
+    * row (an echo whose rows equal the snapshot) commits nothing.
+    *
     * The writeback runs BEFORE the snapshots are replaced, so a
     * committed snapshot row always implies its relay landed: a crash
     * before the commit replays the batch against the old snapshot and
@@ -1097,9 +1156,10 @@ object Sync {
     * converges on every surface (the guarantee lwwSink gives
     * row-granular). State commits and recovers by [[readSnapshot]]'s
     * protocol, based on `snapshotDirs.head`: a crash between two swaps
-    * leaves the head new, so the replay re-merges into it and rewrites
-    * every directory. A snapshot with other columns (a reconfigured
-    * `cells:` list pointed at an old state dir) fails loudly. */
+    * leaves the head new and the next `<dir>.tmp` behind, so the replay
+    * changes no row yet still rewrites every directory. A snapshot with
+    * other columns (a reconfigured `cells:` list pointed at an old state
+    * dir) fails loudly. */
   def cellSyncSink(changes: DataFrame, keyCol: String, dataCols: Seq[String],
       snapshotDirs: Seq[String], checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
@@ -1109,30 +1169,38 @@ object Sync {
       val columns = cellColumns(keyCol, dataCols)
       val base = readSnapshot(spark, snapshotDirs.head, columns)
       // ONE aggregation reads each feed once, merges the batch into the
-      // snapshot and marks the keys the batch touched and the keys to
-      // relay: those with an incoming row whose cells or stamps differ
-      // from the committed row (every incoming row equals it iff the
-      // least and the greatest incoming cell tuples both do)
-      val (isNew, touched, toRelay) = ("_graft_new", "_graft_touched", "_graft_relay")
-      val cells = struct(dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt"))): _*)
+      // snapshot and marks the keys to relay: those with an incoming row
+      // whose cells or stamps differ from the committed row (every
+      // incoming row equals it iff the least and the greatest incoming
+      // cell tuples both do). It also keeps the committed row, so the
+      // keys whose merged row differs from it are marked too.
+      val (isNew, toRelay, committed, differs) =
+        ("_graft_new", "_graft_relay", "_graft_committed", "_graft_differs")
+      val cells = dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt")))
       val incoming = batch.select(columns.map(col): _*).withColumn(isNew, lit(true))
-      val old = max(when(!col(isNew), cells))
-      val lo = min(when(col(isNew), cells))
-      val hi = max(when(col(isNew), cells))
+      val old = max(when(!col(isNew), struct(cells: _*)))
+      val lo = min(when(col(isNew), struct(cells: _*)))
+      val hi = max(when(col(isNew), struct(cells: _*)))
       val merged = mergeCellLww(
         base.fold(incoming)(_.withColumn(isNew, lit(false)).unionByName(incoming)),
         keyCol, dataCols,
-        Seq(touched -> lo.isNotNull, toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old))))
+        Seq(toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old)),
+          committed -> max(when(!col(isNew), struct(col("ts") +: cells: _*)))))
+        .withColumn(differs, !(struct(col("ts") +: cells: _*) <=> col(committed)))
+        .drop(committed)
         .cache()
-      // one pass over the cached merge counts the touched and relayed keys
-      val counts = merged.agg(count_if(col(touched)), count_if(col(toRelay))).head()
-      if (counts.getLong(0) > 0) {
-        // relay the merged row, not the raw change, so a relay can never
-        // regress the other store
-        if (counts.getLong(1) > 0)
-          writeback(merged.where(col(toRelay)).drop(touched, toRelay))
-        commitSnapshot(merged.drop(touched, toRelay), snapshotDirs)
+      // one pass over the cached merge counts the relayed and changed keys
+      val counts = merged.agg(count_if(col(toRelay)), count_if(col(differs))).head()
+      // relay the merged row, not the raw change, so a relay can never
+      // regress the other store
+      if (counts.getLong(0) > 0)
+        writeback(merged.where(col(toRelay)).drop(toRelay, differs))
+      def leftover(dir: String) = {
+        val tmp = new Path(tmpOf(dir))
+        tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tmp)
       }
+      if (counts.getLong(1) > 0 || snapshotDirs.exists(leftover))
+        commitSnapshot(merged.drop(toRelay, differs), snapshotDirs)
       merged.unpersist()
     }
 

@@ -125,6 +125,15 @@ class EsRestConnectorSpec extends AnyFunSuite {
     }
   }
 
+  test("a page shorter than the page size ends its PIT slice: one search per slice") {
+    withStub { stub =>
+      write(stub, sample(20)) // 20 docs over 4 slices, page size 64
+      assert(read(stub, slices = 4).count() === 20)
+      assert(stub.pitOpens.get() === 4)
+      assert(stub.searches.get() === 4, "a short page is the slice's last")
+    }
+  }
+
   test("PIT scans return exactly the rows written, whole and prefiltered") {
     withStub { stub =>
       val src = sample(257)

@@ -39,6 +39,7 @@ class EsStubServer {
   val scrollDeletes = new AtomicInteger()
   val pitOpens = new AtomicInteger()
   val pitDeletes = new AtomicInteger()
+  val searches = new AtomicInteger() // PIT searches (`POST /_search`)
   @volatile var lastSourceIncludes: Seq[String] = Nil
   @volatile var lastQuery: String = ""
   @volatile var failNextBulkItem: Boolean = false
@@ -91,7 +92,9 @@ class EsStubServer {
         val id = s"pit-${pitSeq.incrementAndGet()}"
         synchronized { pits(id) = (idx, indices(idx)._2.toVector) }
         (200, s"""{"id":"$id"}""")
-      case ("POST", "_search" :: Nil) => pitSearch(body)
+      case ("POST", "_search" :: Nil) =>
+        searches.incrementAndGet()
+        pitSearch(body)
       case ("DELETE", "_pit" :: Nil) =>
         pitDeletes.incrementAndGet()
         val id = mapper.readTree(body).path("id").asText()

@@ -1206,4 +1206,19 @@ class PlanSpec extends AnyFunSuite {
       assert(gens.size === 1 && spanOrLambda(gens.head.generator), s"$q: $p")
     }
   }
+
+  test("span family: every span_pos scan runs once per document — none sits inside a lambda body") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("j36_phrase_search", "j84_span_near", "j99_span_first", "j125_span_containing",
+        "j145_span_not", "j159_span_within", "j169_intervals_query", "j173_span_or_multi")) {
+      val p = SparkEntry.queries(q)(TestSpark.spark, TestSpark.sf0001).queryExecution.executedPlan
+      val exprs = Plans.collect(p) { case n => n.expressions }.flatten
+      assert(exprs.exists(_.exists(_.isInstanceOf[functions.SpanPositions])), s"$q: $p")
+      val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+        .filter(_.function.exists(_.isInstanceOf[functions.SpanPositions]))
+      assert(inLambda.isEmpty, s"$q: ${inLambda.mkString("; ")}")
+    }
+  }
 }

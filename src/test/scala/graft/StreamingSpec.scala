@@ -627,6 +627,33 @@ class StreamingSpec extends AnyFunSuite {
       Sync.cellLwwSink(mem.toDF(), dir, ckpt, Trigger.ProcessingTime(0)))
   }
 
+  test("readSnapshot takes schema and rows from the footers, and refuses part files that disagree on columns") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val columns = Sync.changeSchema.fieldNames.toSeq
+    val good = tmp("footer-good") + "/snap"
+    Seq(Change(1, ts("2024-01-01 10:00:00"), 1, "v1"), Change(2, ts("2024-01-01 10:00:00"), 2, null))
+      .toDF().repartition(2).write.parquet(good)
+    val snap = Sync.readSnapshot(spark, good, columns).get
+    assert(snap.schema === spark.read.parquet(good).schema)
+    assert(snap.collect().toSet === spark.read.parquet(good).collect().toSet)
+    assert(Sync.snapshotRows(spark, good, columns) === 2L)
+
+    // two part files in one snapshot, one of them with other columns
+    val dir = tmp("footer-mixed") + "/snap"
+    val other = tmp("footer-other") + "/part"
+    Seq(Change(1, ts("2024-01-01 10:00:00"), 1, "v1")).toDF().write.parquet(dir)
+    Seq((2L, "x")).toDF("key", "other").write.parquet(other)
+    val part = new java.io.File(other).listFiles().filter(_.getName.startsWith("part-")).head
+    Files.copy(part.toPath, java.nio.file.Paths.get(dir, "part-99999-other.parquet"))
+    intercept[IllegalStateException](Sync.snapshotRows(spark, dir, columns))
+    val mem = MemoryStream[Change]
+    mem.addData(Change(3, ts("2024-01-01 10:00:00"), 3, "v3"))
+    assertRefused("part files disagree on columns", dir)(ckpt =>
+      Sync.lwwSink(mem.toDF(), dir, ckpt, Trigger.ProcessingTime(0)))
+  }
+
   test("i18 streaming: rollup increments append as partial pages — the stored table serves the composed day answer") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -676,6 +676,72 @@ class WireSyncSpec extends AnyFunSuite {
     }
   }
 
+  /** The Spark jobs `body` runs, as (ran inside a streaming query) flags,
+    * seen by a SparkListener: a job submitted from a query's stream
+    * thread carries the query's id as a job property. */
+  private def jobsOf(body: => Unit): Seq[Boolean] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == "fence")) fenced.countDown()
+        else jobs.add(props.exists(_.getProperty("sql.streaming.queryId") != null))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listener events arrive asynchronously: the fence job's start
+      // event queues behind every event `body` posted
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  /** Every file under `dir` (non-recursive) with its bytes. */
+  private def filesOf(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().toSeq
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("merge: cell — runOnce counts rows from the snapshots' footers; an echo round commits nothing") {
+    cellLoop { (_, _, cfg, base, cqlWrite) =>
+      def counts() = (spark.read.parquet(s"$base/snapA").count(),
+        spark.read.parquet(s"$base/snapB").count())
+      def round(): ((Long, Long), Seq[Boolean]) = {
+        var got = (-1L, -1L)
+        val jobs = jobsOf { got = SyncJob.runOnce(spark, cfg) }
+        assert(got === counts())
+        // nothing runs after the streaming query stops
+        assert(jobs.forall(identity), s"jobs outside the streaming query: $jobs")
+        (got, jobs)
+      }
+      cqlWrite((1L to 10L).map(i => (i, i * 10L, s"s$i", i)))
+      val (busy, busyJobs) = round()
+      assert(busy === (10L, 10L) && busyJobs.nonEmpty)
+
+      // the echo: ES's feed holds the 10 relayed docs, every merged row
+      // equals its committed row, so neither snapshot is rewritten
+      val before = Seq("snapA", "snapB").map(d => filesOf(s"$base/$d"))
+      val (echo, echoJobs) = round()
+      assert(echo === (10L, 10L) && echoJobs.nonEmpty, "the echo round runs a batch")
+      assert(Seq("snapA", "snapB").map(d => filesOf(s"$base/$d")) === before)
+      assert(Seq("snapA", "snapB").forall(d => !new java.io.File(s"$base/$d.tmp").exists()))
+
+      val (idle, idleJobs) = round()
+      assert(idle === (10L, 10L) && idleJobs.isEmpty)
+
+      // a new key is a changed row: the next round commits it
+      cqlWrite(Seq((11L, 500L, "s11", 11L)))
+      assert(round()._1 === (11L, 11L))
+    }
+  }
+
   /** How many graft-cql writes `body` runs: AppendData plans on a
     * `graft-cql:` table, seen by a QueryExecutionListener. */
   private def cqlWrites(body: => Unit): Int = {

@@ -13,7 +13,7 @@ deterministic regardless of row order.
 
 Dev tool only — never shipped in the engine jar.
 """
-import sys, os, json, math
+import sys, os, json, math, atexit, shutil, signal, tempfile
 import duckdb
 import pyarrow.parquet as pq
 
@@ -56,6 +56,13 @@ def main():
     with open(os.path.join(outdir, "oracle_sql.json")) as f:
         oracle = json.load(f)
     con = duckdb.connect()
+    # DuckDB spills to <cwd>/.tmp by default, and the data directory may
+    # be read-only: spill to a fresh temp dir instead, removed at exit
+    spill = tempfile.mkdtemp(prefix="check-duckdb-")
+    atexit.register(shutil.rmtree, spill, True)
+    # a spill can reach tens of GiB: a plain `kill` must clean it up too
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    con.execute("SET temp_directory = '%s'" % spill.replace("'", "''"))
     os.chdir(sfdir)
     n_ok = n_bad = 0
     for name in sorted(oracle):
