@@ -676,30 +676,41 @@ class WireSyncSpec extends AnyFunSuite {
     }
   }
 
+  /** Waits until the listeners have seen every event posted so far:
+    * listener events arrive asynchronously on the shared queue, and a
+    * fence job's start event queues behind all of them. */
+  private def awaitListeners(): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val fence = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "fence"))
+          fenced.countDown()
+    }
+    sc.addSparkListener(fence)
+    try {
+      sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(fence)
+  }
+
   /** The Spark jobs `body` runs, as (ran inside a streaming query) flags,
     * seen by a SparkListener: a job submitted from a query's stream
     * thread carries the query's id as a job property. */
   private def jobsOf(body: => Unit): Seq[Boolean] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]
-    val fenced = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.job.description") == "fence")) fenced.countDown()
-        else jobs.add(props.exists(_.getProperty("sql.streaming.queryId") != null))
+        if (!props.exists(_.getProperty("spark.job.description") == "fence"))
+          jobs.add(props.exists(_.getProperty("sql.streaming.queryId") != null))
       }
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      // listener events arrive asynchronously: the fence job's start
-      // event queues behind every event `body` posted
-      sc.setJobDescription("fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; awaitListeners() } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     jobs.asScala.toSeq
   }
@@ -745,7 +756,6 @@ class WireSyncSpec extends AnyFunSuite {
   /** How many graft-cql writes `body` runs: AppendData plans on a
     * `graft-cql:` table, seen by a QueryExecutionListener. */
   private def cqlWrites(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.catalyst.plans.logical.AppendData
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -757,26 +767,8 @@ class WireSyncSpec extends AnyFunSuite {
         }.size)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // listener events arrive asynchronously on the shared queue; a fence
-    // job's start event queues behind every event `body` posted
-    val sc = spark.sparkContext
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val fence = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "fence"))
-          fenced.countDown()
-    }
     spark.listenerManager.register(listener)
-    try {
-      body
-      sc.addSparkListener(fence)
-      sc.setJobDescription("fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.removeSparkListener(fence)
-      spark.listenerManager.unregister(listener)
-    }
+    try { body; awaitListeners() } finally spark.listenerManager.unregister(listener)
     n.get
   }
 
