@@ -108,8 +108,7 @@ object Tables {
     // the ntz→timestamp cast below applies the SESSION timezone; any zone
     // but UTC silently shifts every epoch by the offset (no error, wrong
     // numbers). Fail loudly instead — every engine entry point (Verify,
-    // Bench, TestSpark, MultiExplain, Probe16, ScaleProbe, StreamProbe)
-    // sets UTC.
+    // Bench, TestSpark, MultiExplain, Probe16) sets UTC.
     val tz = s.conf.get("spark.sql.session.timeZone")
     require(tz == "UTC",
       s"eventsUs needs spark.sql.session.timeZone=UTC (got '$tz'): " +

@@ -650,42 +650,15 @@ object AggExtOps {
     "j102_moving_percentiles" -> j102, "j175_moving_ewma" -> j175,
     "j103_variable_width_histogram" -> j103)
 
-  /** The j58 parent frame restated for the oracles that consume it —
-    * identical to BucketOps's dailyFrame CTEs (j76/j78/j79). */
-  private val dailySql =
-    """e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-      |      FROM 'events.parquet'),
-      |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-      |spine AS (SELECT CAST(unnest(generate_series(
-      |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-      |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-      |h AS (SELECT day, count(*) AS doc_count FROM e
-      |      WHERE event_type = 'purchase' GROUP BY 1),
-      |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
-      |      FROM spine LEFT JOIN h USING (day))""".stripMargin
-
-  private def nibble4(h: String): String =
-    s"""((strpos('0123456789abcdef', substr($h, 1, 1)) - 1) * 4096 +
-       | (strpos('0123456789abcdef', substr($h, 2, 1)) - 1) * 256 +
-       | (strpos('0123456789abcdef', substr($h, 3, 1)) - 1) * 16 +
-       | (strpos('0123456789abcdef', substr($h, 4, 1)) - 1))""".stripMargin
-
   val oracle: Map[String, String] = Map(
     "j108_significant_text" ->
-      """WITH toks AS (SELECT list_contains(string_split(text, ' '), 'spark') AS fgdoc,
-        |                unnest(list_distinct(string_split(text, ' '))) AS token
-        |              FROM 'documents.parquet'),
-        |st AS (SELECT token, count(*) AS bg,
-        |              count(*) FILTER (WHERE fgdoc) AS fg
-        |       FROM toks GROUP BY 1),
-        |tot AS (SELECT sum(bg) AS bg_tot, sum(fg) AS fg_tot FROM st)
-        |SELECT token, fg, bg,
-        |  floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 AS jlh
-        |FROM st CROSS JOIN tot
-        |WHERE fg > 0 AND fg / fg_tot > bg / bg_tot
-        |ORDER BY floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 DESC,
-        |         token ASC
-        |LIMIT 15""".stripMargin,
+      s"""WITH toks AS (SELECT list_contains(string_split(text, ' '), 'spark') AS fgdoc,
+         |                unnest(list_distinct(string_split(text, ' '))) AS token
+         |              FROM 'documents.parquet'),
+         |st AS (SELECT token, count(*) AS bg,
+         |              count(*) FILTER (WHERE fgdoc) AS fg
+         |       FROM toks GROUP BY 1),
+         |${TextOps.JlhTopSql}""".stripMargin,
     "j109_scripted_metric" ->
       """WITH p AS (SELECT event_type, user_id,
         |             max(CAST(round(value * 100, 0) AS BIGINT)) AS peak
@@ -705,52 +678,47 @@ object AggExtOps {
         |   OR len(list_filter(toks, t -> starts_with(t, 's'))) >= 1
         |ORDER BY doc_id""".stripMargin,
     "j112_quality_decile_mix" ->
-      """WITH t AS (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS toks
-        |           FROM 'documents.parquet'),
-        |f AS (SELECT doc_id, lang,
-        |        CAST(len(toks) AS BIGINT) AS n_toks,
-        |        CAST(len(toks) AS DOUBLE) AS nt,
-        |        len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE) AS ttr,
-        |        (n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE) AS mean_tok_len,
-        |        len(list_filter(toks, t -> t IN ('a', 'the')))
-        |          / CAST(len(toks) AS DOUBLE) AS stop_ratio
-        |      FROM t),
-        |sc AS (SELECT doc_id, lang, n_toks,
-        |         floor((-3.0 + 0.01 * nt + 4.0 * ttr
-        |           + 0.5 * mean_tok_len - 6.0 * stop_ratio) * 1000000 + 0.5)
-        |           / 1000000.0 AS score
-        |       FROM f),
-        |dec AS (SELECT lang, n_toks, score,
-        |          CAST(ntile(10) OVER (PARTITION BY lang
-        |            ORDER BY score ASC, doc_id ASC) AS BIGINT) AS decile
-        |        FROM sc)
-        |SELECT lang, decile, count(*) AS n_docs,
-        |       CAST(sum(n_toks) AS BIGINT) AS sum_tokens,
-        |       floor((CAST(sum(CAST(round(score * 1000000) AS BIGINT)) AS DOUBLE)
-        |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS mean_score
-        |FROM dec GROUP BY 1, 2 ORDER BY lang, decile""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, lang, n_chars, string_split(text, ' ') AS toks
+         |           FROM 'documents.parquet'),
+         |f AS (SELECT doc_id, lang,
+         |        CAST(len(toks) AS BIGINT) AS n_toks,
+         |        CAST(len(toks) AS DOUBLE) AS nt,
+         |        ${CurationOps.QualityFeaturesSql}
+         |      FROM t),
+         |sc AS (SELECT doc_id, lang, n_toks,
+         |         floor((-3.0 + 0.01 * nt + 4.0 * ttr
+         |           + 0.5 * mean_tok_len - 6.0 * stop_ratio) * 1000000 + 0.5)
+         |           / 1000000.0 AS score
+         |       FROM f),
+         |dec AS (SELECT lang, n_toks, score,
+         |          CAST(ntile(10) OVER (PARTITION BY lang
+         |            ORDER BY score ASC, doc_id ASC) AS BIGINT) AS decile
+         |        FROM sc)
+         |SELECT lang, decile, count(*) AS n_docs,
+         |       CAST(sum(n_toks) AS BIGINT) AS sum_tokens,
+         |       ${Parity.qmeanSql("score")} AS mean_score
+         |FROM dec GROUP BY 1, 2 ORDER BY lang, decile""".stripMargin,
     "j113_bigram_entropy" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS t
-        |              FROM 'documents.parquet'
-        |              WHERE len(string_split(text, ' ')) >= 2),
-        |bg0 AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-        |          i -> {'w1': t[i], 'w2': t[i + 1]})) AS p FROM toks),
-        |cb AS (SELECT p.w1 AS w1, p.w2 AS w2, CAST(count(*) AS DOUBLE) AS c
-        |       FROM bg0 GROUP BY 1, 2),
-        |hb AS (SELECT sum(c) AS t, count(*) AS n_distinct,
-        |         CAST(sum(CAST(round(c * ln(c) * 1000000) AS BIGINT)) AS DOUBLE)
-        |           / 1000000.0 AS clnc FROM cb),
-        |hu AS (SELECT CAST(sum(CAST(round(cu * ln(cu) * 1000000) AS BIGINT)) AS DOUBLE)
-        |         / 1000000.0 AS ulnu
-        |       FROM (SELECT w1, sum(c) AS cu FROM cb GROUP BY 1))
-        |SELECT CAST(hb.t AS BIGINT) AS n_bigrams, hb.n_distinct,
-        |       round((ln(hb.t) - hb.clnc / hb.t) / ln(2.0), 6) AS h_bigram_bits,
-        |       round((ln(hb.t) - hu.ulnu / hb.t) / ln(2.0), 6) AS h_unigram_bits,
-        |       round(((ln(hb.t) - hb.clnc / hb.t) - (ln(hb.t) - hu.ulnu / hb.t))
-        |             / ln(2.0), 6) AS h_cond_bits
-        |FROM hb CROSS JOIN hu""".stripMargin,
+      s"""WITH toks AS (SELECT string_split(text, ' ') AS t
+         |              FROM 'documents.parquet'
+         |              WHERE len(string_split(text, ' ')) >= 2),
+         |${PipelineOps.BigramSql},
+         |cb AS (SELECT p.w1 AS w1, p.w2 AS w2, CAST(count(*) AS DOUBLE) AS c
+         |       FROM bg0 GROUP BY 1, 2),
+         |hb AS (SELECT sum(c) AS t, count(*) AS n_distinct,
+         |         CAST(sum(CAST(round(c * ln(c) * 1000000) AS BIGINT)) AS DOUBLE)
+         |           / 1000000.0 AS clnc FROM cb),
+         |hu AS (SELECT CAST(sum(CAST(round(cu * ln(cu) * 1000000) AS BIGINT)) AS DOUBLE)
+         |         / 1000000.0 AS ulnu
+         |       FROM (SELECT w1, sum(c) AS cu FROM cb GROUP BY 1))
+         |SELECT CAST(hb.t AS BIGINT) AS n_bigrams, hb.n_distinct,
+         |       round((ln(hb.t) - hb.clnc / hb.t) / ln(2.0), 6) AS h_bigram_bits,
+         |       round((ln(hb.t) - hu.ulnu / hb.t) / ln(2.0), 6) AS h_unigram_bits,
+         |       round(((ln(hb.t) - hb.clnc / hb.t) - (ln(hb.t) - hu.ulnu / hb.t))
+         |             / ln(2.0), 6) AS h_cond_bits
+         |FROM hb CROSS JOIN hu""".stripMargin,
     "j104_percentiles_bucket" ->
-      s"""WITH $dailySql
+      s"""WITH ${BucketOps.DailySql}
          |SELECT count(*) AS n_buckets,
          |       round(quantile_cont(doc_count, 0.25), 6) AS p25,
          |       round(quantile_cont(doc_count, 0.5), 6) AS p50,
@@ -758,31 +726,30 @@ object AggExtOps {
          |       round(quantile_cont(doc_count, 0.9), 6) AS p90
          |FROM b""".stripMargin,
     "j105_embed_outliers" ->
-      """WITH comp AS (SELECT vec_id, label, CAST(i - 1 AS INTEGER) AS pos,
-        |                CAST(embedding[i] AS DOUBLE) AS v
-        |              FROM 'embeddings.parquet', generate_series(1, 64) AS t(i)),
-        |cent AS (SELECT label, pos,
-        |           floor((CAST(sum(CAST(round(v * 1000000) AS BIGINT)) AS DOUBLE)
-        |                 / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS m
-        |         FROM comp GROUP BY 1, 2),
-        |nc AS (SELECT label, list_sum(list_sort(list(m * m))) AS nc2
-        |       FROM cent GROUP BY 1),
-        |dots AS (SELECT comp.vec_id, comp.label,
-        |           list_sum(list_sort(list(comp.v * cent.m))) AS dot,
-        |           list_sum(list_sort(list(comp.v * comp.v))) AS nv2
-        |         FROM comp JOIN cent USING (label, pos) GROUP BY 1, 2),
-        |sims AS (SELECT dots.label, dots.vec_id,
-        |           round(dots.dot / (sqrt(dots.nv2) * sqrt(nc.nc2)), 6) AS sim
-        |         FROM dots JOIN nc USING (label)),
-        |cnt AS (SELECT label, count(*) AS cnt FROM sims GROUP BY 1),
-        |r AS (SELECT sims.label, sims.vec_id, sims.sim,
-        |        CAST(row_number() OVER (PARTITION BY sims.label
-        |          ORDER BY sims.sim ASC, sims.vec_id ASC) AS BIGINT) AS rn,
-        |        cnt.cnt
-        |      FROM sims JOIN cnt USING (label))
-        |SELECT label, vec_id, sim, rn FROM r
-        |WHERE rn <= greatest(1, cnt // 10)
-        |ORDER BY label, rn""".stripMargin,
+      s"""WITH comp AS (SELECT vec_id, label, CAST(i - 1 AS INTEGER) AS pos,
+         |                CAST(embedding[i] AS DOUBLE) AS v
+         |              FROM 'embeddings.parquet', generate_series(1, 64) AS t(i)),
+         |cent AS (SELECT label, pos,
+         |           ${Parity.qmeanSql("v")} AS m
+         |         FROM comp GROUP BY 1, 2),
+         |nc AS (SELECT label, list_sum(list_sort(list(m * m))) AS nc2
+         |       FROM cent GROUP BY 1),
+         |dots AS (SELECT comp.vec_id, comp.label,
+         |           list_sum(list_sort(list(comp.v * cent.m))) AS dot,
+         |           list_sum(list_sort(list(comp.v * comp.v))) AS nv2
+         |         FROM comp JOIN cent USING (label, pos) GROUP BY 1, 2),
+         |sims AS (SELECT dots.label, dots.vec_id,
+         |           round(dots.dot / (sqrt(dots.nv2) * sqrt(nc.nc2)), 6) AS sim
+         |         FROM dots JOIN nc USING (label)),
+         |cnt AS (SELECT label, count(*) AS cnt FROM sims GROUP BY 1),
+         |r AS (SELECT sims.label, sims.vec_id, sims.sim,
+         |        CAST(row_number() OVER (PARTITION BY sims.label
+         |          ORDER BY sims.sim ASC, sims.vec_id ASC) AS BIGINT) AS rn,
+         |        cnt.cnt
+         |      FROM sims JOIN cnt USING (label))
+         |SELECT label, vec_id, sim, rn FROM r
+         |WHERE rn <= greatest(1, cnt // 10)
+         |ORDER BY label, rn""".stripMargin,
     "j106_terms_set" ->
       """SELECT doc_id,
         |       CAST(len(list_intersect(list_distinct(string_split(text, ' ')),
@@ -793,33 +760,21 @@ object AggExtOps {
         |          ['spark', 'join', 'merge', 'sync'])) >= 1 + doc_id % 3
         |ORDER BY doc_id""".stripMargin,
     "j107_pinned_query" ->
-      """WITH pinned AS (
-        |  SELECT * FROM (VALUES (CAST(1 AS BIGINT), CAST(42 AS BIGINT), CAST(NULL AS DOUBLE)),
-        |                        (2, 7, NULL), (3, 100, NULL)) AS t(rank, doc_id, score)),
-        |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |         FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token = 'sync' GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS score
-        |        FROM sc WHERE doc_id NOT IN (42, 7, 100) GROUP BY 1),
-        |org AS (SELECT doc_id, score FROM agg
-        |        ORDER BY score DESC, doc_id ASC LIMIT 10),
-        |orgr AS (SELECT CAST(3 + row_number() OVER (ORDER BY score DESC, doc_id ASC)
-        |           AS BIGINT) AS rank, doc_id, score FROM org)
-        |SELECT rank, doc_id, score FROM pinned
-        |UNION ALL SELECT rank, doc_id, score FROM orgr
-        |ORDER BY rank""".stripMargin,
+      s"""WITH pinned AS (
+         |  SELECT * FROM (VALUES (CAST(1 AS BIGINT), CAST(42 AS BIGINT), CAST(NULL AS DOUBLE)),
+         |                        (2, 7, NULL), (3, 100, NULL)) AS t(rank, doc_id, score)),
+         |${TextOps.bm25TokensSql("= 'sync'")},
+         |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS score
+         |        FROM sc WHERE doc_id NOT IN (42, 7, 100) GROUP BY 1),
+         |org AS (SELECT doc_id, score FROM agg
+         |        ORDER BY score DESC, doc_id ASC LIMIT 10),
+         |orgr AS (SELECT CAST(3 + row_number() OVER (ORDER BY score DESC, doc_id ASC)
+         |           AS BIGINT) AS rank, doc_id, score FROM org)
+         |SELECT rank, doc_id, score FROM pinned
+         |UNION ALL SELECT rank, doc_id, score FROM orgr
+         |ORDER BY rank""".stripMargin,
     "j92_sibling_aggs" ->
-      s"""WITH $dailySql,
+      s"""WITH ${BucketOps.DailySql},
          |st AS (SELECT count(*) AS n_buckets,
          |         CAST(sum(doc_count) AS BIGINT) AS sum_bucket,
          |         min(doc_count) AS min_bucket, max(doc_count) AS max_bucket
@@ -833,23 +788,20 @@ object AggExtOps {
          |FROM b CROSS JOIN st
          |GROUP BY st.n_buckets, st.sum_bucket, st.min_bucket, st.max_bucket""".stripMargin,
     "j93_cumulative_cardinality" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |fs AS (SELECT min(day) AS day, user_id FROM e GROUP BY user_id),
-        |nu AS (SELECT day, count(*) AS new_users FROM fs GROUP BY 1),
-        |z AS (SELECT spine.day, coalesce(nu.new_users, 0) AS new_users
-        |      FROM spine LEFT JOIN nu USING (day))
-        |SELECT day, new_users,
-        |       CAST(sum(new_users) OVER (ORDER BY day
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |         AS cum_users
-        |FROM z ORDER BY day""".stripMargin,
+      s"""WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id
+         |           FROM 'events.parquet'),
+         |${BucketOps.DaySpineSql},
+         |fs AS (SELECT min(day) AS day, user_id FROM e GROUP BY user_id),
+         |nu AS (SELECT day, count(*) AS new_users FROM fs GROUP BY 1),
+         |z AS (SELECT spine.day, coalesce(nu.new_users, 0) AS new_users
+         |      FROM spine LEFT JOIN nu USING (day))
+         |SELECT day, new_users,
+         |       CAST(sum(new_users) OVER (ORDER BY day
+         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         |         AS cum_users
+         |FROM z ORDER BY day""".stripMargin,
     "j94_normalize_agg" ->
-      s"""WITH $dailySql,
+      s"""WITH ${BucketOps.DailySql},
          |st AS (SELECT CAST(sum(doc_count) AS BIGINT) AS total,
          |         min(doc_count) AS mn, max(doc_count) AS mx FROM b)
          |SELECT b.day, b.doc_count,
@@ -864,7 +816,7 @@ object AggExtOps {
          |             md5('smp:' || CAST(event_id AS VARCHAR)) AS h
          |           FROM 'events.parquet'),
          |k AS (SELECT event_type, cents,
-         |        (${nibble4("h")} < 16384) AS keep
+         |        (${Hashing.duckNibble("h")} < 16384) AS keep
          |      FROM e)
          |SELECT event_type,
          |       count(*) AS exact_count,
@@ -894,43 +846,39 @@ object AggExtOps {
         |         / 1000000.0 AS score
         |FROM e ORDER BY score DESC, event_id ASC LIMIT 20""".stripMargin,
     "j98_rank_feature" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, n_chars,
-        |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token = 'merge' GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id, dl.n_chars,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, n_chars,
-        |          list_sum(list_sort(list(tscore))) AS tsc
-        |        FROM sc GROUP BY 1, 2)
-        |SELECT doc_id,
-        |       round(tsc + 0.8 * (CAST(n_chars AS DOUBLE) /
-        |             CAST(n_chars + 200 AS DOUBLE)), 6) AS score,
-        |       round(tsc, 6) AS text_score,
-        |       floor(CAST(n_chars AS DOUBLE) / CAST(n_chars + 200 AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS sat
-        |FROM agg ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+         |              FROM 'documents.parquet'),
+         |dl AS (SELECT doc_id, n_chars,
+         |         CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+         |       FROM 'documents.parquet'),
+         |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
+         |       WHERE token = 'merge' GROUP BY 1, 2),
+         |${TextOps.Bm25StatsSql},
+         |sc AS (SELECT tf.doc_id, dl.n_chars,
+         |         ${TextOps.Bm25TermSql} AS tscore
+         |       FROM tf JOIN dl USING (doc_id)
+         |            JOIN df USING (token) CROSS JOIN st),
+         |agg AS (SELECT doc_id, n_chars,
+         |          list_sum(list_sort(list(tscore))) AS tsc
+         |        FROM sc GROUP BY 1, 2)
+         |SELECT doc_id,
+         |       round(tsc + 0.8 * (CAST(n_chars AS DOUBLE) /
+         |             CAST(n_chars + 200 AS DOUBLE)), 6) AS score,
+         |       round(tsc, 6) AS text_score,
+         |       floor(CAST(n_chars AS DOUBLE) / CAST(n_chars + 200 AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS sat
+         |FROM agg ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
     "j99_span_first" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t
-        |           FROM 'documents.parquet'
-        |           WHERE len(string_split(text, ' ')) >= 1),
-        |m AS (SELECT doc_id,
-        |        list_filter(generate_series(1, len(t)), i -> t[i] = 'spark') AS all_hits,
-        |        t
-        |      FROM t)
-        |SELECT doc_id,
-        |       CAST(len(list_filter(all_hits, i -> i <= 5)) AS BIGINT) AS n_first,
-        |       CAST(len(list_filter(all_hits,
-        |         i -> len(list_filter(list_slice(t, i + 1, i + 2),
-        |                              x -> x = 'join')) = 0)) AS BIGINT) AS n_clean
-        |FROM m WHERE len(all_hits) >= 1 ORDER BY doc_id""".stripMargin,
+      s"""WITH ${TextOps.SpanTokensSql},
+         |m AS (SELECT doc_id,
+         |        list_filter(generate_series(1, len(t)), i -> t[i] = 'spark') AS all_hits,
+         |        t
+         |      FROM t)
+         |SELECT doc_id,
+         |       CAST(len(list_filter(all_hits, i -> i <= 5)) AS BIGINT) AS n_first,
+         |       CAST(len(list_filter(all_hits,
+         |         i -> len(list_filter(list_slice(t, i + 1, i + 2),
+         |                              x -> x = 'join')) = 0)) AS BIGINT) AS n_clean
+         |FROM m WHERE len(all_hits) >= 1 ORDER BY doc_id""".stripMargin,
     "j100_zipf_fit" ->
       """WITH v AS (SELECT token, count(*) AS freq
         |           FROM (SELECT unnest(string_split(text, ' ')) AS token
@@ -967,7 +915,7 @@ object AggExtOps {
         |         / 1000000.0 AS efficiency
         |FROM bb GROUP BY band ORDER BY band""".stripMargin,
     "j102_moving_percentiles" ->
-      s"""WITH $dailySql,
+      s"""WITH ${BucketOps.DailySql},
          |w AS (SELECT day, doc_count,
          |        list_sort(list(CAST(doc_count AS DOUBLE)) OVER (ORDER BY day
          |          ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)) AS arr
@@ -980,7 +928,7 @@ object AggExtOps {
          |         AS moving_med7
          |FROM w ORDER BY day""".stripMargin,
     "j175_moving_ewma" ->
-      s"""WITH $dailySql,
+      s"""WITH ${BucketOps.DailySql},
          |w AS (SELECT day, doc_count,
          |        list(CAST(doc_count AS DOUBLE)) OVER (ORDER BY day
          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS arr

@@ -62,6 +62,15 @@ object Aggregates {
       .orderBy($"event_type")
   }
 
+  /** The d4/d14 oracles' totals per grouping set, before the GROUP BY. */
+  private val GroupingTotalsSql =
+    """SELECT o_orderstatus, o_orderpriority,
+      |round(sum(o_totalprice), 2) AS total,
+      |count(*) AS n,
+      |CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
+      |CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
+      |FROM 'orders.parquet'""".stripMargin
+
   /** d4_agg_rollup — ROLLUP with grouping() disambiguation. */
   def d4(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -267,15 +276,10 @@ object Aggregates {
         |  <= greatest(1.0, round(quantile_cont(value, 0.95), 6) * 0.05) AS p95_within_tol
         |FROM 'events.parquet' GROUP BY event_type ORDER BY event_type""".stripMargin,
     "d4_agg_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |round(sum(o_totalprice), 2) AS total,
-        |count(*) AS n,
-        |CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
-        |CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
-        |FROM 'orders.parquet'
-        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_prio,
-        |  o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
+      s"""$GroupingTotalsSql
+         |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+         |ORDER BY g_status, g_prio,
+         |  o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
     "d5_agg_having" ->
       """SELECT o_custkey, count(*) AS n_orders FROM 'orders.parquet'
         |GROUP BY o_custkey HAVING count(*) >= 15 ORDER BY o_custkey""".stripMargin,
@@ -324,12 +328,7 @@ object Aggregates {
         |count(*) AS n
         |FROM 'events.parquet' GROUP BY user_id ORDER BY user_id""".stripMargin,
     "d14_agg_cube" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |round(sum(o_totalprice), 2) AS total,
-        |count(*) AS n,
-        |CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_status,
-        |CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio
-        |FROM 'orders.parquet'
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin)
+      s"""$GroupingTotalsSql
+         |GROUP BY CUBE (o_orderstatus, o_orderpriority)
+         |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin)
 }

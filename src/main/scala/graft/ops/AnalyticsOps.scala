@@ -412,31 +412,15 @@ object AnalyticsOps {
   def j158(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val fr = PipelineOps.minhashFrames(s, d)
-    val bandExpr =
-      """array(
-        |  named_struct('band', 0, 'sig', concat(m0, '|', m1)),
-        |  named_struct('band', 1, 'sig', concat(m2, '|', m3)),
-        |  named_struct('band', 2, 'sig', concat(m4, '|', m5)),
-        |  named_struct('band', 3, 'sig', concat(m6, '|', m7)))""".stripMargin
-    val bands = fr.minh.select($"doc_id", explode(expr(bandExpr)).as("b"))
-      .select($"doc_id", $"b.band".as("band"), $"b.sig".as("sig"))
-    val newBands = bands.filter($"doc_id" % 5 === 0)
-    val cand = newBands.as("x").hint("SHUFFLE_HASH")
-      .join(bands.as("y").hint("SHUFFLE_HASH"),
+    val cand = fr.bands.filter($"doc_id" % 5 === 0).as("x").hint("SHUFFLE_HASH")
+      .join(fr.bands.as("y").hint("SHUFFLE_HASH"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc_id") =!= col("y.doc_id"))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("d1"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("d2"))
       .distinct()
-    val ns = fr.sh.groupBy($"doc_id").agg(count(lit(1)).as("ns"))
-    cand
-      .join(fr.sh.select($"doc_id".as("d1"), $"shh".as("sh1")), "d1")
-      .join(fr.sh.select($"doc_id".as("d2"), $"shh".as("sh2")), "d2")
-      .filter($"sh1" === $"sh2")
-      .groupBy($"d1", $"d2").agg(count(lit(1)).as("inter"))
-      .join(ns.select($"doc_id".as("d1"), $"ns".as("n1")), "d1")
-      .join(ns.select($"doc_id".as("d2"), $"ns".as("n2")), "d2")
-      .withColumn("jaccard", Parity.round6($"inter" / ($"n1" + $"n2" - $"inter")))
+    PipelineOps.exactJaccard(fr.sh, cand)
+      .withColumn("jaccard", Parity.round6($"jac"))
       .filter($"jaccard" >= 0.5)
       .select($"d1", $"d2", $"jaccard",
         when($"d1" % 5 === 0 && $"d2" % 5 === 0, "new_new")
@@ -944,6 +928,16 @@ object AnalyticsOps {
        |FROM r8 ORDER BY event_type""".stripMargin
   }
 
+  /** The j170/j178 oracles' zero-filled daily event counts: `f` (day,
+    * cnt) over [[BucketOps.DaySpineSql]]. */
+  private val DailyCountsSql =
+    s"""e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
+       |           FROM 'events.parquet'),
+       |${BucketOps.DaySpineSql},
+       |h AS (SELECT day, count(*) AS c FROM e GROUP BY 1),
+       |f AS (SELECT s.day, CAST(coalesce(h.c, 0) AS BIGINT) AS cnt
+       |      FROM spine s LEFT JOIN h ON s.day = h.day)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "j282_transition_pagerank" -> j282Oracle,
     "j151_stupid_backoff" ->
@@ -981,31 +975,19 @@ object AnalyticsOps {
         |       round(list_sum(list_sort(list(ll))) / count(*), 6) AS avg_ll
         |FROM sc GROUP BY 1 ORDER BY doc_id""".stripMargin,
     "j152_source_card" ->
-      """WITH t AS (SELECT source, lang, n_chars, string_split(text, ' ') AS toks
-        |           FROM 'documents.parquet'),
-        |f AS (SELECT source, lang, n_chars, len(toks) AS n_toks,
-        |        floor((-3.0 + 0.01 * CAST(len(toks) AS DOUBLE)
-        |          + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
-        |          + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
-        |          - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
-        |                   / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
-        |          / 1000000.0 AS score,
-        |        (len(toks) BETWEEN 25 AND 90
-        |         AND CAST(n_chars - len(toks) + 1 AS DOUBLE)
-        |             / CAST(len(toks) AS DOUBLE) BETWEEN 4.0 AND 5.0
-        |         AND len(list_filter(toks, x -> x IN ('a', 'the'))) >= 2
-        |         AND CAST(len(list_filter(toks, x -> len(x) <= 2)) AS DOUBLE)
-        |             / CAST(len(toks) AS DOUBLE) <= 0.09) AS gpass
-        |      FROM t)
-        |SELECT source, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       CAST(sum(n_toks) AS BIGINT) AS sum_tokens,
-        |       count(DISTINCT lang) AS n_langs,
-        |       floor((CAST(sum(CAST(round(score * 1000000) AS BIGINT)) AS DOUBLE)
-        |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS mean_quality,
-        |       floor(CAST(sum(gpass::INT) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |             * 1000000 + 0.5) / 1000000.0 AS gopher_pass_rate
-        |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
+      s"""WITH t AS (SELECT source, lang, n_chars, string_split(text, ' ') AS toks
+         |           FROM 'documents.parquet'),
+         |f AS (SELECT source, lang, n_chars, len(toks) AS n_toks,
+         |        ${CurationOps.QualityGopherSql}
+         |      FROM t)
+         |SELECT source, count(*) AS n_docs,
+         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+         |       CAST(sum(n_toks) AS BIGINT) AS sum_tokens,
+         |       count(DISTINCT lang) AS n_langs,
+         |       ${Parity.qmeanSql("score")} AS mean_quality,
+         |       floor(CAST(sum(gpass::INT) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |             * 1000000 + 0.5) / 1000000.0 AS gopher_pass_rate
+         |FROM f GROUP BY 1 ORDER BY source""".stripMargin,
     "j153_event_funnel" ->
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us
         |           FROM 'events.parquet'),
@@ -1028,34 +1010,29 @@ object AnalyticsOps {
         |FROM t1 LEFT JOIN t2 USING (user_id) LEFT JOIN t3 USING (user_id)
         |ORDER BY user_id""".stripMargin,
     "j163_change_point" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS purchases FROM e
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.purchases, 0) AS purchases
-        |      FROM spine LEFT JOIN h USING (day)),
-        |tot AS (SELECT count(*) AS n, CAST(sum(purchases) AS BIGINT) AS s FROM b),
-        |c AS (SELECT day,
-        |        CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
-        |        CAST(sum(purchases) OVER (ORDER BY day
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |      FROM b),
-        |m AS (SELECT day, rn, n - rn AS n_after,
-        |        CAST(cum AS DOUBLE) / rn AS mean_before,
-        |        CAST(s - cum AS DOUBLE) / (n - rn) AS mean_after
-        |      FROM c CROSS JOIN tot
-        |      WHERE rn >= 2 AND rn <= n - 2)
-        |SELECT day AS change_day, rn AS n_before, n_after,
-        |       floor(mean_before * 1000000 + 0.5) / 1000000.0 AS mean_before,
-        |       floor(mean_after * 1000000 + 0.5) / 1000000.0 AS mean_after,
-        |       floor(abs(mean_before - mean_after) * 1000000 + 0.5) / 1000000.0 AS delta
-        |FROM m
-        |QUALIFY row_number() OVER (
-        |  ORDER BY abs(mean_before - mean_after) DESC, day ASC) = 1""".stripMargin,
+      s"""WITH ${BucketOps.DailyEventsSql},
+         |h AS (SELECT day, count(*) AS purchases FROM e
+         |      WHERE event_type = 'purchase' GROUP BY 1),
+         |b AS (SELECT spine.day, coalesce(h.purchases, 0) AS purchases
+         |      FROM spine LEFT JOIN h USING (day)),
+         |tot AS (SELECT count(*) AS n, CAST(sum(purchases) AS BIGINT) AS s FROM b),
+         |c AS (SELECT day,
+         |        CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
+         |        CAST(sum(purchases) OVER (ORDER BY day
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
+         |      FROM b),
+         |m AS (SELECT day, rn, n - rn AS n_after,
+         |        CAST(cum AS DOUBLE) / rn AS mean_before,
+         |        CAST(s - cum AS DOUBLE) / (n - rn) AS mean_after
+         |      FROM c CROSS JOIN tot
+         |      WHERE rn >= 2 AND rn <= n - 2)
+         |SELECT day AS change_day, rn AS n_before, n_after,
+         |       floor(mean_before * 1000000 + 0.5) / 1000000.0 AS mean_before,
+         |       floor(mean_after * 1000000 + 0.5) / 1000000.0 AS mean_after,
+         |       floor(abs(mean_before - mean_after) * 1000000 + 0.5) / 1000000.0 AS delta
+         |FROM m
+         |QUALIFY row_number() OVER (
+         |  ORDER BY abs(mean_before - mean_after) DESC, day ASC) = 1""".stripMargin,
     "j160_bucket_correlation" ->
       """WITH d AS (SELECT epoch_us(ts) // 86400000000 AS day,
         |  CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS x,
@@ -1126,35 +1103,22 @@ object AnalyticsOps {
         |       round(term, 6) AS psi_term, ps.psi
         |FROM t2 CROSS JOIN ps ORDER BY band""".stripMargin,
     "j158_incremental_dedup" ->
-      """WITH s AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |h AS (SELECT doc_id, sh, i,
-        |      substr(md5(CAST(i // 4 AS VARCHAR) || ':' || sh), (i % 4) * 8 + 1, 8) AS hv
-        |      FROM s, generate_series(0, 7) t(i)),
-        |m AS (SELECT doc_id, i, min(hv) AS mh FROM h GROUP BY doc_id, i),
-        |bands AS (SELECT doc_id, i // 2 AS band,
-        |          concat_ws('|', min(CASE WHEN i % 2 = 0 THEN mh END),
-        |                         min(CASE WHEN i % 2 = 1 THEN mh END)) AS sig
-        |          FROM m GROUP BY doc_id, i // 2),
-        |cand AS (SELECT DISTINCT least(x.doc_id, y.doc_id) AS d1,
-        |                greatest(x.doc_id, y.doc_id) AS d2
-        |         FROM (SELECT * FROM bands WHERE doc_id % 5 = 0) x
-        |         JOIN bands y
-        |           ON x.band = y.band AND x.sig = y.sig AND x.doc_id != y.doc_id),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |i2 AS (SELECT d1, d2, count(*) AS inter
-        |       FROM cand JOIN s sa ON sa.doc_id = d1
-        |                 JOIN s sb ON sb.doc_id = d2 AND sa.sh = sb.sh
-        |       GROUP BY d1, d2)
-        |SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5)
-        |         / 1000000.0 AS jaccard,
-        |       CASE WHEN d1 % 5 = 0 AND d2 % 5 = 0 THEN 'new_new'
-        |            ELSE 'new_old' END AS pair_class
-        |FROM i2 JOIN n na ON d1 = na.doc_id JOIN n nb ON d2 = nb.doc_id
-        |WHERE floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
+      s"""WITH s AS (${TextOps.ShingleSql}),
+         |${PipelineOps.MinhashSql},
+         |${PipelineOps.MinhashBandsSql},
+         |cand AS (SELECT DISTINCT least(x.doc_id, y.doc_id) AS d1,
+         |                greatest(x.doc_id, y.doc_id) AS d2
+         |         FROM (SELECT * FROM bands WHERE doc_id % 5 = 0) x
+         |         JOIN bands y
+         |           ON x.band = y.band AND x.sig = y.sig AND x.doc_id != y.doc_id),
+         |${PipelineOps.CandInterSql}
+         |SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5)
+         |         / 1000000.0 AS jaccard,
+         |       CASE WHEN d1 % 5 = 0 AND d2 % 5 = 0 THEN 'new_new'
+         |            ELSE 'new_old' END AS pair_class
+         |FROM i2 JOIN n na ON d1 = na.doc_id JOIN n nb ON d2 = nb.doc_id
+         |WHERE floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 >= 0.5
+         |ORDER BY d1, d2""".stripMargin,
     "j159_span_within" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
         |           FROM 'documents.parquet'),
@@ -1223,34 +1187,26 @@ object AnalyticsOps {
         |             * 1000000 + 0.5) / 1000000.0 AS type_share
         |FROM a ORDER BY event_type, hour_utc""".stripMargin,
     "j170_moving_zscore" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS c FROM e GROUP BY 1),
-        |f AS (SELECT s.day, CAST(coalesce(h.c, 0) AS BIGINT) AS cnt
-        |      FROM spine s LEFT JOIN h ON s.day = h.day),
-        |w AS (SELECT day, cnt,
-        |        count(*) OVER win AS n7,
-        |        sum(cnt) OVER win AS s7,
-        |        sum(cnt * cnt) OVER win AS ss7
-        |      FROM f WINDOW win AS (ORDER BY day
-        |        ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-        |z AS (SELECT day, cnt, CAST(s7 AS DOUBLE) / 7.0 AS mean7,
-        |        sqrt((CAST(ss7 AS DOUBLE) -
-        |              CAST(s7 AS DOUBLE) * CAST(s7 AS DOUBLE) / 7.0) / 6.0)
-        |          AS sd7
-        |      FROM w WHERE n7 = 7)
-        |SELECT day, cnt, floor(mean7 * 1000000 + 0.5) / 1000000.0 AS mean7, round(sd7, 6) AS sd7,
-        |       CASE WHEN sd7 > 0
-        |            THEN round((CAST(cnt AS DOUBLE) - mean7) / sd7, 6)
-        |       END AS z,
-        |       CASE WHEN sd7 > 0
-        |            THEN abs((CAST(cnt AS DOUBLE) - mean7) / sd7) > 1.5
-        |            ELSE CAST(cnt AS DOUBLE) <> mean7 END AS anomaly
-        |FROM z ORDER BY day""".stripMargin,
+      s"""WITH $DailyCountsSql,
+         |w AS (SELECT day, cnt,
+         |        count(*) OVER win AS n7,
+         |        sum(cnt) OVER win AS s7,
+         |        sum(cnt * cnt) OVER win AS ss7
+         |      FROM f WINDOW win AS (ORDER BY day
+         |        ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
+         |z AS (SELECT day, cnt, CAST(s7 AS DOUBLE) / 7.0 AS mean7,
+         |        sqrt((CAST(ss7 AS DOUBLE) -
+         |              CAST(s7 AS DOUBLE) * CAST(s7 AS DOUBLE) / 7.0) / 6.0)
+         |          AS sd7
+         |      FROM w WHERE n7 = 7)
+         |SELECT day, cnt, floor(mean7 * 1000000 + 0.5) / 1000000.0 AS mean7, round(sd7, 6) AS sd7,
+         |       CASE WHEN sd7 > 0
+         |            THEN round((CAST(cnt AS DOUBLE) - mean7) / sd7, 6)
+         |       END AS z,
+         |       CASE WHEN sd7 > 0
+         |            THEN abs((CAST(cnt AS DOUBLE) - mean7) / sd7) > 1.5
+         |            ELSE CAST(cnt AS DOUBLE) <> mean7 END AS anomaly
+         |FROM z ORDER BY day""".stripMargin,
     "j171_hll_cardinality" ->
       """WITH e AS (SELECT event_type,
         |             md5(concat('u', CAST(user_id AS VARCHAR))) AS h
@@ -1337,55 +1293,37 @@ object AnalyticsOps {
         |SELECT CAST(2 AS BIGINT), v, t, cooc FROM h2
         |ORDER BY hop, from_t, cooc DESC, to_t ASC""".stripMargin,
     "j178_dow_seasonality" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS c FROM e GROUP BY 1),
-        |f AS (SELECT s.day, CAST(coalesce(h.c, 0) AS BIGINT) AS cnt
-        |      FROM spine s LEFT JOIN h ON s.day = h.day),
-        |dw AS (SELECT (day - DATE '1970-01-01' + 3) % 7 AS dow, cnt FROM f),
-        |g AS (SELECT sum(cnt) AS gt, count(*) AS gn FROM f)
-        |SELECT CAST(dow AS BIGINT) AS dow,
-        |       CAST(count(*) AS BIGINT) AS n_days,
-        |       CAST(sum(cnt) AS BIGINT) AS cnt_total,
-        |       floor(CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |             * 1000000 + 0.5) / 1000000.0 AS mean_cnt,
-        |       floor((CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE) -
-        |             CAST(g.gt AS DOUBLE) / CAST(g.gn AS DOUBLE)) * 1000000 + 0.5) / 1000000.0
-        |         AS dev_from_global
-        |FROM dw CROSS JOIN g GROUP BY dow, g.gt, g.gn
-        |ORDER BY dow""".stripMargin,
+      s"""WITH $DailyCountsSql,
+         |dw AS (SELECT (day - DATE '1970-01-01' + 3) % 7 AS dow, cnt FROM f),
+         |g AS (SELECT sum(cnt) AS gt, count(*) AS gn FROM f)
+         |SELECT CAST(dow AS BIGINT) AS dow,
+         |       CAST(count(*) AS BIGINT) AS n_days,
+         |       CAST(sum(cnt) AS BIGINT) AS cnt_total,
+         |       floor(CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |             * 1000000 + 0.5) / 1000000.0 AS mean_cnt,
+         |       floor((CAST(sum(cnt) AS DOUBLE) / CAST(count(*) AS DOUBLE) -
+         |             CAST(g.gt AS DOUBLE) / CAST(g.gn AS DOUBLE)) * 1000000 + 0.5) / 1000000.0
+         |         AS dev_from_global
+         |FROM dw CROSS JOIN g GROUP BY dow, g.gt, g.gn
+         |ORDER BY dow""".stripMargin,
     "j180_holt_forecast" ->
-      """WITH RECURSIVE e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |             event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS doc_count FROM e
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
-        |      FROM spine LEFT JOIN h USING (day)),
-        |ser AS (SELECT list(CAST(doc_count AS DOUBLE) ORDER BY day) AS xs
-        |        FROM b),
-        |f(i, l, tr) AS (
-        |  SELECT 2, xs[1], xs[2] - xs[1] FROM ser
-        |  UNION ALL
-        |  SELECT i + 1,
-        |    CAST(0.5 AS DOUBLE) * xs[i + 1] +
-        |      CAST(0.5 AS DOUBLE) * (l + tr),
-        |    CAST(0.3 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * xs[i + 1] +
-        |      CAST(0.5 AS DOUBLE) * (l + tr)) - l) +
-        |      CAST(0.7 AS DOUBLE) * tr
-        |  FROM f, ser WHERE i < len(xs)),
-        |st AS (SELECT l, tr FROM f, ser WHERE i = len(xs))
-        |SELECT CAST(t.h AS BIGINT) AS h, floor(st.l * 1000000 + 0.5) / 1000000.0 AS level,
-        |       floor(st.tr * 1000000 + 0.5) / 1000000.0 AS trend,
-        |       floor((st.l + t.h * st.tr) * 1000000 + 0.5) / 1000000.0 AS forecast
-        |FROM st, (SELECT unnest(generate_series(1, 3)) AS h) t
-        |ORDER BY h""".stripMargin)
+      s"""WITH RECURSIVE ${BucketOps.DailySql},
+         |ser AS (SELECT list(CAST(doc_count AS DOUBLE) ORDER BY day) AS xs
+         |        FROM b),
+         |f(i, l, tr) AS (
+         |  SELECT 2, xs[1], xs[2] - xs[1] FROM ser
+         |  UNION ALL
+         |  SELECT i + 1,
+         |    CAST(0.5 AS DOUBLE) * xs[i + 1] +
+         |      CAST(0.5 AS DOUBLE) * (l + tr),
+         |    CAST(0.3 AS DOUBLE) * ((CAST(0.5 AS DOUBLE) * xs[i + 1] +
+         |      CAST(0.5 AS DOUBLE) * (l + tr)) - l) +
+         |      CAST(0.7 AS DOUBLE) * tr
+         |  FROM f, ser WHERE i < len(xs)),
+         |st AS (SELECT l, tr FROM f, ser WHERE i = len(xs))
+         |SELECT CAST(t.h AS BIGINT) AS h, floor(st.l * 1000000 + 0.5) / 1000000.0 AS level,
+         |       floor(st.tr * 1000000 + 0.5) / 1000000.0 AS trend,
+         |       floor((st.l + t.h * st.tr) * 1000000 + 0.5) / 1000000.0 AS forecast
+         |FROM st, (SELECT unnest(generate_series(1, 3)) AS h) t
+         |ORDER BY h""".stripMargin)
 }

@@ -99,6 +99,31 @@ object BucketOps {
         coalesce($"purchases", lit(0L)).as("purchases"))
   }
 
+  /** The oracles' day spine over a CTE `e` with a `day` column: `bnd`
+    * (first and last day) and `spine` (every day between, zero-fill's
+    * left side). */
+  private[ops] val DaySpineSql =
+    """bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
+      |spine AS (SELECT CAST(unnest(generate_series(
+      |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
+      |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd)""".stripMargin
+
+  /** The oracles' events by day: `e` (day, event_type) and its
+    * [[DaySpineSql]]. */
+  private[ops] val DailyEventsSql =
+    s"""e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
+       |           FROM 'events.parquet'),
+       |$DaySpineSql""".stripMargin
+
+  /** The oracles' form of [[dailyFrame]]'s purchase count: [[DailyEventsSql]],
+    * `h` (purchases per day) and `b` (day, doc_count), zero-filled. */
+  private[ops] val DailySql =
+    s"""$DailyEventsSql,
+       |h AS (SELECT day, count(*) AS doc_count FROM e
+       |      WHERE event_type = 'purchase' GROUP BY 1),
+       |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
+       |      FROM spine LEFT JOIN h USING (day))""".stripMargin
+
   /** j76_bucket_script + bucket_selector — ES pipeline aggs over the j58
     * parent date_histogram: `bucket_script` derives each day's purchase
     * share (purchases / total events), then `bucket_selector` keeps only
@@ -704,79 +729,44 @@ object BucketOps {
         |FROM r JOIN c USING (lang) WHERE r.rn <= 3
         |ORDER BY r.lang, r.rn""".stripMargin,
     "j76_bucket_selector" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS total,
-        |             count(*) FILTER (WHERE event_type = 'purchase') AS purchases
-        |      FROM e GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.total, 0) AS total,
-        |             coalesce(h.purchases, 0) AS purchases
-        |      FROM spine LEFT JOIN h USING (day)),
-        |sc AS (SELECT day, total, purchases,
-        |         CASE WHEN total > 0
-        |           THEN floor(CAST(purchases AS DOUBLE) / CAST(total AS DOUBLE) * 1000000 + 0.5) / 1000000.0
-        |           ELSE 0.0 END AS purchase_share
-        |       FROM b)
-        |SELECT day, total, purchases, purchase_share FROM sc
-        |WHERE purchase_share >= 0.2 ORDER BY day""".stripMargin,
+      s"""WITH $DailyEventsSql,
+         |h AS (SELECT day, count(*) AS total,
+         |             count(*) FILTER (WHERE event_type = 'purchase') AS purchases
+         |      FROM e GROUP BY 1),
+         |b AS (SELECT spine.day, coalesce(h.total, 0) AS total,
+         |             coalesce(h.purchases, 0) AS purchases
+         |      FROM spine LEFT JOIN h USING (day)),
+         |sc AS (SELECT day, total, purchases,
+         |         CASE WHEN total > 0
+         |           THEN floor(CAST(purchases AS DOUBLE) / CAST(total AS DOUBLE) * 1000000 + 0.5) / 1000000.0
+         |           ELSE 0.0 END AS purchase_share
+         |       FROM b)
+         |SELECT day, total, purchases, purchase_share FROM sc
+         |WHERE purchase_share >= 0.2 ORDER BY day""".stripMargin,
     "j77_multi_match" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token = 'spark' GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |ts AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS tsc
-        |       FROM sc GROUP BY 1),
-        |base AS (SELECT doc_id,
-        |           CAST(CASE WHEN source = 'src3' THEN 1.5 ELSE 0.0 END AS DOUBLE) AS src_score
-        |         FROM 'documents.parquet'),
-        |j AS (SELECT base.doc_id, coalesce(ts.tsc, 0.0) AS tsc, base.src_score
-        |      FROM base LEFT JOIN ts USING (doc_id))
-        |SELECT doc_id,
-        |       round(greatest(tsc, src_score) + 0.3 * least(tsc, src_score), 6) AS score,
-        |       round(tsc, 6) AS text_score, src_score
-        |FROM j WHERE tsc > 0.0 OR src_score > 0.0
-        |ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
+      s"""WITH ${TextOps.bm25TokensSql("= 'spark'")},
+         |ts AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS tsc
+         |       FROM sc GROUP BY 1),
+         |base AS (SELECT doc_id,
+         |           CAST(CASE WHEN source = 'src3' THEN 1.5 ELSE 0.0 END AS DOUBLE) AS src_score
+         |         FROM 'documents.parquet'),
+         |j AS (SELECT base.doc_id, coalesce(ts.tsc, 0.0) AS tsc, base.src_score
+         |      FROM base LEFT JOIN ts USING (doc_id))
+         |SELECT doc_id,
+         |       round(greatest(tsc, src_score) + 0.3 * least(tsc, src_score), 6) AS score,
+         |       round(tsc, 6) AS text_score, src_score
+         |FROM j WHERE tsc > 0.0 OR src_score > 0.0
+         |ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
     "j78_serial_diff" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS doc_count FROM e
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
-        |      FROM spine LEFT JOIN h USING (day))
-        |SELECT day, doc_count,
-        |       doc_count - lag(doc_count, 7) OVER (ORDER BY day) AS serial_diff
-        |FROM b ORDER BY day""".stripMargin,
+      s"""WITH $DailySql
+         |SELECT day, doc_count,
+         |       doc_count - lag(doc_count, 7) OVER (ORDER BY day) AS serial_diff
+         |FROM b ORDER BY day""".stripMargin,
     "j79_bucket_sort" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS doc_count FROM e
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
-        |      FROM spine LEFT JOIN h USING (day)),
-        |sel AS (SELECT day, doc_count FROM b
-        |        ORDER BY doc_count DESC, day ASC LIMIT 5 OFFSET 2)
-        |SELECT day, doc_count FROM sel ORDER BY day""".stripMargin,
+      s"""WITH $DailySql,
+         |sel AS (SELECT day, doc_count FROM b
+         |        ORDER BY doc_count DESC, day ASC LIMIT 5 OFFSET 2)
+         |SELECT day, doc_count FROM sel ORDER BY day""".stripMargin,
     "j80_filters_agg" ->
       """WITH e AS (SELECT event_type, value,
         |             CAST(round(value * 100, 0) AS BIGINT) AS cents
@@ -838,18 +828,16 @@ object BucketOps {
         |         ((dyy - dy * dy / n) / (n - 1))), 6) AS corr_qp
         |FROM a""".stripMargin,
     "j84_span_near" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS t
-        |           FROM 'documents.parquet'
-        |           WHERE len(string_split(text, ' ')) >= 1),
-        |m AS (SELECT doc_id,
-        |        list_filter(generate_series(1, len(t)),
-        |          i -> t[i] = 'spark'
-        |               AND len(list_filter(list_slice(t, i + 1, i + 4),
-        |                                   x -> x = 'join')) > 0) AS hits
-        |      FROM t)
-        |SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
-        |       CAST(hits[1] AS BIGINT) AS first_pos
-        |FROM m WHERE len(hits) >= 1 ORDER BY doc_id""".stripMargin,
+      s"""WITH ${TextOps.SpanTokensSql},
+         |m AS (SELECT doc_id,
+         |        list_filter(generate_series(1, len(t)),
+         |          i -> t[i] = 'spark'
+         |               AND len(list_filter(list_slice(t, i + 1, i + 4),
+         |                                   x -> x = 'join')) > 0) AS hits
+         |      FROM t)
+         |SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
+         |       CAST(hits[1] AS BIGINT) AS first_pos
+         |FROM m WHERE len(hits) >= 1 ORDER BY doc_id""".stripMargin,
     "j85_wildcard_query" ->
       """SELECT source, count(*) AS doc_count,
         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars

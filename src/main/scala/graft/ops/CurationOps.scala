@@ -471,6 +471,44 @@ object CurationOps {
     * gate actually drops the low-quality tail (a 0 cut keeps everything). */
   val qualityCut = 0.8
 
+  /** The oracles' [[qualityLogit]] as CTEs: `t` (doc_id, toks, n_chars)
+    * and `ql` (doc_id, q). */
+  private[ops] val QualityLogitSql =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS toks, n_chars
+      |      FROM 'documents.parquet'),
+      |ql AS (SELECT doc_id,
+      |         floor((-3.0 + 0.01 * len(toks)
+      |           + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
+      |           + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
+      |           - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
+      |                    / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
+      |           / 1000000.0 AS q
+      |       FROM t)""".stripMargin
+
+  /** The oracles' [[qualityLogit]] features over `t` (toks, n_chars):
+    * the select items `ttr`, `mean_tok_len` and `stop_ratio`. */
+  private[ops] val QualityFeaturesSql =
+    """len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE) AS ttr,
+      |        (n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE) AS mean_tok_len,
+      |        len(list_filter(toks, t -> t IN ('a', 'the')))
+      |          / CAST(len(toks) AS DOUBLE) AS stop_ratio""".stripMargin
+
+  /** The oracles' [[qualityLogit]] `score` beside the Gopher-style rule
+    * pass `gpass`, as two select items over `toks` and `n_chars`. */
+  private[ops] val QualityGopherSql =
+    """floor((-3.0 + 0.01 * CAST(len(toks) AS DOUBLE)
+      |          + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
+      |          + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
+      |          - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
+      |                   / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
+      |          / 1000000.0 AS score,
+      |        (len(toks) BETWEEN 25 AND 90
+      |         AND CAST(n_chars - len(toks) + 1 AS DOUBLE)
+      |             / CAST(len(toks) AS DOUBLE) BETWEEN 4.0 AND 5.0
+      |         AND len(list_filter(toks, x -> x IN ('a', 'the'))) >= 2
+      |         AND CAST(len(list_filter(toks, x -> len(x) <= 2)) AS DOUBLE)
+      |             / CAST(len(toks) AS DOUBLE) <= 0.09) AS gpass""".stripMargin
+
   /** The classifier as a transformer: (doc_id, text, …) ⇒
     * (doc_id, score, keep). */
   def qualityScore(docs: DataFrame): DataFrame =
@@ -544,11 +582,6 @@ object CurationOps {
     "j57_temperature_mix" -> j57, "j65_quality_classifier" -> j65,
     "j280_url_canonical_dedup" -> j280)
 
-  private val NibbleSql =
-    """((strpos('0123456789abcdef', substr(%s, 1, 1)) - 1) * 4096 +
-      | (strpos('0123456789abcdef', substr(%s, 2, 1)) - 1) * 256 +
-      | (strpos('0123456789abcdef', substr(%s, 3, 1)) - 1) * 16 +
-      | (strpos('0123456789abcdef', substr(%s, 4, 1)) - 1))""".stripMargin
 
   val oracle: Map[String, String] = Map(
     "j280_url_canonical_dedup" ->
@@ -584,28 +617,25 @@ object CurationOps {
         |SELECT canon_url, n_variants, doc_id AS kept_doc, n_chars AS kept_chars
         |FROM r WHERE rn = 1 ORDER BY canon_url""".stripMargin,
     "j65_quality_classifier" ->
-      """WITH t AS (SELECT doc_id, n_chars, string_split(text, ' ') AS toks
-        |           FROM 'documents.parquet'),
-        |f AS (SELECT doc_id,
-        |        CAST(len(toks) AS DOUBLE) AS n_toks,
-        |        len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE) AS ttr,
-        |        (n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE) AS mean_tok_len,
-        |        len(list_filter(toks, t -> t IN ('a', 'the')))
-        |          / CAST(len(toks) AS DOUBLE) AS stop_ratio
-        |      FROM t),
-        |sc AS (SELECT doc_id,
-        |         floor((-3.0 + 0.01 * n_toks + 4.0 * ttr
-        |           + 0.5 * mean_tok_len - 6.0 * stop_ratio) * 1000000 + 0.5)
-        |           / 1000000.0 AS score
-        |       FROM f)
-        |SELECT doc_id, score, CAST(score > 0.8 AS INT) AS keep
-        |FROM sc ORDER BY doc_id""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, n_chars, string_split(text, ' ') AS toks
+         |           FROM 'documents.parquet'),
+         |f AS (SELECT doc_id,
+         |        CAST(len(toks) AS DOUBLE) AS n_toks,
+         |        $QualityFeaturesSql
+         |      FROM t),
+         |sc AS (SELECT doc_id,
+         |         floor((-3.0 + 0.01 * n_toks + 4.0 * ttr
+         |           + 0.5 * mean_tok_len - 6.0 * stop_ratio) * 1000000 + 0.5)
+         |           / 1000000.0 AS score
+         |       FROM f)
+         |SELECT doc_id, score, CAST(score > 0.8 AS INT) AS keep
+         |FROM sc ORDER BY doc_id""".stripMargin,
     "j28_domain_mix" -> {
       val h = "md5('mix:' || CAST(d.doc_id AS VARCHAR))"
       s"""WITH c AS (SELECT lang, count(*) AS cnt FROM 'documents.parquet' GROUP BY lang),
          |r AS (SELECT lang, cnt, min(cnt) OVER () / cnt AS rate FROM c),
          |k AS (SELECT d.doc_id, d.lang, d.source, r.rate,
-         |      ${NibbleSql.format(h, h, h, h)} / 65536.0 AS frac
+         |      ${Hashing.duckNibble(h)} / 65536.0 AS frac
          |      FROM 'documents.parquet' d JOIN r USING (lang))
          |SELECT doc_id, lang, source, floor(rate * 1000000 + 0.5) / 1000000.0 AS rate
          |FROM k WHERE frac < rate ORDER BY doc_id""".stripMargin
@@ -664,7 +694,7 @@ object CurationOps {
       s"""WITH k AS (SELECT doc_id, md5('shuf:' || CAST(doc_id AS VARCHAR)) AS skey
          |           FROM 'documents.parquet'),
          |s AS (SELECT doc_id, skey,
-         |        CAST(${NibbleSql.format("skey", "skey", "skey", "skey")} % 8 AS BIGINT) AS shard
+         |        CAST(${Hashing.duckNibble("skey")} % 8 AS BIGINT) AS shard
          |      FROM k)
          |SELECT shard, row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS pos, doc_id
          |FROM s ORDER BY shard, pos""".stripMargin,

@@ -3697,16 +3697,26 @@ object Esql {
        |   THEN 1 ELSE 0 END))) % 2 = 1))""".stripMargin
   }
 
+  /** The j270/j273 oracles' `boxed` CTE: the `geo` events inside the
+    * polygon's bounding box. */
+  private val BoxedSql =
+    """boxed AS (
+      |  SELECT * FROM geo
+      |  WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0)""".stripMargin
+
+  /** The TS-command oracles' events (`e`: user_id, event_type, t, cents)
+    * bucketed by UTC day (`k`). */
+  private val DailyCentsSql =
+    """e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t,
+      |             CAST(round(value * 100, 0) AS BIGINT) AS cents
+      |           FROM 'events.parquet'),
+      |k AS (SELECT *, make_timestamp((epoch_us(t) // 86400000000)
+      |                 * 86400000000) AS day FROM e)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "j273_geo_polygon_holes" ->
-      s"""WITH geo AS (
-         |  SELECT event_type,
-         |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-         |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-         |  FROM 'events.parquet'),
-         |boxed AS (
-         |  SELECT * FROM geo
-         |  WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0),
+      s"""WITH ${GeoOps.GeoEventsSql},
+         |$BoxedSql,
          |q AS (
          |  SELECT event_type, lon, lat,
          |    CAST(round(lon * 1000000) AS BIGINT) AS px,
@@ -3727,14 +3737,8 @@ object Esql {
       val xsL = j270Ring.map(v => (v._1 * 1e6).round).mkString("[", ", ", "]")
       val ysL = j270Ring.map(v => (v._2 * 1e6).round).mkString("[", ", ", "]")
       val n = j270Ring.size
-      s"""WITH geo AS (
-         |  SELECT event_type,
-         |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-         |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-         |  FROM 'events.parquet'),
-         |boxed AS (
-         |  SELECT * FROM geo
-         |  WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0),
+      s"""WITH ${GeoOps.GeoEventsSql},
+         |$BoxedSql,
          |q AS (
          |  SELECT event_type,
          |    CAST(round(lon * 1000000) AS BIGINT) AS px,
@@ -3762,11 +3766,7 @@ object Esql {
       val exmax = j270Ring.map(_._1).max
       val eymin = j270Ring.map(_._2).min
       val eymax = j270Ring.map(_._2).max
-      s"""WITH geo AS (
-         |  SELECT event_type,
-         |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-         |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-         |  FROM 'events.parquet')
+      s"""WITH ${GeoOps.GeoEventsSql}
          |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          |  round(floor((CAST(sum(CAST(round(lon * 1000000) AS BIGINT)) AS DOUBLE)
          |        / 1000000.0 / count(lon)) * 1000000 + 0.5) / 1000000.0, 6) AS cx,
@@ -3781,32 +3781,24 @@ object Esql {
          |FROM geo GROUP BY event_type ORDER BY event_type""".stripMargin
     },
     "j269_esql_st_extent" ->
-      """WITH geo AS (
-        |  SELECT event_type,
-        |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-        |  FROM 'events.parquet')
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  min(lon) AS xmin, max(lon) AS xmax,
-        |  min(lat) AS ymin, max(lat) AS ymax,
-        |  min(lat) FILTER (lat >= 0.0) AS n_ymin
-        |FROM geo GROUP BY event_type ORDER BY event_type""".stripMargin,
+      s"""WITH ${GeoOps.GeoEventsSql}
+         |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+         |  min(lon) AS xmin, max(lon) AS xmax,
+         |  min(lat) AS ymin, max(lat) AS ymax,
+         |  min(lat) FILTER (lat >= 0.0) AS n_ymin
+         |FROM geo GROUP BY event_type ORDER BY event_type""".stripMargin,
     "j266_esql_st_predicates" ->
-      """WITH geo AS (
-        |  SELECT event_type,
-        |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-        |  FROM 'events.parquet'),
-        |rel AS (
-        |  SELECT event_type,
-        |    lon BETWEEN -120.0 AND -60.0 AND lat BETWEEN 10.0 AND 45.0 AS inside
-        |  FROM geo)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_int,
-        |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_within,
-        |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_cont,
-        |  CAST(count(*) FILTER (NOT inside) AS BIGINT) AS n_disj
-        |FROM rel GROUP BY event_type ORDER BY event_type""".stripMargin,
+      s"""WITH ${GeoOps.GeoEventsSql},
+         |rel AS (
+         |  SELECT event_type,
+         |    lon BETWEEN -120.0 AND -60.0 AND lat BETWEEN 10.0 AND 45.0 AS inside
+         |  FROM geo)
+         |SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+         |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_int,
+         |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_within,
+         |  CAST(count(*) FILTER (inside) AS BIGINT) AS n_cont,
+         |  CAST(count(*) FILTER (NOT inside) AS BIGINT) AS n_disj
+         |FROM rel GROUP BY event_type ORDER BY event_type""".stripMargin,
     "j276_esql_geohex" -> {
       val lat = "((event_id * 7919 % 17000) / 100.0 - 85.0)"
       val lon = "((event_id * 104729 % 36000) / 100.0 - 180.0)"
@@ -3831,35 +3823,31 @@ object Esql {
          |FROM geo GROUP BY gh ORDER BY n DESC, gh LIMIT 20""".stripMargin
     },
     "j260_esql_st_distance" ->
-      """WITH geo AS (
-        |  SELECT event_type,
-        |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
-        |  FROM 'events.parquet'),
-        |pts AS (
-        |  SELECT event_type,
-        |    CONCAT('POINT(', CAST(lon AS VARCHAR), ' ', CAST(lat AS VARCHAR), ')') AS p
-        |  FROM geo),
-        |xy AS (
-        |  SELECT event_type,
-        |    CAST(regexp_extract(p, 'POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)', 1) AS DOUBLE) AS px,
-        |    CAST(regexp_extract(p, 'POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)', 2) AS DOUBLE) AS py
-        |  FROM pts),
-        |dist AS (
-        |  SELECT event_type, px, py, round(2 * 6371008.7714 * asin(sqrt(
-        |    sin(radians(py - 40.7)/2) * sin(radians(py - 40.7)/2) +
-        |    cos(radians(40.7)) * cos(radians(py)) *
-        |      sin(radians(px - (-74.0))/2) * sin(radians(px - (-74.0))/2))), 6) AS d
-        |  FROM xy)
-        |SELECT event_type, count(*) AS n, min(d) AS mn_d, max(d) AS mx_d,
-        |  min(px) AS mn_x, max(py) AS mx_y
-        |FROM dist
-        |WHERE py >= 40.7 - 2000000.0 / 111000.0
-        |  AND py <= 40.7 + 2000000.0 / 111000.0
-        |  AND px >= 0.0 - 74.0 - 2000000.0 / (111000.0 * cos(radians(40.7 + 2000000.0 / 111000.0)))
-        |  AND px <= 0.0 - 74.0 + 2000000.0 / (111000.0 * cos(radians(40.7 + 2000000.0 / 111000.0)))
-        |  AND d <= 2000000.0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+      raw"""WITH ${GeoOps.GeoEventsSql},
+           |pts AS (
+           |  SELECT event_type,
+           |    CONCAT('POINT(', CAST(lon AS VARCHAR), ' ', CAST(lat AS VARCHAR), ')') AS p
+           |  FROM geo),
+           |xy AS (
+           |  SELECT event_type,
+           |    CAST(regexp_extract(p, 'POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)', 1) AS DOUBLE) AS px,
+           |    CAST(regexp_extract(p, 'POINT\(([-+0-9.eE]+) ([-+0-9.eE]+)\)', 2) AS DOUBLE) AS py
+           |  FROM pts),
+           |dist AS (
+           |  SELECT event_type, px, py, round(2 * 6371008.7714 * asin(sqrt(
+           |    sin(radians(py - 40.7)/2) * sin(radians(py - 40.7)/2) +
+           |    cos(radians(40.7)) * cos(radians(py)) *
+           |      sin(radians(px - (-74.0))/2) * sin(radians(px - (-74.0))/2))), 6) AS d
+           |  FROM xy)
+           |SELECT event_type, count(*) AS n, min(d) AS mn_d, max(d) AS mx_d,
+           |  min(px) AS mn_x, max(py) AS mx_y
+           |FROM dist
+           |WHERE py >= 40.7 - 2000000.0 / 111000.0
+           |  AND py <= 40.7 + 2000000.0 / 111000.0
+           |  AND px >= 0.0 - 74.0 - 2000000.0 / (111000.0 * cos(radians(40.7 + 2000000.0 / 111000.0)))
+           |  AND px <= 0.0 - 74.0 + 2000000.0 / (111000.0 * cos(radians(40.7 + 2000000.0 / 111000.0)))
+           |  AND d <= 2000000.0
+           |GROUP BY event_type ORDER BY event_type""".stripMargin,
     "j257_esql_sample_agg" ->
       """WITH d AS (SELECT lang, source,
         |             md5(CAST(doc_id AS VARCHAR) || '|sample')
@@ -3952,40 +3940,32 @@ object Esql {
     // the two-level TS rollup: inner per (series dims, day) cell,
     // outer per day — the same epoch-µs BUCKET device as j241
     "j249_esql_ts" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t,
-        |             CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |           FROM 'events.parquet'),
-        |k AS (SELECT *, make_timestamp((epoch_us(t) // 86400000000)
-        |                 * 86400000000) AS day FROM e),
-        |i AS (SELECT user_id, event_type, day,
-        |        max(cents) AS mx, min(cents) AS mn, sum(cents) AS sm,
-        |        count(cents) AS cnt, avg(cents) AS av,
-        |        arg_min(cents, t) AS fv, arg_max(cents, t) AS lv
-        |      FROM k GROUP BY 1, 2, 3)
-        |SELECT day, CAST(max(mx) AS BIGINT) AS mx, CAST(min(mn) AS BIGINT) AS mn,
-        |       CAST(sum(sm) AS BIGINT) AS tot, CAST(sum(cnt) AS BIGINT) AS nobs,
-        |       CAST(count(cnt) AS BIGINT) AS nser, round(max(av), 6) AS mxavg,
-        |       CAST(sum(fv) AS BIGINT) AS sfirst, CAST(sum(lv) AS BIGINT) AS slast
-        |FROM i GROUP BY day ORDER BY day LIMIT 20""".stripMargin,
+      s"""WITH $DailyCentsSql,
+         |i AS (SELECT user_id, event_type, day,
+         |        max(cents) AS mx, min(cents) AS mn, sum(cents) AS sm,
+         |        count(cents) AS cnt, avg(cents) AS av,
+         |        arg_min(cents, t) AS fv, arg_max(cents, t) AS lv
+         |      FROM k GROUP BY 1, 2, 3)
+         |SELECT day, CAST(max(mx) AS BIGINT) AS mx, CAST(min(mn) AS BIGINT) AS mn,
+         |       CAST(sum(sm) AS BIGINT) AS tot, CAST(sum(cnt) AS BIGINT) AS nobs,
+         |       CAST(count(cnt) AS BIGINT) AS nser, round(max(av), 6) AS mxavg,
+         |       CAST(sum(fv) AS BIGINT) AS sfirst, CAST(sum(lv) AS BIGINT) AS slast
+         |FROM i GROUP BY day ORDER BY day LIMIT 20""".stripMargin,
     // RATE mirror: lag in ts order within the cell, positive deltas
     // summed (CASE-sum = the null-skipping when() the compiler emits)
     "j250_esql_ts_rate" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t,
-        |             CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |           FROM 'events.parquet'),
-        |k AS (SELECT *, make_timestamp((epoch_us(t) // 86400000000)
-        |                 * 86400000000) AS day FROM e),
-        |dl AS (SELECT user_id, event_type, day, cents, t,
-        |         cents - lag(cents) OVER (PARTITION BY user_id, event_type, day
-        |                                  ORDER BY t) AS d
-        |       FROM k),
-        |i AS (SELECT user_id, event_type, day,
-        |        sum(CASE WHEN d > 0 THEN d END) / 86400.0 AS r,
-        |        count(cents) AS cnt
-        |      FROM dl GROUP BY 1, 2, 3)
-        |SELECT day, round(max(r), 6) AS mxr, round(min(r), 6) AS mnr,
-        |       CAST(count(r) AS BIGINT) AS nrate, CAST(count(cnt) AS BIGINT) AS nser
-        |FROM i GROUP BY day ORDER BY day LIMIT 20""".stripMargin,
+      s"""WITH $DailyCentsSql,
+         |dl AS (SELECT user_id, event_type, day, cents, t,
+         |         cents - lag(cents) OVER (PARTITION BY user_id, event_type, day
+         |                                  ORDER BY t) AS d
+         |       FROM k),
+         |i AS (SELECT user_id, event_type, day,
+         |        sum(CASE WHEN d > 0 THEN d END) / 86400.0 AS r,
+         |        count(cents) AS cnt
+         |      FROM dl GROUP BY 1, 2, 3)
+         |SELECT day, round(max(r), 6) AS mxr, round(min(r), 6) AS mnr,
+         |       CAST(count(r) AS BIGINT) AS nrate, CAST(count(cnt) AS BIGINT) AS nser
+         |FROM i GROUP BY day ORDER BY day LIMIT 20""".stripMargin,
     // the hyperbolics/HYPOT are the exact exp/sqrt compositions the
     // compiler emits — same formula, same doubles, not merely 6dp-close
     "j246_esql_trig_inverse" ->
@@ -4483,11 +4463,7 @@ object Esql {
         |WHERE source LIKE 'src1%' AND lang IN ('en', 'de')
         |GROUP BY 1, 2 ORDER BY source, lang""".stripMargin,
     "j210_esql_sample" -> {
-      val h = "md5('sample:' || CAST(event_id AS VARCHAR))"
-      val nib = s"""((strpos('0123456789abcdef', substr($h, 1, 1)) - 1) * 4096 +
-                   | (strpos('0123456789abcdef', substr($h, 2, 1)) - 1) * 256 +
-                   | (strpos('0123456789abcdef', substr($h, 3, 1)) - 1) * 16 +
-                   | (strpos('0123456789abcdef', substr($h, 4, 1)) - 1))""".stripMargin
+      val nib = Hashing.duckNibble("md5('sample:' || CAST(event_id AS VARCHAR))")
       s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_sampled,
          |       CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
          |         AS cents_sampled

@@ -24,16 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object FusionOps {
 
-  /** DuckDB mirror of [[Hashing.nibbleInt]] over an inline md5 expression
-    * (strpos-for-instr, same base-16 weights) — the same arithmetic the
-    * Spark side evaluates, so draws are bit-reproducible cross-engine. */
-  private def duckNibble(h: String, nibbles: Int = 4): String =
-    (0 until nibbles).map { i =>
-      val w = 1L << (4 * (nibbles - 1 - i))
-      val term = s"(strpos('0123456789abcdef', substr($h, ${i + 1}, 1)) - 1)"
-      if (w == 1L) term else s"$term * $w"
-    }.mkString("(", " + ", ")")
-
   // ---------- j139 RRF hybrid rank fusion ----------
 
   /** j139_rrf_fusion — the ES 8.x `rrf` retriever: fuse a lexical BM25
@@ -518,68 +508,32 @@ object FusionOps {
     "j147_linear_retriever" -> j147, "j148_source_overlap" -> j148,
     "j149_oov_rate" -> j149, "j150_quality_agreement" -> j150)
 
-  /** The j21 pipeline restated for the j140 oracle (necessarily — SURVEY
-    * §7.5#8), identical to TextOps's j21/j138 CTE block. */
-  private val clusterSql =
-    """s0 AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-      |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-      |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-      |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-      |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-      |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |      GROUP BY 1, 2),
-      |pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
-      |       JOIN n nb ON p.d2 = nb.doc_id
-      |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
-      |e AS (SELECT d1 AS a, d2 AS b FROM pr UNION SELECT d2, d1 FROM pr),
-      |reach(a, b) AS (
-      |  SELECT a, b FROM e
-      |  UNION
-      |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-      |cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-      |       FROM reach GROUP BY a)""".stripMargin
-
   val oracle: Map[String, String] = Map(
     "j139_rrf_fusion" ->
-      """WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |            FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM (
-        |         SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |         FROM 'documents.parquet')
-        |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS bm25
-        |        FROM sc GROUP BY 1),
-        |lexr AS (SELECT doc_id,
-        |           CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS BIGINT) AS lex_rank
-        |         FROM agg QUALIFY lex_rank <= 20),
-        |cos AS (SELECT vec_id AS doc_id,
-        |          round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-        |            / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) AS cos_q
-        |        FROM 'embeddings.parquet'),
-        |semr AS (SELECT doc_id,
-        |           CAST(row_number() OVER (ORDER BY cos_q DESC, doc_id ASC) AS BIGINT) AS sem_rank
-        |         FROM cos QUALIFY sem_rank <= 20)
-        |SELECT doc_id, l.lex_rank, r.sem_rank,
-        |       floor((coalesce(1.0 / (60 + l.lex_rank), 0.0) +
-        |             coalesce(1.0 / (60 + r.sem_rank), 0.0)) * 1000000 + 0.5)
-        |         / 1000000.0 AS rrf_score
-        |FROM lexr l FULL JOIN semr r USING (doc_id)
-        |ORDER BY rrf_score DESC, doc_id ASC LIMIT 10""".stripMargin,
+      s"""WITH ${TextOps.Bm25Sql},
+         |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS bm25
+         |        FROM sc GROUP BY 1),
+         |lexr AS (SELECT doc_id,
+         |           CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS BIGINT) AS lex_rank
+         |         FROM agg QUALIFY lex_rank <= 20),
+         |cos AS (SELECT vec_id AS doc_id,
+         |          ${VectorOps.cosSql} AS cos_q
+         |        FROM 'embeddings.parquet'),
+         |semr AS (SELECT doc_id,
+         |           CAST(row_number() OVER (ORDER BY cos_q DESC, doc_id ASC) AS BIGINT) AS sem_rank
+         |         FROM cos QUALIFY sem_rank <= 20)
+         |SELECT doc_id, l.lex_rank, r.sem_rank,
+         |       floor((coalesce(1.0 / (60 + l.lex_rank), 0.0) +
+         |             coalesce(1.0 / (60 + r.sem_rank), 0.0)) * 1000000 + 0.5)
+         |         / 1000000.0 AS rrf_score
+         |FROM lexr l FULL JOIN semr r USING (doc_id)
+         |ORDER BY rrf_score DESC, doc_id ASC LIMIT 10""".stripMargin,
     "j140_cluster_split" ->
-      s"""WITH RECURSIVE $clusterSql,
+      s"""WITH RECURSIVE ${TextOps.ClusterSql},
          |alldocs AS (SELECT d.doc_id, coalesce(cl.cluster_id, d.doc_id) AS cluster_id
          |            FROM 'documents.parquet' d LEFT JOIN cl ON d.doc_id = cl.doc_id),
          |b AS (SELECT doc_id, cluster_id,
-         |        ${duckNibble("md5('cs:' || CAST(cluster_id AS VARCHAR))")} % 100 AS bucket
+         |        ${Hashing.duckNibble("md5('cs:' || CAST(cluster_id AS VARCHAR))")} % 100 AS bucket
          |      FROM alldocs),
          |sp AS (SELECT CASE WHEN bucket < 80 THEN 'train'
          |                   WHEN bucket < 90 THEN 'validation'
@@ -591,7 +545,7 @@ object FusionOps {
          |FROM pc GROUP BY 1 ORDER BY 1""".stripMargin,
     "j141_weighted_sample" ->
       s"""WITH k AS (SELECT doc_id, n_chars,
-         |             ((${duckNibble("md5('ws:' || CAST(doc_id AS VARCHAR))", 6)} + 0.5) / 16777216.0)
+         |             ((${Hashing.duckNibble("md5('ws:' || CAST(doc_id AS VARCHAR))", 6)} + 0.5) / 16777216.0)
          |               / CAST(n_chars AS DOUBLE) AS key
          |           FROM 'documents.parquet')
          |SELECT doc_id, n_chars AS weight, round(key, 9) AS draw_key
@@ -676,65 +630,41 @@ object FusionOps {
         |       CAST(n_spark - n_kept AS BIGINT) AS n_excluded
         |FROM k WHERE n_kept > 0 ORDER BY doc_id""".stripMargin,
     "j147_linear_retriever" ->
-      """WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |            FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM (
-        |         SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |         FROM 'documents.parquet')
-        |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS bm25
-        |        FROM sc GROUP BY 1),
-        |lexw AS (SELECT doc_id, bm25 FROM agg
-        |         QUALIFY row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) <= 20),
-        |lexs AS (SELECT min(bm25) AS mn, max(bm25) AS mx FROM lexw),
-        |lexn AS (SELECT doc_id,
-        |           round(CASE WHEN mx > mn THEN (bm25 - mn) / (mx - mn)
-        |                      ELSE 1.0 END, 6) AS lex_norm
-        |         FROM lexw CROSS JOIN lexs),
-        |cos AS (SELECT vec_id AS doc_id,
-        |          round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-        |            / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) AS cos_q
-        |        FROM 'embeddings.parquet'),
-        |semw AS (SELECT doc_id, cos_q FROM cos
-        |         QUALIFY row_number() OVER (ORDER BY cos_q DESC, doc_id ASC) <= 20),
-        |sems AS (SELECT min(cos_q) AS mn, max(cos_q) AS mx FROM semw),
-        |semn AS (SELECT doc_id,
-        |           round(CASE WHEN mx > mn THEN (cos_q - mn) / (mx - mn)
-        |                      ELSE 1.0 END, 6) AS sem_norm
-        |         FROM semw CROSS JOIN sems)
-        |SELECT doc_id, l.lex_norm, r.sem_norm,
-        |       round(0.7 * coalesce(l.lex_norm, 0.0) +
-        |             0.3 * coalesce(r.sem_norm, 0.0), 6) AS lin_score
-        |FROM lexn l FULL JOIN semn r USING (doc_id)
-        |ORDER BY lin_score DESC, doc_id ASC LIMIT 10""".stripMargin,
+      s"""WITH ${TextOps.Bm25Sql},
+         |agg AS (SELECT doc_id, round(list_sum(list_sort(list(tscore))), 6) AS bm25
+         |        FROM sc GROUP BY 1),
+         |lexw AS (SELECT doc_id, bm25 FROM agg
+         |         QUALIFY row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) <= 20),
+         |lexs AS (SELECT min(bm25) AS mn, max(bm25) AS mx FROM lexw),
+         |lexn AS (SELECT doc_id,
+         |           round(CASE WHEN mx > mn THEN (bm25 - mn) / (mx - mn)
+         |                      ELSE 1.0 END, 6) AS lex_norm
+         |         FROM lexw CROSS JOIN lexs),
+         |cos AS (SELECT vec_id AS doc_id,
+         |          ${VectorOps.cosSql} AS cos_q
+         |        FROM 'embeddings.parquet'),
+         |semw AS (SELECT doc_id, cos_q FROM cos
+         |         QUALIFY row_number() OVER (ORDER BY cos_q DESC, doc_id ASC) <= 20),
+         |sems AS (SELECT min(cos_q) AS mn, max(cos_q) AS mx FROM semw),
+         |semn AS (SELECT doc_id,
+         |           round(CASE WHEN mx > mn THEN (cos_q - mn) / (mx - mn)
+         |                      ELSE 1.0 END, 6) AS sem_norm
+         |         FROM semw CROSS JOIN sems)
+         |SELECT doc_id, l.lex_norm, r.sem_norm,
+         |       round(0.7 * coalesce(l.lex_norm, 0.0) +
+         |             0.3 * coalesce(r.sem_norm, 0.0), 6) AS lin_score
+         |FROM lexn l FULL JOIN semn r USING (doc_id)
+         |ORDER BY lin_score DESC, doc_id ASC LIMIT 10""".stripMargin,
     "j148_source_overlap" ->
-      """WITH s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pr AS (SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 AS jaccard
-        |       FROM p JOIN n na ON p.d1 = na.doc_id JOIN n nb ON p.d2 = nb.doc_id
-        |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
-        |tagged AS (SELECT least(da.source, db.source) AS src1,
-        |             greatest(da.source, db.source) AS src2, pr.jaccard
-        |           FROM pr JOIN 'documents.parquet' da ON pr.d1 = da.doc_id
-        |                   JOIN 'documents.parquet' db ON pr.d2 = db.doc_id)
-        |SELECT src1, src2, count(*) AS n_pairs,
-        |       floor((CAST(sum(CAST(round(jaccard * 1000000) AS BIGINT)) AS DOUBLE)
-        |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS mean_jaccard
-        |FROM tagged GROUP BY 1, 2 ORDER BY src1, src2""".stripMargin,
+      s"""WITH ${TextOps.PairStatsSql},
+         |pr AS (${TextOps.NearDupJaccardSql}),
+         |tagged AS (SELECT least(da.source, db.source) AS src1,
+         |             greatest(da.source, db.source) AS src2, pr.jaccard
+         |           FROM pr JOIN 'documents.parquet' da ON pr.d1 = da.doc_id
+         |                   JOIN 'documents.parquet' db ON pr.d2 = db.doc_id)
+         |SELECT src1, src2, count(*) AS n_pairs,
+         |       ${Parity.qmeanSql("jaccard")} AS mean_jaccard
+         |FROM tagged GROUP BY 1, 2 ORDER BY src1, src2""".stripMargin,
     "j149_oov_rate" ->
       """WITH lt AS (SELECT lang, token, count(*) AS cnt FROM (
         |              SELECT lang, unnest(string_split(text, ' ')) AS token
@@ -752,33 +682,21 @@ object FusionOps {
         |       CAST(sum(oov::INT) AS BIGINT) AS n_oov_types
         |FROM f GROUP BY 1 ORDER BY lang""".stripMargin,
     "j150_quality_agreement" ->
-      """WITH t AS (SELECT lang, doc_id, n_chars, string_split(text, ' ') AS toks
-        |           FROM 'documents.parquet'),
-        |f AS (SELECT lang, doc_id,
-        |        floor((-3.0 + 0.01 * CAST(len(toks) AS DOUBLE)
-        |          + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
-        |          + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
-        |          - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
-        |                   / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
-        |          / 1000000.0 AS score,
-        |        (len(toks) BETWEEN 25 AND 90
-        |         AND CAST(n_chars - len(toks) + 1 AS DOUBLE)
-        |             / CAST(len(toks) AS DOUBLE) BETWEEN 4.0 AND 5.0
-        |         AND len(list_filter(toks, x -> x IN ('a', 'the'))) >= 2
-        |         AND CAST(len(list_filter(toks, x -> len(x) <= 2)) AS DOUBLE)
-        |             / CAST(len(toks) AS DOUBLE) <= 0.09) AS gpass
-        |      FROM t),
-        |dec AS (SELECT lang, score, gpass,
-        |          CAST(ntile(10) OVER (PARTITION BY lang
-        |            ORDER BY score ASC, doc_id ASC) AS BIGINT) AS decile
-        |        FROM f)
-        |SELECT lang, decile, count(*) AS n_docs,
-        |       CAST(sum(gpass::INT) AS BIGINT) AS n_gopher_pass,
-        |       floor(CAST(sum(gpass::INT) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |             * 1000000 + 0.5) / 1000000.0 AS gopher_pass_rate,
-        |       floor((CAST(sum(CAST(round(score * 1000000) AS BIGINT)) AS DOUBLE)
-        |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS mean_score
-        |FROM dec GROUP BY 1, 2 ORDER BY lang, decile""".stripMargin,
+      s"""WITH t AS (SELECT lang, doc_id, n_chars, string_split(text, ' ') AS toks
+         |           FROM 'documents.parquet'),
+         |f AS (SELECT lang, doc_id,
+         |        ${CurationOps.QualityGopherSql}
+         |      FROM t),
+         |dec AS (SELECT lang, score, gpass,
+         |          CAST(ntile(10) OVER (PARTITION BY lang
+         |            ORDER BY score ASC, doc_id ASC) AS BIGINT) AS decile
+         |        FROM f)
+         |SELECT lang, decile, count(*) AS n_docs,
+         |       CAST(sum(gpass::INT) AS BIGINT) AS n_gopher_pass,
+         |       floor(CAST(sum(gpass::INT) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+         |             * 1000000 + 0.5) / 1000000.0 AS gopher_pass_rate,
+         |       ${Parity.qmeanSql("score")} AS mean_score
+         |FROM dec GROUP BY 1, 2 ORDER BY lang, decile""".stripMargin,
     "j146_interarrival_stats" ->
       """WITH g AS (SELECT user_id,
         |             (epoch_us(ts) - lag(epoch_us(ts)) OVER

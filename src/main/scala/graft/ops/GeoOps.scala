@@ -37,6 +37,15 @@ object GeoOps {
   def synthLat(id: Column): Column = (id * 7919 % 17000) / 100.0 - 85.0
   def synthLon(id: Column): Column = (id * 104729 % 36000) / 100.0 - 180.0
 
+  /** The oracles' `geo` CTE: every event's (event_type, lat, lon) by
+    * [[synthLat]] and [[synthLon]]. */
+  private[ops] val GeoEventsSql =
+    """geo AS (
+      |  SELECT event_type,
+      |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
+      |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+      |  FROM 'events.parquet')""".stripMargin
+
   private def withGeo(df: DataFrame): DataFrame = df
     .withColumn("lat", synthLat(col("event_id")))
     .withColumn("lon", synthLon(col("event_id")))
@@ -56,6 +65,14 @@ object GeoOps {
   private val CLat = 40.7
   private val CLon = -74.0
   private val RadiusM = 2000000.0
+
+  /** The oracles' [[haversineMeters]] from (lat, lon) to the center,
+    * rounded to 6 places. */
+  private val HaversineSql =
+    """round(2 * 6371008.7714 * asin(sqrt(
+      |  sin(radians(lat - 40.7)/2) * sin(radians(lat - 40.7)/2) +
+      |  cos(radians(40.7)) * cos(radians(lat)) *
+      |    sin(radians(lon - (-74.0))/2) * sin(radians(lon - (-74.0))/2))), 6)""".stripMargin
   // Conservative bounding box (ES runs exactly this prefilter from the
   // BKD index before the haversine verify). Δlat uses 111 km/deg —
   // slightly WIDER than the true 111.195 — and Δlon uses the box's
@@ -429,10 +446,7 @@ object GeoOps {
           AND lon BETWEEN -74.0 - 2000000/(111000.0*cos(radians(40.7 + 2000000/111000.0)))
                       AND -74.0 + 2000000/(111000.0*cos(radians(40.7 + 2000000/111000.0)))),
       dist AS (
-        SELECT event_type, round(2 * 6371008.7714 * asin(sqrt(
-          sin(radians(lat - 40.7)/2) * sin(radians(lat - 40.7)/2) +
-          cos(radians(40.7)) * cos(radians(lat)) *
-            sin(radians(lon - (-74.0))/2) * sin(radians(lon - (-74.0))/2))), 6) AS d
+        SELECT event_type, $HaversineSql AS d
         FROM boxed)
       SELECT event_type, count(*) AS n, min(d) AS mn_d, max(d) AS mx_d
       FROM dist WHERE d <= 2000000 GROUP BY event_type ORDER BY event_type""",
@@ -505,18 +519,12 @@ object GeoOps {
           (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
           (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
         FROM 'events.parquet')
-      SELECT event_id, event_type, round(2 * 6371008.7714 * asin(sqrt(
-          sin(radians(lat - 40.7)/2) * sin(radians(lat - 40.7)/2) +
-          cos(radians(40.7)) * cos(radians(lat)) *
-            sin(radians(lon - (-74.0))/2) * sin(radians(lon - (-74.0))/2))), 6) AS dist
+      SELECT event_id, event_type, $HaversineSql AS dist
       FROM geo ORDER BY dist ASC, event_id ASC LIMIT 20""",
     "j267_geo_distance_rings" -> s"""
       WITH geo AS ($geoSql),
       dist AS (
-        SELECT round(2 * 6371008.7714 * asin(sqrt(
-          sin(radians(lat - 40.7)/2) * sin(radians(lat - 40.7)/2) +
-          cos(radians(40.7)) * cos(radians(lat)) *
-            sin(radians(lon - (-74.0))/2) * sin(radians(lon - (-74.0))/2))), 6) AS d
+        SELECT $HaversineSql AS d
         FROM geo)
       SELECT CAST(CASE WHEN d >= 6000000.0 THEN 6000000
                   WHEN d >= 3000000.0 THEN 3000000
@@ -528,9 +536,7 @@ object GeoOps {
     "j268_geo_centroid" -> s"""
       WITH geo AS ($geoSql)
       SELECT event_type, count(*) AS n,
-        floor((CAST(sum(CAST(round(lat * 1000000) AS BIGINT)) AS DOUBLE)
-              / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS centroid_lat,
-        floor((CAST(sum(CAST(round(lon * 1000000) AS BIGINT)) AS DOUBLE)
-              / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS centroid_lon
+        ${Parity.qmeanSql("lat")} AS centroid_lat,
+        ${Parity.qmeanSql("lon")} AS centroid_lon
       FROM geo GROUP BY event_type ORDER BY event_type""")
 }

@@ -14,4 +14,14 @@ private[graft] object Hashing {
       val term = s"(instr('0123456789abcdef', substr($h, ${i + 1}, 1)) - 1)"
       if (w == 1) term else s"$term * $w"
     }.mkString("(", " + ", ")")
+
+  /** DuckDB mirror of [[nibbleInt]] over an inline md5 expression
+    * (strpos-for-instr, same base-16 weights) — the same arithmetic the
+    * Spark side evaluates, so draws are bit-reproducible cross-engine. */
+  def duckNibble(h: String, nibbles: Int = 4): String =
+    (0 until nibbles).map { i =>
+      val w = 1L << (4 * (nibbles - 1 - i))
+      val term = s"(strpos('0123456789abcdef', substr($h, ${i + 1}, 1)) - 1)"
+      if (w == 1L) term else s"$term * $w"
+    }.mkString("(", " + ", ")")
 }

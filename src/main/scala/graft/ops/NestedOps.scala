@@ -240,6 +240,39 @@ object NestedOps {
       .select($"user_id", $"t1", $"t2", $"t3")
   }
 
+  /** The oracles' form of [[seqEarliest]] through `val`: every
+    * view → click → purchase of a user within `spanUs` with no
+    * `untilType` event between its first and last step. */
+  private def eqlSequenceSql(spanUs: Long, untilType: String): String =
+    s"""e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
+       |           FROM 'events.parquet'),
+       |v AS (SELECT user_id, ts_us AS t1 FROM e WHERE event_type = 'view'),
+       |c AS (SELECT user_id, ts_us AS t2 FROM e WHERE event_type = 'click'),
+       |p AS (SELECT user_id, ts_us AS t3 FROM e WHERE event_type = 'purchase'),
+       |err AS (SELECT user_id, ts_us AS te FROM e WHERE event_type = '$untilType'),
+       |tr AS (SELECT v.user_id, t1, t2, t3
+       |       FROM v JOIN c ON v.user_id = c.user_id
+       |         AND t2 > t1 AND t2 < t1 + $spanUs
+       |       JOIN p ON v.user_id = p.user_id
+       |         AND t3 > t2 AND t3 - t1 <= $spanUs),
+       |val AS (SELECT tr.user_id, t1, t2, t3,
+       |          sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
+       |                   THEN 1 ELSE 0 END) AS n_until
+       |        FROM tr LEFT JOIN err ON tr.user_id = err.user_id
+       |        GROUP BY 1, 2, 3, 4
+       |        HAVING sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
+       |                        THEN 1 ELSE 0 END) = 0)""".stripMargin
+
+  /** The j168/j228 oracle: each user's earliest-completing sequence. */
+  private def eqlEarliestSql(spanUs: Long, untilType: String): String =
+    s"""WITH ${eqlSequenceSql(spanUs, untilType)}
+       |SELECT user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us,
+       |       (t3 - t1) // 1000000 AS span_s
+       |FROM val
+       |QUALIFY row_number() OVER (PARTITION BY user_id
+       |  ORDER BY t3 ASC, t1 DESC, t2 ASC) = 1
+       |ORDER BY user_id""".stripMargin
+
   /** j199_eql_sequence_multi — the reset-after-match EQL twin j168's
     * docstring promises: real ES EQL clears its state machine after a
     * match and emits EVERY greedy non-overlapping completion per `by`
@@ -467,6 +500,38 @@ object NestedOps {
   private[graft] def hourlyCents(df: DataFrame): DataFrame =
     df.select(col("event_type"), expr("ts_us div 3600000000").as("hour"),
       expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
+
+  /** The j186/j262 oracle: [[hourlyRollup]] composed to days beside the
+    * same day aggregates from raw events, and `flag` whether they agree. */
+  private def rollupVsRawSql(flag: String): String =
+    s"""WITH e AS (SELECT event_type,
+       |             epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour,
+       |             CAST(round(value * 100, 0) AS BIGINT) AS cents
+       |           FROM 'events.parquet'),
+       |rollup AS (SELECT event_type, hour, count(*) AS n, sum(cents) AS sc,
+       |             min(cents) AS mn, max(cents) AS mx
+       |           FROM e GROUP BY 1, 2),
+       |served AS (SELECT event_type, hour // 24 AS day,
+       |             CAST(sum(n) AS BIGINT) AS doc_count,
+       |             CAST(sum(sc) AS BIGINT) AS value_cents,
+       |             CAST(min(mn) AS BIGINT) AS min_cents,
+       |             CAST(max(mx) AS BIGINT) AS max_cents,
+       |             CAST(count(*) AS BIGINT) AS n_hour_buckets
+       |           FROM rollup GROUP BY 1, 2),
+       |raw AS (SELECT event_type, hour // 24 AS day,
+       |          CAST(count(*) AS BIGINT) AS rn,
+       |          CAST(sum(cents) AS BIGINT) AS rsc,
+       |          CAST(min(cents) AS BIGINT) AS rmn,
+       |          CAST(max(cents) AS BIGINT) AS rmx
+       |        FROM e GROUP BY 1, 2)
+       |SELECT s.event_type, s.day, s.doc_count, s.value_cents,
+       |       s.min_cents, s.max_cents, s.n_hour_buckets,
+       |       (s.doc_count = r.rn AND s.value_cents = r.rsc AND
+       |        s.min_cents = r.rmn AND s.max_cents = r.rmx)
+       |         AS $flag
+       |FROM served s JOIN raw r
+       |  ON s.event_type = r.event_type AND s.day = r.day
+       |ORDER BY s.event_type, s.day""".stripMargin
 
   /** Hourly rollup rows: the composable aggregate set (count/sum/min/
     * max — the reason rollup stores keep THOSE and not medians). */
@@ -901,89 +966,26 @@ object NestedOps {
         |ORDER BY merged_revenue_cents DESC, mg.l_suppkey ASC
         |LIMIT 5""".stripMargin,
     "j168_eql_sequence" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-        |           FROM 'events.parquet'),
-        |v AS (SELECT user_id, ts_us AS t1 FROM e WHERE event_type = 'view'),
-        |c AS (SELECT user_id, ts_us AS t2 FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts_us AS t3 FROM e WHERE event_type = 'purchase'),
-        |err AS (SELECT user_id, ts_us AS te FROM e WHERE event_type = 'error'),
-        |tr AS (SELECT v.user_id, t1, t2, t3
-        |       FROM v JOIN c ON v.user_id = c.user_id
-        |         AND t2 > t1 AND t2 < t1 + 21600000000
-        |       JOIN p ON v.user_id = p.user_id
-        |         AND t3 > t2 AND t3 - t1 <= 21600000000),
-        |val AS (SELECT tr.user_id, t1, t2, t3,
-        |          sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                   THEN 1 ELSE 0 END) AS n_until
-        |        FROM tr LEFT JOIN err ON tr.user_id = err.user_id
-        |        GROUP BY 1, 2, 3, 4
-        |        HAVING sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                        THEN 1 ELSE 0 END) = 0)
-        |SELECT user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us,
-        |       (t3 - t1) // 1000000 AS span_s
-        |FROM val
-        |QUALIFY row_number() OVER (PARTITION BY user_id
-        |  ORDER BY t3 ASC, t1 DESC, t2 ASC) = 1
-        |ORDER BY user_id""".stripMargin,
+      eqlEarliestSql(21600000000L, "error"),
     // j168's pick-one SQL with the two rule knobs re-bound: 12h maxspan,
     // signup terminator — the parameters, not the shape, differ
     "j228_eql_maxspan_until" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-        |           FROM 'events.parquet'),
-        |v AS (SELECT user_id, ts_us AS t1 FROM e WHERE event_type = 'view'),
-        |c AS (SELECT user_id, ts_us AS t2 FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts_us AS t3 FROM e WHERE event_type = 'purchase'),
-        |err AS (SELECT user_id, ts_us AS te FROM e WHERE event_type = 'signup'),
-        |tr AS (SELECT v.user_id, t1, t2, t3
-        |       FROM v JOIN c ON v.user_id = c.user_id
-        |         AND t2 > t1 AND t2 < t1 + 43200000000
-        |       JOIN p ON v.user_id = p.user_id
-        |         AND t3 > t2 AND t3 - t1 <= 43200000000),
-        |val AS (SELECT tr.user_id, t1, t2, t3,
-        |          sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                   THEN 1 ELSE 0 END) AS n_until
-        |        FROM tr LEFT JOIN err ON tr.user_id = err.user_id
-        |        GROUP BY 1, 2, 3, 4
-        |        HAVING sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                        THEN 1 ELSE 0 END) = 0)
-        |SELECT user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us,
-        |       (t3 - t1) // 1000000 AS span_s
-        |FROM val
-        |QUALIFY row_number() OVER (PARTITION BY user_id
-        |  ORDER BY t3 ASC, t1 DESC, t2 ASC) = 1
-        |ORDER BY user_id""".stripMargin,
+      eqlEarliestSql(43200000000L, "signup"),
     // j228's pick-one SQL with the pipe tail mirrored as two QUALIFY/
     // LIMIT layers: unique = keep-one per span_h on (t3, user_id), head
     // = the 5 earliest completions of the survivors
     "j240_eql_pipes" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-        |           FROM 'events.parquet'),
-        |v AS (SELECT user_id, ts_us AS t1 FROM e WHERE event_type = 'view'),
-        |c AS (SELECT user_id, ts_us AS t2 FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts_us AS t3 FROM e WHERE event_type = 'purchase'),
-        |err AS (SELECT user_id, ts_us AS te FROM e WHERE event_type = 'signup'),
-        |tr AS (SELECT v.user_id, t1, t2, t3
-        |       FROM v JOIN c ON v.user_id = c.user_id
-        |         AND t2 > t1 AND t2 < t1 + 43200000000
-        |       JOIN p ON v.user_id = p.user_id
-        |         AND t3 > t2 AND t3 - t1 <= 43200000000),
-        |val AS (SELECT tr.user_id, t1, t2, t3,
-        |          sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                   THEN 1 ELSE 0 END) AS n_until
-        |        FROM tr LEFT JOIN err ON tr.user_id = err.user_id
-        |        GROUP BY 1, 2, 3, 4
-        |        HAVING sum(CASE WHEN te IS NOT NULL AND te > t1 AND te < t3
-        |                        THEN 1 ELSE 0 END) = 0),
-        |seq AS (SELECT user_id, t1, t2, t3, (t3 - t1) // 3600000000 AS span_h
-        |        FROM val
-        |        QUALIFY row_number() OVER (PARTITION BY user_id
-        |          ORDER BY t3 ASC, t1 DESC, t2 ASC) = 1),
-        |uniq AS (SELECT * FROM seq
-        |         QUALIFY row_number() OVER (PARTITION BY span_h
-        |           ORDER BY t3 ASC, user_id ASC) = 1),
-        |hd AS (SELECT * FROM uniq ORDER BY t3 ASC, user_id ASC LIMIT 5)
-        |SELECT user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us, span_h
-        |FROM hd ORDER BY user_id""".stripMargin,
+      s"""WITH ${eqlSequenceSql(43200000000L, "signup")},
+         |seq AS (SELECT user_id, t1, t2, t3, (t3 - t1) // 3600000000 AS span_h
+         |        FROM val
+         |        QUALIFY row_number() OVER (PARTITION BY user_id
+         |          ORDER BY t3 ASC, t1 DESC, t2 ASC) = 1),
+         |uniq AS (SELECT * FROM seq
+         |         QUALIFY row_number() OVER (PARTITION BY span_h
+         |           ORDER BY t3 ASC, user_id ASC) = 1),
+         |hd AS (SELECT * FROM uniq ORDER BY t3 ASC, user_id ASC LIMIT 5)
+         |SELECT user_id, t1 AS t1_us, t2 AS t2_us, t3 AS t3_us, span_h
+         |FROM hd ORDER BY user_id""".stripMargin,
     // the greedy reset-after-match fixpoint as a recursive CTE: the
     // anchor is j168's pick-one verbatim; each recursion step re-runs it
     // over the matched user's events strictly after the previous t3
@@ -1073,66 +1075,12 @@ object NestedOps {
         |         AS first_pos
         |FROM k WHERE len(pu) > 0 ORDER BY doc_id""".stripMargin,
     "j186_rollup" ->
-      """WITH e AS (SELECT event_type,
-        |             epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour,
-        |             CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |           FROM 'events.parquet'),
-        |rollup AS (SELECT event_type, hour, count(*) AS n, sum(cents) AS sc,
-        |             min(cents) AS mn, max(cents) AS mx
-        |           FROM e GROUP BY 1, 2),
-        |served AS (SELECT event_type, hour // 24 AS day,
-        |             CAST(sum(n) AS BIGINT) AS doc_count,
-        |             CAST(sum(sc) AS BIGINT) AS value_cents,
-        |             CAST(min(mn) AS BIGINT) AS min_cents,
-        |             CAST(max(mx) AS BIGINT) AS max_cents,
-        |             CAST(count(*) AS BIGINT) AS n_hour_buckets
-        |           FROM rollup GROUP BY 1, 2),
-        |raw AS (SELECT event_type, hour // 24 AS day,
-        |          CAST(count(*) AS BIGINT) AS rn,
-        |          CAST(sum(cents) AS BIGINT) AS rsc,
-        |          CAST(min(cents) AS BIGINT) AS rmn,
-        |          CAST(max(cents) AS BIGINT) AS rmx
-        |        FROM e GROUP BY 1, 2)
-        |SELECT s.event_type, s.day, s.doc_count, s.value_cents,
-        |       s.min_cents, s.max_cents, s.n_hour_buckets,
-        |       (s.doc_count = r.rn AND s.value_cents = r.rsc AND
-        |        s.min_cents = r.rmn AND s.max_cents = r.rmx)
-        |         AS rollup_vs_raw_ok
-        |FROM served s JOIN raw r
-        |  ON s.event_type = r.event_type AND s.day = r.day
-        |ORDER BY s.event_type, s.day""".stripMargin,
+      rollupVsRawSql("rollup_vs_raw_ok"),
     // the stored rollup composes losslessly across generations/pages,
     // so the oracle is j186's day-compose from raw — the flag column is
     // structurally true exactly like j186's (the audit IS the query)
     "j262_rollup_stored" ->
-      """WITH e AS (SELECT event_type,
-        |             epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000 AS hour,
-        |             CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |           FROM 'events.parquet'),
-        |rollup AS (SELECT event_type, hour, count(*) AS n, sum(cents) AS sc,
-        |             min(cents) AS mn, max(cents) AS mx
-        |           FROM e GROUP BY 1, 2),
-        |served AS (SELECT event_type, hour // 24 AS day,
-        |             CAST(sum(n) AS BIGINT) AS doc_count,
-        |             CAST(sum(sc) AS BIGINT) AS value_cents,
-        |             CAST(min(mn) AS BIGINT) AS min_cents,
-        |             CAST(max(mx) AS BIGINT) AS max_cents,
-        |             CAST(count(*) AS BIGINT) AS n_hour_buckets
-        |           FROM rollup GROUP BY 1, 2),
-        |raw AS (SELECT event_type, hour // 24 AS day,
-        |          CAST(count(*) AS BIGINT) AS rn,
-        |          CAST(sum(cents) AS BIGINT) AS rsc,
-        |          CAST(min(cents) AS BIGINT) AS rmn,
-        |          CAST(max(cents) AS BIGINT) AS rmx
-        |        FROM e GROUP BY 1, 2)
-        |SELECT s.event_type, s.day, s.doc_count, s.value_cents,
-        |       s.min_cents, s.max_cents, s.n_hour_buckets,
-        |       (s.doc_count = r.rn AND s.value_cents = r.rsc AND
-        |        s.min_cents = r.rmn AND s.max_cents = r.rmx)
-        |         AS stored_vs_raw_ok
-        |FROM served s JOIN raw r
-        |  ON s.event_type = r.event_type AND s.day = r.day
-        |ORDER BY s.event_type, s.day""".stripMargin,
+      rollupVsRawSql("stored_vs_raw_ok"),
     "j187_terms_partition" ->
       """SELECT CAST(2 AS BIGINT) AS partition, l_suppkey,
         |       CAST(count(*) AS BIGINT) AS doc_count,
@@ -1142,44 +1090,38 @@ object NestedOps {
         |WHERE l_suppkey % 4 = 2
         |GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin,
     "j189_interpolate" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |             event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-        |             count(*) AS c
-        |      FROM 'events.parquet'
-        |      WHERE event_type = 'purchase'
-        |        AND user_id = (SELECT min(user_id) FROM 'events.parquet')
-        |      GROUP BY 1),
-        |f AS (SELECT s.day, CAST(coalesce(h.c, 0) AS BIGINT) AS purchases,
-        |        CAST(s.day - DATE '1970-01-01' AS BIGINT) AS di
-        |      FROM spine s LEFT JOIN h ON s.day = h.day),
-        |nz AS (SELECT di AS adi, purchases AS av FROM f WHERE purchases > 0),
-        |prev AS (SELECT f.day, f.di, f.purchases,
-        |           max(nz.adi) AS pi, max_by(nz.av, nz.adi) AS pv
-        |         FROM f LEFT JOIN nz ON nz.adi < f.di GROUP BY 1, 2, 3),
-        |bth AS (SELECT p.day, p.di, p.purchases, p.pi, p.pv,
-        |          min(nz.adi) AS ni, min_by(nz.av, nz.adi) AS nv
-        |        FROM prev p LEFT JOIN nz ON nz.adi > p.di
-        |        GROUP BY 1, 2, 3, 4, 5)
-        |SELECT day, purchases,
-        |       floor((CASE
-        |         WHEN purchases > 0 THEN CAST(purchases AS DOUBLE)
-        |         WHEN pi IS NOT NULL AND ni IS NOT NULL THEN
-        |           CAST(pv AS DOUBLE) + CAST(nv - pv AS DOUBLE) *
-        |             CAST(di - pi AS DOUBLE) / CAST(ni - pi AS DOUBLE)
-        |         WHEN pi IS NOT NULL THEN CAST(pv AS DOUBLE)
-        |         WHEN ni IS NOT NULL THEN CAST(nv AS DOUBLE)
-        |         ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0 AS filled,
-        |       CASE WHEN purchases > 0 THEN 'exact'
-        |            WHEN pi IS NOT NULL AND ni IS NOT NULL THEN 'interpolated'
-        |            WHEN pi IS NOT NULL OR ni IS NOT NULL THEN 'held'
-        |            ELSE 'zero' END AS fill_kind
-        |FROM bth ORDER BY day""".stripMargin,
+      s"""WITH ${BucketOps.DailyEventsSql},
+         |h AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
+         |             count(*) AS c
+         |      FROM 'events.parquet'
+         |      WHERE event_type = 'purchase'
+         |        AND user_id = (SELECT min(user_id) FROM 'events.parquet')
+         |      GROUP BY 1),
+         |f AS (SELECT s.day, CAST(coalesce(h.c, 0) AS BIGINT) AS purchases,
+         |        CAST(s.day - DATE '1970-01-01' AS BIGINT) AS di
+         |      FROM spine s LEFT JOIN h ON s.day = h.day),
+         |nz AS (SELECT di AS adi, purchases AS av FROM f WHERE purchases > 0),
+         |prev AS (SELECT f.day, f.di, f.purchases,
+         |           max(nz.adi) AS pi, max_by(nz.av, nz.adi) AS pv
+         |         FROM f LEFT JOIN nz ON nz.adi < f.di GROUP BY 1, 2, 3),
+         |bth AS (SELECT p.day, p.di, p.purchases, p.pi, p.pv,
+         |          min(nz.adi) AS ni, min_by(nz.av, nz.adi) AS nv
+         |        FROM prev p LEFT JOIN nz ON nz.adi > p.di
+         |        GROUP BY 1, 2, 3, 4, 5)
+         |SELECT day, purchases,
+         |       floor((CASE
+         |         WHEN purchases > 0 THEN CAST(purchases AS DOUBLE)
+         |         WHEN pi IS NOT NULL AND ni IS NOT NULL THEN
+         |           CAST(pv AS DOUBLE) + CAST(nv - pv AS DOUBLE) *
+         |             CAST(di - pi AS DOUBLE) / CAST(ni - pi AS DOUBLE)
+         |         WHEN pi IS NOT NULL THEN CAST(pv AS DOUBLE)
+         |         WHEN ni IS NOT NULL THEN CAST(nv AS DOUBLE)
+         |         ELSE 0.0 END) * 1000000 + 0.5) / 1000000.0 AS filled,
+         |       CASE WHEN purchases > 0 THEN 'exact'
+         |            WHEN pi IS NOT NULL AND ni IS NOT NULL THEN 'interpolated'
+         |            WHEN pi IS NOT NULL OR ni IS NOT NULL THEN 'held'
+         |            ELSE 'zero' END AS fill_kind
+         |FROM bth ORDER BY day""".stripMargin,
     "j190_cdc_chunks" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
         |           FROM 'documents.parquet'
@@ -1242,28 +1184,18 @@ object NestedOps {
         |       env.n_reps
         |FROM env CROSS JOIN f""".stripMargin,
     "j193_jaccard_sweep" ->
-      """WITH s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0
-        |      QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |j AS (SELECT d1, d2, inter / (na.ns + nb.ns - inter) AS jac
-        |      FROM p JOIN n na ON p.d1 = na.doc_id
-        |      JOIN n nb ON p.d2 = nb.doc_id)
-        |SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-        |       CAST(count(*) FILTER (WHERE jac >= 0.3) AS BIGINT) AS ge_030,
-        |       CAST(count(*) FILTER (WHERE jac >= 0.5) AS BIGINT) AS ge_050,
-        |       CAST(count(*) FILTER (WHERE jac >= 0.7) AS BIGINT) AS ge_070,
-        |       CAST(count(*) FILTER (WHERE jac >= 0.9) AS BIGINT) AS ge_090,
-        |       CAST(count(DISTINCT d1) FILTER (WHERE jac >= 0.5) AS BIGINT)
-        |         AS d1_at_050,
-        |       CAST(count(DISTINCT d2) FILTER (WHERE jac >= 0.5) AS BIGINT)
-        |         AS d2_at_050
-        |FROM j""".stripMargin)
+      s"""WITH ${TextOps.PairStatsSql},
+         |j AS (SELECT d1, d2, inter / (na.ns + nb.ns - inter) AS jac
+         |      FROM p JOIN n na ON p.d1 = na.doc_id
+         |      JOIN n nb ON p.d2 = nb.doc_id)
+         |SELECT CAST(count(*) AS BIGINT) AS n_candidates,
+         |       CAST(count(*) FILTER (WHERE jac >= 0.3) AS BIGINT) AS ge_030,
+         |       CAST(count(*) FILTER (WHERE jac >= 0.5) AS BIGINT) AS ge_050,
+         |       CAST(count(*) FILTER (WHERE jac >= 0.7) AS BIGINT) AS ge_070,
+         |       CAST(count(*) FILTER (WHERE jac >= 0.9) AS BIGINT) AS ge_090,
+         |       CAST(count(DISTINCT d1) FILTER (WHERE jac >= 0.5) AS BIGINT)
+         |         AS d1_at_050,
+         |       CAST(count(DISTINCT d2) FILTER (WHERE jac >= 0.5) AS BIGINT)
+         |         AS d2_at_050
+         |FROM j""".stripMargin)
 }

@@ -83,4 +83,10 @@ object Parity {
     * contract.) DuckDB mirror: floor(x * 1000000 + 0.5) / 1000000.0 */
   def round6(c: Column): Column =
     floor(c * lit(1000000.0) + lit(0.5)).cast("double") / lit(1000000.0)
+
+  /** The DuckDB oracles' [[round6]] of the [[qsum]] mean of `x` over a
+    * group. */
+  private[ops] def qmeanSql(x: String): String =
+    s"""floor((CAST(sum(CAST(round($x * 1000000) AS BIGINT)) AS DOUBLE)
+       |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0""".stripMargin
 }

@@ -45,12 +45,6 @@ object PipelineOps {
       .withColumn("shh", xxhash64($"sh"))
   }
 
-  private val shingleSql =
-    """SELECT doc_id, unnest(list_distinct(list_transform(
-      |    generate_series(1, len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-      |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3""".stripMargin
-
   /** DuckDB form of the j13 SimHash fingerprint query (no final ORDER BY —
     * also embedded as a CTE by the j27 banded Hamming join). */
   private lazy val simhashFpSql =
@@ -71,7 +65,16 @@ object PipelineOps {
     * 8-hash/4×2 banding, and the candidate/exact-Jaccard joins cannot
     * drift between the sketch and the audit of that same sketch. */
   private[graft] case class MinhashFrames(sh: DataFrame, minh: DataFrame,
-      cand: DataFrame, exact: DataFrame)
+      bands: DataFrame, exact: DataFrame)
+
+  /** j12's 4×2 banding of the minhashes m0..m7: an array of (band, sig)
+    * structs, sig = the band's two minhashes joined by '|'. */
+  private[graft] val BandArray =
+    """array(
+      |  named_struct('band', 0, 'sig', concat(m0, '|', m1)),
+      |  named_struct('band', 1, 'sig', concat(m2, '|', m3)),
+      |  named_struct('band', 2, 'sig', concat(m4, '|', m5)),
+      |  named_struct('band', 3, 'sig', concat(m6, '|', m7)))""".stripMargin
 
   private[graft] def minhashFrames(s: SparkSession, d: String): MinhashFrames = {
     // reused by hashing, sizes, and the verify join — explode once
@@ -95,12 +98,7 @@ object PipelineOps {
       min(substring(md5(concat(lit(s"$salt:"), $"sh")), piece * 8 + 1, 8)).as(s"m$i")
     }
     val minh = sh.groupBy($"doc_id").agg(minCols.head, minCols.tail: _*)
-    val bands = minh.select($"doc_id", explode(expr(
-      """array(
-        |  named_struct('band', 0, 'sig', concat(m0, '|', m1)),
-        |  named_struct('band', 1, 'sig', concat(m2, '|', m3)),
-        |  named_struct('band', 2, 'sig', concat(m4, '|', m5)),
-        |  named_struct('band', 3, 'sig', concat(m6, '|', m7)))""".stripMargin)).as("b"))
+    val bands = minh.select($"doc_id", explode(expr(BandArray)).as("b"))
       .select($"doc_id", $"b.band".as("band"), $"b.sig".as("sig"))
     // SHUFFLE_HASH: per-partition hash tables beat sort-merge's two full
     // sorts of the band relation (the TextOps pair-join lesson; build side
@@ -117,17 +115,26 @@ object PipelineOps {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
+    MinhashFrames(sh, minh, bands, exactJaccard(sh, cand))
+  }
+
+  /** Exact shingle Jaccard of candidate pairs `cand` (d1, d2) over the
+    * hashed shingle relation `sh` (doc_id, shh): inter, n1, n2 and the
+    * unrounded jac — the verify leg of every MinHash candidate set. */
+  private[graft] def exactJaccard(sh: DataFrame, cand: DataFrame): DataFrame = {
+    val s = sh.sparkSession
+    import s.implicits._
     val ns = sh.groupBy($"doc_id").agg(count(lit(1)).as("ns"))
     // skew note: the verify join fans out by doc_id (shingles-per-doc,
     // bounded by document length), not by shingle frequency — a hot
     // shingle can NOT skew this stage. Hot shingles only matter in the
-    // band-signature join above, where a signature is 2 concatenated
+    // band-signature join that built `cand`, where a signature is 2 concatenated
     // minhashes (collision = near-identical sets, which IS the match
     // condition). Measured bound on the fixture corpus: max shingle
     // df = 25 over 27k distinct shingles at sf0.1; the raw-shingle
     // self-join path (TextOps.nearDupPairs) carries the df-cap for the
     // 100 TB case.
-    val exact = cand
+    cand
       .join(sh.select($"doc_id".as("d1"), $"shh".as("sh1")), "d1")
       .join(sh.select($"doc_id".as("d2"), $"shh".as("sh2")), "d2")
       .filter($"sh1" === $"sh2")
@@ -135,8 +142,43 @@ object PipelineOps {
       .join(ns.select($"doc_id".as("d1"), $"ns".as("n1")), "d1")
       .join(ns.select($"doc_id".as("d2"), $"ns".as("n2")), "d2")
       .withColumn("jac", $"inter" / ($"n1" + $"n2" - $"inter"))
-    MinhashFrames(sh, minh, cand, exact)
   }
+
+  /** The oracles' form of [[minhashFramesFrom]] over a shingle CTE `s`
+    * (doc_id, sh): `h` (the 8 salted md5 slices per shingle) and `m`
+    * (each slice's per-doc minimum). */
+  private[ops] val MinhashSql =
+    """h AS (SELECT doc_id, sh, i,
+      |      substr(md5(CAST(i // 4 AS VARCHAR) || ':' || sh), (i % 4) * 8 + 1, 8) AS hv
+      |      FROM s, generate_series(0, 7) t(i)),
+      |m AS (SELECT doc_id, i, min(hv) AS mh FROM h GROUP BY doc_id, i)""".stripMargin
+
+  /** The oracles' 4×2 LSH `bands` over [[MinhashSql]]'s `m`. */
+  private[ops] val MinhashBandsSql =
+    """bands AS (SELECT doc_id, i // 2 AS band,
+      |          concat_ws('|', min(CASE WHEN i % 2 = 0 THEN mh END),
+      |                         min(CASE WHEN i % 2 = 1 THEN mh END)) AS sig
+      |          FROM m GROUP BY doc_id, i // 2)""".stripMargin
+
+  /** The oracles' exact-Jaccard verify of candidate pairs `cand` (d1, d2)
+    * over `s`: `n` (shingles per doc) and `i2` (shared shingles per pair). */
+  private[ops] val CandInterSql =
+    """n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
+      |i2 AS (SELECT d1, d2, count(*) AS inter
+      |       FROM cand JOIN s sa ON sa.doc_id = d1
+      |                 JOIN s sb ON sb.doc_id = d2 AND sa.sh = sb.sh
+      |       GROUP BY d1, d2)""".stripMargin
+
+  /** The j12/j111 oracles' candidate pipeline: shingles `s`, the MinHash
+    * `bands`, `cand` (pairs sharing a band) and their [[CandInterSql]]. */
+  private val MinhashPairsSql =
+    s"""s AS (${TextOps.ShingleSql}),
+       |$MinhashSql,
+       |$MinhashBandsSql,
+       |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
+       |         FROM bands x JOIN bands y
+       |           ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id),
+       |$CandInterSql""".stripMargin
 
   /** j12_minhash_lsh — MinHash (8 string-min hashes) banded 4×2; candidate
     * pairs from band collisions, then exact Jaccard verification ≥ 0.5. */
@@ -208,6 +250,17 @@ object PipelineOps {
   }
 
   // ---------- j14 embedding near-dup ----------
+
+  /** The oracles' embeddings as double vectors: `e` (vec_id, v). */
+  private[ops] val EmbeddingVecSql =
+    """e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |      FROM 'embeddings.parquet')""".stripMargin
+
+  /** The oracles' cosine of two `e` rows `a` and `b` (j14/j31). */
+  private val PairCosSql =
+    """list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i])) /
+      |  (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
+      |   sqrt(list_sum(list_transform(b.v, x -> x * x))))""".stripMargin
 
   /** j14_embed_neardup — cosine ≥ 0.35 pairs, label-blocked (IVF-style:
     * the coarse cell doubles as the candidate block, so the pair join is
@@ -321,6 +374,26 @@ object PipelineOps {
       .join(broadcast(lcnt.select($"lang".as("cand_lang"))), Seq("cand_lang"))
       .select($"doc_id", $"cand_lang", $"score")
   }
+
+  /** The oracles' form of [[langScored]]: `scored` (doc_id, cand_lang,
+    * score), each document's add-one-smoothed log-likelihood under every
+    * corpus language's token profile. */
+  private val LangScoredSql =
+    """tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
+      |             FROM 'documents.parquet'),
+      |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
+      |ltf AS (SELECT lang AS cand_lang, token, count(*) AS cnt_lt FROM tok GROUP BY 1, 2),
+      |lcnt AS (SELECT lang AS cand_lang, count(*) AS cnt_l FROM tok GROUP BY 1),
+      |vocab AS (SELECT count(DISTINCT token) AS v FROM tok),
+      |langs AS (SELECT DISTINCT lang AS cand_lang FROM 'documents.parquet'),
+      |scored AS (
+      |  SELECT tf.doc_id, langs.cand_lang,
+      |         round(sum(tf.tf * ln((coalesce(ltf.cnt_lt, 0) + 1) / (lcnt.cnt_l + vocab.v))), 6) AS score
+      |  FROM tf CROSS JOIN langs
+      |  LEFT JOIN ltf ON ltf.cand_lang = langs.cand_lang AND ltf.token = tf.token
+      |  JOIN lcnt ON lcnt.cand_lang = langs.cand_lang
+      |  CROSS JOIN vocab
+      |  GROUP BY tf.doc_id, langs.cand_lang)""".stripMargin
 
   /** j15_langid — naive-Bayes n-gram language ID, self-supervised: per-lang
     * token profiles from the corpus itself, each doc classified by
@@ -550,6 +623,22 @@ object PipelineOps {
       .limit(10)
   }
 
+  /** The oracles' IVF cells of [[j20]]: `cent0`/`cent` (per-label
+    * centroid sum and norm) and `cells` (cell_score and its rank `cr`). */
+  private val IvfCellsSql =
+    """cent0 AS (
+      |  SELECT label, i AS pos, avg(CAST(embedding[i] AS DOUBLE)) AS m
+      |  FROM 'embeddings.parquet', generate_series(1, 64) t(i)
+      |  GROUP BY label, i),
+      |cent AS (
+      |  SELECT label, round(sum(m), 6) AS cent_sum,
+      |         round(sqrt(sum(m * m)), 6) AS cent_norm
+      |  FROM cent0 GROUP BY label),
+      |cells AS (
+      |  SELECT label, round(cent_sum / (cent_norm * 8.0), 6) AS cell_score,
+      |         row_number() OVER (ORDER BY round(cent_sum / (cent_norm * 8.0), 6) DESC, label ASC) AS cr
+      |  FROM cent)""".stripMargin
+
   /** j135_ivf_recall — the ANN-accuracy audit (d3/j45/j111's
     * estimate-beside-exact discipline applied to j20): the brute-force
     * top-10 (ground truth, j4's scan) with a `found` flag per rank
@@ -749,6 +838,17 @@ object PipelineOps {
     * terms; the prefix-count table is vocabulary-sized (≪ corpus at any
     * scale), so it is `broadcast()` back onto the bigram counts — no
     * second shuffle of the big side. */
+  /** The oracles' bigrams of a CTE `toks` (t): `bg0` (p: {w1, w2}). */
+  private[ops] val BigramSql =
+    """bg0 AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1),
+      |          i -> {'w1': t[i], 'w2': t[i + 1]})) AS p FROM toks)""".stripMargin
+
+  /** The oracles' bigram counts over `bg` (w1, w2): `cb` (c_bigram) and
+    * `cp` (c_prefix, the count of w1 as a bigram's first word). */
+  private val BigramCountsSql =
+    """cb AS (SELECT w1, w2, count(*) AS c_bigram FROM bg GROUP BY 1, 2),
+      |cp AS (SELECT w1, CAST(sum(c_bigram) AS BIGINT) AS c_prefix FROM cb GROUP BY 1)""".stripMargin
+
   /** The per-row bigram array — the single source of the bigram
     * construction, shared by the LM builder (j24) and the LM scorer
     * (j33) so the scorer cannot silently diverge from the statistics it
@@ -920,6 +1020,13 @@ object PipelineOps {
   }
 
   // ---------- j31 hyperplane-LSH embedding near-dup ----------
+
+  /** The oracles' projection of each `e` row on each hyperplane `hp`
+    * (k, h): `dots` (vec_id, k, dt), the sign bits' source. */
+  private[ops] val HyperplaneDotsSql =
+    """dots AS (SELECT e.vec_id, hp.k,
+      |        list_sum(list_transform(generate_series(1, 64), i -> e.v[i] * hp.h[i])) AS dt
+      |        FROM e CROSS JOIN hp)""".stripMargin
 
   /** j31_embed_lsh_neardup — content-based embedding near-dup: random-
     * hyperplane LSH (8 md5-derived pseudo-random hyperplanes → an 8-bit
@@ -1320,6 +1427,37 @@ object PipelineOps {
       "replace(sym, '(' || l || ')(' || r || ')', '(' || l || r || ')')"))
     .drop("l", "r", "pair_count")
 
+  /** The DuckDB oracles' BPE chain (j66/j88/j124): `w` (word counts), `v0`
+    * (self-delimited symbols) and three merge rounds, each `p<k>` (pair
+    * counts over `v<k-1>`), `t<k>` (the top pair) and `v<k>` ([[bpeMerge]]
+    * of `t<k>`). `cols` are the columns kept beside `sym`; the last round
+    * stops at `t3` unless `mergeLast`. */
+  private def bpeChainSql(cols: String, mergeLast: Boolean): String = {
+    def topPair(k: Int): String =
+      s"""p$k AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
+         |       FROM (SELECT cnt, unnest(list_transform(
+         |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
+         |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
+         |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
+         |             FROM v${k - 1} WHERE len(string_split(sym[2:-2], ')(')) >= 2)
+         |       GROUP BY 1, 2),
+         |t$k AS (SELECT * FROM p$k ORDER BY pair_count DESC, l, r LIMIT 1)""".stripMargin
+    def mergeTop(k: Int): String =
+      s"""v$k AS (SELECT $cols, replace(sym, '(' || t$k.l || ')(' || t$k.r || ')',
+         |                           '(' || t$k.l || t$k.r || ')') AS sym
+         |       FROM v${k - 1} CROSS JOIN t$k)""".stripMargin
+    val rounds = (1 to 3).map(k =>
+      if (k < 3 || mergeLast) s"${topPair(k)},\n${mergeTop(k)}" else topPair(k))
+    s"""w AS (SELECT word, count(*) AS cnt
+       |           FROM (SELECT unnest(string_split(text, ' ')) AS word
+       |                 FROM 'documents.parquet')
+       |           WHERE length(word) > 0 GROUP BY 1),
+       |v0 AS (SELECT $cols, '(' || array_to_string(list_transform(
+       |         generate_series(1, length(word)), i -> word[i]), ')(') || ')' AS sym
+       |       FROM w),
+       |${rounds.mkString(",\n")}""".stripMargin
+  }
+
   def j66(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val words = bpeWords(s, d)
@@ -1588,209 +1726,62 @@ object PipelineOps {
         |         AS target_text
         |FROM m ORDER BY doc_id""".stripMargin,
     "j88_bpe_encode" ->
-      """WITH w AS (SELECT word, count(*) AS cnt
-        |           FROM (SELECT unnest(string_split(text, ' ')) AS word
-        |                 FROM 'documents.parquet')
-        |           WHERE length(word) > 0 GROUP BY 1),
-        |v0 AS (SELECT word, cnt, '(' || array_to_string(list_transform(
-        |         generate_series(1, length(word)), i -> word[i]), ')(') || ')' AS sym
-        |       FROM w),
-        |p1 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v0 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v1 AS (SELECT word, cnt, replace(sym, '(' || t1.l || ')(' || t1.r || ')',
-        |                           '(' || t1.l || t1.r || ')') AS sym
-        |       FROM v0 CROSS JOIN t1),
-        |p2 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v1 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v2 AS (SELECT word, cnt, replace(sym, '(' || t2.l || ')(' || t2.r || ')',
-        |                           '(' || t2.l || t2.r || ')') AS sym
-        |       FROM v1 CROSS JOIN t2),
-        |p3 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v2 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v3 AS (SELECT word, cnt, replace(sym, '(' || t3.l || ')(' || t3.r || ')',
-        |                           '(' || t3.l || t3.r || ')') AS sym
-        |       FROM v2 CROSS JOIN t3),
-        |enc AS (SELECT word, cnt, replace(sym[2:-2], ')(', ' ') AS encoded
-        |        FROM v3)
-        |SELECT word, cnt, encoded,
-        |       CAST(len(string_split(encoded, ' ')) AS BIGINT) AS n_pieces
-        |FROM enc ORDER BY cnt DESC, word ASC LIMIT 10""".stripMargin,
+      s"""WITH ${bpeChainSql("word, cnt", mergeLast = true)},
+         |enc AS (SELECT word, cnt, replace(sym[2:-2], ')(', ' ') AS encoded
+         |        FROM v3)
+         |SELECT word, cnt, encoded,
+         |       CAST(len(string_split(encoded, ' ')) AS BIGINT) AS n_pieces
+         |FROM enc ORDER BY cnt DESC, word ASC LIMIT 10""".stripMargin,
     "j124_token_fertility" ->
-      """WITH w AS (SELECT word, count(*) AS cnt
-        |           FROM (SELECT unnest(string_split(text, ' ')) AS word
-        |                 FROM 'documents.parquet')
-        |           WHERE length(word) > 0 GROUP BY 1),
-        |v0 AS (SELECT word, cnt, '(' || array_to_string(list_transform(
-        |         generate_series(1, length(word)), i -> word[i]), ')(') || ')' AS sym
-        |       FROM w),
-        |p1 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v0 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v1 AS (SELECT word, cnt, replace(sym, '(' || t1.l || ')(' || t1.r || ')',
-        |                           '(' || t1.l || t1.r || ')') AS sym
-        |       FROM v0 CROSS JOIN t1),
-        |p2 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v1 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v2 AS (SELECT word, cnt, replace(sym, '(' || t2.l || ')(' || t2.r || ')',
-        |                           '(' || t2.l || t2.r || ')') AS sym
-        |       FROM v1 CROSS JOIN t2),
-        |p3 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v2 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v3 AS (SELECT word, cnt, replace(sym, '(' || t3.l || ')(' || t3.r || ')',
-        |                           '(' || t3.l || t3.r || ')') AS sym
-        |       FROM v2 CROSS JOIN t3),
-        |pieces AS (SELECT word,
-        |             CAST(len(string_split(sym[2:-2], ')(')) AS BIGINT) AS n_pieces
-        |           FROM v3),
-        |lw AS (SELECT lang, word, count(*) AS wc
-        |       FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
-        |             FROM 'documents.parquet')
-        |       WHERE length(word) > 0 GROUP BY 1, 2)
-        |SELECT lang, CAST(sum(wc) AS BIGINT) AS n_words,
-        |       CAST(sum(wc * n_pieces) AS BIGINT) AS n_tokens,
-        |       floor(CAST(sum(wc * n_pieces) AS DOUBLE)
-        |             / CAST(sum(wc) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS fertility
-        |FROM lw JOIN pieces USING (word)
-        |GROUP BY 1 ORDER BY lang""".stripMargin,
+      s"""WITH ${bpeChainSql("word, cnt", mergeLast = true)},
+         |pieces AS (SELECT word,
+         |             CAST(len(string_split(sym[2:-2], ')(')) AS BIGINT) AS n_pieces
+         |           FROM v3),
+         |lw AS (SELECT lang, word, count(*) AS wc
+         |       FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
+         |             FROM 'documents.parquet')
+         |       WHERE length(word) > 0 GROUP BY 1, 2)
+         |SELECT lang, CAST(sum(wc) AS BIGINT) AS n_words,
+         |       CAST(sum(wc * n_pieces) AS BIGINT) AS n_tokens,
+         |       floor(CAST(sum(wc * n_pieces) AS DOUBLE)
+         |             / CAST(sum(wc) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS fertility
+         |FROM lw JOIN pieces USING (word)
+         |GROUP BY 1 ORDER BY lang""".stripMargin,
     "j66_bpe_vocab" ->
-      """WITH w AS (SELECT word, count(*) AS cnt
-        |           FROM (SELECT unnest(string_split(text, ' ')) AS word
-        |                 FROM 'documents.parquet')
-        |           WHERE length(word) > 0 GROUP BY 1),
-        |v0 AS (SELECT cnt, '(' || array_to_string(list_transform(
-        |         generate_series(1, length(word)), i -> word[i]), ')(') || ')' AS sym
-        |       FROM w),
-        |p1 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v0 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t1 AS (SELECT * FROM p1 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v1 AS (SELECT cnt, replace(sym, '(' || t1.l || ')(' || t1.r || ')',
-        |                           '(' || t1.l || t1.r || ')') AS sym
-        |       FROM v0 CROSS JOIN t1),
-        |p2 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v1 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t2 AS (SELECT * FROM p2 ORDER BY pair_count DESC, l, r LIMIT 1),
-        |v2 AS (SELECT cnt, replace(sym, '(' || t2.l || ')(' || t2.r || ')',
-        |                           '(' || t2.l || t2.r || ')') AS sym
-        |       FROM v1 CROSS JOIN t2),
-        |p3 AS (SELECT s.l, s.r, CAST(sum(cnt) AS BIGINT) AS pair_count
-        |       FROM (SELECT cnt, unnest(list_transform(
-        |               generate_series(1, len(string_split(sym[2:-2], ')(')) - 1),
-        |               i -> struct_pack(l := string_split(sym[2:-2], ')(')[i],
-        |                                r := string_split(sym[2:-2], ')(')[i+1]))) AS s
-        |             FROM v2 WHERE len(string_split(sym[2:-2], ')(')) >= 2)
-        |       GROUP BY 1, 2),
-        |t3 AS (SELECT * FROM p3 ORDER BY pair_count DESC, l, r LIMIT 1)
-        |SELECT merge_rank, l AS "left", r AS "right", l || r AS merged, pair_count
-        |FROM (SELECT CAST(1 AS BIGINT) AS merge_rank, * FROM t1
-        |      UNION ALL SELECT CAST(2 AS BIGINT), * FROM t2
-        |      UNION ALL SELECT CAST(3 AS BIGINT), * FROM t3)
-        |ORDER BY merge_rank""".stripMargin,
+      s"""WITH ${bpeChainSql("cnt", mergeLast = false)}
+         |SELECT merge_rank, l AS "left", r AS "right", l || r AS merged, pair_count
+         |FROM (SELECT CAST(1 AS BIGINT) AS merge_rank, * FROM t1
+         |      UNION ALL SELECT CAST(2 AS BIGINT), * FROM t2
+         |      UNION ALL SELECT CAST(3 AS BIGINT), * FROM t3)
+         |ORDER BY merge_rank""".stripMargin,
     "j12_minhash_lsh" ->
-      s"""WITH s AS ($shingleSql),
-         |h AS (SELECT doc_id, sh, i,
-         |      substr(md5(CAST(i // 4 AS VARCHAR) || ':' || sh), (i % 4) * 8 + 1, 8) AS hv
-         |      FROM s, generate_series(0, 7) t(i)),
-         |m AS (SELECT doc_id, i, min(hv) AS mh FROM h GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |          concat_ws('|', min(CASE WHEN i % 2 = 0 THEN mh END),
-         |                         min(CASE WHEN i % 2 = 1 THEN mh END)) AS sig
-         |          FROM m GROUP BY doc_id, i // 2),
-         |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-         |         FROM bands x JOIN bands y
-         |           ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id),
-         |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-         |i2 AS (SELECT d1, d2, count(*) AS inter
-         |       FROM cand JOIN s sa ON sa.doc_id = d1
-         |                 JOIN s sb ON sb.doc_id = d2 AND sa.sh = sb.sh
-         |       GROUP BY d1, d2)
+      s"""WITH $MinhashPairsSql
          |SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5)
          |         / 1000000.0 AS jaccard
          |FROM i2 JOIN n na ON d1 = na.doc_id JOIN n nb ON d2 = nb.doc_id
          |WHERE inter / (na.ns + nb.ns - inter) >= 0.5
          |ORDER BY d1, d2""".stripMargin,
     "j135_ivf_recall" ->
-      """WITH cent0 AS (
-        |  SELECT label, i AS pos, avg(CAST(embedding[i] AS DOUBLE)) AS m
-        |  FROM 'embeddings.parquet', generate_series(1, 64) t(i)
-        |  GROUP BY label, i),
-        |cent AS (
-        |  SELECT label, round(sum(m), 6) AS cent_sum,
-        |         round(sqrt(sum(m * m)), 6) AS cent_norm
-        |  FROM cent0 GROUP BY label),
-        |cells AS (
-        |  SELECT label, round(cent_sum / (cent_norm * 8.0), 6) AS cell_score,
-        |         row_number() OVER (ORDER BY round(cent_sum / (cent_norm * 8.0), 6) DESC, label ASC) AS cr
-        |  FROM cent),
-        |ivf AS (
-        |  SELECT e.vec_id,
-        |    round(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) AS cos_q
-        |  FROM 'embeddings.parquet' e JOIN cells c ON e.label = c.label AND c.cr <= 2
-        |  ORDER BY cos_q DESC, vec_id ASC LIMIT 10),
-        |truth AS (
-        |  SELECT vec_id,
-        |    round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) AS cos_q,
-        |    CAST(row_number() OVER (ORDER BY
-        |      round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE))) /
-        |        (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) DESC,
-        |      vec_id ASC) AS BIGINT) AS rank
-        |  FROM 'embeddings.parquet'
-        |  QUALIFY rank <= 10)
-        |SELECT t.rank, t.vec_id, t.cos_q,
-        |       EXISTS (SELECT 1 FROM ivf WHERE ivf.vec_id = t.vec_id) AS found
-        |FROM truth t ORDER BY rank""".stripMargin,
+      s"""WITH $IvfCellsSql,
+         |ivf AS (
+         |  SELECT e.vec_id,
+         |    ${VectorOps.cosSqlOf("e.embedding")} AS cos_q
+         |  FROM 'embeddings.parquet' e JOIN cells c ON e.label = c.label AND c.cr <= 2
+         |  ORDER BY cos_q DESC, vec_id ASC LIMIT 10),
+         |truth AS (
+         |  SELECT vec_id,
+         |    ${VectorOps.cosSql} AS cos_q,
+         |    CAST(row_number() OVER (ORDER BY
+         |      ${VectorOps.cosSql} DESC,
+         |      vec_id ASC) AS BIGINT) AS rank
+         |  FROM 'embeddings.parquet'
+         |  QUALIFY rank <= 10)
+         |SELECT t.rank, t.vec_id, t.cos_q,
+         |       EXISTS (SELECT 1 FROM ivf WHERE ivf.vec_id = t.vec_id) AS found
+         |FROM truth t ORDER BY rank""".stripMargin,
     "j136_lsh_band_tuning" ->
-      s"""WITH s AS ($shingleSql),
-         |h AS (SELECT doc_id, sh, i,
-         |      substr(md5(CAST(i // 4 AS VARCHAR) || ':' || sh), (i % 4) * 8 + 1, 8) AS hv
-         |      FROM s, generate_series(0, 7) t(i)),
-         |m AS (SELECT doc_id, i, min(hv) AS mh FROM h GROUP BY doc_id, i),
+      s"""WITH s AS (${TextOps.ShingleSql}),
+         |$MinhashSql,
          |b2 AS (SELECT doc_id, i // 2 AS band, string_agg(mh, '|' ORDER BY i) AS sig
          |       FROM m GROUP BY doc_id, i // 2),
          |b4 AS (SELECT doc_id, i // 4 AS band, string_agg(mh, '|' ORDER BY i) AS sig
@@ -1807,9 +1798,7 @@ object PipelineOps {
          |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
          |      FROM sc a JOIN sc b ON a.sh = b.sh AND a.doc_id < b.doc_id
          |      GROUP BY 1, 2),
-         |pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
-         |       JOIN n nb ON p.d2 = nb.doc_id
-         |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
+         |${TextOps.NearDupPairsSql},
          |tr AS (SELECT count(*) AS n_true FROM pr),
          |u AS (SELECT '2x4' AS config,
          |        (SELECT count(*) FROM c4) AS n_candidates,
@@ -1829,23 +1818,7 @@ object PipelineOps {
          |             * 1000000 + 0.5) / 1000000.0 AS recall
          |FROM u CROSS JOIN tr ORDER BY config""".stripMargin,
     "j111_minhash_accuracy" ->
-      s"""WITH s AS ($shingleSql),
-         |h AS (SELECT doc_id, sh, i,
-         |      substr(md5(CAST(i // 4 AS VARCHAR) || ':' || sh), (i % 4) * 8 + 1, 8) AS hv
-         |      FROM s, generate_series(0, 7) t(i)),
-         |m AS (SELECT doc_id, i, min(hv) AS mh FROM h GROUP BY doc_id, i),
-         |bands AS (SELECT doc_id, i // 2 AS band,
-         |          concat_ws('|', min(CASE WHEN i % 2 = 0 THEN mh END),
-         |                         min(CASE WHEN i % 2 = 1 THEN mh END)) AS sig
-         |          FROM m GROUP BY doc_id, i // 2),
-         |cand AS (SELECT DISTINCT x.doc_id AS d1, y.doc_id AS d2
-         |         FROM bands x JOIN bands y
-         |           ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id),
-         |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-         |i2 AS (SELECT d1, d2, count(*) AS inter
-         |       FROM cand JOIN s sa ON sa.doc_id = d1
-         |                 JOIN s sb ON sb.doc_id = d2 AND sa.sh = sb.sh
-         |       GROUP BY d1, d2),
+      s"""WITH $MinhashPairsSql,
          |ex AS (SELECT d1, d2, inter / (na.ns + nb.ns - inter) AS jac
          |       FROM i2 JOIN n na ON d1 = na.doc_id JOIN n nb ON d2 = nb.doc_id),
          |est AS (SELECT c.d1, c.d2,
@@ -1861,49 +1834,45 @@ object PipelineOps {
          |ORDER BY ex.d1, ex.d2""".stripMargin,
     "j13_simhash" -> s"$simhashFpSql ORDER BY doc_id",
     "j33_lm_score" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM 'documents.parquet'),
-        |bg0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
-        |          i -> {'w1': t[i], 'w2': t[i + 1]})) AS p FROM toks WHERE len(t) >= 2),
-        |bg AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM bg0),
-        |cb AS (SELECT w1, w2, count(*) AS c_bigram FROM bg GROUP BY 1, 2),
-        |cp AS (SELECT w1, CAST(sum(c_bigram) AS BIGINT) AS c_prefix FROM cb GROUP BY 1),
-        |v AS (SELECT count(DISTINCT token) AS v FROM (
-        |        SELECT unnest(string_split(text, ' ')) AS token FROM 'documents.parquet')),
-        |sc AS (SELECT bg.doc_id, count(*) AS n_bigrams,
-        |        list_sum(list_sort(list(ln((cb.c_bigram + 1) / CAST(cp.c_prefix + v.v AS DOUBLE))))) AS sll
-        |       FROM bg JOIN cb USING (w1, w2) JOIN cp USING (w1) CROSS JOIN v
-        |       GROUP BY bg.doc_id)
-        |SELECT doc_id, n_bigrams, round(sll / n_bigrams, 6) AS avg_ll,
-        |       round(exp(-(sll / n_bigrams)), 6) AS ppl
-        |FROM sc ORDER BY doc_id""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM 'documents.parquet'),
+         |bg0 AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
+         |          i -> {'w1': t[i], 'w2': t[i + 1]})) AS p FROM toks WHERE len(t) >= 2),
+         |bg AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM bg0),
+         |$BigramCountsSql,
+         |v AS (SELECT count(DISTINCT token) AS v FROM (
+         |        SELECT unnest(string_split(text, ' ')) AS token FROM 'documents.parquet')),
+         |sc AS (SELECT bg.doc_id, count(*) AS n_bigrams,
+         |        list_sum(list_sort(list(ln((cb.c_bigram + 1) / CAST(cp.c_prefix + v.v AS DOUBLE))))) AS sll
+         |       FROM bg JOIN cb USING (w1, w2) JOIN cp USING (w1) CROSS JOIN v
+         |       GROUP BY bg.doc_id)
+         |SELECT doc_id, n_bigrams, round(sll / n_bigrams, 6) AS avg_ll,
+         |       round(exp(-(sll / n_bigrams)), 6) AS ppl
+         |FROM sc ORDER BY doc_id""".stripMargin,
     "j52_dsir_score" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |           FROM 'documents.parquet'
-        |           WHERE len(string_split(text, ' ')) >= 2),
-        |bg AS (SELECT doc_id, unnest(list_transform(
-        |         generate_series(1, len(toks) - 1),
-        |         i -> md5('dsir:' || toks[i] || ' ' || toks[i+1]))) AS h FROM t),
-        |fx AS (SELECT doc_id,
-        |        ((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-        |         (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-        |         (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-        |         (strpos('0123456789abcdef', substr(h, 4, 1)) - 1)) % 1024 AS f
-        |       FROM bg),
-        |g AS (SELECT doc_id, f, count(*) AS c FROM fx GROUP BY 1, 2),
-        |c AS (SELECT f, sum(CASE WHEN doc_id % 10 = 0 THEN c ELSE 0 END) AS ct,
-        |             sum(CASE WHEN doc_id % 10 <> 0 THEN c ELSE 0 END) AS cr
-        |      FROM g GROUP BY 1),
-        |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM c),
-        |r AS (SELECT f, ln((ct + 1.0) / (tt + 1024.0)) -
-        |               ln((cr + 1.0) / (tr + 1024.0)) AS lr
-        |      FROM c CROSS JOIN tot),
-        |sc AS (SELECT g.doc_id, g.c, g.c * r.lr AS w FROM g JOIN r USING (f)
-        |       WHERE g.doc_id % 10 <> 0),
-        |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
-        |             list_sum(list_sort(list(w))) AS s
-        |      FROM sc GROUP BY 1)
-        |SELECT doc_id, n_feats, round(s / n_feats, 6) AS dsir_score
-        |FROM a ORDER BY doc_id""".stripMargin,
+      s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+         |           FROM 'documents.parquet'
+         |           WHERE len(string_split(text, ' ')) >= 2),
+         |bg AS (SELECT doc_id, unnest(list_transform(
+         |         generate_series(1, len(toks) - 1),
+         |         i -> md5('dsir:' || toks[i] || ' ' || toks[i+1]))) AS h FROM t),
+         |fx AS (SELECT doc_id,
+         |        ${Hashing.duckNibble("h")} % 1024 AS f
+         |       FROM bg),
+         |g AS (SELECT doc_id, f, count(*) AS c FROM fx GROUP BY 1, 2),
+         |c AS (SELECT f, sum(CASE WHEN doc_id % 10 = 0 THEN c ELSE 0 END) AS ct,
+         |             sum(CASE WHEN doc_id % 10 <> 0 THEN c ELSE 0 END) AS cr
+         |      FROM g GROUP BY 1),
+         |tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM c),
+         |r AS (SELECT f, ln((ct + 1.0) / (tt + 1024.0)) -
+         |               ln((cr + 1.0) / (tr + 1024.0)) AS lr
+         |      FROM c CROSS JOIN tot),
+         |sc AS (SELECT g.doc_id, g.c, g.c * r.lr AS w FROM g JOIN r USING (f)
+         |       WHERE g.doc_id % 10 <> 0),
+         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
+         |             list_sum(list_sort(list(w))) AS s
+         |      FROM sc GROUP BY 1)
+         |SELECT doc_id, n_feats, round(s / n_feats, 6) AS dsir_score
+         |FROM a ORDER BY doc_id""".stripMargin,
     // Lloyd to convergence as a RECURSIVE CTE (r9): each recursion step
     // is one full round (sorted-fold centroid means from the working
     // assignment, cosine reassignment), emitted only while any vector
@@ -1913,58 +1882,57 @@ object PipelineOps {
     // assignment, which at the fixpoint is bit-identical to the frame
     // that produced it (the idempotence that makes the mirror exact).
     "j53_semdedup" ->
-      """WITH RECURSIVE e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM 'embeddings.parquet'),
-        |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-        |sd AS (SELECT vec_id AS sid, v AS sv, nrm AS snrm FROM n ORDER BY vec_id LIMIT 8),
-        |asg(r, vec_id, cluster) AS (
-        |  (SELECT 1, vec_id, sid FROM (
-        |     SELECT vec_id, sid, row_number() OVER (PARTITION BY vec_id ORDER BY
-        |       list_sum(list_transform(generate_series(1, 64), i -> v[i] * sv[i])) / (nrm * snrm) DESC,
-        |       sid ASC) AS rn
-        |     FROM n CROSS JOIN sd) WHERE rn = 1)
-        |  UNION ALL
-        |  (WITH cur AS (SELECT r, vec_id, cluster FROM asg),
-        |   ct AS (SELECT cluster, i - 1 AS pos,
-        |            CAST(sum(CAST(round(n.v[i] * 1000000) AS BIGINT)) AS DOUBLE)
-        |              / 1000000.0 / count(*) AS m
-        |          FROM n JOIN cur USING (vec_id), generate_series(1, 64) AS t(i)
-        |          GROUP BY cluster, i - 1),
-        |   ca AS (SELECT cluster, list(m ORDER BY pos) AS cv FROM ct GROUP BY 1),
-        |   cn AS (SELECT cluster, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnrm FROM ca),
-        |   na AS (SELECT vec_id, cluster FROM (
-        |     SELECT n.vec_id, cn.cluster, row_number() OVER (PARTITION BY n.vec_id ORDER BY
-        |       list_sum(list_transform(generate_series(1, 64), i -> v[i] * cv[i])) / (nrm * cnrm) DESC,
-        |       cn.cluster ASC) AS rn
-        |     FROM n CROSS JOIN cn) WHERE rn = 1),
-        |   chg AS (SELECT count(*) AS nch FROM na JOIN cur ON na.vec_id = cur.vec_id
-        |           AND na.cluster <> cur.cluster),
-        |   rr AS (SELECT DISTINCT r FROM cur)
-        |   SELECT rr.r + 1, na.vec_id, na.cluster
-        |   FROM na, rr, chg WHERE chg.nch > 0 AND rr.r < 64)
-        |),
-        |fa AS (SELECT vec_id, cluster FROM asg
-        |       QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY r DESC) = 1),
-        |fct AS (SELECT cluster, i - 1 AS pos,
-        |          CAST(sum(CAST(round(n.v[i] * 1000000) AS BIGINT)) AS DOUBLE)
-        |            / 1000000.0 / count(*) AS m
-        |        FROM n JOIN fa USING (vec_id), generate_series(1, 64) AS t(i)
-        |        GROUP BY cluster, i - 1),
-        |fca AS (SELECT cluster, list(m ORDER BY pos) AS cv FROM fct GROUP BY 1),
-        |fcn AS (SELECT cluster, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnrm FROM fca),
-        |f AS (SELECT n.vec_id, fa.cluster,
-        |        list_sum(list_transform(generate_series(1, 64), i -> v[i] * cv[i])) / (nrm * cnrm) AS cos_c
-        |      FROM n JOIN fa USING (vec_id) JOIN fcn ON fcn.cluster = fa.cluster),
-        |pr AS (SELECT x.vec_id AS v1, y.vec_id AS v2, x.cos_c AS c1, y.cos_c AS c2
-        |       FROM f x JOIN f y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-        |       JOIN n nx ON nx.vec_id = x.vec_id
-        |       JOIN n ny ON ny.vec_id = y.vec_id
-        |       WHERE list_sum(list_transform(generate_series(1, 64), i -> nx.v[i] * ny.v[i])) /
-        |             (nx.nrm * ny.nrm) >= 0.35),
-        |dr AS (SELECT DISTINCT CASE WHEN c1 > c2 THEN v1 ELSE v2 END AS vec_id FROM pr)
-        |SELECT f.vec_id, f.cluster, round(f.cos_c, 6) AS cos_c,
-        |       CASE WHEN dr.vec_id IS NULL THEN 1 ELSE 0 END AS keep
-        |FROM f LEFT JOIN dr ON f.vec_id = dr.vec_id ORDER BY f.vec_id""".stripMargin,
+      s"""WITH RECURSIVE $EmbeddingVecSql,
+         |n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
+         |sd AS (SELECT vec_id AS sid, v AS sv, nrm AS snrm FROM n ORDER BY vec_id LIMIT 8),
+         |asg(r, vec_id, cluster) AS (
+         |  (SELECT 1, vec_id, sid FROM (
+         |     SELECT vec_id, sid, row_number() OVER (PARTITION BY vec_id ORDER BY
+         |       list_sum(list_transform(generate_series(1, 64), i -> v[i] * sv[i])) / (nrm * snrm) DESC,
+         |       sid ASC) AS rn
+         |     FROM n CROSS JOIN sd) WHERE rn = 1)
+         |  UNION ALL
+         |  (WITH cur AS (SELECT r, vec_id, cluster FROM asg),
+         |   ct AS (SELECT cluster, i - 1 AS pos,
+         |            CAST(sum(CAST(round(n.v[i] * 1000000) AS BIGINT)) AS DOUBLE)
+         |              / 1000000.0 / count(*) AS m
+         |          FROM n JOIN cur USING (vec_id), generate_series(1, 64) AS t(i)
+         |          GROUP BY cluster, i - 1),
+         |   ca AS (SELECT cluster, list(m ORDER BY pos) AS cv FROM ct GROUP BY 1),
+         |   cn AS (SELECT cluster, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnrm FROM ca),
+         |   na AS (SELECT vec_id, cluster FROM (
+         |     SELECT n.vec_id, cn.cluster, row_number() OVER (PARTITION BY n.vec_id ORDER BY
+         |       list_sum(list_transform(generate_series(1, 64), i -> v[i] * cv[i])) / (nrm * cnrm) DESC,
+         |       cn.cluster ASC) AS rn
+         |     FROM n CROSS JOIN cn) WHERE rn = 1),
+         |   chg AS (SELECT count(*) AS nch FROM na JOIN cur ON na.vec_id = cur.vec_id
+         |           AND na.cluster <> cur.cluster),
+         |   rr AS (SELECT DISTINCT r FROM cur)
+         |   SELECT rr.r + 1, na.vec_id, na.cluster
+         |   FROM na, rr, chg WHERE chg.nch > 0 AND rr.r < 64)
+         |),
+         |fa AS (SELECT vec_id, cluster FROM asg
+         |       QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY r DESC) = 1),
+         |fct AS (SELECT cluster, i - 1 AS pos,
+         |          CAST(sum(CAST(round(n.v[i] * 1000000) AS BIGINT)) AS DOUBLE)
+         |            / 1000000.0 / count(*) AS m
+         |        FROM n JOIN fa USING (vec_id), generate_series(1, 64) AS t(i)
+         |        GROUP BY cluster, i - 1),
+         |fca AS (SELECT cluster, list(m ORDER BY pos) AS cv FROM fct GROUP BY 1),
+         |fcn AS (SELECT cluster, cv, sqrt(list_sum(list_transform(cv, x -> x * x))) AS cnrm FROM fca),
+         |f AS (SELECT n.vec_id, fa.cluster,
+         |        list_sum(list_transform(generate_series(1, 64), i -> v[i] * cv[i])) / (nrm * cnrm) AS cos_c
+         |      FROM n JOIN fa USING (vec_id) JOIN fcn ON fcn.cluster = fa.cluster),
+         |pr AS (SELECT x.vec_id AS v1, y.vec_id AS v2, x.cos_c AS c1, y.cos_c AS c2
+         |       FROM f x JOIN f y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
+         |       JOIN n nx ON nx.vec_id = x.vec_id
+         |       JOIN n ny ON ny.vec_id = y.vec_id
+         |       WHERE list_sum(list_transform(generate_series(1, 64), i -> nx.v[i] * ny.v[i])) /
+         |             (nx.nrm * ny.nrm) >= 0.35),
+         |dr AS (SELECT DISTINCT CASE WHEN c1 > c2 THEN v1 ELSE v2 END AS vec_id FROM pr)
+         |SELECT f.vec_id, f.cluster, round(f.cos_c, 6) AS cos_c,
+         |       CASE WHEN dr.vec_id IS NULL THEN 1 ELSE 0 END AS keep
+         |FROM f LEFT JOIN dr ON f.vec_id = dr.vec_id ORDER BY f.vec_id""".stripMargin,
     "j32_heavy_hitters_sketch" ->
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM 'documents.parquet'),
         |cells AS (SELECT token, r,
@@ -1980,107 +1948,65 @@ object PipelineOps {
         |SELECT token, est_n, exact_n, est_n - exact_n AS overcount
         |FROM est ORDER BY est_n DESC, token ASC LIMIT 10""".stripMargin,
     "j31_embed_lsh_neardup" ->
-      """WITH hp AS (SELECT k, list_transform(generate_series(1, 64), i ->
-        |      (((strpos('0123456789abcdef', substr(md5('hp:' || k || ':' || i), 1, 1)) - 1) * 4096 +
-        |        (strpos('0123456789abcdef', substr(md5('hp:' || k || ':' || i), 2, 1)) - 1) * 256 +
-        |        (strpos('0123456789abcdef', substr(md5('hp:' || k || ':' || i), 3, 1)) - 1) * 16 +
-        |        (strpos('0123456789abcdef', substr(md5('hp:' || k || ':' || i), 4, 1)) - 1)) / 65536.0) - 0.5) AS h
-        |    FROM generate_series(0, 7) t(k)),
-        |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |      FROM 'embeddings.parquet'),
-        |dots AS (SELECT e.vec_id, hp.k,
-        |        list_sum(list_transform(generate_series(1, 64), i -> e.v[i] * hp.h[i])) AS dt
-        |        FROM e CROSS JOIN hp),
-        |sig AS (SELECT vec_id, CAST(sum(CASE WHEN dt >= 0 THEN CAST(power(2, k) AS INT) ELSE 0 END) AS BIGINT) AS bucket
-        |        FROM dots GROUP BY vec_id),
-        |cand AS (SELECT a.vec_id AS v1, b.vec_id AS v2
-        |         FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-        |SELECT v1, v2,
-        |round(list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i])) /
-        |  (sqrt(list_sum(list_transform(a.v, x -> x * x))) * sqrt(list_sum(list_transform(b.v, x -> x * x)))), 6) AS cos_sim
-        |FROM cand JOIN e a ON a.vec_id = v1 JOIN e b ON b.vec_id = v2
-        |WHERE list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i])) /
-        |  (sqrt(list_sum(list_transform(a.v, x -> x * x))) * sqrt(list_sum(list_transform(b.v, x -> x * x)))) >= 0.35
-        |ORDER BY v1, v2""".stripMargin,
+      s"""WITH hp AS (SELECT k, list_transform(generate_series(1, 64), i ->
+         |      (${Hashing.duckNibble("md5('hp:' || k || ':' || i)")} / 65536.0) - 0.5) AS h
+         |    FROM generate_series(0, 7) t(k)),
+         |$EmbeddingVecSql,
+         |$HyperplaneDotsSql,
+         |sig AS (SELECT vec_id, CAST(sum(CASE WHEN dt >= 0 THEN CAST(power(2, k) AS INT) ELSE 0 END) AS BIGINT) AS bucket
+         |        FROM dots GROUP BY vec_id),
+         |cand AS (SELECT a.vec_id AS v1, b.vec_id AS v2
+         |         FROM sig a JOIN sig b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+         |SELECT v1, v2,
+         |round($PairCosSql, 6) AS cos_sim
+         |FROM cand JOIN e a ON a.vec_id = v1 JOIN e b ON b.vec_id = v2
+         |WHERE $PairCosSql >= 0.35
+         |ORDER BY v1, v2""".stripMargin,
     "j14_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, label,
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        |           FROM 'embeddings.parquet')
-        |SELECT a.label, a.vec_id AS v1, b.vec_id AS v2,
-        |round(list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i])) /
-        |  (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
-        |   sqrt(list_sum(list_transform(b.v, x -> x * x)))), 6) AS cos_sim
-        |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i])) /
-        |  (sqrt(list_sum(list_transform(a.v, x -> x * x))) *
-        |   sqrt(list_sum(list_transform(b.v, x -> x * x)))) >= 0.35
-        |ORDER BY v1, v2""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, label,
+         |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+         |           FROM 'embeddings.parquet')
+         |SELECT a.label, a.vec_id AS v1, b.vec_id AS v2,
+         |round($PairCosSql, 6) AS cos_sim
+         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+         |WHERE $PairCosSql >= 0.35
+         |ORDER BY v1, v2""".stripMargin,
     "j15_langid" ->
-      """WITH tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
-        |             FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |ltf AS (SELECT lang AS cand_lang, token, count(*) AS cnt_lt FROM tok GROUP BY 1, 2),
-        |lcnt AS (SELECT lang AS cand_lang, count(*) AS cnt_l FROM tok GROUP BY 1),
-        |vocab AS (SELECT count(DISTINCT token) AS v FROM tok),
-        |langs AS (SELECT DISTINCT lang AS cand_lang FROM 'documents.parquet'),
-        |scored AS (
-        |  SELECT tf.doc_id, langs.cand_lang,
-        |         round(sum(tf.tf * ln((coalesce(ltf.cnt_lt, 0) + 1) / (lcnt.cnt_l + vocab.v))), 6) AS score
-        |  FROM tf CROSS JOIN langs
-        |  LEFT JOIN ltf ON ltf.cand_lang = langs.cand_lang AND ltf.token = tf.token
-        |  JOIN lcnt ON lcnt.cand_lang = langs.cand_lang
-        |  CROSS JOIN vocab
-        |  GROUP BY tf.doc_id, langs.cand_lang),
-        |best AS (SELECT doc_id, cand_lang, score,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand_lang ASC) AS rn
-        |         FROM scored)
-        |SELECT d.doc_id, d.lang AS actual, b.cand_lang AS predicted, b.score,
-        |       b.cand_lang = d.lang AS correct
-        |FROM best b JOIN 'documents.parquet' d ON b.doc_id = d.doc_id
-        |WHERE b.rn = 1 ORDER BY d.doc_id""".stripMargin,
+      s"""WITH $LangScoredSql,
+         |best AS (SELECT doc_id, cand_lang, score,
+         |         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand_lang ASC) AS rn
+         |         FROM scored)
+         |SELECT d.doc_id, d.lang AS actual, b.cand_lang AS predicted, b.score,
+         |       b.cand_lang = d.lang AS correct
+         |FROM best b JOIN 'documents.parquet' d ON b.doc_id = d.doc_id
+         |WHERE b.rn = 1 ORDER BY d.doc_id""".stripMargin,
     "j192_langid_calibration" ->
-      """WITH tok AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
-        |             FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |ltf AS (SELECT lang AS cand_lang, token, count(*) AS cnt_lt FROM tok GROUP BY 1, 2),
-        |lcnt AS (SELECT lang AS cand_lang, count(*) AS cnt_l FROM tok GROUP BY 1),
-        |vocab AS (SELECT count(DISTINCT token) AS v FROM tok),
-        |langs AS (SELECT DISTINCT lang AS cand_lang FROM 'documents.parquet'),
-        |scored AS (
-        |  SELECT tf.doc_id, langs.cand_lang,
-        |         round(sum(tf.tf * ln((coalesce(ltf.cnt_lt, 0) + 1) /
-        |           (lcnt.cnt_l + vocab.v))), 6) AS score
-        |  FROM tf CROSS JOIN langs
-        |  LEFT JOIN ltf ON ltf.cand_lang = langs.cand_lang AND ltf.token = tf.token
-        |  JOIN lcnt ON lcnt.cand_lang = langs.cand_lang
-        |  CROSS JOIN vocab
-        |  GROUP BY tf.doc_id, langs.cand_lang),
-        |rk AS (SELECT doc_id, cand_lang, score,
-        |         row_number() OVER (PARTITION BY doc_id
-        |           ORDER BY score DESC, cand_lang ASC) AS rn
-        |       FROM scored),
-        |t2 AS (SELECT doc_id,
-        |         max(CASE WHEN rn = 1 THEN cand_lang END) AS predicted,
-        |         max(CASE WHEN rn = 1 THEN score END) AS s1,
-        |         max(CASE WHEN rn = 2 THEN score END) AS s2
-        |       FROM rk WHERE rn <= 2 GROUP BY 1),
-        |m AS (SELECT t2.doc_id, t2.predicted, d.lang AS actual,
-        |        t2.s1 - t2.s2 AS margin
-        |      FROM t2 JOIN 'documents.parquet' d ON t2.doc_id = d.doc_id),
-        |n AS (SELECT count(*) AS n_total FROM m),
-        |rkd AS (SELECT m.*, row_number() OVER
-        |          (ORDER BY margin DESC, doc_id ASC) AS rank
-        |        FROM m)
-        |SELECT CAST((rank - 1) * 10 // n.n_total AS BIGINT) AS decile,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(CASE WHEN predicted = actual THEN 1 ELSE 0 END)
-        |         AS BIGINT) AS n_correct,
-        |       floor(sum(CASE WHEN predicted = actual THEN 1 ELSE 0 END) /
-        |             CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS accuracy,
-        |       floor((CAST(sum(CAST(round(margin * 1000000) AS BIGINT)) AS DOUBLE)
-        |             / 1000000.0 / count(*)) * 1000000 + 0.5) / 1000000.0 AS mean_margin
-        |FROM rkd CROSS JOIN n GROUP BY 1, n.n_total
-        |ORDER BY decile""".stripMargin,
+      s"""WITH $LangScoredSql,
+         |rk AS (SELECT doc_id, cand_lang, score,
+         |         row_number() OVER (PARTITION BY doc_id
+         |           ORDER BY score DESC, cand_lang ASC) AS rn
+         |       FROM scored),
+         |t2 AS (SELECT doc_id,
+         |         max(CASE WHEN rn = 1 THEN cand_lang END) AS predicted,
+         |         max(CASE WHEN rn = 1 THEN score END) AS s1,
+         |         max(CASE WHEN rn = 2 THEN score END) AS s2
+         |       FROM rk WHERE rn <= 2 GROUP BY 1),
+         |m AS (SELECT t2.doc_id, t2.predicted, d.lang AS actual,
+         |        t2.s1 - t2.s2 AS margin
+         |      FROM t2 JOIN 'documents.parquet' d ON t2.doc_id = d.doc_id),
+         |n AS (SELECT count(*) AS n_total FROM m),
+         |rkd AS (SELECT m.*, row_number() OVER
+         |          (ORDER BY margin DESC, doc_id ASC) AS rank
+         |        FROM m)
+         |SELECT CAST((rank - 1) * 10 // n.n_total AS BIGINT) AS decile,
+         |       CAST(count(*) AS BIGINT) AS n_docs,
+         |       CAST(sum(CASE WHEN predicted = actual THEN 1 ELSE 0 END)
+         |         AS BIGINT) AS n_correct,
+         |       floor(sum(CASE WHEN predicted = actual THEN 1 ELSE 0 END) /
+         |             CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS accuracy,
+         |       ${Parity.qmeanSql("margin")} AS mean_margin
+         |FROM rkd CROSS JOIN n GROUP BY 1, n.n_total
+         |ORDER BY decile""".stripMargin,
     "j16_quality_score" ->
       """WITH x AS (SELECT doc_id, n_chars, string_split(text, ' ') AS toks
         |           FROM 'documents.parquet')
@@ -2154,7 +2080,7 @@ object PipelineOps {
         |array_to_string(list_transform(generate_series(1, 4), i -> ascii(substr(text, i, 1))), ',') AS first_pixels
         |FROM 'documents.parquet' ORDER BY doc_id""".stripMargin,
     "j22_decontaminate" ->
-      s"""WITH s AS ($shingleSql),
+      s"""WITH s AS (${TextOps.ShingleSql}),
          |e AS (SELECT doc_id AS eval_id, sh FROM s WHERE doc_id % 10 = 0),
          |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
          |hit AS (SELECT t.doc_id,
@@ -2167,20 +2093,17 @@ object PipelineOps {
          |FROM hit JOIN n ON hit.doc_id = n.doc_id
          |ORDER BY 1""".stripMargin,
     "j23_hash_split" ->
-      """WITH b AS (SELECT doc_id, n_chars,
-        |  len(string_split(text, ' ')) AS n_toks,
-        |  ((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096 +
-        |   (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256 +
-        |   (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16 +
-        |   (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100 AS bucket
-        |  FROM 'documents.parquet')
-        |SELECT CASE WHEN bucket < 80 THEN 'train'
-        |            WHEN bucket < 90 THEN 'validation' ELSE 'test' END AS split,
-        |       count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |       floor(avg(n_toks) * 1000000 + 0.5) / 1000000.0 AS avg_tokens,
-        |       min(doc_id) AS first_doc
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH b AS (SELECT doc_id, n_chars,
+         |  len(string_split(text, ' ')) AS n_toks,
+         |  ${Hashing.duckNibble("md5(CAST(doc_id AS VARCHAR))")} % 100 AS bucket
+         |  FROM 'documents.parquet')
+         |SELECT CASE WHEN bucket < 80 THEN 'train'
+         |            WHEN bucket < 90 THEN 'validation' ELSE 'test' END AS split,
+         |       count(*) AS n_docs,
+         |       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+         |       floor(avg(n_toks) * 1000000 + 0.5) / 1000000.0 AS avg_tokens,
+         |       min(doc_id) AS first_doc
+         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
     "j27_simhash_neardup" ->
       s"""WITH fp AS ($simhashFpSql),
          |bands AS (
@@ -2231,33 +2154,19 @@ object PipelineOps {
         |  array_to_string(list_slice(toks, start_tok, start_tok + 63), ' ') AS chunk_text
         |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
     "j24_bigram_lm" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM 'documents.parquet'),
-        |bg0 AS (SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-        |          i -> {'w1': t[i], 'w2': t[i + 1]})) AS p FROM toks),
-        |bg AS (SELECT p.w1 AS w1, p.w2 AS w2 FROM bg0),
-        |cb AS (SELECT w1, w2, count(*) AS c_bigram FROM bg GROUP BY 1, 2),
-        |cp AS (SELECT w1, CAST(sum(c_bigram) AS BIGINT) AS c_prefix FROM cb GROUP BY 1)
-        |SELECT cb.w1, cb.w2, cb.c_bigram,
-        |       floor(cb.c_bigram / CAST(cp.c_prefix AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS p_cond
-        |FROM cb JOIN cp ON cb.w1 = cp.w1
-        |WHERE cb.c_bigram >= 5
-        |ORDER BY cb.w1, cb.w2""".stripMargin,
+      s"""WITH toks AS (SELECT string_split(text, ' ') AS t FROM 'documents.parquet'),
+         |$BigramSql,
+         |bg AS (SELECT p.w1 AS w1, p.w2 AS w2 FROM bg0),
+         |$BigramCountsSql
+         |SELECT cb.w1, cb.w2, cb.c_bigram,
+         |       floor(cb.c_bigram / CAST(cp.c_prefix AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS p_cond
+         |FROM cb JOIN cp ON cb.w1 = cp.w1
+         |WHERE cb.c_bigram >= 5
+         |ORDER BY cb.w1, cb.w2""".stripMargin,
     "j20_ivf_topk" ->
-      """WITH cent0 AS (
-        |  SELECT label, i AS pos, avg(CAST(embedding[i] AS DOUBLE)) AS m
-        |  FROM 'embeddings.parquet', generate_series(1, 64) t(i)
-        |  GROUP BY label, i),
-        |cent AS (
-        |  SELECT label, round(sum(m), 6) AS cent_sum,
-        |         round(sqrt(sum(m * m)), 6) AS cent_norm
-        |  FROM cent0 GROUP BY label),
-        |cells AS (
-        |  SELECT label, round(cent_sum / (cent_norm * 8.0), 6) AS cell_score,
-        |         row_number() OVER (ORDER BY round(cent_sum / (cent_norm * 8.0), 6) DESC, label ASC) AS cr
-        |  FROM cent)
-        |SELECT e.vec_id, e.label, c.cell_score,
-        |round(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE))) /
-        |  (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6) AS cos_q
-        |FROM 'embeddings.parquet' e JOIN cells c ON e.label = c.label AND c.cr <= 2
-        |ORDER BY cos_q DESC, vec_id ASC LIMIT 10""".stripMargin)
+      s"""WITH $IvfCellsSql
+         |SELECT e.vec_id, e.label, c.cell_score,
+         |${VectorOps.cosSqlOf("e.embedding")} AS cos_q
+         |FROM 'embeddings.parquet' e JOIN cells c ON e.label = c.label AND c.cr <= 2
+         |ORDER BY cos_q DESC, vec_id ASC LIMIT 10""".stripMargin)
 }

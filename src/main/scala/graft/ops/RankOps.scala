@@ -283,11 +283,9 @@ object RankOps {
        |         SELECT doc_id, unnest(string_split(text, ' ')) AS token
        |         FROM 'documents.parquet')
        |       WHERE token IN ($termsIn) GROUP BY 1, 2),
-       |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+       |${TextOps.Bm25StatsSql},
        |sc AS (SELECT tf.doc_id, tf.token, tf.tf,
-       |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-       |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore,
+       |         ${TextOps.Bm25TermSql} AS tscore,
        |         dl.n_chars
        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (token) CROSS JOIN st)""".stripMargin
 

@@ -356,6 +356,16 @@ object Relational {
       .orderBy($"band")
   }
 
+  /** The j184/j185 oracles' discounted revenue over lineitem ⋈ orders ⋈
+    * customer, before the query's own joins and filters. */
+  private val RevenueSql =
+    """CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
+      |  (1 - CAST(l.l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE)
+      |  AS revenue
+      |FROM 'lineitem.parquet' l
+      |JOIN 'orders.parquet' o ON l.l_orderkey = o.o_orderkey
+      |JOIN 'customer.parquet' c ON o.o_custkey = c.c_custkey""".stripMargin
+
   /** j184_shipping_priority — the TPC-H Q3 composite shape: segment-
     * filtered customers × date-bounded orders × post-date lineitems,
     * top-10 orders by discounted revenue. Declared exactly as written —
@@ -468,33 +478,23 @@ object Relational {
         |         AS view
         |FROM 'events.parquet' GROUP BY 1 ORDER BY 1""".stripMargin,
     "j184_shipping_priority" ->
-      """SELECT l.l_orderkey AS o_orderkey,
-        |       strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-        |       CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-        |         (1 - CAST(l.l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE)
-        |         AS revenue
-        |FROM 'lineitem.parquet' l
-        |JOIN 'orders.parquet' o ON l.l_orderkey = o.o_orderkey
-        |JOIN 'customer.parquet' c ON o.o_custkey = c.c_custkey
-        |WHERE c.c_mktsegment = 'BUILDING'
-        |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l.l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY 1, 2
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
+      s"""SELECT l.l_orderkey AS o_orderkey,
+         |       strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
+         |       $RevenueSql
+         |WHERE c.c_mktsegment = 'BUILDING'
+         |  AND o.o_orderdate < TIMESTAMP '1998-01-01'
+         |  AND l.l_shipdate > TIMESTAMP '1998-01-01'
+         |GROUP BY 1, 2
+         |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
     "j185_local_volume" ->
-      """SELECT n.n_name,
-        |       CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)) *
-        |         (1 - CAST(l.l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE)
-        |         AS revenue
-        |FROM 'lineitem.parquet' l
-        |JOIN 'orders.parquet' o ON l.l_orderkey = o.o_orderkey
-        |JOIN 'customer.parquet' c ON o.o_custkey = c.c_custkey
-        |JOIN 'supplier.parquet' s ON l.l_suppkey = s.s_suppkey
-        |  AND c.c_nationkey = s.s_nationkey
-        |JOIN 'nation.parquet' n ON s.s_nationkey = n.n_nationkey
-        |JOIN 'region.parquet' r ON n.n_regionkey = r.r_regionkey
-        |WHERE r.r_name = 'ASIA'
-        |GROUP BY 1 ORDER BY revenue DESC, n_name ASC""".stripMargin,
+      s"""SELECT n.n_name,
+         |       $RevenueSql
+         |JOIN 'supplier.parquet' s ON l.l_suppkey = s.s_suppkey
+         |  AND c.c_nationkey = s.s_nationkey
+         |JOIN 'nation.parquet' n ON s.s_nationkey = n.n_nationkey
+         |JOIN 'region.parquet' r ON n.n_regionkey = r.r_regionkey
+         |WHERE r.r_name = 'ASIA'
+         |GROUP BY 1 ORDER BY revenue DESC, n_name ASC""".stripMargin,
     "b1_project" ->
       """SELECT c_custkey,
         |concat_ws('#', 'cust', c_custkey) AS row_id,

@@ -1186,30 +1186,22 @@ object SearchOps {
         |       round(CAST(sum(cents) AS BIGINT) / 100.0, 2) AS sum_value
         |FROM b GROUP BY 1 ORDER BY range_key""".stripMargin,
     "j70_boosting_query" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token IN ('spark', 'slow') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         CASE WHEN tf.token = 'spark' THEN
-        |           ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |             (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-        |         ELSE 0.0 END AS tscore,
-        |         CASE WHEN tf.token = 'slow' THEN 1 ELSE 0 END AS neg
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS pos,
-        |               max(neg) AS neg
-        |        FROM sc GROUP BY 1 HAVING list_sum(list_sort(list(tscore))) > 0.0)
-        |SELECT doc_id,
-        |       round(pos * CASE WHEN neg = 1 THEN 0.5 ELSE 1.0 END, 6) AS score,
-        |       CAST(neg AS INT) AS demoted
-        |FROM agg
-        |ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
+      s"""WITH ${TextOps.bm25InputsSql("IN ('spark', 'slow')")},
+         |sc AS (SELECT tf.doc_id,
+         |         CASE WHEN tf.token = 'spark' THEN
+         |           ${TextOps.Bm25TermSql}
+         |         ELSE 0.0 END AS tscore,
+         |         CASE WHEN tf.token = 'slow' THEN 1 ELSE 0 END AS neg
+         |       FROM tf JOIN dl USING (doc_id)
+         |            JOIN df USING (token) CROSS JOIN st),
+         |agg AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS pos,
+         |               max(neg) AS neg
+         |        FROM sc GROUP BY 1 HAVING list_sum(list_sort(list(tscore))) > 0.0)
+         |SELECT doc_id,
+         |       round(pos * CASE WHEN neg = 1 THEN 0.5 ELSE 1.0 END, 6) AS score,
+         |       CAST(neg AS INT) AS demoted
+         |FROM agg
+         |ORDER BY score DESC, doc_id ASC LIMIT 15""".stripMargin,
     "j69_boxplot" ->
       """WITH b AS (SELECT event_type,
         |             round(min(value), 6) AS min_v,
@@ -1244,24 +1236,15 @@ object SearchOps {
         |SELECT probe, floor(100.0 * n_le / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS pct_rank
         |FROM u ORDER BY probe""".stripMargin,
     "j58_pipeline_agg" ->
-      """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, event_type
-        |           FROM 'events.parquet'),
-        |bnd AS (SELECT min(day) AS d0, max(day) AS d1 FROM e),
-        |spine AS (SELECT CAST(unnest(generate_series(
-        |            CAST(d0 AS TIMESTAMP), CAST(d1 AS TIMESTAMP),
-        |            INTERVAL 1 DAY)) AS DATE) AS day FROM bnd),
-        |h AS (SELECT day, count(*) AS doc_count FROM e
-        |      WHERE event_type = 'purchase' GROUP BY 1),
-        |b AS (SELECT spine.day, coalesce(h.doc_count, 0) AS doc_count
-        |      FROM spine LEFT JOIN h USING (day))
-        |SELECT day, doc_count,
-        |       doc_count - lag(doc_count) OVER (ORDER BY day) AS deriv,
-        |       CAST(sum(doc_count) OVER (ORDER BY day
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-        |       floor(avg(doc_count) OVER (ORDER BY day
-        |         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) * 1000000 + 0.5)
-        |         / 1000000.0 AS mavg
-        |FROM b ORDER BY day""".stripMargin,
+      s"""WITH ${BucketOps.DailySql}
+         |SELECT day, doc_count,
+         |       doc_count - lag(doc_count) OVER (ORDER BY day) AS deriv,
+         |       CAST(sum(doc_count) OVER (ORDER BY day
+         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+         |       floor(avg(doc_count) OVER (ORDER BY day
+         |         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) * 1000000 + 0.5)
+         |         / 1000000.0 AS mavg
+         |FROM b ORDER BY day""".stripMargin,
     "j59_rare_terms" ->
       """WITH sh AS (
         |  SELECT DISTINCT doc_id, unnest(list_transform(
@@ -1309,29 +1292,27 @@ object SearchOps {
         |SELECT lang, count(*) AS doc_count, max(score) AS max_score
         |FROM samp GROUP BY 1 ORDER BY 1""".stripMargin,
     "j62_collapse" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token IN ('hash', 'join') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id, dl.source,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, source,
-        |               round(list_sum(list_sort(list(tscore))), 6) AS score
-        |        FROM sc GROUP BY 1, 2),
-        |coll AS (SELECT source, doc_id, score,
-        |           count(*) OVER (PARTITION BY source) AS n_hits,
-        |           row_number() OVER (PARTITION BY source
-        |                              ORDER BY score DESC, doc_id ASC) AS rn
-        |         FROM agg)
-        |SELECT source, doc_id, score, n_hits FROM coll WHERE rn = 1
-        |ORDER BY score DESC, source ASC LIMIT 10""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+         |              FROM 'documents.parquet'),
+         |dl AS (SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+         |       FROM 'documents.parquet'),
+         |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
+         |       WHERE token IN ('hash', 'join') GROUP BY 1, 2),
+         |${TextOps.Bm25StatsSql},
+         |sc AS (SELECT tf.doc_id, dl.source,
+         |         ${TextOps.Bm25TermSql} AS tscore
+         |       FROM tf JOIN dl USING (doc_id)
+         |            JOIN df USING (token) CROSS JOIN st),
+         |agg AS (SELECT doc_id, source,
+         |               round(list_sum(list_sort(list(tscore))), 6) AS score
+         |        FROM sc GROUP BY 1, 2),
+         |coll AS (SELECT source, doc_id, score,
+         |           count(*) OVER (PARTITION BY source) AS n_hits,
+         |           row_number() OVER (PARTITION BY source
+         |                              ORDER BY score DESC, doc_id ASC) AS rn
+         |         FROM agg)
+         |SELECT source, doc_id, score, n_hits FROM coll WHERE rn = 1
+         |ORDER BY score DESC, source ASC LIMIT 10""".stripMargin,
     "j63_completion_suggest" ->
       """WITH v AS (SELECT token, count(*) AS freq
         |           FROM (SELECT unnest(string_split(text, ' ')) AS token
@@ -1456,27 +1437,25 @@ object SearchOps {
         |FROM m CROSS JOIN tot JOIN ex USING (token)
         |ORDER BY m.merged_count DESC, m.token ASC LIMIT 5""".stripMargin,
     "j46_rescore" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |cand AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS p1 FROM toks
-        |         WHERE token = 'spark' GROUP BY 1
-        |         ORDER BY p1 DESC, doc_id ASC LIMIT 50),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id, cand.p1,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN cand USING (doc_id) JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, max(p1) AS p1,
-        |               list_sum(list_sort(list(tscore))) AS bm25
-        |        FROM sc GROUP BY 1)
-        |SELECT doc_id, round(p1 + 2.0 * bm25, 6) AS rescore, round(bm25, 6) AS bm25
-        |FROM agg ORDER BY round(p1 + 2.0 * bm25, 6) DESC, doc_id ASC LIMIT 10""".stripMargin,
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+         |              FROM 'documents.parquet'),
+         |cand AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS p1 FROM toks
+         |         WHERE token = 'spark' GROUP BY 1
+         |         ORDER BY p1 DESC, doc_id ASC LIMIT 50),
+         |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+         |       FROM 'documents.parquet'),
+         |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
+         |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
+         |${TextOps.Bm25StatsSql},
+         |sc AS (SELECT tf.doc_id, cand.p1,
+         |         ${TextOps.Bm25TermSql} AS tscore
+         |       FROM tf JOIN cand USING (doc_id) JOIN dl USING (doc_id)
+         |            JOIN df USING (token) CROSS JOIN st),
+         |agg AS (SELECT doc_id, max(p1) AS p1,
+         |               list_sum(list_sort(list(tscore))) AS bm25
+         |        FROM sc GROUP BY 1)
+         |SELECT doc_id, round(p1 + 2.0 * bm25, 6) AS rescore, round(bm25, 6) AS bm25
+         |FROM agg ORDER BY round(p1 + 2.0 * bm25, 6) DESC, doc_id ASC LIMIT 10""".stripMargin,
     "j47_date_histogram" ->
       """WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |             event_type, value, user_id
@@ -1507,24 +1486,12 @@ object SearchOps {
         |  PARTITION BY input ORDER BY dist ASC, freq DESC, suggestion ASC) <= 3
         |ORDER BY input ASC, dist ASC, freq DESC, suggestion ASC""".stripMargin,
     "j51_bool_msm" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |       FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
-        |       WHERE token IN ('spark', 'join', 'vector', 'slow') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id)
-        |            JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, count(*) AS n_matched,
-        |               list_sum(list_sort(list(tscore))) AS sc
-        |        FROM sc GROUP BY 1 HAVING count(*) >= 2)
-        |SELECT doc_id, n_matched, round(sc, 6) AS score
-        |FROM agg ORDER BY round(sc, 6) DESC, doc_id ASC LIMIT 15""".stripMargin,
+      s"""WITH ${TextOps.bm25TokensSql("IN ('spark', 'join', 'vector', 'slow')")},
+         |agg AS (SELECT doc_id, count(*) AS n_matched,
+         |               list_sum(list_sort(list(tscore))) AS sc
+         |        FROM sc GROUP BY 1 HAVING count(*) >= 2)
+         |SELECT doc_id, n_matched, round(sc, 6) AS score
+         |FROM agg ORDER BY round(sc, 6) DESC, doc_id ASC LIMIT 15""".stripMargin,
     "j42_decay_rank" ->
       """WITH e AS (SELECT event_id, event_type, value,
         |             CAST(1706659200000000 - epoch_us(CAST(ts AS TIMESTAMP)) AS DOUBLE)

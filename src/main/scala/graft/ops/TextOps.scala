@@ -40,9 +40,18 @@ object TextOps {
     * TextOps/PipelineOps, streaming Sync) composes this fragment inside
     * its own transform, so an n-gram change (width, separator) cannot
     * silently diverge between the batch and streaming dedup paths. Only
-    * valid inside `transform(sequence(...), i -> ...)`. */
+    * valid inside `transform(sequence(...), i -> ...)`. The oracle side
+    * has one copy too: every dedup oracle interpolates [[ShingleSql]],
+    * so a change to the n-gram touches this fragment and that one. */
   private[graft] def shingle3(toksCol: String): String =
     s"concat(element_at($toksCol, i), ' ', element_at($toksCol, i + 1), ' ', element_at($toksCol, i + 2))"
+
+  /** The span oracles' `t` (doc_id, t): each non-empty document's
+    * tokens. */
+  private[ops] val SpanTokensSql =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS t
+      |           FROM 'documents.parquet'
+      |           WHERE len(string_split(text, ' ')) >= 1)""".stripMargin
 
   /** The span family's one skeleton (j36/j84/j99/j125/j145/j159/j169/
     * j173): split each document's `text` into `toks`, add the `lets`
@@ -94,6 +103,39 @@ object TextOps {
     * small cap. Mirrored exactly in the DuckDB oracles (QUALIFY over a
     * window count), so capped semantics stay cross-engine identical. */
   private[ops] val ShingleDfCap = 1000L
+
+  /** The DuckDB oracles' form of [[shingles]]: one (doc_id, sh) row per
+    * distinct string shingle of each document of ≥ 3 tokens. */
+  private[ops] val ShingleSql =
+    """SELECT doc_id, unnest(list_distinct(list_transform(
+      |    generate_series(1, len(string_split(text, ' ')) - 2),
+      |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
+      |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3""".stripMargin
+
+  /** The oracles' form of [[pairStatsFrom]] as CTEs: `s0` (shingles), `s`
+    * (df-capped at [[ShingleDfCap]]), `n` (shingles per doc) and `p`
+    * (shared shingles per pair d1 < d2). */
+  private[ops] val PairStatsSql =
+    s"""s0 AS (
+       |  $ShingleSql),
+       |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= $ShingleDfCap),
+       |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
+       |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
+       |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
+       |      GROUP BY 1, 2)""".stripMargin
+
+  /** The oracles' near-dup pairs over [[PairStatsSql]]: (d1, d2, jaccard)
+    * with exact Jaccard ≥ 0.5, the jaccard rounded to 6 places. */
+  private[ops] val NearDupJaccardSql =
+    """SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 AS jaccard
+      |FROM p JOIN n na ON p.d1 = na.doc_id JOIN n nb ON p.d2 = nb.doc_id
+      |WHERE inter / (na.ns + nb.ns - inter) >= 0.5""".stripMargin
+
+  /** The oracles' near-dup pairs as the CTE `pr` (d1, d2). */
+  private[ops] val NearDupPairsSql =
+    """pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
+      |       JOIN n nb ON p.d2 = nb.doc_id
+      |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5)""".stripMargin
 
   /** Near-dup pairs (d1 < d2, exact Jaccard ≥ 0.5) with the raw jac column
     * — shared by j2 (pair listing) and j21 (cluster assignment). The
@@ -401,6 +443,24 @@ object TextOps {
       .orderBy($"cluster_id")
   }
 
+  /** The oracles' near-dup pairs (`pr`) and their transitive closure
+    * (`e`, `reach`) — the recursive stand-in for [[connectedComponents]];
+    * needs WITH RECURSIVE. */
+  private[ops] val ReachSql =
+    s"""$NearDupPairsSql,
+       |e AS (SELECT d1 AS a, d2 AS b FROM pr UNION SELECT d2, d1 FROM pr),
+       |reach(a, b) AS (
+       |  SELECT a, b FROM e
+       |  UNION
+       |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)""".stripMargin
+
+  /** The oracles' j21 clusters as CTEs through `cl` (doc_id, cluster_id). */
+  private[ops] val ClusterSql =
+    s"""$PairStatsSql,
+       |$ReachSql,
+       |cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+       |       FROM reach GROUP BY a)""".stripMargin
+
   /** Connected components over an undirected pair list `(d1, d2)` of Long
     * node ids (the reusable core of j21): returns one `(node, label)` row
     * per node appearing in any pair, where label = the component's minimum
@@ -645,13 +705,58 @@ object TextOps {
   /** The BM25 per-(doc, term) score — Lucene's +1 idf variant with
     * k1=1.2, b=0.75 spelled as the merged literals (2.2 = k1+1,
     * 0.25 = 1−b) so Spark and DuckDB compute bit-identical doubles. ONE
-    * definition shared by j34 and the rescore phase (SearchOps.j46); the
-    * oracle SQL strings necessarily restate it — a constant change must
-    * touch those two strings and nothing else. */
+    * definition shared by j34 and the rescore phase (SearchOps.j46);
+    * [[Bm25TermSql]] is its one DuckDB form. */
   private[graft] def bm25Tscore(tf: Column, df: Column, dl: Column,
       nDocs: Column, avgdl: Column): Column =
     log(lit(1.0) + (nDocs - df + 0.5) / (df + 0.5)) *
       (tf * 2.2) / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl / avgdl))
+
+  /** The oracles' form of [[bm25Tscore]] over CTEs `tf`, `dl`, `df` and
+    * `st`. */
+  private[ops] val Bm25TermSql =
+    """ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
+      |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))""".stripMargin
+
+  /** The oracles' BM25 corpus statistics over `tf` (doc_id, token, tf) and
+    * `dl` (doc_id, dl): `df` and `st` (n_docs, avgdl). */
+  private[ops] val Bm25StatsSql =
+    """df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+      |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl)""".stripMargin
+
+  /** The oracles' form of [[bm25Frames]] for the ('spark', 'vector',
+    * 'dup') query: `dl` (doc length), `tf`, [[Bm25StatsSql]] and `sc`
+    * (doc_id, tscore). */
+  private[ops] val Bm25Sql =
+    s"""dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+       |            FROM 'documents.parquet'),
+       |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM (
+       |         SELECT doc_id, unnest(string_split(text, ' ')) AS token
+       |         FROM 'documents.parquet')
+       |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
+       |$Bm25StatsSql,
+       |sc AS (SELECT tf.doc_id,
+       |         $Bm25TermSql AS tscore
+       |       FROM tf JOIN dl USING (doc_id) JOIN df USING (token) CROSS JOIN st)""".stripMargin
+
+  /** The oracles' BM25 inputs over a `toks` CTE, for the tokens where
+    * `token <pred>`: `toks`, `dl`, `tf` and [[Bm25StatsSql]]. */
+  private[ops] def bm25InputsSql(pred: String): String =
+    s"""toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+       |              FROM 'documents.parquet'),
+       |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
+       |       FROM 'documents.parquet'),
+       |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM toks
+       |       WHERE token $pred GROUP BY 1, 2),
+       |$Bm25StatsSql""".stripMargin
+
+  /** [[Bm25Sql]] over [[bm25InputsSql]]. */
+  private[ops] def bm25TokensSql(pred: String): String =
+    s"""${bm25InputsSql(pred)},
+       |sc AS (SELECT tf.doc_id,
+       |         $Bm25TermSql AS tscore
+       |       FROM tf JOIN dl USING (doc_id)
+       |            JOIN df USING (token) CROSS JOIN st)""".stripMargin
 
   /** j35_fuzzy_search — the ES `fuzziness` capability: expand each query
     * term to the vocabulary tokens within edit distance 1 (classic
@@ -692,6 +797,18 @@ object TextOps {
           |  i -> i < size(toks) AND element_at(toks, i + 1) = 'join'))""".stripMargin,
         "n_tokens" -> "size(toks)"),
       keep = "n_matches >= 1")
+
+  /** The oracles' JLH significance (j37/j108): the top 15 tokens of a
+    * CTE `st` (token, bg, fg) by JLH score. */
+  private[ops] val JlhTopSql =
+    """tot AS (SELECT sum(bg) AS bg_tot, sum(fg) AS fg_tot FROM st)
+      |SELECT token, fg, bg,
+      |  floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 AS jlh
+      |FROM st CROSS JOIN tot
+      |WHERE fg > 0 AND fg / fg_tot > bg / bg_tot
+      |ORDER BY floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 DESC,
+      |         token ASC
+      |LIMIT 15""".stripMargin
 
   /** j37_significant_terms — ES `significant_terms`: tokens
     * overrepresented in a foreground slice (lang = 'zh') relative to the
@@ -753,54 +870,31 @@ object TextOps {
         |QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) = 1
         |ORDER BY doc_id""".stripMargin,
     "j2_dedup_near_jaccard" ->
-      """WITH s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT d1, d2, floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 AS jaccard
-        |FROM p JOIN n na ON p.d1 = na.doc_id JOIN n nb ON p.d2 = nb.doc_id
-        |WHERE inter / (na.ns + nb.ns - inter) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
+      s"""WITH $PairStatsSql
+         |$NearDupJaccardSql
+         |ORDER BY d1, d2""".stripMargin,
     "j127_containment_dedup" ->
-      """WITH s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2)
-        |SELECT d1, d2,
-        |       floor(CAST(inter AS DOUBLE) / CAST(least(na.ns, nb.ns) AS DOUBLE)
-        |             * 1000000 + 0.5) / 1000000.0 AS containment,
-        |       floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 AS jaccard,
-        |       inter / (na.ns + nb.ns - inter) >= 0.5 AS jaccard_visible
-        |FROM p JOIN n na ON p.d1 = na.doc_id JOIN n nb ON p.d2 = nb.doc_id
-        |WHERE CAST(inter AS DOUBLE) / CAST(least(na.ns, nb.ns) AS DOUBLE) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
+      s"""WITH $PairStatsSql
+         |SELECT d1, d2,
+         |       floor(CAST(inter AS DOUBLE) / CAST(least(na.ns, nb.ns) AS DOUBLE)
+         |             * 1000000 + 0.5) / 1000000.0 AS containment,
+         |       floor(inter / (na.ns + nb.ns - inter) * 1000000 + 0.5) / 1000000.0 AS jaccard,
+         |       inter / (na.ns + nb.ns - inter) >= 0.5 AS jaccard_visible
+         |FROM p JOIN n na ON p.d1 = na.doc_id JOIN n nb ON p.d2 = nb.doc_id
+         |WHERE CAST(inter AS DOUBLE) / CAST(least(na.ns, nb.ns) AS DOUBLE) >= 0.8
+         |ORDER BY d1, d2""".stripMargin,
     "j130_shingle_novelty" ->
-      """WITH s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s0 GROUP BY 1),
-        |fs AS (SELECT sh, min(doc_id) AS doc_id FROM s0 GROUP BY 1),
-        |nv AS (SELECT doc_id, count(*) AS n_novel FROM fs GROUP BY 1)
-        |SELECT n.doc_id, n.ns,
-        |       CAST(coalesce(nv.n_novel, 0) AS BIGINT) AS n_novel,
-        |       floor(CAST(coalesce(nv.n_novel, 0) AS DOUBLE)
-        |             / CAST(n.ns AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS novelty
-        |FROM n LEFT JOIN nv USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH s0 AS (
+         |  $ShingleSql),
+         |n AS (SELECT doc_id, count(*) AS ns FROM s0 GROUP BY 1),
+         |fs AS (SELECT sh, min(doc_id) AS doc_id FROM s0 GROUP BY 1),
+         |nv AS (SELECT doc_id, count(*) AS n_novel FROM fs GROUP BY 1)
+         |SELECT n.doc_id, n.ns,
+         |       CAST(coalesce(nv.n_novel, 0) AS BIGINT) AS n_novel,
+         |       floor(CAST(coalesce(nv.n_novel, 0) AS DOUBLE)
+         |             / CAST(n.ns AS DOUBLE) * 1000000 + 0.5) / 1000000.0 AS novelty
+         |FROM n LEFT JOIN nv USING (doc_id)
+         |ORDER BY doc_id""".stripMargin,
     "j55_sorted_neighbor_dedup" ->
       """WITH k AS (
         |  SELECT doc_id, text, substr(text, 1, 12) AS block,
@@ -824,113 +918,41 @@ object TextOps {
         |SELECT d1, d2, floor(jac * 1000000 + 0.5) / 1000000.0 AS jaccard FROM pairs
         |WHERE jac >= 0.5 ORDER BY d1, d2""".stripMargin,
     "j21_dedup_clusters" ->
-      """WITH RECURSIVE s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
-        |       JOIN n nb ON p.d2 = nb.doc_id
-        |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
-        |e AS (SELECT d1 AS a, d2 AS b FROM pr UNION SELECT d2, d1 FROM pr),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM e
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
-        |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-        |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE $PairStatsSql,
+         |$ReachSql
+         |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
+         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
     "j138_dedup_keep_best" ->
-      """WITH RECURSIVE s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
-        |       JOIN n nb ON p.d2 = nb.doc_id
-        |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
-        |e AS (SELECT d1 AS a, d2 AS b FROM pr UNION SELECT d2, d1 FROM pr),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM e
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-        |cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-        |       FROM reach GROUP BY a),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks, n_chars
-        |      FROM 'documents.parquet'),
-        |ql AS (SELECT doc_id,
-        |         floor((-3.0 + 0.01 * len(toks)
-        |           + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
-        |           + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
-        |           - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
-        |                    / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
-        |           / 1000000.0 AS q
-        |       FROM t),
-        |rk AS (SELECT cl.cluster_id, cl.doc_id, ql.q,
-        |         row_number() OVER (PARTITION BY cl.cluster_id
-        |           ORDER BY ql.q DESC, cl.doc_id ASC) AS rk
-        |       FROM cl JOIN ql USING (doc_id))
-        |SELECT cluster_id, count(*) AS n_members,
-        |       CAST(max(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS kept_doc_id,
-        |       max(CASE WHEN rk = 1 THEN q END) AS kept_quality,
-        |       CAST(count(*) - 1 AS BIGINT) AS n_dropped
-        |FROM rk GROUP BY 1 ORDER BY cluster_id""".stripMargin,
+      s"""WITH RECURSIVE $ClusterSql,
+         |${CurationOps.QualityLogitSql},
+         |rk AS (SELECT cl.cluster_id, cl.doc_id, ql.q,
+         |         row_number() OVER (PARTITION BY cl.cluster_id
+         |           ORDER BY ql.q DESC, cl.doc_id ASC) AS rk
+         |       FROM cl JOIN ql USING (doc_id))
+         |SELECT cluster_id, count(*) AS n_members,
+         |       CAST(max(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS kept_doc_id,
+         |       max(CASE WHEN rk = 1 THEN q END) AS kept_quality,
+         |       CAST(count(*) - 1 AS BIGINT) AS n_dropped
+         |FROM rk GROUP BY 1 ORDER BY cluster_id""".stripMargin,
     "j182_preference_pairs" ->
-      """WITH RECURSIVE s0 AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, len(string_split(text, ' ')) - 2),
-        |    i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1] || ' ' || string_split(text, ' ')[i+2]))) AS sh
-        |  FROM 'documents.parquet' WHERE len(string_split(text, ' ')) >= 3),
-        |s AS (SELECT doc_id, sh FROM s0 QUALIFY count(*) OVER (PARTITION BY sh) <= 1000),
-        |n AS (SELECT doc_id, count(*) AS ns FROM s GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS inter
-        |      FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        |      GROUP BY 1, 2),
-        |pr AS (SELECT d1, d2 FROM p JOIN n na ON p.d1 = na.doc_id
-        |       JOIN n nb ON p.d2 = nb.doc_id
-        |       WHERE inter / (na.ns + nb.ns - inter) >= 0.5),
-        |e AS (SELECT d1 AS a, d2 AS b FROM pr UNION SELECT d2, d1 FROM pr),
-        |reach(a, b) AS (
-        |  SELECT a, b FROM e
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-        |cl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster_id
-        |       FROM reach GROUP BY a),
-        |t AS (SELECT doc_id, string_split(text, ' ') AS toks, n_chars
-        |      FROM 'documents.parquet'),
-        |ql AS (SELECT doc_id,
-        |         floor((-3.0 + 0.01 * len(toks)
-        |           + 4.0 * (len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE))
-        |           + 0.5 * ((n_chars - len(toks) + 1) / CAST(len(toks) AS DOUBLE))
-        |           - 6.0 * (len(list_filter(toks, x -> x IN ('a', 'the')))
-        |                    / CAST(len(toks) AS DOUBLE))) * 1000000 + 0.5)
-        |           / 1000000.0 AS q
-        |       FROM t),
-        |rk AS (SELECT cl.cluster_id, cl.doc_id, ql.q,
-        |         row_number() OVER (PARTITION BY cl.cluster_id
-        |           ORDER BY ql.q DESC, cl.doc_id ASC) AS rk1,
-        |         row_number() OVER (PARTITION BY cl.cluster_id
-        |           ORDER BY ql.q ASC, cl.doc_id DESC) AS rk2
-        |       FROM cl JOIN ql USING (doc_id))
-        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-        |       CAST(max(CASE WHEN rk1 = 1 THEN doc_id END) AS BIGINT)
-        |         AS chosen_doc,
-        |       CAST(max(CASE WHEN rk2 = 1 THEN doc_id END) AS BIGINT)
-        |         AS rejected_doc,
-        |       round(max(CASE WHEN rk1 = 1 THEN q END), 6) AS chosen_q,
-        |       round(max(CASE WHEN rk2 = 1 THEN q END), 6) AS rejected_q,
-        |       round(max(CASE WHEN rk1 = 1 THEN q END) -
-        |             max(CASE WHEN rk2 = 1 THEN q END), 6) AS gap
-        |FROM rk GROUP BY 1 ORDER BY cluster_id""".stripMargin,
+      s"""WITH RECURSIVE $ClusterSql,
+         |${CurationOps.QualityLogitSql},
+         |rk AS (SELECT cl.cluster_id, cl.doc_id, ql.q,
+         |         row_number() OVER (PARTITION BY cl.cluster_id
+         |           ORDER BY ql.q DESC, cl.doc_id ASC) AS rk1,
+         |         row_number() OVER (PARTITION BY cl.cluster_id
+         |           ORDER BY ql.q ASC, cl.doc_id DESC) AS rk2
+         |       FROM cl JOIN ql USING (doc_id))
+         |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
+         |       CAST(max(CASE WHEN rk1 = 1 THEN doc_id END) AS BIGINT)
+         |         AS chosen_doc,
+         |       CAST(max(CASE WHEN rk2 = 1 THEN doc_id END) AS BIGINT)
+         |         AS rejected_doc,
+         |       round(max(CASE WHEN rk1 = 1 THEN q END), 6) AS chosen_q,
+         |       round(max(CASE WHEN rk2 = 1 THEN q END), 6) AS rejected_q,
+         |       round(max(CASE WHEN rk1 = 1 THEN q END) -
+         |             max(CASE WHEN rk2 = 1 THEN q END), 6) AS gap
+         |FROM rk GROUP BY 1 ORDER BY cluster_id""".stripMargin,
     "j6_wordcount" ->
       """SELECT token, count(*) AS n FROM (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM 'documents.parquet')
@@ -956,23 +978,12 @@ object TextOps {
         |count(*) FILTER (WHERE lang = 'zh') AS zh
         |FROM 'documents.parquet' GROUP BY source ORDER BY source""".stripMargin,
     "j34_bm25_search" ->
-      """WITH dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS DOUBLE) AS dl
-        |            FROM 'documents.parquet'),
-        |tf AS (SELECT doc_id, token, CAST(count(*) AS DOUBLE) AS tf FROM (
-        |         SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |         FROM 'documents.parquet')
-        |       WHERE token IN ('spark', 'vector', 'dup') GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-        |sc AS (SELECT tf.doc_id,
-        |         ln(1.0 + (st.n_docs - df.df + 0.5) / (df.df + 0.5)) *
-        |           (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl)) AS tscore
-        |       FROM tf JOIN dl USING (doc_id) JOIN df USING (token) CROSS JOIN st),
-        |agg AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS s,
-        |               count(*) AS n_terms
-        |        FROM sc GROUP BY 1)
-        |SELECT doc_id, round(s, 6) AS bm25, n_terms
-        |FROM agg ORDER BY round(s, 6) DESC, doc_id ASC LIMIT 10""".stripMargin,
+      s"""WITH $Bm25Sql,
+         |agg AS (SELECT doc_id, list_sum(list_sort(list(tscore))) AS s,
+         |               count(*) AS n_terms
+         |        FROM sc GROUP BY 1)
+         |SELECT doc_id, round(s, 6) AS bm25, n_terms
+         |FROM agg ORDER BY round(s, 6) DESC, doc_id ASC LIMIT 10""".stripMargin,
     "j35_fuzzy_search" ->
       """WITH v AS (SELECT token, count(DISTINCT doc_id) AS df, count(*) AS n_occ
         |           FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
@@ -993,19 +1004,12 @@ object TextOps {
         |SELECT doc_id, n_matches, n_tokens FROM m
         |WHERE n_matches >= 1 ORDER BY doc_id""".stripMargin,
     "j37_significant_terms" ->
-      """WITH toks AS (SELECT lang, unnest(string_split(text, ' ')) AS token
-        |              FROM 'documents.parquet'),
-        |st AS (SELECT token, count(*) AS bg,
-        |              count(*) FILTER (WHERE lang = 'zh') AS fg
-        |       FROM toks GROUP BY 1),
-        |tot AS (SELECT sum(bg) AS bg_tot, sum(fg) AS fg_tot FROM st)
-        |SELECT token, fg, bg,
-        |  floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 AS jlh
-        |FROM st CROSS JOIN tot
-        |WHERE fg > 0 AND fg / fg_tot > bg / bg_tot
-        |ORDER BY floor((fg / fg_tot - bg / bg_tot) * ((fg / fg_tot) / (bg / bg_tot)) * 1000000 + 0.5) / 1000000.0 DESC,
-        |         token ASC
-        |LIMIT 15""".stripMargin,
+      s"""WITH toks AS (SELECT lang, unnest(string_split(text, ' ')) AS token
+         |              FROM 'documents.parquet'),
+         |st AS (SELECT token, count(*) AS bg,
+         |              count(*) FILTER (WHERE lang = 'zh') AS fg
+         |       FROM toks GROUP BY 1),
+         |$JlhTopSql""".stripMargin,
     "k1_scala_udf" ->
       """SELECT c_custkey,
         |regexp_replace(lower(c_name), '[^a-z0-9 ]', '', 'g') AS clean_name

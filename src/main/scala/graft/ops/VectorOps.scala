@@ -34,9 +34,11 @@ object VectorOps {
   private[graft] def cosCol = round(
     expr(sumAll) / (sqrt(expr(dotSelf)) * lit(8.0d)), 6)
 
-  private[graft] val cosSql =
-    """round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)))
-      | / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6)""".stripMargin.replace("\n", "")
+  /** The DuckDB form of [[cosCol]] over the vector column `v`. */
+  private[graft] def cosSqlOf(v: String): String =
+    s"""round(list_sum(list_transform($v, x -> CAST(x AS DOUBLE)))
+       | / (sqrt(list_sum(list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * 8.0), 6)""".stripMargin.replace("\n", "")
+  private[graft] val cosSql = cosSqlOf("embedding")
 
   /** j3_cosine_score — cosine of every embedding vs a fixed query vector. */
   def j3(s: SparkSession, d: String): DataFrame = {
@@ -151,6 +153,16 @@ object VectorOps {
     * shuffle carries |labels|×|probes| rows, never the corpus. Identical
     * left-to-right fold order in both engines makes the unrounded maxes
     * bit-equal; the final mean goes through the sorted fold. */
+  /** The oracles' cosine of each embedding `e.embedding` with a probe
+    * vector `p.pvec` (j123/j134). */
+  private val ProbeCosSql =
+    """list_sum(list_transform(generate_series(1, 64),
+      |  i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)))
+      |/ (sqrt(list_sum(list_transform(e.embedding,
+      |     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |   * sqrt(list_sum(list_transform(p.pvec,
+      |     x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
+
   /** Pairwise dot/norm expressions for a broadcast probe column `pvec`
     * beside the corpus `embedding` — shared by j123 (MaxSim) and j134
     * (hard negatives). Left-to-right fold order matches DuckDB list_sum. */
@@ -372,6 +384,28 @@ object VectorOps {
   }
 
   // ---------- j177 1-bit vector quantization + Hamming search ----------
+
+  /** The oracles' sign-bit codes of each embedding (j177/j278): `e`
+    * (vec_id, embedding, h1, h2), dims 1–32 and 33–64 as two bigints. */
+  private val SignBitsSql =
+    """e AS (SELECT vec_id, embedding,
+      |  list_sum(list_transform(generate_series(1, 32), i ->
+      |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
+      |         THEN CAST(1 AS BIGINT) << (32 - i) ELSE 0 END)) AS h1,
+      |  list_sum(list_transform(generate_series(33, 64), i ->
+      |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
+      |         THEN CAST(1 AS BIGINT) << (64 - i) ELSE 0 END)) AS h2
+      |  FROM 'embeddings.parquet')""".stripMargin
+
+  /** The oracles' full 64-dim cosine of `e.embedding` with a query
+    * vector `q.qe`. */
+  private val QueryCosSql =
+    """list_sum(list_transform(generate_series(1, 64), i ->
+      |  CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) /
+      |(sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+      |   CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) *
+      | sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+      |   CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))))""".stripMargin
 
   /** j177_bit_hamming — ES `dense_vector` `bit` quantization (the BBQ /
     * binary-quantization path): each 64-dim embedding packs to its SIGN
@@ -894,80 +928,68 @@ object VectorOps {
 
   val oracle: Map[String, String] = Map(
     "j278_bbq_rescore" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |  list_sum(list_transform(generate_series(1, 32), i ->
-        |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
-        |         THEN CAST(1 AS BIGINT) << (32 - i) ELSE 0 END)) AS h1,
-        |  list_sum(list_transform(generate_series(33, 64), i ->
-        |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
-        |         THEN CAST(1 AS BIGINT) << (64 - i) ELSE 0 END)) AS h2
-        |  FROM 'embeddings.parquet'),
-        |q AS (SELECT vec_id AS qid, embedding AS qe, h1 AS q1, h2 AS q2
-        |      FROM e ORDER BY vec_id LIMIT 5),
-        |sc AS (SELECT q.qid, e.vec_id, e.embedding, q.qe,
-        |         CAST(bit_count(xor(e.h1, q.q1)) +
-        |              bit_count(xor(e.h2, q.q2)) AS BIGINT) AS hamming
-        |       FROM e CROSS JOIN q),
-        |cand AS (SELECT * FROM sc
-        |         QUALIFY row_number() OVER (PARTITION BY qid
-        |           ORDER BY hamming ASC, vec_id ASC) <= 40),
-        |resc AS (SELECT qid, vec_id, hamming,
-        |           list_sum(list_transform(generate_series(1, 64), i ->
-        |             CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) /
-        |           (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |              CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) *
-        |            sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |              CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
-        |         FROM cand),
-        |top AS (SELECT qid, vec_id, hamming, cos,
-        |          row_number() OVER (PARTITION BY qid
-        |            ORDER BY round(cos, 6) DESC, vec_id ASC) AS rank
-        |        FROM resc QUALIFY rank <= 10),
-        |ex AS (SELECT qid AS xq, vec_id AS xv FROM (
-        |         SELECT qid, vec_id,
-        |           list_sum(list_transform(generate_series(1, 64), i ->
-        |             CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) /
-        |           (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |              CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) *
-        |            sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |              CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
-        |         FROM sc)
-        |       QUALIFY row_number() OVER (PARTITION BY qid
-        |         ORDER BY round(cos, 6) DESC, vec_id ASC) <= 10)
-        |SELECT t.qid, CAST(t.rank AS INT) AS rank, t.vec_id, t.hamming,
-        |       round(t.cos, 6) AS cos,
-        |       (ex.xv IS NOT NULL) AS in_exact_top10
-        |FROM top t LEFT JOIN ex ON t.qid = ex.xq AND t.vec_id = ex.xv
-        |ORDER BY t.qid, t.rank""".stripMargin,
+      s"""WITH $SignBitsSql,
+         |q AS (SELECT vec_id AS qid, embedding AS qe, h1 AS q1, h2 AS q2
+         |      FROM e ORDER BY vec_id LIMIT 5),
+         |sc AS (SELECT q.qid, e.vec_id, e.embedding, q.qe,
+         |         CAST(bit_count(xor(e.h1, q.q1)) +
+         |              bit_count(xor(e.h2, q.q2)) AS BIGINT) AS hamming
+         |       FROM e CROSS JOIN q),
+         |cand AS (SELECT * FROM sc
+         |         QUALIFY row_number() OVER (PARTITION BY qid
+         |           ORDER BY hamming ASC, vec_id ASC) <= 40),
+         |resc AS (SELECT qid, vec_id, hamming,
+         |           list_sum(list_transform(generate_series(1, 64), i ->
+         |             CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) /
+         |           (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+         |              CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) *
+         |            sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+         |              CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
+         |         FROM cand),
+         |top AS (SELECT qid, vec_id, hamming, cos,
+         |          row_number() OVER (PARTITION BY qid
+         |            ORDER BY round(cos, 6) DESC, vec_id ASC) AS rank
+         |        FROM resc QUALIFY rank <= 10),
+         |ex AS (SELECT qid AS xq, vec_id AS xv FROM (
+         |         SELECT qid, vec_id,
+         |           list_sum(list_transform(generate_series(1, 64), i ->
+         |             CAST(embedding[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))) /
+         |           (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+         |              CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) *
+         |            sqrt(list_sum(list_transform(generate_series(1, 64), i ->
+         |              CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE))))) AS cos
+         |         FROM sc)
+         |       QUALIFY row_number() OVER (PARTITION BY qid
+         |         ORDER BY round(cos, 6) DESC, vec_id ASC) <= 10)
+         |SELECT t.qid, CAST(t.rank AS INT) AS rank, t.vec_id, t.hamming,
+         |       round(t.cos, 6) AS cos,
+         |       (ex.xv IS NOT NULL) AS in_exact_top10
+         |FROM top t LEFT JOIN ex ON t.qid = ex.xq AND t.vec_id = ex.xv
+         |ORDER BY t.qid, t.rank""".stripMargin,
     "j207_matryoshka_eval" ->
-      """WITH e AS (SELECT vec_id, embedding FROM 'embeddings.parquet'),
-        |q AS (SELECT embedding AS qe FROM e ORDER BY vec_id LIMIT 1),
-        |dims AS (SELECT unnest([8, 16, 32]) AS dim),
-        |sc AS (SELECT e.vec_id, dims.dim AS dim,
-        |         list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
-        |           CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) /
-        |         (sqrt(list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
-        |            CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) *
-        |          sqrt(list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
-        |            CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))))) AS cos_d,
-        |         list_sum(list_transform(generate_series(1, 64), i ->
-        |           CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) /
-        |         (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |            CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) *
-        |          sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |            CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))))) AS cos_full
-        |       FROM e CROSS JOIN q CROSS JOIN dims),
-        |topd AS (SELECT dim, vec_id, cos_full FROM sc
-        |         QUALIFY row_number() OVER (PARTITION BY dim
-        |           ORDER BY round(cos_d, 6) DESC, vec_id ASC) <= 10),
-        |ex AS (SELECT vec_id FROM sc WHERE dim = 8
-        |       QUALIFY row_number() OVER
-        |         (ORDER BY round(cos_full, 6) DESC, vec_id ASC) <= 10)
-        |SELECT CAST(t.dim AS INT) AS dim,
-        |       round(CAST(count(e.vec_id) AS DOUBLE) / 10.0, 6) AS recall,
-        |       round(list_sum(list_sort(list(t.cos_full))) / 10.0, 6) AS mean_full_cos
-        |FROM topd t LEFT JOIN ex e ON t.vec_id = e.vec_id
-        |GROUP BY 1 ORDER BY dim""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, embedding FROM 'embeddings.parquet'),
+         |q AS (SELECT embedding AS qe FROM e ORDER BY vec_id LIMIT 1),
+         |dims AS (SELECT unnest([8, 16, 32]) AS dim),
+         |sc AS (SELECT e.vec_id, dims.dim AS dim,
+         |         list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
+         |           CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))) /
+         |         (sqrt(list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
+         |            CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) *
+         |          sqrt(list_sum(list_transform(generate_series(1, CAST(dims.dim AS BIGINT)), i ->
+         |            CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))))) AS cos_d,
+         |         $QueryCosSql AS cos_full
+         |       FROM e CROSS JOIN q CROSS JOIN dims),
+         |topd AS (SELECT dim, vec_id, cos_full FROM sc
+         |         QUALIFY row_number() OVER (PARTITION BY dim
+         |           ORDER BY round(cos_d, 6) DESC, vec_id ASC) <= 10),
+         |ex AS (SELECT vec_id FROM sc WHERE dim = 8
+         |       QUALIFY row_number() OVER
+         |         (ORDER BY round(cos_full, 6) DESC, vec_id ASC) <= 10)
+         |SELECT CAST(t.dim AS INT) AS dim,
+         |       round(CAST(count(e.vec_id) AS DOUBLE) / 10.0, 6) AS recall,
+         |       round(list_sum(list_sort(list(t.cos_full))) / 10.0, 6) AS mean_full_cos
+         |FROM topd t LEFT JOIN ex e ON t.vec_id = e.vec_id
+         |GROUP BY 1 ORDER BY dim""".stripMargin,
     "j205_pca_power" ->
       s"""WITH e2 AS (SELECT vec_id,
          |  list_transform(embedding,
@@ -1060,41 +1082,31 @@ object VectorOps {
          |         AS in_post
          |FROM pre ORDER BY rank""".stripMargin,
     "j123_maxsim" ->
-      """WITH probes AS (SELECT vec_id AS probe_id, embedding AS pvec
-        |                FROM 'embeddings.parquet' WHERE vec_id <= 3),
-        |pairs AS (SELECT e.label, p.probe_id,
-        |            list_sum(list_transform(generate_series(1, 64),
-        |              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)))
-        |            / (sqrt(list_sum(list_transform(e.embedding,
-        |                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |               * sqrt(list_sum(list_transform(p.pvec,
-        |                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos_pq
-        |          FROM 'embeddings.parquet' e CROSS JOIN probes p),
-        |mx AS (SELECT label, probe_id, max(cos_pq) AS mc
-        |       FROM pairs GROUP BY 1, 2)
-        |SELECT label,
-        |       round(list_sum(list_sort(list(mc))) / CAST(count(*) AS DOUBLE), 6)
-        |         AS maxsim
-        |FROM mx GROUP BY 1 ORDER BY label""".stripMargin,
+      s"""WITH probes AS (SELECT vec_id AS probe_id, embedding AS pvec
+         |                FROM 'embeddings.parquet' WHERE vec_id <= 3),
+         |pairs AS (SELECT e.label, p.probe_id,
+         |            $ProbeCosSql AS cos_pq
+         |          FROM 'embeddings.parquet' e CROSS JOIN probes p),
+         |mx AS (SELECT label, probe_id, max(cos_pq) AS mc
+         |       FROM pairs GROUP BY 1, 2)
+         |SELECT label,
+         |       round(list_sum(list_sort(list(mc))) / CAST(count(*) AS DOUBLE), 6)
+         |         AS maxsim
+         |FROM mx GROUP BY 1 ORDER BY label""".stripMargin,
     "j134_hard_negatives" ->
-      """WITH probes AS (SELECT vec_id AS probe_id, label AS probe_label,
-        |                       embedding AS pvec
-        |                FROM 'embeddings.parquet' WHERE vec_id < 8),
-        |cand AS (SELECT p.probe_id, e.vec_id, e.label,
-        |           round(list_sum(list_transform(generate_series(1, 64),
-        |             i -> CAST(e.embedding[i] AS DOUBLE) * CAST(p.pvec[i] AS DOUBLE)))
-        |           / (sqrt(list_sum(list_transform(e.embedding,
-        |                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |              * sqrt(list_sum(list_transform(p.pvec,
-        |                x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cos_pn
-        |         FROM 'embeddings.parquet' e CROSS JOIN probes p
-        |         WHERE e.label <> p.probe_label)
-        |SELECT probe_id, vec_id, label, cos_pn,
-        |       CAST(row_number() OVER (PARTITION BY probe_id
-        |         ORDER BY cos_pn DESC, vec_id ASC) AS BIGINT) AS rank
-        |FROM cand
-        |QUALIFY rank <= 2
-        |ORDER BY probe_id, rank""".stripMargin,
+      s"""WITH probes AS (SELECT vec_id AS probe_id, label AS probe_label,
+         |                       embedding AS pvec
+         |                FROM 'embeddings.parquet' WHERE vec_id < 8),
+         |cand AS (SELECT p.probe_id, e.vec_id, e.label,
+         |           round($ProbeCosSql, 6) AS cos_pn
+         |         FROM 'embeddings.parquet' e CROSS JOIN probes p
+         |         WHERE e.label <> p.probe_label)
+         |SELECT probe_id, vec_id, label, cos_pn,
+         |       CAST(row_number() OVER (PARTITION BY probe_id
+         |         ORDER BY cos_pn DESC, vec_id ASC) AS BIGINT) AS rank
+         |FROM cand
+         |QUALIFY rank <= 2
+         |ORDER BY probe_id, rank""".stripMargin,
     // the codebook fixpoint as a recursive CTE (r9 — j53's device): one
     // full Lloyd round per recursion step over ALL 16 blocks, emitted
     // while any (vec, block) changed code; final rd2/codebook rebuilt
@@ -1198,35 +1210,20 @@ object VectorOps {
         |FROM adc a JOIN ex ON a.vec_id = ex.vec_id
         |ORDER BY a.adc_raw ASC, a.vec_id ASC LIMIT 10""".stripMargin,
     "j177_bit_hamming" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |  list_sum(list_transform(generate_series(1, 32), i ->
-        |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
-        |         THEN CAST(1 AS BIGINT) << (32 - i) ELSE 0 END)) AS h1,
-        |  list_sum(list_transform(generate_series(33, 64), i ->
-        |    CASE WHEN CAST(embedding[i] AS DOUBLE) > 0
-        |         THEN CAST(1 AS BIGINT) << (64 - i) ELSE 0 END)) AS h2
-        |  FROM 'embeddings.parquet'),
-        |q AS (SELECT embedding AS qe, h1 AS q1, h2 AS q2 FROM e
-        |      ORDER BY vec_id LIMIT 1),
-        |sc AS (SELECT e.vec_id,
-        |         CAST(bit_count(xor(e.h1, q.q1)) +
-        |              bit_count(xor(e.h2, q.q2)) AS BIGINT) AS hamming,
-        |         list_sum(list_transform(generate_series(1, 64), i ->
-        |           CAST(e.embedding[i] AS DOUBLE) *
-        |           CAST(q.qe[i] AS DOUBLE))) /
-        |         (sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |            CAST(e.embedding[i] AS DOUBLE) *
-        |            CAST(e.embedding[i] AS DOUBLE)))) *
-        |          sqrt(list_sum(list_transform(generate_series(1, 64), i ->
-        |            CAST(q.qe[i] AS DOUBLE) *
-        |            CAST(q.qe[i] AS DOUBLE))))) AS cos_exact
-        |       FROM e CROSS JOIN q),
-        |xt AS (SELECT vec_id FROM sc
-        |       ORDER BY cos_exact DESC, vec_id ASC LIMIT 10)
-        |SELECT sc.vec_id, sc.hamming, round(sc.cos_exact, 6) AS cos_exact,
-        |       xt.vec_id IS NOT NULL AS in_exact_top10
-        |FROM sc LEFT JOIN xt ON sc.vec_id = xt.vec_id
-        |ORDER BY sc.hamming ASC, sc.vec_id ASC LIMIT 10""".stripMargin,
+      s"""WITH $SignBitsSql,
+         |q AS (SELECT embedding AS qe, h1 AS q1, h2 AS q2 FROM e
+         |      ORDER BY vec_id LIMIT 1),
+         |sc AS (SELECT e.vec_id,
+         |         CAST(bit_count(xor(e.h1, q.q1)) +
+         |              bit_count(xor(e.h2, q.q2)) AS BIGINT) AS hamming,
+         |         $QueryCosSql AS cos_exact
+         |       FROM e CROSS JOIN q),
+         |xt AS (SELECT vec_id FROM sc
+         |       ORDER BY cos_exact DESC, vec_id ASC LIMIT 10)
+         |SELECT sc.vec_id, sc.hamming, round(sc.cos_exact, 6) AS cos_exact,
+         |       xt.vec_id IS NOT NULL AS in_exact_top10
+         |FROM sc LEFT JOIN xt ON sc.vec_id = xt.vec_id
+         |ORDER BY sc.hamming ASC, sc.vec_id ASC LIMIT 10""".stripMargin,
     "j263_graph_beam_tuning" -> (graphAnnOraclePrefix + ",\n" +
       Seq(4, 12, 24).map(beamCtes(_, 4)).mkString(",\n") + ",\n" +
       """tr AS (SELECT vec_id FROM q ORDER BY cos_q DESC, vec_id LIMIT 10)
@@ -1267,35 +1264,29 @@ object VectorOps {
     * chains (one prefix, zero drift). A def, not a val: the oracle map
     * above initializes first (object val order). */
   private def graphAnnOraclePrefix: String =
-    """WITH n AS (SELECT count(*) AS n FROM 'embeddings.parquet'),
-      |pp AS (SELECT LEAST(31, GREATEST(4, CAST(min(k) AS INT))) AS p
-      |       FROM generate_series(0, 40) t(k), n WHERE (125::BIGINT << k) >= n.n),
-      |hp AS (SELECT k, list_transform(generate_series(1, 64), i ->
-      |      (((strpos('0123456789abcdef', substr(md5('hg:' || k || ':' || i), 1, 1)) - 1) * 4096 +
-      |        (strpos('0123456789abcdef', substr(md5('hg:' || k || ':' || i), 2, 1)) - 1) * 256 +
-      |        (strpos('0123456789abcdef', substr(md5('hg:' || k || ':' || i), 3, 1)) - 1) * 16 +
-      |        (strpos('0123456789abcdef', substr(md5('hg:' || k || ':' || i), 4, 1)) - 1)) / 65536.0) - 0.5) AS h
-      |    FROM generate_series(0, 61) t(k), pp WHERE k < 2 * pp.p),
-      |e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |      FROM 'embeddings.parquet'),
-      |nr AS (SELECT vec_id, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-      |q AS (SELECT e.vec_id, list_sum(e.v) / (nr.nrm * 8.0) AS cos_q
-      |      FROM e JOIN nr ON e.vec_id = nr.vec_id),
-      |dots AS (SELECT e.vec_id, hp.k,
-      |        list_sum(list_transform(generate_series(1, 64), i -> e.v[i] * hp.h[i])) AS dt
-      |        FROM e CROSS JOIN hp),
-      |sig AS (SELECT vec_id, k // p AS t,
-      |        CAST(sum(CASE WHEN dt >= 0 THEN CAST(power(2, k % p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bkt
-      |        FROM dots CROSS JOIN pp GROUP BY vec_id, k // p),
-      |adj AS (SELECT DISTINCT src, dst FROM (
-      |        SELECT a.t, a.vec_id AS src, b.vec_id AS dst,
-      |          list_sum(list_transform(generate_series(1, 64), i -> ea.v[i] * eb.v[i]))
-      |            / (na.nrm * nb.nrm) AS cos_ab
-      |        FROM sig a JOIN sig b ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id <> b.vec_id
-      |        JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-      |        JOIN nr na ON na.vec_id = a.vec_id JOIN nr nb ON nb.vec_id = b.vec_id
-      |        QUALIFY row_number() OVER (PARTITION BY a.t, a.vec_id
-      |                                   ORDER BY cos_ab DESC, b.vec_id) <= 4)),
-      |c0 AS (SELECT vec_id, cos_q FROM q WHERE vec_id % 16 = 0
-      |       ORDER BY cos_q DESC, vec_id LIMIT 1)""".stripMargin
+    s"""WITH n AS (SELECT count(*) AS n FROM 'embeddings.parquet'),
+       |pp AS (SELECT LEAST(31, GREATEST(4, CAST(min(k) AS INT))) AS p
+       |       FROM generate_series(0, 40) t(k), n WHERE (125::BIGINT << k) >= n.n),
+       |hp AS (SELECT k, list_transform(generate_series(1, 64), i ->
+       |      (${Hashing.duckNibble("md5('hg:' || k || ':' || i)")} / 65536.0) - 0.5) AS h
+       |    FROM generate_series(0, 61) t(k), pp WHERE k < 2 * pp.p),
+       |${PipelineOps.EmbeddingVecSql},
+       |nr AS (SELECT vec_id, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
+       |q AS (SELECT e.vec_id, list_sum(e.v) / (nr.nrm * 8.0) AS cos_q
+       |      FROM e JOIN nr ON e.vec_id = nr.vec_id),
+       |${PipelineOps.HyperplaneDotsSql},
+       |sig AS (SELECT vec_id, k // p AS t,
+       |        CAST(sum(CASE WHEN dt >= 0 THEN CAST(power(2, k % p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bkt
+       |        FROM dots CROSS JOIN pp GROUP BY vec_id, k // p),
+       |adj AS (SELECT DISTINCT src, dst FROM (
+       |        SELECT a.t, a.vec_id AS src, b.vec_id AS dst,
+       |          list_sum(list_transform(generate_series(1, 64), i -> ea.v[i] * eb.v[i]))
+       |            / (na.nrm * nb.nrm) AS cos_ab
+       |        FROM sig a JOIN sig b ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id <> b.vec_id
+       |        JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
+       |        JOIN nr na ON na.vec_id = a.vec_id JOIN nr nb ON nb.vec_id = b.vec_id
+       |        QUALIFY row_number() OVER (PARTITION BY a.t, a.vec_id
+       |                                   ORDER BY cos_ab DESC, b.vec_id) <= 4)),
+       |c0 AS (SELECT vec_id, cos_q FROM q WHERE vec_id % 16 = 0
+       |       ORDER BY cos_q DESC, vec_id LIMIT 1)""".stripMargin
 }

@@ -117,17 +117,8 @@ object Sync {
     * This is the streaming form of the c9 range join (enrich a change with
     * its recent counterpart on the other store). */
   def intervalJoin(left: DataFrame, right: DataFrame,
-      windowMinutes: Int = 60, lateness: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", lateness)
-      .select(col("key"), col("ts").as("l_ts"), col("uid").as("l_uid"))
-    val r = right.withWatermark("ts", lateness)
-      .select(col("key").as("r_key"), col("ts").as("r_ts"), col("uid").as("r_uid"))
-    l.join(r,
-      col("key") === col("r_key") &&
-        col("r_ts") >= col("l_ts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
-        col("r_ts") <= col("l_ts"))
-      .select(col("key"), col("l_ts"), col("l_uid"), col("r_ts"), col("r_uid"))
-  }
+      windowMinutes: Int = 60, lateness: String = "10 minutes"): DataFrame =
+    intervalJoinOf(left, right, windowMinutes, lateness, "inner")
 
   /** i15 — the LEFT OUTER twin of [[intervalJoin]]: unmatched left rows
     * ARE emitted, but only once the right-side watermark proves no
@@ -140,7 +131,14 @@ object Sync {
     * side is bounded by the interval + lateness horizon, keyed in the
     * state store — same bound as the inner form. */
   def intervalJoinOuter(left: DataFrame, right: DataFrame,
-      windowMinutes: Int = 60, lateness: String = "10 minutes"): DataFrame = {
+      windowMinutes: Int = 60, lateness: String = "10 minutes"): DataFrame =
+    intervalJoinOf(left, right, windowMinutes, lateness, "left_outer")
+
+  /** The i9/i15 body: both sides watermarked by `lateness`, right rows
+    * matched within `windowMinutes` at or before the left row, joined by
+    * `joinType`. */
+  private def intervalJoinOf(left: DataFrame, right: DataFrame,
+      windowMinutes: Int, lateness: String, joinType: String): DataFrame = {
     val l = left.withWatermark("ts", lateness)
       .select(col("key"), col("ts").as("l_ts"), col("uid").as("l_uid"))
     val r = right.withWatermark("ts", lateness)
@@ -149,7 +147,7 @@ object Sync {
       col("key") === col("r_key") &&
         col("r_ts") >= col("l_ts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
         col("r_ts") <= col("l_ts"),
-      "left_outer")
+      joinType)
       .select(col("key"), col("l_ts"), col("l_uid"), col("r_ts"), col("r_uid"))
   }
 
@@ -361,12 +359,7 @@ object Sync {
   }
 
   /** j12's 4×2 banding over m0..m7 as (band, sig) rows. */
-  private val BandRows =
-    """explode(array(
-      |  named_struct('band', 0, 'sig', concat(m0, '|', m1)),
-      |  named_struct('band', 1, 'sig', concat(m2, '|', m3)),
-      |  named_struct('band', 2, 'sig', concat(m4, '|', m5)),
-      |  named_struct('band', 3, 'sig', concat(m6, '|', m7))))""".stripMargin
+  private val BandRows = s"explode(${graft.ops.PipelineOps.BandArray})"
 
   /** Incremental near-duplicate detection on the change feed — the
     * streaming complement of the batch MinHash-LSH pass (PipelineOps.j12):

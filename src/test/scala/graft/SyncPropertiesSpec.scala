@@ -1,9 +1,13 @@
 package graft
 
 import graft.streaming.Sync
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** The reference's core invariant, property-tested over randomized change
@@ -75,6 +79,110 @@ class SyncPropertiesSpec extends AnyFunSuite {
         assert(out.map(_._1).toSet === model.keySet)
       }
     }
+  }
+
+  // ---- per-cell LWW (merge: cell) against a plain-Scala reconcile ----
+
+  /** Wide rows: key, cursor ts, and a bigint `n`, a double `x` and a text
+    * `s` cell, each with its `<cell>_wt` stamp. */
+  private val cells = Seq("n" -> LongType, "x" -> DoubleType, "s" -> StringType)
+  private val wideSchema = StructType(
+    StructField("key", LongType) +: StructField("ts", LongType) +:
+      cells.flatMap { case (c, t) => Seq(StructField(c, t), StructField(s"${c}_wt", LongType)) })
+
+  /** Random wide rows over `keys` keys (offset by `base`). Stamps come
+    * from {null, 1, 2, 3}, so equal stamps are common; a stamped cell is a
+    * live value or a null tombstone, an unstamped one carries nothing. */
+  private def genWide(rnd: Random, base: Long, keys: Int, n: Int): Seq[Row] = {
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    val values: Map[String, Seq[Any]] = Map(
+      "n" -> Seq(-2L, -1L, 0L, 1L, 2L, Long.MinValue, Long.MaxValue),
+      "x" -> Seq(-1.5, -0.0, 0.0, 1.5, -2.25, 1e300),
+      "s" -> Seq("", "a", "b", "Z", "é", "日本", "ab"))
+    Seq.fill(n) {
+      val cellVals = cells.flatMap { case (c, _) =>
+        pick(Seq[Option[Long]](None, Some(1L), Some(2L), Some(3L))) match {
+          case None => Seq(null, null)
+          case Some(w) => Seq(if (rnd.nextInt(4) == 0) null else pick(values(c)), w)
+        }
+      }
+      Row.fromSeq(Seq(base + rnd.nextInt(keys), rnd.nextInt(5).toLong) ++ cellVals)
+    }
+  }
+
+  private def wideDf(rows: Seq[Row]): DataFrame =
+    TestSpark.spark.createDataFrame(rows.asJava, wideSchema)
+
+  /** A cell's CQL bytes: bigint and double big-endian, text UTF-8. */
+  private def cqlBytes(v: Any): Array[Byte] = v match {
+    case null => null
+    case l: Long => ByteBuffer.allocate(8).putLong(l).array
+    case d: Double => ByteBuffer.allocate(8).putDouble(d).array
+    case s: String => s.getBytes(UTF_8)
+  }
+
+  /** C*'s tie-break: unsigned byte compare, longer prefix greater, a null
+    * (tombstone) below any live value. */
+  private def bytesGt(a: Array[Byte], b: Array[Byte]): Boolean =
+    if (a == null) false
+    else if (b == null) true
+    else a.zip(b).find { case (p, q) => p != q } match {
+      case Some((p, q)) => (p & 0xff) > (q & 0xff)
+      case None => a.length > b.length
+    }
+
+  /** The reference reconcile per key: each cell takes the value under its
+    * greatest stamp, a stamp tie goes to the greater CQL bytes, and `ts`
+    * is the maximum. Doubles compare by their bits (−0.0 ≠ 0.0). */
+  private def reconcile(rows: Seq[Row]): Set[Seq[Any]] =
+    rows.groupBy(_.getLong(0)).map { case (k, rs) =>
+      val merged = cells.indices.flatMap { i =>
+        val stamped = rs.filterNot(_.isNullAt(3 + 2 * i))
+          .map(r => (r.get(2 + 2 * i), r.getLong(3 + 2 * i)))
+        if (stamped.isEmpty) Seq(null, null)
+        else {
+          val w = stamped.map(_._2).max
+          val v = stamped.filter(_._2 == w).map(_._1)
+            .reduce((a, b) => if (bytesGt(cqlBytes(b), cqlBytes(a))) b else a)
+          Seq(v, w)
+        }
+      }
+      (Seq(k, rs.map(_.getLong(1)).max) ++ merged).map(comparable)
+    }.toSet
+
+  private def comparable(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case o => o
+  }
+
+  private def mergeCells(d: DataFrame): Set[Seq[Any]] =
+    Sync.mergeCellLww(d, "key", cells.map(_._1)).collect()
+      .map(_.toSeq.map(comparable)).toSet
+
+  test("mergeCellLww equals a plain-Scala per-cell reconcile under forced stamp ties") {
+    val rnd = new Random(45)
+    // 40 independent samples on disjoint key ranges, merged in one job
+    val rows = (0 until 40).flatMap(i => genWide(rnd, i * 10L, 3, 1 + rnd.nextInt(12)))
+    val got = mergeCells(wideDf(rows))
+    val want = reconcile(rows)
+    assert(got.size === want.size)
+    (want -- got).toSeq.sortBy(_.head.asInstanceOf[Long]).headOption.foreach { w =>
+      val k = w.head
+      fail(s"key $k: merge gave ${got.find(_.head == k)}, reconcile gave $w; " +
+        s"rows ${rows.filter(_.getLong(0) == k).mkString("; ")}")
+    }
+  }
+
+  test("mergeCellLww composes: merging a, then the result with b, equals merging a ∪ b") {
+    val rnd = new Random(46)
+    val (a, b) = (0 until 40).map { i =>
+      (genWide(rnd, i * 10L, 3, rnd.nextInt(8)), genWide(rnd, i * 10L, 3, rnd.nextInt(8)))
+    }.unzip
+    val (as, bs) = (a.flatten, b.flatten)
+    val once = Sync.mergeCellLww(wideDf(as), "key", cells.map(_._1))
+    val composed = mergeCells(once.unionByName(wideDf(bs)))
+    assert(composed === mergeCells(wideDf(as ++ bs)))
+    assert(composed === reconcile(as ++ bs))
   }
 
   test("cosine scores are within [-1, 1] and self-similarity rounds to 1") {
