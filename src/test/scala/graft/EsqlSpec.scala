@@ -1150,4 +1150,54 @@ class EsqlSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("numeric literal"))
   }
+
+  test("a column where a literal operand belongs is refused with a message naming the function") {
+    // one row per function that takes a literal operand: (name, call
+    // with the column `v` in the literal's place)
+    val rows = Seq(
+      "SPLIT" -> "SPLIT(t, v)",
+      "REPLACE" -> """REPLACE(t, v, "x")""",
+      "MV_CONCAT" -> "MV_CONCAT(a, v)",
+      "MV_ZIP" -> "MV_ZIP(a, b, v)",
+      "MV_SORT" -> "MV_SORT(a, v)",
+      "MV_SLICE" -> "MV_SLICE(a, v, 2)",
+      "MV_PERCENTILE" -> "MV_PERCENTILE(a, v)",
+      "MV_PSERIES_WEIGHTED_SUM" -> "MV_PSERIES_WEIGHTED_SUM(a, v)",
+      "MATCH" -> "MATCH(t, v)",
+      "MATCH_PHRASE" -> "MATCH_PHRASE(t, v)",
+      "KQL" -> "KQL(v)",
+      "QSTR" -> "QSTR(v)",
+      "DATE_DIFF" -> "DATE_DIFF(v, a, b)",
+      "DATE_FORMAT" -> "DATE_FORMAT(v, ts)",
+      "DATE_PARSE" -> "DATE_PARSE(v, t)",
+      "DATE_EXTRACT" -> "DATE_EXTRACT(v, ts)",
+      "DATE_TRUNC" -> "DATE_TRUNC(v, ts)",
+      "TOP" -> """TOP(a, v, "asc")""",
+      "SAMPLE" -> "SAMPLE(a, v, id)",
+      "PERCENTILE" -> "PERCENTILE(a, v)",
+      "REPEAT" -> "REPEAT(t, v)",
+      "SPACE" -> "SPACE(v)",
+      "ROUND" -> "ROUND(a, v)",
+      "ROUND_TO" -> "ROUND_TO(a, v)",
+      "BUCKET" -> "BUCKET(a, 10, v, 100)",
+      "CIDR_MATCH" -> "CIDR_MATCH(ip, v)",
+      "ST_GEOHASH" -> "ST_GEOHASH(p, v)",
+      "ST_GEOTILE" -> "ST_GEOTILE(p, v)",
+      "ST_GEOHEX" -> "ST_GEOHEX(p, v)")
+    val bad = rows.flatMap { case (fn, q) =>
+      try { Esql.parseExpr(q); Some(s"$q compiled") }
+      catch {
+        case e: IllegalArgumentException if e.getMessage.contains(fn) => None
+        case e: Exception => Some(s"$q -> $e")
+      }
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("an unknown function or a wrong arity fails with a message naming the function") {
+    val unknown = intercept[IllegalArgumentException] { Esql.parseExpr("FOO(x)") }
+    assert(unknown.getMessage.contains("FOO"), unknown.getMessage)
+    val arity = intercept[IllegalArgumentException] { Esql.parseExpr("ABS(a, b)") }
+    assert(arity.getMessage.contains("ABS"), arity.getMessage)
+  }
 }
