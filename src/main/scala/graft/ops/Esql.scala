@@ -25,10 +25,13 @@ import graft.Tables
   * Expression grammar (Pratt-style precedence): OR < AND < comparisons
   * (== != >= <= > < LIKE RLIKE IN IS [NOT] NULL) < additive <
   * multiplicative < unary/primary; primaries are numbers, "strings",
-  * identifiers, parens, and the whitelisted function sets in [[aggFns]]
-  * / [[scalarFns]]. `%` is multiplicative. Aliases bind with
-  * `name = expr` in EVAL/STATS/BY; STATS items take a per-aggregate
-  * trailing `WHERE cond` (8.16 filtered stats). */
+  * identifiers, parens, and function calls — one case each in
+  * [[primary]], the only list of function names (an unknown name fails
+  * as an unknown ES|QL function). `%` is multiplicative. Aliases bind
+  * with `name = expr` in EVAL/STATS/BY; STATS items take a
+  * per-aggregate trailing `WHERE cond` (8.16 filtered stats). Every
+  * function and stage reads its tokens through the [[Cursor]] readers,
+  * whose errors name the function or stage. */
 object Esql {
 
   // ---------- lexer ----------
@@ -55,29 +58,128 @@ object Esql {
     out.toList
   }
 
+  private val identRe = "[A-Za-z_][A-Za-z_0-9.]*"
+
+  /** `toks` cut at every token `sep` accepts outside parentheses. */
+  private def splitTop(toks: List[String], sep: String => Boolean): List[List[String]] = {
+    import scala.collection.mutable.ListBuffer
+    val out = ListBuffer(ListBuffer.empty[String])
+    var depth = 0
+    for (t <- toks) {
+      if (depth == 0 && sep(t)) out += ListBuffer.empty
+      else {
+        if (t == "(") depth += 1
+        if (t == ")") depth -= 1
+        out.last += t
+      }
+    }
+    out.map(_.toList).toList
+  }
+
   // ---------- expression parser (over a mutable token cursor) ----------
-  private class Cursor(var toks: List[String]) {
+  /** A token cursor over one expression, one stage body or one function
+    * argument. `ctx` names the function or stage being read in the
+    * errors the readers raise. [[expr]], [[str]], [[int]] and [[num]]
+    * read the REST of the cursor: a literal operand must be the whole
+    * argument.
+    *
+    * `aggFilter` is the per-aggregate filter (ES|QL `STATS agg WHERE
+    * cond`, 8.16+), set by [[statsList]] BEFORE the item's expression is
+    * parsed, so every aggregate call built inside the item wraps its
+    * argument in `IF(cond, arg, NULL)` — null-skipping aggregation makes
+    * that exactly the FILTER semantics for COUNT/SUM/MIN/MAX/AVG.
+    *
+    * `madAccum` is the MAD collection point (set by [[statsList]], null
+    * elsewhere): MEDIAN_ABSOLUTE_DEVIATION needs a per-group median
+    * PRE-PASS (the j68 two-pass shape — exact MAD fundamentally cannot
+    * be one aggregate call), so parsing one registers its argument here
+    * and returns a percentile over the deviation column the STATS stage
+    * materializes before the final aggregation. Argument cursors share
+    * both with the cursor they were cut from. */
+  private class Cursor(var toks: List[String], val ctx: String = "ES|QL",
+      val aggFilter: Option[Column] = None,
+      val madAccum: scala.collection.mutable.ListBuffer[MadSpec] = null) {
     def peek: Option[String] = toks.headOption
-    def eat(): String = { val h = toks.head; toks = toks.tail; h }
+    def eat(): String = {
+      require(toks.nonEmpty, s"$ctx: unexpected end of input")
+      val h = toks.head; toks = toks.tail; h
+    }
     def expect(t: String): Unit = {
       val h = eat()
       require(h == t, s"expected '$t', got '$h'")
     }
-    /** Per-aggregate filter (ES|QL `STATS agg WHERE cond`, 8.16+): set
-      * by [[statsList]] BEFORE the item's expression is parsed, so every
-      * aggregate call built inside the item wraps its argument in
-      * `IF(cond, arg, NULL)` — null-skipping aggregation makes that
-      * exactly the FILTER semantics for COUNT/SUM/MIN/MAX/AVG. */
-    var aggFilter: Option[Column] = None
     def filt(a: Column): Column =
       aggFilter.map(f => when(f, a)).getOrElse(a)
-    /** MAD collection point (set by [[statsList]], null elsewhere):
-      * MEDIAN_ABSOLUTE_DEVIATION needs a per-group median PRE-PASS (the
-      * j68 two-pass shape — exact MAD fundamentally cannot be one
-      * aggregate call), so parsing one registers its argument here and
-      * returns a percentile over the deviation column the STATS stage
-      * materializes before the final aggregation. */
-    var madAccum: scala.collection.mutable.ListBuffer[MadSpec] = null
+    private def sub(ts: List[String], c: String) = new Cursor(ts, c, aggFilter, madAccum)
+
+    /** End of input: every token was read. */
+    def end(): Unit = require(toks.isEmpty, s"unparsed ES|QL tokens: ${toks.mkString(" ")}")
+    /** Reads `kw` (any case) if it is next. */
+    def accept(kw: String): Boolean =
+      peek.exists(_.equalsIgnoreCase(kw)) && { eat(); true }
+    /** The keyword `kw`. */
+    def keyword(kw: String): Unit =
+      require(accept(kw), s"$ctx needs $kw, got '${peek.getOrElse("")}'")
+    /** An identifier (a column, table or alias name). */
+    def ident(what: String): String = {
+      require(peek.exists(_.matches(identRe)), s"$ctx needs $what, got '${peek.getOrElse("")}'")
+      eat()
+    }
+    /** The rest as one expression. */
+    def expr(): Column = { val e = orExpr(this); end(); e }
+    /** The rest as one string literal. */
+    def str(what: String): String = {
+      val t = eat()
+      require(t.startsWith("\""), s"$ctx needs a literal $what, got '$t'")
+      end()
+      unquote(t)
+    }
+    /** The rest as one integer literal in lo..hi. */
+    def int(what: String, lo: Long = 0L, hi: Long = Int.MaxValue): Long = {
+      val t = eat()
+      val v = Some(t).filter(_.matches("""\d+""")).flatMap(_.toLongOption)
+      require(v.exists(x => x >= lo && x <= hi),
+        s"$ctx needs an integer literal $what in $lo..$hi, got '$t'")
+      end()
+      v.get
+    }
+    /** The rest as one numeric literal in lo..hi. */
+    def num(what: String, lo: Double, hi: Double = Double.MaxValue): Double = {
+      val t = eat()
+      val v = Some(t).filter(_.matches("""\d+(\.\d+)?""")).map(_.toDouble)
+      require(v.exists(x => x >= lo && x <= hi),
+        s"$ctx needs a numeric literal $what in $lo..$hi, got '$t'")
+      end()
+      v.get
+    }
+    /** The rest cut at top-level commas: one cursor per item. */
+    def items(): Seq[Cursor] = {
+      val out = splitTop(toks, _ == ",").map(sub(_, ctx))
+      toks = Nil
+      out
+    }
+    /** The arguments of `fn`, whose `(` was just read, up to the
+      * matching `)`: one cursor each, between `min` and `max` of them. */
+    def args(fn: String, min: Int, max: Int): Seq[Cursor] = {
+      var depth = 0
+      val (body, rest) = toks.span { t =>
+        if (t == "(") depth += 1
+        if (t == ")") depth -= 1
+        depth >= 0
+      }
+      require(rest.nonEmpty, s"$fn( has no closing ')'")
+      toks = rest.tail
+      val as = if (body.isEmpty) Nil else sub(body, fn).items()
+      require(as.length >= min && as.length <= max, s"$fn takes " +
+        (if (min == max) s"$min" else if (max == Int.MaxValue) s"at least $min"
+         else s"$min to $max") + s" argument(s), got ${as.length}")
+      as
+    }
+    /** Exactly `n` expression arguments of `fn`. */
+    def exprs(fn: String, n: Int): Seq[Column] = args(fn, n, n).map(_.expr())
+    /** At least `min` expression arguments of `fn`. */
+    def varargs(fn: String, min: Int): Seq[Column] =
+      args(fn, min, Int.MaxValue).map(_.expr())
   }
 
   /** One MEDIAN_ABSOLUTE_DEVIATION occurrence inside a STATS: `dev` is
@@ -86,37 +188,6 @@ object Esql {
     * first-pass median AND the final deviation percentile — exactly
     * DuckDB's FILTER on both). */
   private case class MadSpec(dev: String, arg: Column, filter: Option[Column])
-
-  private val aggFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG",
-    "COUNT_DISTINCT", "PERCENTILE", "MEDIAN", "WEIGHTED_AVG", "TOP",
-    "STD_DEV", "MEDIAN_ABSOLUTE_DEVIATION", "VALUES", "FIRST", "LAST",
-    "SAMPLE", "ST_EXTENT_AGG", "ST_CENTROID_AGG")
-  private val scalarFns =
-    Set("ROUND", "ABS", "SPLIT", "CONCAT", "TO_LONG", "TO_DOUBLE", "LENGTH",
-      "DATE_TRUNC", "CASE", "COALESCE",
-      "SUBSTRING", "TO_UPPER", "TO_LOWER", "TRIM", "STARTS_WITH", "ENDS_WITH",
-      "MV_COUNT", "MV_DEDUPE", "MV_MIN", "MV_MAX", "BUCKET",
-      "MV_SORT", "MV_SLICE", "MV_FIRST", "MV_LAST", "MV_CONCAT",
-      "TO_STRING", "CIDR_MATCH",
-      "DATE_DIFF", "DATE_FORMAT", "DATE_PARSE", "DATE_EXTRACT", "NOW",
-      "TO_INTEGER", "TO_BOOLEAN", "TO_DATETIME",
-      "LEFT", "RIGHT", "REPLACE", "LOCATE", "REVERSE",
-      "MATCH", "QSTR", "MATCH_PHRASE", "KQL",
-      "POW", "SQRT", "EXP", "LOG10", "CEIL", "FLOOR", "GREATEST", "LEAST",
-      "CATEGORIZE",
-      "LTRIM", "RTRIM", "REPEAT", "LOG", "SIGNUM", "MD5",
-      "MV_AVG", "MV_SUM", "MV_MEDIAN",
-      "SIN", "COS", "TAN", "ATAN2", "CBRT", "PI",
-      "TO_RADIANS", "TO_DEGREES",
-      "ASIN", "ACOS", "ATAN", "SINH", "COSH", "TANH", "HYPOT", "E", "TAU",
-      "SHA256", "TO_BASE64", "FROM_BASE64", "BIT_LENGTH", "BYTE_LENGTH",
-      "ROUND_TO", "MV_APPEND", "MV_ZIP",
-      "MV_PERCENTILE", "MV_PSERIES_WEIGHTED_SUM", "SPACE",
-      "TO_GEOPOINT", "ST_X", "ST_Y", "ST_DISTANCE",
-      "ST_GEOHASH", "ST_GEOTILE", "ST_GEOHEX",
-      "TO_GEOSHAPE", "ST_INTERSECTS", "ST_WITHIN", "ST_CONTAINS",
-      "ST_DISJOINT", "ST_XMIN", "ST_XMAX", "ST_YMIN", "ST_YMAX",
-      "ST_ENVELOPE")
 
   /** Deterministic NOW(): ES|QL's NOW() is query-evaluation wall-clock —
     * unusable in a bit-reproducible engine — so it compiles to this
@@ -135,46 +206,63 @@ object Esql {
     "second" -> 1000000L, "minute" -> 60000000L,
     "hour" -> 3600000000L, "day" -> 86400000000L)
 
+  /** A literal "asc"/"desc" argument (TOP, MV_SORT): true for ascending. */
+  private def ascending(a: Cursor): Boolean = a.str("order").toLowerCase match {
+    case "asc" => true
+    case "desc" => false
+    case x => throw new IllegalArgumentException(s"${a.ctx} order must be asc/desc, got '$x'")
+  }
+
+  /** A DATE_FORMAT/DATE_PARSE pattern: the locale-free numeric subset
+    * (y M d H m s + separators) — identical under Spark's
+    * DateTimeFormatter and the strftime translation the oracle spells,
+    * with no month-name/era locale hazard. */
+  private def datePattern(a: Cursor): String = {
+    val fmt = a.str("pattern")
+    require(fmt.matches("""[yMdHms\-:/ .]+""") && !fmt.contains("MMM"),
+      s"${a.ctx} pattern '$fmt' outside the locale-free y/M/d/H/m/s " +
+        "subset (MMM+ spells LOCALE month names — rejected)")
+    fmt
+  }
+
+  /** Numbers, "strings", identifiers, parens, and function calls. Each
+    * function is one case below — the compiler's only list of them. */
   private def primary(c: Cursor): Column = c.eat() match {
     case "(" => val e = orExpr(c); c.expect(")"); e
     case "-" => negate(primary(c))
     case t if t.startsWith("\"") => lit(unquote(t))
     case t if t.matches("""\d+\.\d+""") => lit(t.toDouble)
     case t if t.matches("""\d+""") => lit(t.toLong)
-    case fn if c.peek.contains("(") && (aggFns(fn.toUpperCase) ||
-        scalarFns(fn.toUpperCase)) =>
-      c.expect("(")
-      fn.toUpperCase match {
-        case "COUNT" if c.peek.contains("*") =>
-          c.eat(); c.expect(")"); count(c.filt(lit(1)))
-        case "COUNT" => val a = orExpr(c); c.expect(")"); count(c.filt(a))
-        case "SUM" => val a = orExpr(c); c.expect(")"); sum(c.filt(a))
-        case "MIN" => val a = orExpr(c); c.expect(")"); min(c.filt(a))
-        case "MAX" => val a = orExpr(c); c.expect(")"); max(c.filt(a))
-        case "AVG" => val a = orExpr(c); c.expect(")"); avg(c.filt(a))
+    case name if c.peek.contains("(") && name.matches(identRe) =>
+      c.eat()
+      val fn = name.toUpperCase
+      def one: Column = c.exprs(fn, 1).head
+      fn match {
+        case "COUNT" =>
+          val Seq(a) = c.args(fn, 1, 1)
+          if (a.toks == List("*")) count(c.filt(lit(1))) else count(c.filt(a.expr()))
+        case "SUM" => sum(c.filt(one))
+        case "MIN" => min(c.filt(one))
+        case "MAX" => max(c.filt(one))
+        case "AVG" => avg(c.filt(one))
         case "COUNT_DISTINCT" =>
           // exact distinct count (ES|QL's is approximate HLL++ by
           // default; the exact form is the oracle-comparable choice and
           // what ES emits at low cardinality anyway)
-          val a = orExpr(c); c.expect(")"); count_distinct(c.filt(a))
+          count_distinct(c.filt(one))
         case "PERCENTILE" =>
           // PERCENTILE(field, p) with p in 0..100 (the ES scale);
           // compiles to Spark's exact interpolating percentile, the
           // j69-proven cross-engine form (DuckDB quantile_cont)
-          val a = orExpr(c); c.expect(",")
-          val p = c.eat().toDouble; c.expect(")")
-          require(p >= 0 && p <= 100, s"PERCENTILE needs 0..100, got $p")
-          percentile(c.filt(a), lit(p / 100.0))
-        case "MEDIAN" =>
-          val a = orExpr(c); c.expect(")")
-          percentile(c.filt(a), lit(0.5))
+          val Seq(a, p) = c.args(fn, 2, 2)
+          percentile(c.filt(a.expr()), lit(p.num("p", 0, 100) / 100.0))
+        case "MEDIAN" => percentile(c.filt(one), lit(0.5))
         case "STD_DEV" =>
           // STD_DEV(field) — POPULATION standard deviation (ES's
           // stats/extended_stats std_deviation is population; the d7/j71
           // precedent says rounded stddev hash-compares at every SF).
           // ROUND in the query — the pipe language owns presentation.
-          val a = orExpr(c); c.expect(")")
-          stddev_pop(c.filt(a))
+          stddev_pop(c.filt(one))
         case "MEDIAN_ABSOLUTE_DEVIATION" =>
           // MEDIAN_ABSOLUTE_DEVIATION(field) — median of |x − median(x)|
           // per group, EXACT (ES serves an approximation from the same
@@ -184,7 +272,7 @@ object Esql {
           // the main aggregation). Registering through madAccum is what
           // triggers that rewrite; outside STATS there is no pre-pass to
           // attach to, so it is a compile error.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           require(c.madAccum != null, "MEDIAN_ABSOLUTE_DEVIATION is only " +
             "supported inside STATS (it needs the per-group median pre-pass)")
           val dev = s"__mad_dev_${c.madAccum.length}"
@@ -200,10 +288,8 @@ object Esql {
           // discipline): the sort key must be unique per group —
           // min_by's tie choice is otherwise arbitrary; the fixture's
           // event ts is verified globally unique at every SF.
-          val isFirst = fn.toUpperCase == "FIRST"
-          val v = orExpr(c); c.expect(",")
-          val t = orExpr(c); c.expect(")")
-          if (isFirst) min_by(c.filt(v), c.filt(t))
+          val Seq(v, t) = c.exprs(fn, 2)
+          if (fn == "FIRST") min_by(c.filt(v), c.filt(t))
           else max_by(c.filt(v), c.filt(t))
         case "SAMPLE" =>
           // SAMPLE(field, N, id) — ES|QL 9.1's sample aggregate: N of
@@ -215,13 +301,11 @@ object Esql {
           // ONE string (32-hex + '|'), so sort/slice/strip is identical
           // text processing in both engines. Per-agg WHERE nulls the
           // key and collect_list skips nulls = FILTER semantics.
-          val v = orExpr(c); c.expect(",")
-          val nTok = c.eat()
-          require(nTok.matches("""\d+"""), s"SAMPLE needs a literal count, got '$nTok'")
-          c.expect(",")
-          val idc = orExpr(c); c.expect(")")
+          val Seq(v0, n0, id0) = c.args(fn, 3, 3)
+          val v = v0.expr()
+          val n = n0.int("count").toInt
           val key = concat(
-            md5(concat(idc.cast("string"), lit("|sample")).cast("binary")),
+            md5(concat(id0.expr().cast("string"), lit("|sample")).cast("binary")),
             lit("|"), v.cast("string"))
           // an EMPTY draw pool (per-agg WHERE matched nothing) yields
           // NULL, not "" — ES returns null there and the oracle's
@@ -232,7 +316,7 @@ object Esql {
           when(size(pool) > 0,
             array_join(
               transform(
-                slice(array_sort(pool), 1, nTok.toInt),
+                slice(array_sort(pool), 1, n),
                 x => x.substr(lit(34), lit(1000000))), ","))
         case "ST_EXTENT_AGG" =>
           // ES|QL 9.x's spatial extent aggregate: the bounding envelope
@@ -243,7 +327,7 @@ object Esql {
           // themselves (min/max are order-independent). The struct
           // obeys the no-struct-output rule: extract with ST_XMIN/… and
           // DROP the envelope before the result ships.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           struct(
             min(c.filt(a.getField("x"))).as("xmin"),
             max(c.filt(a.getField("x"))).as("xmax"),
@@ -257,7 +341,7 @@ object Esql {
           // r13 discipline; ES itself keeps running sums per bucket).
           // Empty group (per-agg WHERE matched nothing) → NULL fields.
           // Extract with ST_X/ST_Y and DROP the struct before shipping.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           val vx = c.filt(a.getField("x"))
           val vy = c.filt(a.getField("y"))
           // components ship pre-rounded through Parity.round6: a
@@ -275,14 +359,12 @@ object Esql {
           // deviation that only narrows the contract). Arrays obey the
           // no-array-output rule: feed MV_CONCAT / MV_COUNT downstream.
           // Group state is bounded by the value cardinality, as in ES.
-          val a = orExpr(c); c.expect(")")
-          sort_array(collect_set(c.filt(a)))
+          sort_array(collect_set(c.filt(one)))
         case "WEIGHTED_AVG" =>
           // WEIGHTED_AVG(value, weight) = Σ(v·w)/Σw — over integer
           // inputs both sums are exact, then ONE double division (the
           // j72/j83 composition rule), so the result hash-compares
-          val a = orExpr(c); c.expect(",")
-          val w = orExpr(c); c.expect(")")
+          val Seq(a, w) = c.exprs(fn, 2)
           sum(c.filt(a * w)) / sum(c.filt(w))
         case "TOP" =>
           // TOP(field, limit, "asc"|"desc") — the top-N values per
@@ -293,208 +375,145 @@ object Esql {
           // — the no-array-output rule keeps it out of results raw.
           // State is bounded per group by the collected column, and ES
           // caps limit the same way (its top_metrics size ≤ 100).
-          val a = orExpr(c); c.expect(",")
-          val nTok = c.eat()
-          require(nTok.matches("""\d+"""), s"TOP limit must be an integer literal, got '$nTok'")
-          val n = nTok.toInt
-          require(n >= 1 && n <= 100, s"TOP limit must be 1..100, got $n")
-          c.expect(",")
-          val oTok = c.eat()
-          require(oTok.startsWith("\""), s"TOP order must be a literal, got '$oTok'")
-          val asc = unquote(oTok).toLowerCase match {
-            case "asc" => true
-            case "desc" => false
-            case x => throw new IllegalArgumentException(
-              s"TOP order must be asc/desc, got '$x'")
-          }
-          c.expect(")")
-          slice(sort_array(collect_list(c.filt(a)), asc), 1, n)
-        case "ABS" => val a = orExpr(c); c.expect(")"); abs(a)
+          val Seq(a, n, o) = c.args(fn, 3, 3)
+          val v = a.expr()
+          val limit = n.int("limit", 1, 100).toInt
+          slice(sort_array(collect_list(c.filt(v)), ascending(o)), 1, limit)
+        case "ABS" => abs(one)
         // math scalars — the libm ones (SQRT/POW/EXP/LOG10) are single
         // float-function applications; the engine discipline is ROUND
         // them in the query and aggregate only via order-independent
         // MIN/MAX (never SUM a libm output — double accumulation order
         // differs across engines/partitionings)
-        case "SQRT" => val a = orExpr(c); c.expect(")"); sqrt(a)
-        case "EXP" => val a = orExpr(c); c.expect(")"); exp(a)
-        case "LOG10" => val a = orExpr(c); c.expect(")"); log10(a)
-        case "POW" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          pow(a, b)
+        case "SQRT" => sqrt(one)
+        case "EXP" => exp(one)
+        case "LOG10" => log10(one)
+        case "POW" => val Seq(a, b) = c.exprs(fn, 2); pow(a, b)
         // CEIL/FLOOR return LONG (Spark's native behavior; ES returns
         // the input type — the integral form is the deterministic
         // cross-engine choice, CAST'd explicitly in the oracle)
-        case "CEIL" => val a = orExpr(c); c.expect(")"); ceil(a)
-        case "FLOOR" => val a = orExpr(c); c.expect(")"); floor(a)
-        case "GREATEST" =>
-          val args = scala.collection.mutable.ListBuffer(orExpr(c))
-          while (c.peek.contains(",")) { c.eat(); args += orExpr(c) }
-          c.expect(")")
-          require(args.length >= 2, "GREATEST needs at least two arguments")
-          greatest(args.toSeq: _*)
-        case "LEAST" =>
-          val args = scala.collection.mutable.ListBuffer(orExpr(c))
-          while (c.peek.contains(",")) { c.eat(); args += orExpr(c) }
-          c.expect(")")
-          require(args.length >= 2, "LEAST needs at least two arguments")
-          least(args.toSeq: _*)
-        case "TO_LONG" => val a = orExpr(c); c.expect(")"); a.cast("long")
-        case "TO_DOUBLE" => val a = orExpr(c); c.expect(")"); a.cast("double")
-        case "TO_INTEGER" => val a = orExpr(c); c.expect(")"); a.cast("int")
-        case "TO_BOOLEAN" => val a = orExpr(c); c.expect(")"); a.cast("boolean")
+        case "CEIL" => ceil(one)
+        case "FLOOR" => floor(one)
+        case "GREATEST" => greatest(c.varargs(fn, 2): _*)
+        case "LEAST" => least(c.varargs(fn, 2): _*)
+        case "TO_LONG" => one.cast("long")
+        case "TO_DOUBLE" => one.cast("double")
+        case "TO_INTEGER" => one.cast("int")
+        case "TO_BOOLEAN" => one.cast("boolean")
         case "TO_DATETIME" =>
           // TO_DATETIME(x) — ES converts epoch-MILLIS longs (its wire
           // format for dates); strings go through DATE_PARSE instead
-          val a = orExpr(c); c.expect(")")
-          timestamp_millis(a.cast("long")).cast("timestamp_ntz")
-        case "LENGTH" => val a = orExpr(c); c.expect(")"); length(a)
+          timestamp_millis(one.cast("long")).cast("timestamp_ntz")
+        case "LENGTH" => length(one)
         case "SPLIT" =>
           // ES|QL SPLIT delimits on a LITERAL string — quote it so the
           // regex-based Spark split can't misread ' ' vs '.' etc.
-          val a = orExpr(c)
-          c.expect(",")
-          val sepTok = c.eat()
-          require(sepTok.startsWith("\""), s"SPLIT needs a literal delimiter, got '$sepTok'")
-          c.expect(")")
-          split(a, java.util.regex.Pattern.quote(unquote(sepTok)))
-        case "CONCAT" =>
-          val args = scala.collection.mutable.ListBuffer(orExpr(c))
-          while (c.peek.contains(",")) { c.eat(); args += orExpr(c) }
-          c.expect(")")
-          concat(args.toSeq: _*)
+          val Seq(a, sep) = c.args(fn, 2, 2)
+          split(a.expr(), java.util.regex.Pattern.quote(sep.str("delimiter")))
+        case "CONCAT" => concat(c.varargs(fn, 1): _*)
         case "ROUND" =>
-          val a = orExpr(c)
-          if (c.peek.contains(",")) {
-            c.eat()
-            val digits = c.eat().toInt
-            c.expect(")")
-            round(a, digits)
-          } else {
-            c.expect(")")
-            // scale-0 ROUND returns an integer in ES|QL — cast to long
-            // so the integer semantics survive the hash compare
-            round(a, 0).cast("long")
+          c.args(fn, 1, 2) match {
+            case Seq(a, digits) => round(a.expr(), digits.int("digits").toInt)
+            case Seq(a) =>
+              // scale-0 ROUND returns an integer in ES|QL — cast to long
+              // so the integer semantics survive the hash compare
+              round(a.expr(), 0).cast("long")
           }
         case "DATE_TRUNC" =>
           // DATE_TRUNC(1 hour, ts) — the ES|QL duration-literal form;
           // only 1-unit durations map onto trunc semantics (ES itself
           // delegates multi-unit rounding to BUCKET)
-          val n = c.eat()
+          val Seq(d, a) = c.args(fn, 2, 2)
+          val n = d.eat()
           require(n == "1", s"DATE_TRUNC supports 1-unit durations, got '$n'")
-          val unit = c.eat()
+          val unit = d.eat()
           require(Set("minute", "hour", "day", "week", "month", "year")(
             unit.toLowerCase), s"unknown DATE_TRUNC unit '$unit'")
-          c.expect(",")
-          val a = orExpr(c); c.expect(")")
-          date_trunc(unit.toUpperCase, a)
+          d.end()
+          date_trunc(unit.toUpperCase, a.expr())
         case "CASE" =>
           // CASE(cond1, v1, cond2, v2, …, default) — ES|QL's variadic
           // conditional, folded to a when-chain
-          val args = scala.collection.mutable.ListBuffer(orExpr(c))
-          while (c.peek.contains(",")) { c.eat(); args += orExpr(c) }
-          c.expect(")")
-          require(args.length >= 3 && args.length % 2 == 1,
+          val args = c.varargs(fn, 3)
+          require(args.length % 2 == 1,
             s"CASE needs cond/value pairs + a default, got ${args.length} args")
           val default = args.last
           val pairs = args.dropRight(1).grouped(2).map(g => (g(0), g(1))).toSeq
           pairs.tail.foldLeft(when(pairs.head._1, pairs.head._2)) {
             case (acc, (cond, v)) => acc.when(cond, v)
           }.otherwise(default)
-        case "COALESCE" =>
-          val args = scala.collection.mutable.ListBuffer(orExpr(c))
-          while (c.peek.contains(",")) { c.eat(); args += orExpr(c) }
-          c.expect(")")
-          coalesce(args.toSeq: _*)
+        case "COALESCE" => coalesce(c.varargs(fn, 1): _*)
         case "SUBSTRING" =>
           // SUBSTRING(str, start[, length]) — 1-based; a negative start
           // counts from the END (the ES|QL contract, same in Spark's
           // substring). '-' lexes as its own token, so the sign is
           // re-attached here; a non-literal start is a clear compile
           // error, not a NumberFormatException (r9 advice).
-          def intLit(what: String): Int = {
-            val neg = c.peek.contains("-")
-            if (neg) c.eat()
-            val t = c.eat()
-            require(t.matches("""\d+"""),
-              s"SUBSTRING $what must be an integer literal, got '$t'")
-            if (neg) -t.toInt else t.toInt
+          def signed(a: Cursor, what: String): Int = {
+            val neg = a.accept("-")
+            val v = a.int(what).toInt
+            if (neg) -v else v
           }
-          val a = orExpr(c); c.expect(",")
-          val from = intLit("start")
-          val out =
-            if (c.peek.contains(",")) { c.eat(); val len = intLit("length")
-              c.expect(")"); substring(a, from, len) }
-            else { c.expect(")"); a.substr(lit(from), length(a)) }
-          out
-        case "TO_UPPER" => val a = orExpr(c); c.expect(")"); upper(a)
-        case "TO_LOWER" => val a = orExpr(c); c.expect(")"); lower(a)
-        case "TRIM" => val a = orExpr(c); c.expect(")"); trim(a)
-        case "LTRIM" => val a = orExpr(c); c.expect(")"); ltrim(a)
-        case "RTRIM" => val a = orExpr(c); c.expect(")"); rtrim(a)
+          val as = c.args(fn, 2, 3)
+          val a = as(0).expr()
+          val from = signed(as(1), "start")
+          if (as.length == 3) substring(a, from, signed(as(2), "length"))
+          else a.substr(lit(from), length(a))
+        case "TO_UPPER" => upper(one)
+        case "TO_LOWER" => lower(one)
+        case "TRIM" => trim(one)
+        case "LTRIM" => ltrim(one)
+        case "RTRIM" => rtrim(one)
         case "REPEAT" =>
           // REPEAT(str, n) — n is a literal (the overwhelmingly common
           // form; a clear restriction beats a silent expr coercion)
-          val a = orExpr(c); c.expect(",")
-          val nTok = c.eat()
-          require(nTok.matches("""\d+"""),
-            s"REPEAT count must be an integer literal, got '$nTok'")
-          c.expect(")")
-          repeat(a, nTok.toInt)
+          val Seq(a, n) = c.args(fn, 2, 2)
+          repeat(a.expr(), n.int("count").toInt)
         case "LOG" =>
           // LOG([base,] x) — ES|QL's log: one arg is the natural log,
           // two args take a LITERAL base first. Both engines compile the
           // based form to ln(x)/ln(base); outputs are libm doubles —
           // ROUND in the query and aggregate only via MIN/MAX (the j234
           // float-determinism rule).
-          val first = c.toks.headOption
-          if (first.exists(_.matches("""\d+(\.\d+)?""")) &&
-              c.toks.drop(1).headOption.contains(",")) {
-            val base = c.eat().toDouble
-            c.eat() // ','
-            require(base > 0 && base != 1.0, s"LOG base must be > 0 and != 1, got $base")
-            val a = orExpr(c); c.expect(")")
-            log(base, a)
-          } else {
-            val a = orExpr(c)
-            // targeted diagnostic (ADVICE r11): LOG(expr, x) is ES-legal
-            // but this compiler requires a bare positive numeric LITERAL
-            // base — say so instead of dying at the comma generically.
-            require(!c.peek.contains(","),
-              "LOG's two-argument form requires the base to be a bare " +
-                "positive numeric literal (e.g. LOG(2, x)); expression, " +
-                "parenthesized, or negative bases are not supported")
-            c.expect(")")
-            log(a)
+          c.args(fn, 1, 2) match {
+            case Seq(a) => log(a.expr())
+            case Seq(b, a) =>
+              // targeted diagnostic (ADVICE r11): LOG(expr, x) is ES-legal
+              // but this compiler requires a bare positive numeric LITERAL
+              // base — say so instead of dying at the comma generically.
+              require(b.toks.length == 1 && b.toks.head.matches("""\d+(\.\d+)?"""),
+                "LOG's two-argument form requires the base to be a bare " +
+                  "positive numeric literal (e.g. LOG(2, x)); expression, " +
+                  "parenthesized, or negative bases are not supported")
+              val base = b.eat().toDouble
+              require(base > 0 && base != 1.0, s"LOG base must be > 0 and != 1, got $base")
+              log(base, a.expr())
           }
         case "SIGNUM" =>
           // SIGNUM(x) → −1.0 / 0.0 / 1.0 (double, the ES|QL return
           // type); wrap in TO_LONG for exact SUMs
-          val a = orExpr(c); c.expect(")"); signum(a)
+          signum(one)
         case "MD5" =>
           // MD5(str) — lowercase hex, byte-identical in Spark and DuckDB
           // (the SAMPLE stage's own draw relies on the same parity)
-          val a = orExpr(c); c.expect(")"); md5(a.cast("binary"))
+          md5(one.cast("binary"))
         // trig family — single libm applications under the j234 rule
         // (ROUND in the query, aggregate only via order-independent
         // MIN/MAX). TO_RADIANS/TO_DEGREES are the exact x/180·π and
         // x·180/π formulas in BOTH engines (the oracle spells pi()
         // arithmetic, not radians()/degrees(), so the pre-libm argument
         // is the identical double).
-        case "SIN" => val a = orExpr(c); c.expect(")"); sin(a)
-        case "COS" => val a = orExpr(c); c.expect(")"); cos(a)
-        case "TAN" => val a = orExpr(c); c.expect(")"); tan(a)
-        case "ATAN2" =>
-          val y = orExpr(c); c.expect(",")
-          val x = orExpr(c); c.expect(")")
-          atan2(y, x)
-        case "CBRT" => val a = orExpr(c); c.expect(")"); cbrt(a)
-        case "PI" => c.expect(")"); lit(math.Pi)
-        case "TO_RADIANS" => val a = orExpr(c); c.expect(")"); radians(a)
-        case "TO_DEGREES" => val a = orExpr(c); c.expect(")"); degrees(a)
-        case "ASIN" => val a = orExpr(c); c.expect(")"); asin(a)
-        case "ACOS" => val a = orExpr(c); c.expect(")"); acos(a)
-        case "ATAN" => val a = orExpr(c); c.expect(")"); atan(a)
+        case "SIN" => sin(one)
+        case "COS" => cos(one)
+        case "TAN" => tan(one)
+        case "ATAN2" => val Seq(y, x) = c.exprs(fn, 2); atan2(y, x)
+        case "CBRT" => cbrt(one)
+        case "PI" => c.exprs(fn, 0); lit(math.Pi)
+        case "TO_RADIANS" => radians(one)
+        case "TO_DEGREES" => degrees(one)
+        case "ASIN" => asin(one)
+        case "ACOS" => acos(one)
+        case "ATAN" => atan(one)
         // hyperbolics + HYPOT compile to exp/sqrt compositions (not
         // libm sinh/cosh/tanh/hypot) so both engines apply the SAME
         // formula over the SAME primitive — but JVM Math.exp may sit
@@ -508,22 +527,15 @@ object Esql {
         // 0.7-wide band; documented domain bound, not guarded. TANH is
         // different: Inf/Inf = NaN where real tanh is ±1, so it IS
         // guarded — tanh(x) is ±1.0 to double precision beyond |x|≈19.
-        case "SINH" =>
-          val a = orExpr(c); c.expect(")")
-          (exp(a) - exp(negate(a))) / lit(2.0)
-        case "COSH" =>
-          val a = orExpr(c); c.expect(")")
-          (exp(a) + exp(negate(a))) / lit(2.0)
+        case "SINH" => val a = one; (exp(a) - exp(negate(a))) / lit(2.0)
+        case "COSH" => val a = one; (exp(a) + exp(negate(a))) / lit(2.0)
         case "TANH" =>
-          val a = orExpr(c); c.expect(")")
+          val a = one
           when(abs(a) > lit(20.0), signum(a))
             .otherwise((exp(a * lit(2)) - lit(1)) / (exp(a * lit(2)) + lit(1)))
-        case "HYPOT" =>
-          val x = orExpr(c); c.expect(",")
-          val y = orExpr(c); c.expect(")")
-          sqrt(x * x + y * y)
-        case "E" => c.expect(")"); lit(math.E)
-        case "TAU" => c.expect(")"); lit(math.Pi * 2)
+        case "HYPOT" => val Seq(x, y) = c.exprs(fn, 2); sqrt(x * x + y * y)
+        case "E" => c.exprs(fn, 0); lit(math.E)
+        case "TAU" => c.exprs(fn, 0); lit(math.Pi * 2)
         // geo family (r12): TO_GEOPOINT parses WKT "POINT(lon lat)" ONCE
         // into a typed {x, y} struct — exactly where ES pays its parse
         // (index time; doc values are binary) — so every downstream ST_*
@@ -539,7 +551,6 @@ object Esql {
         // (GeoOps.haversineMeters — ONE fragment shared with j258);
         // outputs are libm-adjacent → j234 ROUND-6dp + MIN/MAX rule.
         case "TO_GEOPOINT" =>
-          val a = orExpr(c); c.expect(")")
           // ES's WKT reader tolerates whitespace: "POINT (x y)", runs of
           // internal blanks, leading/trailing space all parse (r12 advice
           // — the exact-"POINT(" spelling rejected well-formed WKT). So:
@@ -549,7 +560,7 @@ object Esql {
           // coordinates (|lon|>180, |lat|>90) → NULL, matching ES's
           // refusal of invalid geo_points — without this, downstream
           // grid keys could mint cells ES would never emit ("6/-4/32").
-          val t = trim(a)
+          val t = trim(one)
           val rest = ltrim(t.substr(lit(6), length(t)))
           val body = trim(rest.substr(lit(2), length(rest) - lit(2)))
           val parts = split(body, "\\s+")
@@ -560,13 +571,10 @@ object Esql {
             size(parts) === 2 && x.isNotNull && y.isNotNull &&
             abs(x) <= lit(180.0) && abs(y) <= lit(90.0),
             struct(x.as("x"), y.as("y")))
-        case "ST_X" =>
-          val a = orExpr(c); c.expect(")"); a.getField("x")
-        case "ST_Y" =>
-          val a = orExpr(c); c.expect(")"); a.getField("y")
+        case "ST_X" => one.getField("x")
+        case "ST_Y" => one.getField("y")
         case "ST_DISTANCE" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
+          val Seq(a, b) = c.exprs(fn, 2)
           GeoOps.haversineMeters(a.getField("y"), a.getField("x"),
             b.getField("y"), b.getField("x"))
         // ES|QL grid-bucketing functions (8.16+/9.x): the key makers
@@ -581,26 +589,17 @@ object Esql {
         // the j275 documented deviation; before r14 the function was
         // absent entirely).
         case "ST_GEOHASH" =>
-          val a = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.matches("""\d+""") && pTok.toInt >= 1 && pTok.toInt <= 12,
-            s"ST_GEOHASH needs a literal precision 1..12, got '$pTok'")
-          c.expect(")")
-          GeoOps.geohash(a.getField("x"), a.getField("y"), pTok.toInt)
+          val Seq(a, p) = c.args(fn, 2, 2)
+          val pt = a.expr()
+          GeoOps.geohash(pt.getField("x"), pt.getField("y"), p.int("precision", 1, 12).toInt)
         case "ST_GEOTILE" =>
-          val a = orExpr(c); c.expect(",")
-          val zTok = c.eat()
-          require(zTok.matches("""\d+""") && zTok.toInt >= 0 && zTok.toInt <= 29,
-            s"ST_GEOTILE needs a literal zoom 0..29, got '$zTok'")
-          c.expect(")")
-          GeoOps.geotileKey(a.getField("x"), a.getField("y"), zTok.toInt)
+          val Seq(a, z) = c.args(fn, 2, 2)
+          val pt = a.expr()
+          GeoOps.geotileKey(pt.getField("x"), pt.getField("y"), z.int("zoom", 0, 29).toInt)
         case "ST_GEOHEX" =>
-          val a = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.matches("""\d+""") && pTok.toInt <= 4,
-            s"ST_GEOHEX needs a literal resolution 0..4, got '$pTok'")
-          c.expect(")")
-          GeoOps.geohexKey(a.getField("x"), a.getField("y"), pTok.toInt)
+          val Seq(a, r) = c.args(fn, 2, 2)
+          val pt = a.expr()
+          GeoOps.geohexKey(pt.getField("x"), pt.getField("y"), r.int("resolution", 0, 4).toInt)
         // ES|QL spatial relations over a geo_shape: TO_GEOSHAPE parses
         // WKT "BBOX (minLon, maxLon, maxLat, minLat)" OR
         // "POLYGON((x y, x y, …))" into ONE typed shape struct
@@ -635,12 +634,12 @@ object Esql {
           // byte-equal on the same inputs). The literal is detected at
           // the TOKEN level — the compiler owns the lexer, so "is this
           // a bare string literal argument" is one lookahead.
-          c.toks match {
-            case tok :: ")" :: _ if tok.startsWith("\"") =>
-              c.eat(); c.expect(")")
+          val Seq(arg) = c.args(fn, 1, 1)
+          arg.toks match {
+            case List(tok) if tok.startsWith("\"") =>
               geoShapeLiteral(unquote(tok))
             case _ =>
-              val a = orExpr(c); c.expect(")")
+              val a = arg.expr()
           val re = """BBOX\s*\(\s*([-+0-9.eE]+),\s*([-+0-9.eE]+),\s*([-+0-9.eE]+),\s*([-+0-9.eE]+)\s*\)"""
           def g(i: Int) = regexp_extract(a, re, i).cast("double")
           val noPts = array().cast("array<bigint>")
@@ -703,42 +702,30 @@ object Esql {
           // kind): re-pack the envelope fields, drop the ring — ES|QL
           // 9.x's ST_ENVELOPE on geo_shape. Point inputs fail at
           // type-check (no xmin field), the ST_X(keyword) refusal rule.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           val noPts2 = array().cast("array<bigint>")
           when(a.isNotNull, struct(
             a.getField("xmin").as("xmin"), a.getField("xmax").as("xmax"),
             a.getField("ymax").as("ymax"), a.getField("ymin").as("ymin"),
             noPts2.as("xs"), noPts2.as("ys")))
         case "ST_INTERSECTS" | "ST_WITHIN" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          pointInShape(a, b)
-        case "ST_CONTAINS" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          pointInShape(b, a)
-        case "ST_DISJOINT" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          !pointInShape(a, b)
+          val Seq(a, b) = c.exprs(fn, 2); pointInShape(a, b)
+        case "ST_CONTAINS" => val Seq(a, b) = c.exprs(fn, 2); pointInShape(b, a)
+        case "ST_DISJOINT" => val Seq(a, b) = c.exprs(fn, 2); !pointInShape(a, b)
         // envelope extractors — field reads off the {xmin,xmax,ymax,
         // ymin} struct (TO_GEOSHAPE's or ST_EXTENT_AGG's; free, the
         // ST_X/ST_Y discipline)
-        case "ST_XMIN" => val a = orExpr(c); c.expect(")"); a.getField("xmin")
-        case "ST_XMAX" => val a = orExpr(c); c.expect(")"); a.getField("xmax")
-        case "ST_YMIN" => val a = orExpr(c); c.expect(")"); a.getField("ymin")
-        case "ST_YMAX" => val a = orExpr(c); c.expect(")"); a.getField("ymax")
+        case "ST_XMIN" => one.getField("xmin")
+        case "ST_XMAX" => one.getField("xmax")
+        case "ST_YMIN" => one.getField("ymin")
+        case "ST_YMAX" => one.getField("ymax")
         case "SHA256" =>
           // lowercase hex, byte-identical cross-engine (MD5's sibling)
-          val a = orExpr(c); c.expect(")"); sha2(a.cast("binary"), 256)
-        case "TO_BASE64" =>
-          val a = orExpr(c); c.expect(")"); base64(a.cast("binary"))
-        case "FROM_BASE64" =>
-          val a = orExpr(c); c.expect(")"); unbase64(a).cast("string")
-        case "BIT_LENGTH" =>
-          val a = orExpr(c); c.expect(")"); bit_length(a)
-        case "BYTE_LENGTH" =>
-          val a = orExpr(c); c.expect(")"); octet_length(a)
+          sha2(one.cast("binary"), 256)
+        case "TO_BASE64" => base64(one.cast("binary"))
+        case "FROM_BASE64" => unbase64(one).cast("string")
+        case "BIT_LENGTH" => bit_length(one)
+        case "BYTE_LENGTH" => octet_length(one)
         case "ROUND_TO" =>
           // ROUND_TO(field, p1, p2, …) — ES|QL 9.1: round DOWN to the
           // largest literal point ≤ field; anything below the smallest
@@ -746,21 +733,12 @@ object Esql {
           // row-local, codegen'd, pushable; the fast bucketing ES added
           // precisely because per-row CASE beats a join against a
           // boundary table at scale.
-          val a = orExpr(c)
-          val pts = scala.collection.mutable.ArrayBuffer[Long]()
-          while (c.peek.contains(",")) {
-            c.eat()
-            val t = c.eat()
-            require(t.matches("""-?\d+"""),
-              s"ROUND_TO needs literal integer points, got '$t'")
-            pts += t.toLong
-          }
-          c.expect(")")
-          require(pts.nonEmpty, "ROUND_TO needs at least one point")
+          val as = c.args(fn, 2, Int.MaxValue)
+          val a = as.head.expr()
           // ascending fold so the LARGEST point lands in the outermost
           // WHEN — each later fold step wraps the accumulated chain, so
           // building upward checks ≥500 before ≥250 before ≥100
-          val sorted = pts.sorted
+          val sorted = as.tail.map(_.int("point", 0L, Long.MaxValue)).sorted
           sorted.tail.foldLeft(lit(sorted.head): Column) {
             (acc, p) => when(a >= lit(p), lit(p)).otherwise(acc)
           }
@@ -773,13 +751,9 @@ object Esql {
           // promoted form); the rank arithmetic is a literal times an
           // integer — exact. Empty/null arrays yield null (the ES
           // empty-multivalue contract, like MV_SUM/MV_MEDIAN).
-          val a = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.matches("""\d+(\.\d+)?"""),
-            s"MV_PERCENTILE needs a literal percentile, got '$pTok'")
-          c.expect(")")
-          val frac = pTok.toDouble / 100.0
-          require(frac >= 0 && frac <= 1.0, s"percentile out of [0,100]: $pTok")
+          val Seq(a0, p) = c.args(fn, 2, 2)
+          val a = a0.expr()
+          val frac = p.num("percentile", 0, 100) / 100.0
           val sorted = array_sort(a)
           val n = size(a)
           val rank = lit(frac) * (n - lit(1)).cast("double")
@@ -796,75 +770,46 @@ object Esql {
           // left-to-right double fold is j238's MV_SUM device (≡ DuckDB
           // list_sum element order); i^p is libm pow with identical
           // literal args → the j234 ROUND-6dp rule applies downstream.
-          val a = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.matches("""\d+(\.\d+)?"""),
-            s"MV_PSERIES_WEIGHTED_SUM needs a literal p, got '$pTok'")
-          c.expect(")")
-          val p = pTok.toDouble
+          val Seq(a0, p0) = c.args(fn, 2, 2)
+          val a = a0.expr()
+          val p = p0.num("p", 0)
           val weighted = transform(a, (x, i) =>
             x.cast("double") / pow((i + lit(1)).cast("double"), lit(p)))
           when(a.isNull || size(a) === lit(0), lit(null))
             .otherwise(aggregate(weighted, lit(0.0), (acc, x) => acc + x))
         case "SPACE" =>
           // SPACE(n) = REPEAT(" ", n)
-          val nTok = c.eat()
-          require(nTok.matches("""\d+"""), s"SPACE needs a literal count, got '$nTok'")
-          c.expect(")")
-          lit(" " * nTok.toInt)
-        case "MV_APPEND" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          concat(a, b)
+          val Seq(n) = c.args(fn, 1, 1)
+          lit(" " * n.int("count").toInt)
+        case "MV_APPEND" => val Seq(a, b) = c.exprs(fn, 2); concat(a, b)
         case "MV_ZIP" =>
           // MV_ZIP(a, b[, delim]) — pairwise join with the delimiter;
           // the longer side's unpaired values pass through alone (the
           // ES contract), which is exactly the null-coalescing branch.
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c)
-          val delim = if (c.peek.contains(",")) {
-            c.eat(); val t = c.eat()
-            require(t.startsWith("\""), s"MV_ZIP delimiter must be a literal, got '$t'")
-            unquote(t)
-          } else ","
-          c.expect(")")
+          val as = c.args(fn, 2, 3)
+          val a = as(0).expr()
+          val b = as(1).expr()
+          val delim = if (as.length == 3) as(2).str("delimiter") else ","
           zip_with(a, b, (x, y) =>
             when(x.isNull, y).when(y.isNull, x)
               .otherwise(concat(x, lit(delim), y)))
-        case "LEFT" =>
-          val a = orExpr(c); c.expect(",")
-          val n = orExpr(c); c.expect(")")
-          substring(a, lit(1), n)
+        case "LEFT" => val Seq(a, n) = c.exprs(fn, 2); substring(a, lit(1), n)
         case "RIGHT" =>
           // RIGHT(s, n) — last n chars; empty input stays empty (the
           // negative-start substr would misread n > length(s))
-          val a = orExpr(c); c.expect(",")
-          val n = orExpr(c); c.expect(")")
+          val Seq(a, n) = c.exprs(fn, 2)
           a.substr(greatest(length(a) - n + lit(1), lit(1)), n)
         case "REPLACE" =>
           // REPLACE(str, regex, new) — ES|QL's replace is REGEX-based
-          val a = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.startsWith("\""), s"REPLACE needs a literal regex, got '$pTok'")
-          c.expect(",")
-          val rTok = c.eat()
-          require(rTok.startsWith("\""), s"REPLACE needs a literal replacement, got '$rTok'")
-          c.expect(")")
-          regexp_replace(a, unquote(pTok), unquote(rTok))
+          val Seq(a, p, r) = c.args(fn, 3, 3)
+          regexp_replace(a.expr(), p.str("regex"), r.str("replacement"))
         case "LOCATE" =>
           // LOCATE(str, substr) — 1-based position, 0 when absent
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
+          val Seq(a, b) = c.exprs(fn, 2)
           call_function("locate", b, a)
-        case "REVERSE" => val a = orExpr(c); c.expect(")"); reverse(a)
-        case "STARTS_WITH" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          a.startsWith(b)
-        case "ENDS_WITH" =>
-          val a = orExpr(c); c.expect(",")
-          val b = orExpr(c); c.expect(")")
-          a.endsWith(b)
+        case "REVERSE" => reverse(one)
+        case "STARTS_WITH" => val Seq(a, b) = c.exprs(fn, 2); a.startsWith(b)
+        case "ENDS_WITH" => val Seq(a, b) = c.exprs(fn, 2); a.endsWith(b)
         // multivalue functions — row-local array folds. MV_DEDUPE's
         // ELEMENT ORDER is engine-specific (Spark array_distinct keeps
         // first-seen order, DuckDB list_distinct does not), so it may
@@ -883,32 +828,34 @@ object Esql {
           // epoch in UTC (pmod, so pre-1970 instants still floor), back
           // to the canonical µs TimestampNTZ — ES's fixed_interval
           // anchor. Calendar units (week/month) stay with DATE_TRUNC.
-          val a = orExpr(c); c.expect(",")
-          val nTok = c.eat()
-          require(nTok.matches("""\d+"""),
-            s"BUCKET count must be an integer literal, got '$nTok'")
-          if (c.peek.exists(_.matches("[A-Za-z_]+"))) {
-            val unit = c.eat().toLowerCase.stripSuffix("s")
-            c.expect(")")
-            val unitUs = dateDiffUnitUs.getOrElse(unit,
-              throw new IllegalArgumentException(
-                s"unsupported BUCKET duration unit '$unit' " +
-                  s"(supported: ${dateDiffUnitUs.keys.toSeq.sorted.mkString("/")})"))
-            val w = nTok.toLong * unitUs
-            require(w > 0, "BUCKET duration must be positive")
-            val us = usOf(a)
-            timestamp_micros((us - pmod(us, lit(w))).cast("long"))
-              .cast("timestamp_ntz")
-          } else {
-            val n = nTok.toLong; c.expect(",")
-            val lo = c.eat().toLong; c.expect(",")
-            val hi = c.eat().toLong; c.expect(")")
-            require(n > 0 && hi > lo, s"BUCKET needs count>0 and max>min")
-            val width = (hi - lo + n - 1) / n
-            (floor((a - lit(lo)) / lit(width)).cast("long") * width + lo)
-              .as(s"bucket")
+          c.args(fn, 2, 4) match {
+            case Seq(a, span) if span.toks.length == 2 =>
+              val nTok = span.eat()
+              require(nTok.matches("""\d+"""),
+                s"BUCKET count must be an integer literal, got '$nTok'")
+              val unit = span.eat().toLowerCase.stripSuffix("s")
+              val unitUs = dateDiffUnitUs.getOrElse(unit,
+                throw new IllegalArgumentException(
+                  s"unsupported BUCKET duration unit '$unit' " +
+                    s"(supported: ${dateDiffUnitUs.keys.toSeq.sorted.mkString("/")})"))
+              val w = nTok.toLong * unitUs
+              require(w > 0, "BUCKET duration must be positive")
+              val us = usOf(a.expr())
+              timestamp_micros((us - pmod(us, lit(w))).cast("long"))
+                .cast("timestamp_ntz")
+            case Seq(a0, n0, lo0, hi0) =>
+              val a = a0.expr()
+              val n = n0.int("count", 0L, Long.MaxValue)
+              val lo = lo0.int("min", 0L, Long.MaxValue)
+              val hi = hi0.int("max", 0L, Long.MaxValue)
+              require(n > 0 && hi > lo, s"BUCKET needs count>0 and max>min")
+              val width = (hi - lo + n - 1) / n
+              (floor((a - lit(lo)) / lit(width)).cast("long") * width + lo)
+                .as(s"bucket")
+            case _ => throw new IllegalArgumentException(
+              "BUCKET takes (field, count, min, max) or (ts, N unit)")
           }
-        case "TO_STRING" => val a = orExpr(c); c.expect(")"); a.cast("string")
+        case "TO_STRING" => one.cast("string")
         case "CIDR_MATCH" =>
           // CIDR_MATCH(ip, "A.B.C.D/p" [, …]) — true if the IPv4 string
           // falls in ANY of the literal blocks. Each block folds to the
@@ -916,7 +863,8 @@ object Esql {
           // to its numeric form and range-checks [base, base+2^(32−p))
           // — row-local exact-integer math, no UDF, pushable like any
           // predicate.
-          val a = orExpr(c)
+          val as = c.args(fn, 2, Int.MaxValue)
+          val a = as.head.expr()
           val ipn = {
             val o = split(a, "\\.")
             element_at(o, 1).cast("long") * 16777216L +
@@ -924,12 +872,8 @@ object Esql {
               element_at(o, 3).cast("long") * 256L +
               element_at(o, 4).cast("long")
           }
-          val blocks = scala.collection.mutable.ListBuffer.empty[Column]
-          while (c.peek.contains(",")) {
-            c.eat()
-            val t = c.eat()
-            require(t.startsWith("\""), s"CIDR_MATCH needs literal blocks, got '$t'")
-            val cidr = unquote(t)
+          as.tail.map { b =>
+            val cidr = b.str("block")
             val Array(addr, pfx) = cidr.split("/")
             val oct = addr.split("\\.").map(_.toLong)
             require(oct.length == 4 && oct.forall(x => x >= 0 && x <= 255),
@@ -939,27 +883,24 @@ object Esql {
             val base0 = oct(0) * 16777216L + oct(1) * 65536L + oct(2) * 256L + oct(3)
             val span = 1L << (32 - p)
             val base = base0 - base0 % span // network address of the block
-            blocks += (ipn >= base && ipn < base + span)
-          }
-          c.expect(")")
-          require(blocks.nonEmpty, "CIDR_MATCH needs at least one block")
-          blocks.reduce(_ || _)
-        case "MV_COUNT" => val a = orExpr(c); c.expect(")"); size(a)
-        case "MV_DEDUPE" => val a = orExpr(c); c.expect(")"); array_distinct(a)
-        case "MV_MIN" => val a = orExpr(c); c.expect(")"); array_min(a)
-        case "MV_MAX" => val a = orExpr(c); c.expect(")"); array_max(a)
+            ipn >= base && ipn < base + span
+          }.reduce(_ || _)
+        case "MV_COUNT" => size(one)
+        case "MV_DEDUPE" => array_distinct(one)
+        case "MV_MIN" => array_min(one)
+        case "MV_MAX" => array_max(one)
         case "MV_SUM" =>
           // MV_SUM(arr) — row-local sum in DOUBLE, folded LEFT-TO-RIGHT
           // (the VectorOps dot-product device: Spark `aggregate` ≡ DuckDB
           // `list_sum(list_transform(·, CAST AS DOUBLE))` element order,
           // so float inputs hash-compare bit-for-bit). Empty/null arrays
           // yield null, the ES empty-multivalue contract.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           when(size(a) > 0,
             aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double")))
         case "MV_AVG" =>
           // MV_AVG(arr) — MV_SUM's exact fold, ONE double division
-          val a = orExpr(c); c.expect(")")
+          val a = one
           when(size(a) > 0,
             aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double")) /
               size(a).cast("double"))
@@ -969,7 +910,7 @@ object Esql {
           // middle element exactly — one formula, no interpolation
           // hazard: both engines pick the same elements and average two
           // exact doubles). 1-based middles: ⌈n/2⌉ and ⌊n/2⌋+1.
-          val a = orExpr(c); c.expect(")")
+          val a = one
           val sorted = sort_array(transform(a, x => x.cast("double")))
           val n = size(a)
           val m1 = element_at(sorted, ((n + lit(1)) / lit(2)).cast("int"))
@@ -980,48 +921,28 @@ object Esql {
           // order, unlike MV_DEDUPE's engine-specific one, so sorted
           // arrays may feed position-sensitive consumers (MV_SLICE/
           // MV_FIRST) in oracled queries
-          val a = orExpr(c)
-          val asc =
-            if (c.peek.contains(",")) {
-              c.eat()
-              val o = c.eat()
-              require(o.startsWith("\""), s"MV_SORT order must be a literal, got '$o'")
-              unquote(o).toLowerCase match {
-                case "asc" => true
-                case "desc" => false
-                case x => throw new IllegalArgumentException(
-                  s"MV_SORT order must be asc/desc, got '$x'")
-              }
-            } else true
-          c.expect(")")
-          sort_array(a, asc)
+          val as = c.args(fn, 1, 2)
+          val a = as(0).expr()
+          sort_array(a, as.length == 1 || ascending(as(1)))
         case "MV_SLICE" =>
           // MV_SLICE(field, start, end) — 0-based INCLUSIVE bounds (the
           // ES contract); literal non-negative bounds only (the
           // documented restriction — ES's negative from-end indices
           // would need runtime array lengths in the oracle mirror)
-          val a = orExpr(c); c.expect(",")
-          val st = c.eat(); require(st.matches("""\d+"""),
-            s"MV_SLICE start must be a non-negative integer literal, got '$st'")
-          c.expect(",")
-          val en = c.eat(); require(en.matches("""\d+"""),
-            s"MV_SLICE end must be a non-negative integer literal, got '$en'")
-          c.expect(")")
-          val (s0, e0) = (st.toInt, en.toInt)
+          val Seq(a0, st, en) = c.args(fn, 3, 3)
+          val a = a0.expr()
+          val (s0, e0) = (st.int("start").toInt, en.int("end").toInt)
           require(e0 >= s0, s"MV_SLICE end $e0 < start $s0")
           slice(a, s0 + 1, e0 - s0 + 1)
-        case "MV_FIRST" => val a = orExpr(c); c.expect(")"); element_at(a, 1)
-        case "MV_LAST" => val a = orExpr(c); c.expect(")"); element_at(a, -1)
+        case "MV_FIRST" => element_at(one, 1)
+        case "MV_LAST" => element_at(one, -1)
         case "MV_CONCAT" =>
           // MV_CONCAT(field, delim) — folds ANY multivalue to ONE
           // string (elements cast to string first, as ES does), which
           // is also how array-valued results obey the engine's
           // no-array-output rule
-          val a = orExpr(c); c.expect(",")
-          val dTok = c.eat()
-          require(dTok.startsWith("\""), s"MV_CONCAT needs a literal delimiter, got '$dTok'")
-          c.expect(")")
-          array_join(a.cast("array<string>"), unquote(dTok))
+          val Seq(a, d) = c.args(fn, 2, 2)
+          array_join(a.expr().cast("array<string>"), d.str("delimiter"))
         case "MATCH" =>
           // MATCH(field, "term") — ES|QL 8.17's full-text bridge: the
           // analyzed-field match query as a function. One term against
@@ -1029,11 +950,8 @@ object Esql {
           // (j34/j172's text-leg semantics; scoring stays with the
           // search DSL operators — ES|QL MATCH is a FILTER, its _score
           // only materializes via METADATA)
-          val f = orExpr(c); c.expect(",")
-          val tTok = c.eat()
-          require(tTok.startsWith("\""), s"MATCH needs a literal term, got '$tTok'")
-          c.expect(")")
-          array_contains(split(f, " "), unquote(tTok))
+          val Seq(f, t) = c.args(fn, 2, 2)
+          array_contains(split(f.expr(), " "), t.str("term"))
         case "CATEGORIZE" =>
           // CATEGORIZE(field) — ES|QL 8.18's log-pattern grouping
           // function (STATS … BY CATEGORIZE(msg)): delegates to the
@@ -1041,8 +959,7 @@ object Esql {
           // aggregation (AggExtOps.categorizeCol — one fragment, two
           // surfaces, zero drift), composable here with arbitrary
           // aggregates and sibling BY keys
-          val a = orExpr(c); c.expect(")")
-          AggExtOps.categorizeCol(a)
+          AggExtOps.categorizeCol(one)
         case "MATCH_PHRASE" =>
           // MATCH_PHRASE(field, "a b") — ES|QL 9.1's phrase function:
           // all terms adjacent in order, j36's space-delimited
@@ -1051,11 +968,8 @@ object Esql {
           // containment IS the 2-token phrase match — the same trick
           // QueryString compiles quoted phrases with). Filter
           // semantics, like MATCH.
-          val f = orExpr(c); c.expect(",")
-          val pTok = c.eat()
-          require(pTok.startsWith("\""), s"MATCH_PHRASE needs a literal phrase, got '$pTok'")
-          c.expect(")")
-          concat(lit(" "), f, lit(" ")).contains(s" ${unquote(pTok)} ")
+          val Seq(f, p) = c.args(fn, 2, 2)
+          concat(lit(" "), f.expr(), lit(" ")).contains(s" ${p.str("phrase")} ")
         case "KQL" =>
           // KQL("kibana query") — ES|QL 9.1's KQL bridge. KQL's surface
           // (field:value, quoted phrases, trailing-* prefixes, parens)
@@ -1063,11 +977,9 @@ object Esql {
           // keywords, so the compile normalizes bare operator tokens
           // and delegates to the ONE j172 parser — three surfaces
           // (query_string DSL, QSTR, KQL), zero drift.
-          val qTok = c.eat()
-          require(qTok.startsWith("\""), s"KQL needs a literal query, got '$qTok'")
-          c.expect(")")
+          val Seq(q) = c.args(fn, 1, 1)
           SearchOps.QueryString.compile(
-            SearchOps.QueryString.parseKql(unquote(qTok)))
+            SearchOps.QueryString.parseKql(q.str("query")))
         case "QSTR" =>
           // QSTR("lucene query") — ES|QL 8.17's query_string bridge:
           // the FULL Lucene syntax (fields, phrases, prefix wildcards,
@@ -1075,12 +987,10 @@ object Esql {
           // pipe language and the search DSL cannot drift on query
           // semantics. Compiles to one Column predicate — keyword legs
           // pushdown-eligible, text legs row-local.
-          val qTok = c.eat()
-          require(qTok.startsWith("\""), s"QSTR needs a literal query, got '$qTok'")
-          c.expect(")")
-          SearchOps.QueryString.compile(SearchOps.QueryString.parse(unquote(qTok)))
+          val Seq(q) = c.args(fn, 1, 1)
+          SearchOps.QueryString.compile(SearchOps.QueryString.parse(q.str("query")))
         case "NOW" =>
-          c.expect(")")
+          c.exprs(fn, 0)
           to_timestamp_ntz(lit(pinnedNowNtz))
         case "DATE_DIFF" =>
           // DATE_DIFF("unit", start, end) — elapsed COMPLETE units from
@@ -1095,54 +1005,36 @@ object Esql {
           // (r10 advice: the old pmod form floored). Non-negative spans
           // are unchanged, so the oracle's `//` over epoch_us still
           // mirrors exactly there.
-          val uTok = c.eat()
-          require(uTok.startsWith("\""), s"DATE_DIFF needs a literal unit, got '$uTok'")
-          val unitUs = dateDiffUnitUs.getOrElse(unquote(uTok).toLowerCase,
+          val Seq(u, a, b) = c.args(fn, 3, 3)
+          val unit = u.str("unit")
+          val unitUs = dateDiffUnitUs.getOrElse(unit.toLowerCase,
             throw new IllegalArgumentException(
-              s"unsupported DATE_DIFF unit '${unquote(uTok)}' " +
+              s"unsupported DATE_DIFF unit '$unit' " +
                 s"(supported: ${dateDiffUnitUs.keys.toSeq.sorted.mkString("/")})"))
-          c.expect(",")
-          val from = orExpr(c); c.expect(",")
-          val to = orExpr(c); c.expect(")")
-          val d = usOf(to) - usOf(from)
+          val from = a.expr()
+          val d = usOf(b.expr()) - usOf(from)
           ((d - d % lit(unitUs)) / lit(unitUs)).cast("long")
         case "DATE_FORMAT" =>
           // DATE_FORMAT("pattern", ts) — format first, the ES|QL arg
-          // order. Pattern restricted to the locale-free numeric subset
-          // (y M d H m s + separators): identical under Spark's
-          // DateTimeFormatter and the strftime translation the oracle
-          // spells, with no month-name/era locale hazard.
-          val fTok = c.eat()
-          require(fTok.startsWith("\""), s"DATE_FORMAT needs a literal pattern, got '$fTok'")
-          val fmt = unquote(fTok)
-          require(fmt.matches("""[yMdHms\-:/ .]+""") && !fmt.contains("MMM"),
-            s"DATE_FORMAT pattern '$fmt' outside the locale-free y/M/d/H/m/s " +
-              "subset (MMM+ spells LOCALE month names — rejected)")
-          c.expect(",")
-          val a = orExpr(c); c.expect(")")
-          date_format(a, fmt)
+          // order; the pattern is [[datePattern]]'s locale-free subset
+          val Seq(p, a) = c.args(fn, 2, 2)
+          val fmt = datePattern(p)
+          date_format(a.expr(), fmt)
         case "DATE_PARSE" =>
           // DATE_PARSE("pattern", str) — same restricted pattern subset;
           // yields a µs TimestampNTZ (the canonical engine shape), which
           // is exactly DuckDB strptime's TIMESTAMP
-          val fTok = c.eat()
-          require(fTok.startsWith("\""), s"DATE_PARSE needs a literal pattern, got '$fTok'")
-          val fmt = unquote(fTok)
-          require(fmt.matches("""[yMdHms\-:/ .]+""") && !fmt.contains("MMM"),
-            s"DATE_PARSE pattern '$fmt' outside the locale-free y/M/d/H/m/s " +
-              "subset (MMM+ spells LOCALE month names — rejected)")
-          c.expect(",")
-          val a = orExpr(c); c.expect(")")
-          to_timestamp_ntz(a, lit(fmt))
+          val Seq(p, a) = c.args(fn, 2, 2)
+          val fmt = datePattern(p)
+          to_timestamp_ntz(a.expr(), lit(fmt))
         case "DATE_EXTRACT" =>
           // DATE_EXTRACT("part", ts) — ChronoField names, long result.
           // day_of_week is ISO (Mon=1..Sun=7, = DuckDB isodow): Spark's
           // dayofweek() is Sun=1, so it compiles via weekday()+1.
-          val pTok = c.eat()
-          require(pTok.startsWith("\""), s"DATE_EXTRACT needs a literal part, got '$pTok'")
-          c.expect(",")
-          val a = orExpr(c); c.expect(")")
-          val e = unquote(pTok).toLowerCase match {
+          val Seq(p, a0) = c.args(fn, 2, 2)
+          val part = p.str("part")
+          val a = a0.expr()
+          val e = part.toLowerCase match {
             case "year" => year(a)
             case "month_of_year" => month(a)
             case "day_of_month" => dayofmonth(a)
@@ -1154,6 +1046,7 @@ object Esql {
               s"unsupported DATE_EXTRACT part '$p'")
           }
           e.cast("long")
+        case _ => throw new IllegalArgumentException(s"unknown ES|QL function '$name'")
       }
     case id =>
       // an unrecognized operator/punctuation token must be a PARSE
@@ -1192,34 +1085,27 @@ object Esql {
 
   private def cmpExpr(c: Cursor): Column = {
     val l = addExpr(c)
-    c.peek match {
+    c.peek.map(_.toUpperCase) match {
       case Some("==") => c.eat(); l === addExpr(c)
       case Some("!=") => c.eat(); l =!= addExpr(c)
       case Some(">=") => c.eat(); l >= addExpr(c)
       case Some("<=") => c.eat(); l <= addExpr(c)
       case Some(">") => c.eat(); l > addExpr(c)
       case Some("<") => c.eat(); l < addExpr(c)
-      case Some(t) if t.equalsIgnoreCase("IS") =>
+      case Some("IS") =>
         // IS NULL / IS NOT NULL — the null predicates ES|QL pairs with
         // its left joins (an unmatched LOOKUP JOIN/ENRICH row)
         c.eat()
-        val neg = c.peek.exists(_.equalsIgnoreCase("NOT"))
-        if (neg) c.eat()
-        val nul = c.eat()
-        require(nul.equalsIgnoreCase("NULL"), s"IS needs NULL, got '$nul'")
+        val neg = c.accept("NOT")
+        c.keyword("NULL")
         if (neg) l.isNotNull else l.isNull
-      case Some(t) if t.equalsIgnoreCase("LIKE") =>
+      case Some(op @ ("LIKE" | "RLIKE")) =>
         // ES|QL LIKE: * / ? wildcards against a string literal
         c.eat()
         val p = c.eat()
-        require(p.startsWith("\""), s"LIKE needs a string pattern, got '$p'")
-        l.like(wildcardToLike(unquote(p)))
-      case Some(t) if t.equalsIgnoreCase("RLIKE") =>
-        c.eat()
-        val p = c.eat()
-        require(p.startsWith("\""), s"RLIKE needs a string pattern, got '$p'")
-        l.rlike(unquote(p))
-      case Some(t) if t.equalsIgnoreCase("IN") =>
+        require(p.startsWith("\""), s"$op needs a string pattern, got '$p'")
+        if (op == "LIKE") l.like(wildcardToLike(unquote(p))) else l.rlike(unquote(p))
+      case Some("IN") =>
         // value IN (e1, e2, …) — an all-literal list builds a true In
         // expression (which reaches the scan as an In pushdown; an
         // OR-of-equalities would not fold to one), mixed lists fall
@@ -1230,21 +1116,14 @@ object Esql {
           else if (tok.matches("""\d+\.\d+""")) Some(tok.toDouble)
           else if (tok.matches("""\d+""")) Some(tok.toLong)
           else None
-        val lits = scala.collection.mutable.ListBuffer.empty[Any]
-        val exprs = scala.collection.mutable.ListBuffer.empty[Column]
-        var done = false
-        while (!done) {
-          (c.peek.flatMap(litVal), c.toks.drop(1).headOption) match {
-            case (Some(v), next) if next.contains(",") || next.contains(")") =>
-              lits += v; c.eat()
-            case _ => exprs += addExpr(c)
+        val (lits, exprs) = c.args("IN", 1, Int.MaxValue).partitionMap { a =>
+          a.toks match {
+            case List(t) if litVal(t).nonEmpty => Left(litVal(t).get)
+            case _ => val e = addExpr(a); a.end(); Right(e)
           }
-          if (c.peek.contains(",")) c.eat()
-          else { c.expect(")"); done = true }
         }
-        if (exprs.isEmpty) l.isin(lits.toSeq: _*)
-        else (exprs.toSeq ++ lits.map(lit(_)))
-          .map(v => l === v).reduce(_ || _)
+        if (exprs.isEmpty) l.isin(lits: _*)
+        else (exprs ++ lits.map(lit(_))).map(v => l === v).reduce(_ || _)
       case _ => l
     }
   }
@@ -1254,120 +1133,57 @@ object Esql {
     * old parser handled NOT inside primary — TIGHTER than comparisons —
     * which silently inverted that reading (r9 advice). */
   private def notExpr(c: Cursor): Column =
-    if (c.peek.exists(_.equalsIgnoreCase("NOT"))) { c.eat(); !notExpr(c) }
-    else cmpExpr(c)
+    if (c.accept("NOT")) !notExpr(c) else cmpExpr(c)
 
   private def andExpr(c: Cursor): Column = {
     var l = notExpr(c)
-    while (c.peek.exists(t => t.equalsIgnoreCase("AND") || t == "&&")) { c.eat(); l = l && notExpr(c) }
+    while (c.accept("AND") || c.accept("&&")) l = l && notExpr(c)
     l
   }
 
   private def orExpr(c: Cursor): Column = {
     var l = andExpr(c)
-    while (c.peek.exists(t => t.equalsIgnoreCase("OR") || t == "||")) { c.eat(); l = l || andExpr(c) }
+    while (c.accept("OR") || c.accept("||")) l = l || andExpr(c)
     l
   }
 
   /** Parse one full expression and REQUIRE every token consumed — an
     * unrecognized trailing operator must be an error, never a silently
     * truncated predicate (r7 review). */
-  private[graft] def parseExpr(src: String): Column = {
-    val c = new Cursor(lex(src))
-    val e = orExpr(c)
-    require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
-    e
+  private[graft] def parseExpr(src: String): Column = new Cursor(lex(src)).expr()
+
+  /** One EVAL/STATS/BY item: `name = expr`, or an UNALIASED expression —
+    * a bare column keeps its name, anything else gets a `<prefix>k`
+    * auto-name (r7 review: the old parser silently dropped the tail of
+    * an unaliased `user_id % 10`). The item must consume its tokens. */
+  private def item(c: Cursor, prefix: String, k: Int): (String, Column) = c.toks match {
+    case n :: "=" :: rest if n.matches(identRe) => c.toks = rest; n -> c.expr()
+    case List(n) if n.matches(identRe) => n -> c.expr()
+    case _ => s"$prefix$k" -> c.expr()
   }
 
-  private val identRe = "[A-Za-z_][A-Za-z_0-9.]*"
-
-  /** `name = expr` items separated by commas (EVAL / STATS / BY); an
-    * item may also be an UNALIASED expression — a bare column keeps its
-    * name, anything else gets an `exprN` auto-name (r7 review: the old
-    * parser silently dropped the tail of an unaliased `user_id % 10`).
-    * The list must consume the whole body. */
-  private def aliasedList(c: Cursor, autoPrefix: String = "expr"): Seq[(String, Column)] = {
-    val out = scala.collection.mutable.ListBuffer.empty[(String, Column)]
-    var more = true
-    var k = 0
-    while (more) {
-      k += 1
-      if (c.toks.length >= 2 && c.toks(1) == "=" && c.toks.head.matches(identRe)) {
-        val n = c.eat(); c.eat()
-        out += n -> orExpr(c)
-      } else {
-        val before = c.toks
-        val e = orExpr(c)
-        val consumed = before.take(before.length - c.toks.length)
-        val n =
-          if (consumed.length == 1 && consumed.head.matches(identRe)) consumed.head
-          else s"$autoPrefix$k"
-        out += n -> e
-      }
-      more = c.peek.contains(",")
-      if (more) c.eat()
-    }
-    require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
-    out.toSeq
-  }
+  /** [[item]]s separated by commas (EVAL / BY); the list must consume
+    * the whole body. */
+  private def aliasedList(c: Cursor, autoPrefix: String = "expr"): Seq[(String, Column)] =
+    c.items().zipWithIndex.map { case (ic, i) => item(ic, autoPrefix, i + 1) }
 
   /** STATS-item list: `alias = agg [WHERE cond]` items separated by
     * commas (the per-aggregate WHERE is ES|QL 8.16's filtered-stats
-    * syntax). Each item's tokens are collected to the next top-level
-    * comma, split on a top-level WHERE, and the condition (parsed
-    * FIRST) is installed as the cursor's aggFilter so every aggregate
-    * call in the item builds as `agg(IF(cond, arg, NULL))`. */
+    * syntax). Each item splits on a top-level WHERE, and the condition
+    * (parsed FIRST) is installed as the item cursor's aggFilter so every
+    * aggregate call in the item builds as `agg(IF(cond, arg, NULL))`. */
   private def statsList(c: Cursor): (Seq[(String, Column)], Seq[MadSpec]) = {
-    val out = scala.collection.mutable.ListBuffer.empty[(String, Column)]
     val mads = scala.collection.mutable.ListBuffer.empty[MadSpec]
-    var more = true
-    var k = 0
-    while (more) {
-      k += 1
-      val item = scala.collection.mutable.ListBuffer.empty[String]
-      var depth = 0
-      while (c.toks.nonEmpty && !(depth == 0 && c.peek.contains(","))) {
-        val t = c.eat()
-        if (t == "(") depth += 1
-        if (t == ")") depth -= 1
-        item += t
+    val out = c.items().zipWithIndex.map { case (it, i) =>
+      val (aggToks, filter) = splitTop(it.toks, _.equalsIgnoreCase("WHERE")) match {
+        case List(a) => (a, None)
+        case List(a, w) => (a, Some(new Cursor(w, s"${c.ctx} WHERE").expr()))
+        case _ => throw new IllegalArgumentException(
+          s"${c.ctx} item has more than one WHERE: ${it.toks.mkString(" ")}")
       }
-      var d2 = 0
-      val wIdx = item.indexWhere { t =>
-        val hit = d2 == 0 && t.equalsIgnoreCase("WHERE")
-        if (t == "(") d2 += 1
-        if (t == ")") d2 -= 1
-        hit
-      }
-      val (aggToks, filter) =
-        if (wIdx < 0) (item.toList, None)
-        else {
-          val cc = new Cursor(item.drop(wIdx + 1).toList)
-          val f = orExpr(cc)
-          require(cc.toks.isEmpty,
-            s"unparsed ES|QL tokens after WHERE: ${cc.toks.mkString(" ")}")
-          (item.take(wIdx).toList, Some(f))
-        }
-      val ic = new Cursor(aggToks)
-      ic.aggFilter = filter
-      ic.madAccum = mads
-      if (ic.toks.length >= 2 && ic.toks(1) == "=" && ic.toks.head.matches(identRe)) {
-        val n = ic.eat(); ic.eat()
-        out += n -> orExpr(ic)
-      } else {
-        val before = ic.toks
-        val e = orExpr(ic)
-        val consumed = before.take(before.length - ic.toks.length)
-        val n =
-          if (consumed.length == 1 && consumed.head.matches(identRe)) consumed.head
-          else s"agg$k"
-        out += n -> e
-      }
-      require(ic.toks.isEmpty, s"unparsed ES|QL tokens: ${ic.toks.mkString(" ")}")
-      more = c.peek.contains(",")
-      if (more) c.eat()
+      item(new Cursor(aggToks, c.ctx, filter, mads), "agg", i + 1)
     }
-    (out.toSeq, mads.toSeq)
+    (out, mads.toSeq)
   }
 
   /** MEDIAN_ABSOLUTE_DEVIATION pre-pass (the j68 two-pass shape inside
@@ -1556,14 +1372,10 @@ object Esql {
   }
 
   /** Parse a `<input-column> "<pattern>"` stage body (DISSECT / GROK). */
-  private def colPattern(body: String): (String, String) = {
-    val c = new Cursor(lex(body))
-    val in = c.eat()
-    require(in.matches(identRe), s"expected input column, got '$in'")
-    val patTok = c.eat()
-    require(patTok.startsWith("\""), s"expected pattern string, got '$patTok'")
-    require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
-    (in, unquote(patTok))
+  private def colPattern(stage: String, body: String): (String, String) = {
+    val c = new Cursor(lex(body), stage)
+    val in = c.ident("an input column")
+    (in, c.str("pattern"))
   }
 
   // ---------- pipeline compiler ----------
@@ -1605,7 +1417,7 @@ object Esql {
     // the ordinary stage pipeline. spark.range(1) seeds the single row;
     // only the declared columns survive the select.
     if (stages.head.toUpperCase.startsWith("ROW ")) {
-      val items = aliasedList(new Cursor(lex(stages.head.drop(4))))
+      val items = aliasedList(new Cursor(lex(stages.head.drop(4)), "ROW"))
       val df = s.range(1).select(items.map { case (n, e) => e.as(n) }: _*)
       return applyStages(s, d, df, stages.tail)
     }
@@ -1629,15 +1441,11 @@ object Esql {
     // aggregates contain *_OVER_TIME / RATE inner calls — that one
     // compiles as the TWO-LEVEL rollup [[tsStats]] implements.
     if (stages.head.toUpperCase.startsWith("TS ")) {
-      val tsBody = stages.head.drop(3).trim
-      val onIdx = findTopLevel(tsBody, "ON")
-      require(onIdx >= 0, "TS needs ON <dimension columns> — no index " +
+      val tc = new Cursor(lex(stages.head.drop(3)), "TS")
+      val tbl = tc.ident("one index name")
+      require(tc.accept("ON"), "TS needs ON <dimension columns> — no index " +
         "mappings exist to infer the series key from")
-      val tbl = tsBody.take(onIdx).trim
-      require(tbl.matches(identRe), s"TS needs one index name, got '$tbl'")
-      val dims = tsBody.drop(onIdx + 2).split(",").map(_.trim).toSeq
-      require(dims.nonEmpty && dims.forall(_.matches(identRe)),
-        s"TS ON needs dimension columns, got '${tsBody.drop(onIdx + 2)}'")
+      val dims = tc.items().map { it => val n = it.ident("dimension columns"); it.end(); n }
       var df = tbl match {
         case "events" => Tables.events(s, d)
         case other => Tables.read(s, d, other)
@@ -1670,18 +1478,15 @@ object Esql {
     // materializes the source-index tag per row. Each index keeps its
     // OWN parquet scan, so a WHERE on a shared column pushes into every
     // scan independently (EsqlSpec pins both PushedFilters).
-    var srcBody = stages.head.drop(5).trim
-    val mIdx = findTopLevel(srcBody, "METADATA")
-    val withMeta = mIdx >= 0
+    val fc = new Cursor(lex(stages.head.drop(5)), "FROM")
+    val names = scala.collection.mutable.ListBuffer(fc.ident("index names"))
+    while (fc.accept(",")) names += fc.ident("index names")
+    val withMeta = fc.accept("METADATA")
     if (withMeta) {
-      val metaCols = srcBody.drop(mIdx + "METADATA".length).trim
-      require(metaCols == "_index",
-        s"only METADATA _index is supported, got '$metaCols'")
-      srcBody = srcBody.take(mIdx).trim
+      val meta = fc.eat()
+      require(meta == "_index", s"only METADATA _index is supported, got '$meta'")
     }
-    val names = srcBody.split(",").map(_.trim).toSeq
-    require(names.nonEmpty && names.forall(_.matches(identRe)),
-      s"FROM needs index names, got '$srcBody'")
+    fc.end()
     def one(name: String): DataFrame = {
       val base = name match {
         case "events" => Tables.events(s, d)
@@ -1721,7 +1526,7 @@ object Esql {
   private[graft] def tsStats(df0: DataFrame, dims: Seq[String], body: String): DataFrame = {
     val byIdx = findTopLevel(body, "BY")
     require(byIdx >= 0, "TS STATS requires BY (at least the time bucket)")
-    val keys = aliasedList(new Cursor(lex(body.drop(byIdx + 2))), "key")
+    val keys = aliasedList(new Cursor(lex(body.drop(byIdx + 2)), "TS STATS BY"), "key")
     val innerFns = Set("MAX_OVER_TIME", "MIN_OVER_TIME", "SUM_OVER_TIME",
       "COUNT_OVER_TIME", "AVG_OVER_TIME", "FIRST_OVER_TIME",
       "LAST_OVER_TIME", "COUNT_DISTINCT_OVER_TIME",
@@ -1732,34 +1537,26 @@ object Esql {
     val outerFns = Set("MIN", "MAX", "SUM", "COUNT", "AVG")
     case class TsItem(name: String, outer: String, inner: String,
         arg: Column, rateSpan: Long)
-    val c = new Cursor(lex(body.take(byIdx)))
-    val items = scala.collection.mutable.ArrayBuffer[TsItem]()
-    var more = true
-    while (more) {
-      val name = c.eat()
-      require(name.matches(identRe), s"TS STATS needs name = …, got '$name'")
-      c.expect("=")
-      val outer = c.eat().toUpperCase
+    val items = new Cursor(lex(body.take(byIdx)), "TS STATS").items().map { it =>
+      val name = it.ident("name = …")
+      it.expect("=")
+      val outer = it.ident("an outer aggregate").toUpperCase
       require(outerFns(outer), s"TS STATS outer aggregate must be one of " +
         s"${outerFns.mkString("/")}, got '$outer'")
-      c.expect("(")
-      val inner = c.eat().toUpperCase
+      it.expect("(")
+      val Seq(ic) = it.args(outer, 1, 1)
+      it.end()
+      val inner = ic.ident("an inner function").toUpperCase
       require(innerFns(inner), s"TS STATS inner function must be one of " +
         s"${innerFns.mkString("/")}, got '$inner'")
-      c.expect("(")
-      val arg = orExpr(c)
-      val span = if (inner == "RATE") {
-        c.expect(",")
-        val t = c.eat()
-        require(t.matches("""\d+"""), s"RATE needs a literal span in seconds, got '$t'")
-        t.toLong
-      } else 0L
-      c.expect(")"); c.expect(")")
-      items += TsItem(name, outer, inner, arg, span)
-      more = c.peek.contains(",")
-      if (more) c.eat()
+      ic.expect("(")
+      val n = if (inner == "RATE") 2 else 1
+      val as = ic.args(inner, n, n)
+      ic.end()
+      val arg = as.head.expr()
+      TsItem(name, outer, inner, arg,
+        if (inner == "RATE") as(1).int("span in seconds", 0L, Long.MaxValue) else 0L)
     }
-    require(c.toks.isEmpty, s"unparsed TS STATS tokens: ${c.toks.mkString(" ")}")
     require(df0.columns.contains("ts"),
       "TS aggregation needs the canonical `ts` time column on the frame")
     // BY keys materialize first (they may be computed, e.g. BUCKET);
@@ -1776,7 +1573,7 @@ object Esql {
         keyed = keyed.withColumn(s"__ts_g$i",
           usOf(col("ts")) - lag(usOf(col("ts")), 1).over(w))
     }
-    val innerAggs = items.toSeq.zipWithIndex.map { case (it, i) =>
+    val innerAggs = items.zipWithIndex.map { case (it, i) =>
       val a = it.inner match {
         case "MAX_OVER_TIME" => max(it.arg)
         case "MIN_OVER_TIME" => min(it.arg)
@@ -1812,7 +1609,7 @@ object Esql {
       a.as(s"__ts_v$i")
     }
     val inner = keyed.groupBy(cellCols: _*).agg(innerAggs.head, innerAggs.tail: _*)
-    val outerAggs = items.toSeq.zipWithIndex.map { case (it, i) =>
+    val outerAggs = items.zipWithIndex.map { case (it, i) =>
       val v = col(s"__ts_v$i")
       (it.outer match {
         case "MIN" => min(v)
@@ -2027,7 +1824,7 @@ object Esql {
             .limit(k)
         case "WHERE" => df = df.filter(parseExpr(body))
         case "EVAL" =>
-          for ((n, e) <- aliasedList(new Cursor(lex(body))))
+          for ((n, e) <- aliasedList(new Cursor(lex(body), "EVAL")))
             df = df.withColumn(n, e)
         case "STATS" =>
           val byIdx = findTopLevel(body, "BY")
@@ -2038,14 +1835,14 @@ object Esql {
           // aggregation (spec-caught: 'STATS n = COUNT(*) BY' compiled)
           require(byIdx < 0 || byPart.trim.nonEmpty,
             "STATS BY needs at least one grouping key")
-          val (aggItems, mads) = statsList(new Cursor(lex(aggPart)))
+          val (aggItems, mads) = statsList(new Cursor(lex(aggPart), "STATS"))
           val aggs = aggItems.map { case (n, e) => e.as(n) }
           df =
             if (byPart.isEmpty) {
               val base = if (mads.isEmpty) df else madPrePass(df, Nil, mads)
               base.agg(aggs.head, aggs.tail: _*)
             } else {
-              val keys = aliasedList(new Cursor(lex(byPart)), "key")
+              val keys = aliasedList(new Cursor(lex(byPart), "STATS BY"), "key")
               var keyed = keys.foldLeft(df) { case (f, (n, e)) => f.withColumn(n, e) }
               if (mads.nonEmpty) keyed = madPrePass(keyed, keys.map(_._1), mads)
               keyed.groupBy(keys.map(k => col(k._1)): _*).agg(aggs.head, aggs.tail: _*)
@@ -2059,10 +1856,10 @@ object Esql {
           // single-partition global window (the r6 hazard).
           val byIdx2 = findTopLevel(body, "BY")
           require(byIdx2 >= 0, "INLINESTATS requires BY <keys> (key-bounded windows)")
-          val (aggs2, mads2) = statsList(new Cursor(lex(body.take(byIdx2))))
+          val (aggs2, mads2) = statsList(new Cursor(lex(body.take(byIdx2)), "INLINESTATS"))
           require(mads2.isEmpty, "MEDIAN_ABSOLUTE_DEVIATION is not supported " +
             "in INLINESTATS (its median pre-pass is a STATS-stage rewrite)")
-          val keys2 = aliasedList(new Cursor(lex(body.drop(byIdx2 + 2))), "key")
+          val keys2 = aliasedList(new Cursor(lex(body.drop(byIdx2 + 2)), "INLINESTATS BY"), "key")
           df = keys2.foldLeft(df) { case (f, (n, e)) => f.withColumn(n, e) }
           val wspec = org.apache.spark.sql.expressions.Window
             .partitionBy(keys2.map(k => col(k._1)): _*)
@@ -2105,11 +1902,11 @@ object Esql {
             }
           }
           df = df.orderBy(items.toIndexedSeq: _*)
-        case "LIMIT" => df = df.limit(body.trim.toInt)
+        case "LIMIT" => df = df.limit(new Cursor(lex(body), kw).int("row count").toInt)
         case "KEEP" =>
           df = df.select(expandCols(df, body).map(col): _*)
         case "DISSECT" =>
-          val (in, pat) = colPattern(body)
+          val (in, pat) = colPattern(kw, body)
           val (rx, keys) = dissectToRegex(pat)
           for ((n, i) <- keys.zipWithIndex)
             // regexp_extract returns '' on no-match in BOTH Spark and
@@ -2117,7 +1914,7 @@ object Esql {
             // needing that distinction filters on the match first)
             df = df.withColumn(n, regexp_extract(col(in), rx, i + 1))
         case "GROK" =>
-          val (in, pat) = colPattern(body)
+          val (in, pat) = colPattern(kw, body)
           val (rx, keys) = grokToRegex(pat)
           for (((n, cast), i) <- keys.zipWithIndex) {
             val e0 = regexp_extract(col(in), rx, i + 1)
@@ -2129,28 +1926,21 @@ object Esql {
             df = df.withColumn(n, e)
           }
         case "MV_EXPAND" =>
-          val n = body.trim
-          require(n.matches(identRe), s"MV_EXPAND needs a column, got '$n'")
+          val c = new Cursor(lex(body), kw)
+          val n = c.ident("a column")
+          c.end()
           // inner explode: drops null/empty arrays — the unnest-parity
           // choice (ES keeps a null row; DuckDB unnest does not)
           df = df.withColumn(n, explode(col(n)))
         case "RENAME" =>
           // RENAME old AS new [, old AS new …] — pure metadata; Catalyst
           // aliases through it, so pushdown/pruning are unaffected
-          val c = new Cursor(lex(body))
-          var more = true
-          while (more) {
-            val old = c.eat(); require(old.matches(identRe),
-              s"RENAME needs a column, got '$old'")
-            val as = c.eat(); require(as.equalsIgnoreCase("AS"),
-              s"RENAME needs AS, got '$as'")
-            val nw = c.eat(); require(nw.matches(identRe),
-              s"RENAME AS needs a name, got '$nw'")
-            df = df.withColumnRenamed(old, nw)
-            more = c.peek.contains(",")
-            if (more) c.eat()
+          for (it <- new Cursor(lex(body), kw).items()) {
+            val old = it.ident("a column")
+            it.keyword("AS")
+            df = df.withColumnRenamed(old, it.ident("a new name"))
+            it.end()
           }
-          require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
         case "DROP" =>
           df = df.drop(expandCols(df, body): _*)
         case "LOOKUP" =>
@@ -2160,17 +1950,12 @@ object Esql {
           // contract (ES enforces `index.mode: lookup`, a single-shard
           // index), so it rides a broadcast — the fact stream never
           // shuffles, at any corpus size.
-          val c = new Cursor(lex(body))
-          require(c.toks.length == 4, s"LOOKUP expects JOIN <table> ON <col>, got '$body'")
-          val j = c.eat(); require(j.equalsIgnoreCase("JOIN"),
-            s"LOOKUP must be followed by JOIN, got '$j'")
-          val tbl = c.eat(); require(tbl.matches(identRe),
-            s"LOOKUP JOIN needs a table, got '$tbl'")
-          val on = c.eat(); require(on.equalsIgnoreCase("ON"),
-            s"LOOKUP JOIN needs ON, got '$on'")
-          val key = c.eat(); require(key.matches(identRe),
-            s"LOOKUP JOIN ON needs a column, got '$key'")
-          require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
+          val c = new Cursor(lex(body), kw)
+          c.keyword("JOIN")
+          val tbl = c.ident("a table")
+          c.keyword("ON")
+          val key = c.ident("a join column")
+          c.end()
           df = df.join(broadcast(Tables.read(s, d, tbl)), Seq(key), "left")
         case "ENRICH" =>
           // ENRICH <policy> ON <match_field> WITH f1, f2, … — the enrich
@@ -2179,35 +1964,21 @@ object Esql {
           // Same broadcast-left-join shape as LOOKUP JOIN (an ES enrich
           // index is a system lookup index), but only the listed fields
           // survive — the projection prunes BEFORE the broadcast.
-          val c = new Cursor(lex(body))
-          val tbl = c.eat(); require(tbl.matches(identRe),
-            s"ENRICH needs a policy table, got '$tbl'")
-          val on = c.eat(); require(on.equalsIgnoreCase("ON"),
-            s"ENRICH needs ON, got '$on'")
-          val key = c.eat(); require(key.matches(identRe),
-            s"ENRICH ON needs a column, got '$key'")
-          require(c.toks.nonEmpty, "ENRICH needs WITH <fields>")
-          val w = c.eat(); require(w.equalsIgnoreCase("WITH"),
-            s"ENRICH needs WITH, got '$w'")
-          require(c.toks.nonEmpty, "ENRICH WITH needs at least one field")
+          val c = new Cursor(lex(body), kw)
+          val tbl = c.ident("a policy table")
+          c.keyword("ON")
+          val key = c.ident("a match column")
+          c.keyword("WITH")
           // WITH items are `field` or `alias = field` (the ES|QL rename
           // form — the appended column lands under the alias)
-          def withItem(): (String, String) = {
-            val a = c.eat()
-            require(a.matches(identRe), s"ENRICH WITH needs columns, got '$a'")
-            if (c.peek.contains("=")) {
-              c.eat()
-              val src = c.eat()
-              require(src.matches(identRe),
-                s"ENRICH WITH alias needs a source column, got '$src'")
-              (a, src)
-            } else (a, a)
+          val fields = c.items().map { it =>
+            val a = it.ident("WITH columns")
+            val src = if (it.accept("=")) it.ident("a source column") else a
+            it.end()
+            (a, src)
           }
-          val fields = scala.collection.mutable.ListBuffer(withItem())
-          while (c.peek.contains(",")) { c.eat(); fields += withItem() }
-          require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
           val lk = Tables.read(s, d, tbl)
-            .select(col(key) +: fields.toSeq.map {
+            .select(col(key) +: fields.map {
               case (alias, src) => col(src).as(alias) }: _*)
           df = df.join(broadcast(lk), Seq(key), "left")
         case "FORK" =>
@@ -2239,14 +2010,11 @@ object Esql {
           // the double. CONTRACT: branches end in LIMIT (ES caps FORK
           // branches at 1000 the same way), so the per-_fork rank
           // windows are bounded — the j58/j76 discipline.
-          val fc = new Cursor(lex(body))
-          val key = fc.eat(); require(key.matches(identRe),
-            s"FUSE needs a key column, got '$key'")
-          val byKw = fc.eat(); require(byKw.equalsIgnoreCase("BY"),
-            s"FUSE needs BY <score>, got '$byKw'")
-          val sc = fc.eat(); require(sc.matches(identRe),
-            s"FUSE BY needs a score column, got '$sc'")
-          require(fc.toks.isEmpty, s"unparsed ES|QL tokens: ${fc.toks.mkString(" ")}")
+          val fc = new Cursor(lex(body), kw)
+          val key = fc.ident("a key column")
+          fc.keyword("BY")
+          val sc = fc.ident("a score column")
+          fc.end()
           require(df.columns.contains("_fork"),
             "FUSE requires a FORK upstream (no _fork column on the frame)")
           val fw = org.apache.spark.sql.expressions.Window
@@ -2267,20 +2035,16 @@ object Esql {
           // The WITH model id is accepted for syntax compatibility and
           // intentionally unused (documented deviation). Row-local —
           // codegen-friendly HOFs, no shuffle, streams unchanged.
-          val cc = new Cursor(lex(body))
-          val outName = cc.eat()
-          require(outName.matches(identRe),
-            s"COMPLETION needs <col> = <prompt>, got '$outName'")
+          val cc = new Cursor(lex(body), kw)
+          val outName = cc.ident("<col> = <prompt>")
           cc.expect("=")
           val prompt = orExpr(cc)
-          if (cc.peek.exists(_.equalsIgnoreCase("WITH"))) {
-            cc.eat()
+          if (cc.accept("WITH")) {
             val m = cc.eat()
             require(m.matches(identRe) || m.startsWith("\""),
               s"COMPLETION WITH needs a model id, got '$m'")
           }
-          require(cc.toks.isEmpty,
-            s"unparsed ES|QL tokens: ${cc.toks.mkString(" ")}")
+          cc.end()
           val ptoks = split(prompt, " ")
           val keyedToks = transform(array_distinct(ptoks), t =>
             concat(format_string("%03d",
@@ -2304,19 +2068,14 @@ object Esql {
           // reranks only the top-N (inference over a full index is
           // priced out by design) — so the unpartitioned rank window
           // moves ≤ limit rows (j58/j76).
-          val rc = new Cursor(lex(body))
+          val rc = new Cursor(lex(body), kw)
           val qTok = rc.eat()
           require(qTok.startsWith("\""), s"RERANK needs a literal query, got '$qTok'")
-          val on = rc.eat(); require(on.equalsIgnoreCase("ON"),
-            s"RERANK needs ON <column>, got '$on'")
-          val fieldCol = rc.eat(); require(fieldCol.matches(identRe),
-            s"RERANK ON needs a column, got '$fieldCol'")
-          require(rc.toks.nonEmpty, "RERANK needs BY <tiebreak>")
-          val byKw2 = rc.eat(); require(byKw2.equalsIgnoreCase("BY"),
-            s"RERANK needs BY <tiebreak>, got '$byKw2'")
-          val tie = rc.eat(); require(tie.matches(identRe),
-            s"RERANK BY needs a column, got '$tie'")
-          require(rc.toks.isEmpty, s"unparsed ES|QL tokens: ${rc.toks.mkString(" ")}")
+          rc.keyword("ON")
+          val fieldCol = rc.ident("a text column")
+          rc.keyword("BY")
+          val tie = rc.ident("a tiebreak column")
+          rc.end()
           val terms = unquote(qTok).trim.split("\\s+").toSeq.distinct
           require(terms.nonEmpty && terms.forall(_.nonEmpty),
             "RERANK needs at least one query term")
@@ -2345,21 +2104,15 @@ object Esql {
           // on a bucketed STATS output (≤ calendar-days rows), never a
           // raw event stream — same contract as ES, whose change_point
           // agg consumes a date_histogram and caps at 1000 buckets.
-          val c = new Cursor(lex(body))
-          val v = c.eat(); require(v.matches(identRe),
-            s"CHANGE_POINT needs a value column, got '$v'")
-          val on = c.eat(); require(on.equalsIgnoreCase("ON"),
-            s"CHANGE_POINT needs ON, got '$on'")
-          val k = c.eat(); require(k.matches(identRe),
-            s"CHANGE_POINT ON needs a key column, got '$k'")
-          val as = c.eat(); require(as.equalsIgnoreCase("AS"),
-            s"CHANGE_POINT needs AS <type_col>, <stat_col>, got '$as'")
-          val tName = c.eat(); require(tName.matches(identRe),
-            s"CHANGE_POINT AS needs a type column name, got '$tName'")
+          val c = new Cursor(lex(body), kw)
+          val v = c.ident("a value column")
+          c.keyword("ON")
+          val k = c.ident("a key column")
+          c.keyword("AS")
+          val tName = c.ident("a type column name")
           c.expect(",")
-          val sName = c.eat(); require(sName.matches(identRe),
-            s"CHANGE_POINT AS needs a stat column name, got '$sName'")
-          require(c.toks.isEmpty, s"unparsed ES|QL tokens: ${c.toks.mkString(" ")}")
+          val sName = c.ident("a stat column name")
+          c.end()
           val w = org.apache.spark.sql.expressions.Window.orderBy(col(k))
           val wCum = w.rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -2401,9 +2154,6 @@ object Esql {
       || SORT sum_cents DESC, band
       || LIMIT 5""".stripMargin
 
-  def j188(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j188Query)
-
   /** j194_esql_dissect_grok — the log-pattern-extraction stages, the
     * single most common ES|QL workload (raw text → columns): DISSECT
     * peels the numeric suffix off `source` (literal-separator parsing),
@@ -2424,9 +2174,6 @@ object Esql {
       || SORT n DESC, w1, idx_n
       || LIMIT 25""".stripMargin
 
-  def j194(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j194Query)
-
   /** j195_esql_mv_expand — multivalue expansion: SPLIT builds an array
     * column, MV_EXPAND explodes it to rows (ES|QL's unnest), and the
     * pipeline aggregates the expanded rows — wordcount expressed in the
@@ -2440,9 +2187,6 @@ object Esql {
       || STATS n = COUNT(*) BY tok, lang
       || SORT n DESC, tok, lang
       || LIMIT 30""".stripMargin
-
-  def j195(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j195Query)
 
   /** j200_esql_lookup_join — ES|QL `LOOKUP JOIN` (the 8.18 flagship
     * stage: enrich the stream from a lookup index mid-pipeline): rename
@@ -2464,9 +2208,6 @@ object Esql {
       || SORT cnt DESC, n_name
       || LIMIT 10""".stripMargin
 
-  def j200(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j200Query)
-
   /** j201_esql_enrich — ES|QL `ENRICH <policy> ON <field> WITH …`: the
     * enrich-processor twin of LOOKUP JOIN, with the policy modeled as
     * its enrich-source table and WITH pruning to the listed fields
@@ -2483,9 +2224,6 @@ object Esql {
       || SORT clicks DESC, n_name
       || LIMIT 12""".stripMargin
 
-  def j201(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j201Query)
-
   /** j208_esql_stats_where — ES|QL filtered stats (8.16): per-aggregate
     * `WHERE` inside one STATS — the "many conditional metrics in one
     * pass" idiom that otherwise needs N pipelines. Compiled as
@@ -2499,9 +2237,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100)
       || STATS n_all = COUNT(*), n_big = COUNT(*) WHERE cents >= 5000, big_cents = SUM(cents) WHERE cents >= 5000, mx_small = MAX(cents) WHERE cents < 5000 BY event_type
       || SORT event_type""".stripMargin
-
-  def j208(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j208Query)
 
   /** j209_esql_inlinestats — ES|QL INLINESTATS: the grouped aggregate
     * joined back onto every row, here finding each (user, type) pair's
@@ -2518,9 +2253,6 @@ object Esql {
       || STATS n_peaks = COUNT(*), peak_cents = SUM(cents) BY event_type
       || SORT event_type""".stripMargin
 
-  def j209(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j209Query)
-
   /** j210_esql_sample — ES|QL SAMPLE (9.1): probabilistic row sampling
     * mid-pipeline. The deterministic twin draws the salted md5-nibble
     * fraction per event_id (j28's device — bit-reproducible across
@@ -2536,9 +2268,6 @@ object Esql {
       || STATS n_sampled = COUNT(*), cents_sampled = SUM(cents) BY event_type
       || SORT event_type""".stripMargin
 
-  def j210(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j210Query)
-
   /** j211_esql_date_trunc — ES|QL DATE_TRUNC + time-keyed STATS (the
     * dashboard date-histogram written in the pipe language): purchases
     * rolled to hour starts. DATE_TRUNC folds to Spark's `date_trunc`
@@ -2551,9 +2280,6 @@ object Esql {
       || STATS n = COUNT(*), cents = SUM(ROUND(value * 100)) BY hour
       || SORT hour
       || LIMIT 48""".stripMargin
-
-  def j211(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j211Query)
 
   /** j212_esql_case — ES|QL CASE + COALESCE over an ENRICH miss: the
     * lookup key (user_id·7 % 100, j49 derivation) straddles nation's
@@ -2572,9 +2298,6 @@ object Esql {
       || SORT nation, band
       || LIMIT 40""".stripMargin
 
-  def j212(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j212Query)
-
   /** j213_esql_drop_rename — ES|QL RENAME/DROP projection stages: both
     * are metadata-only, so the WHERE on the RENAMED column still pushes
     * to the parquet scan as a predicate on the ORIGINAL column, and the
@@ -2589,9 +2312,6 @@ object Esql {
       || STATS n = COUNT(*), mx = MAX(ROUND(v * 100)) BY event_type
       || SORT event_type""".stripMargin
 
-  def j213(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j213Query)
-
   /** j214_esql_like_in — ES|QL LIKE (wildcards `*` and `?`) and IN list
     * predicates: the two most common WHERE forms after plain
     * comparison. LIKE's prefix pattern pushes to the scan as a
@@ -2602,9 +2322,6 @@ object Esql {
       || WHERE source LIKE "src1*" AND lang IN ("en", "de")
       || STATS n = COUNT(*), chars = SUM(n_chars) BY source, lang
       || SORT source, lang""".stripMargin
-
-  def j214(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j214Query)
 
   /** j215_esql_fork — ES|QL FORK (9.x): one pipeline splits into
     * branches that each continue from the shared frame, then union with
@@ -2622,9 +2339,6 @@ object Esql {
       |       (WHERE event_type == "click" | EVAL hour = DATE_TRUNC(1 hour, ts) | STATS n = COUNT(*), m = SUM(cents) BY hour | SORT hour | LIMIT 10)
       || SORT _fork, band, hour""".stripMargin
 
-  def j215(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j215Query)
-
   /** j217_esql_strings — the everyday ES|QL string functions
     * (SUBSTRING / TO_UPPER / TO_LOWER / TRIM / STARTS_WITH /
     * ENDS_WITH) plus the IS [NOT] NULL predicates: prefix/suffix
@@ -2639,9 +2353,6 @@ object Esql {
       || STATS n = COUNT(*), chars = SUM(n_chars) BY up, head
       || SORT n DESC, up, head
       || LIMIT 20""".stripMargin
-
-  def j217(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j217Query)
 
   /** j218_esql_mv — ES|QL multivalue functions (MV_COUNT / MV_DEDUPE /
     * MV_MIN / MV_MAX) over SPLIT arrays: token count, distinct-token
@@ -2659,9 +2370,6 @@ object Esql {
       || SORT docs DESC, lang, first_tok
       || LIMIT 25""".stripMargin
 
-  def j218(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j218Query)
-
   /** j219_esql_stats_fns — the ES|QL statistical aggregates beyond
     * SUM/AVG: COUNT_DISTINCT (exact — ES's default HLL++ approximation
     * is not oracle-comparable; ES itself is exact at low cardinality),
@@ -2678,9 +2386,6 @@ object Esql {
       || STATS users = COUNT_DISTINCT(user_id), p50 = ROUND(PERCENTILE(cents, 50), 6), p90 = ROUND(PERCENTILE(cents, 90), 6), med = ROUND(MEDIAN(cents), 6) BY event_type
       || SORT event_type""".stripMargin
 
-  def j219(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j219Query)
-
   /** j220_esql_bucket — ES|QL BUCKET, the pipe language's histogram
     * workhorse, in its numeric 4-arg form BUCKET(field, count, min,
     * max): integer buckets of width ceil((max−min)/count) anchored at
@@ -2695,9 +2400,6 @@ object Esql {
       || STATS n = COUNT(*), sum_cents = SUM(cents) BY b = BUCKET(cents, 20, 0, 50000)
       || SORT b""".stripMargin
 
-  def j220(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j220Query)
-
   /** j221_esql_weighted_avg — ES|QL WEIGHTED_AVG (the j72 `weighted_avg`
     * agg surfaced in the pipe language): Σ(v·w)/Σw with both sums exact
     * over integer cents × integer weights (weight = user_id + 1, the
@@ -2709,9 +2411,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100), w = user_id + 1
       || STATS wavg = ROUND(WEIGHTED_AVG(cents, w), 6), wavg_big = ROUND(WEIGHTED_AVG(cents, w), 6) WHERE cents >= 5000, n = COUNT(*) BY event_type
       || SORT event_type""".stripMargin
-
-  def j221(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j221Query)
 
   /** j222_esql_cidr — ES|QL CIDR_MATCH (the security-dashboard staple,
     * closing the IP family beside j198 ip_range / j203 ip_prefix) +
@@ -2729,9 +2428,6 @@ object Esql {
       || EVAL net = CASE(CIDR_MATCH(ip, "10.2.0.0/15", "10.0.4.0/22"), "in", "out")
       || STATS n = COUNT(*), cents = SUM(ROUND(value * 100)) BY net, event_type
       || SORT net, event_type""".stripMargin
-
-  def j222(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j222Query)
 
   /** j223_esql_date_diff — ES|QL DATE_DIFF + NOW(): the age-bucketing
     * idiom every retention dashboard runs (`how long ago did this
@@ -2751,9 +2447,6 @@ object Esql {
       || STATS n = COUNT(*), cents = SUM(cents), min_h = MIN(DATE_DIFF("hour", ts, NOW())), max_h = MAX(DATE_DIFF("hour", ts, NOW())) BY age_d
       || SORT age_d""".stripMargin
 
-  def j223(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j223Query)
-
   /** j224_esql_date_fns — the rest of the everyday ES|QL date family:
     * DATE_FORMAT (→ locale-free pattern string), DATE_PARSE (the
     * round-trip back to a midnight timestamp — the log-ingest idiom),
@@ -2772,9 +2465,6 @@ object Esql {
       || STATS n = COUNT(*), days = COUNT_DISTINCT(day_str), first_day = MIN(day2) BY dow
       || SORT dow""".stripMargin
 
-  def j224(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j224Query)
-
   /** j225_esql_multi_index — multi-index FROM + METADATA _index: ES|QL
     * reads `FROM idx1, idx2` as the by-name union of the indices (a
     * column absent from one is null there) and METADATA _index tags
@@ -2791,9 +2481,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100)
       || STATS n = COUNT(*), sum_cents = SUM(cents), us_rows = COUNT(ts_us) BY _index, event_type
       || SORT _index, event_type""".stripMargin
-
-  def j225(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j225Query)
 
   /** j226_esql_change_point — ES|QL CHANGE_POINT over a STATS-by-day
     * frame: the ops-dashboard "when did the metric shift" stage. The
@@ -2812,9 +2499,6 @@ object Esql {
       || CHANGE_POINT n ON day AS cp_type, cp_stat
       || SORT day""".stripMargin
 
-  def j226(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j226Query)
-
   /** j234_esql_math — the everyday ES|QL math scalars (the compiler-path
     * parallel of h4's DataFrame math, as j217 parallels h2's strings):
     * FLOOR/CEIL (integral, exact), SQRT/POW/LOG10 (single libm
@@ -2828,9 +2512,6 @@ object Esql {
       || EVAL whole = TO_LONG(FLOOR(cents / 100.0)), whole_up = TO_LONG(CEIL(cents / 100.0)), rt = ROUND(SQRT(cents), 6), pw = ROUND(POW(cents, 0.3), 6), lg = ROUND(LOG10(1 + cents), 6), g = GREATEST(user_id % 7, user_id % 5), l = LEAST(user_id % 7, user_id % 5)
       || STATS n = COUNT(*), sum_whole = SUM(whole), sum_up = SUM(whole_up), mn_rt = MIN(rt), mx_rt = MAX(rt), mx_pw = MAX(pw), mx_lg = MAX(lg), sum_g = SUM(g), sum_l = SUM(l) BY event_type
       || SORT event_type""".stripMargin
-
-  def j234(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j234Query)
 
   /** j235_esql_categorize — ES|QL CATEGORIZE (8.18's log-pattern
     * grouping function): `STATS … BY CATEGORIZE(text)` clusters
@@ -2846,9 +2527,6 @@ object Esql {
       || STATS docs = COUNT(*), example_doc = MIN(doc_id), chars = SUM(n_chars) BY cat = CATEGORIZE(text)
       || SORT docs DESC, cat
       || LIMIT 15""".stripMargin
-
-  def j235(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j235Query)
 
   /** j229_esql_mv_position — the position-sensitive multivalue family
     * MV_SORT / MV_SLICE / MV_FIRST / MV_LAST / MV_CONCAT: sort gives the
@@ -2866,9 +2544,6 @@ object Esql {
       || SORT n DESC, lang, low3
       || LIMIT 25""".stripMargin
 
-  def j229(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j229Query)
-
   /** j230_esql_top — the TOP aggregate (ES|QL's top-N-values-per-group,
     * the top_metrics twin): the 3 largest cent values per event type,
     * folded to a CSV string by MV_CONCAT (the no-array-output rule).
@@ -2881,9 +2556,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100)
       || STATS top3 = MV_CONCAT(TOP(cents, 3, "desc"), ","), n = COUNT(*) BY event_type
       || SORT event_type""".stripMargin
-
-  def j230(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j230Query)
 
   /** j231_esql_fulltext — ES|QL 8.17's full-text functions MATCH and
     * QSTR: the bridge between the pipe language and the search DSL.
@@ -2900,9 +2572,6 @@ object Esql {
       || STATS n = COUNT(*), chars = SUM(n_chars) BY source
       || SORT n DESC, source
       || LIMIT 15""".stripMargin
-
-  def j231(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j231Query)
 
   /** j236_esql_stats_ext — STATS aggregate parity with the DSL surface:
     * STD_DEV (population σ — d7/j71's rounded-stddev hash discipline),
@@ -2922,9 +2591,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100)
       || STATS n = COUNT(*), sd = ROUND(STD_DEV(cents), 6), sd_big = ROUND(STD_DEV(cents), 6) WHERE cents >= 5000, mad = ROUND(MEDIAN_ABSOLUTE_DEVIATION(cents), 6), mad_big = ROUND(MEDIAN_ABSOLUTE_DEVIATION(cents), 6) WHERE cents >= 5000, vals = MV_CONCAT(VALUES(user_id % 7), ",") BY event_type
       || SORT event_type""".stripMargin
-
-  def j236(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j236Query)
 
   /** j237_esql_scalars_ext — the everyday scalar stragglers a user
     * porting real ES|QL hits in the first dozen pipelines: LTRIM/RTRIM
@@ -2947,9 +2613,6 @@ object Esql {
       || SORT trimmed, tag
       || LIMIT 30""".stripMargin
 
-  def j237(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j237Query)
-
   /** j238_esql_mv_arith — the numeric multivalue folds MV_SUM / MV_AVG /
     * MV_MEDIAN over a REAL float-array column (the embeddings fixture):
     * sum and mean ride the VectorOps dot-product device (double fold,
@@ -2963,9 +2626,6 @@ object Esql {
       || EVAL s = ROUND(MV_SUM(embedding), 6), a = ROUND(MV_AVG(embedding), 6), m = ROUND(MV_MEDIAN(embedding), 6)
       || STATS n = COUNT(*), mx_s = MAX(s), mn_s = MIN(s), mx_a = MAX(a), mx_m = MAX(m), mn_m = MIN(m) BY label
       || SORT label""".stripMargin
-
-  def j238(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j238Query)
 
   /** The KNN fixture's query vector — dyadic-exact literals
     * ({-0.5, -0.25, 0, 0.25, 0.5} only), so the text form parses to
@@ -2990,9 +2650,6 @@ object Esql {
        || KEEP vec_id, label, s
        || SORT s DESC, vec_id""".stripMargin
 
-  def j281(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j281Query)
-
   /** j239_esql_row — the ROW source command: a one-row inline-literal
     * source through the SAME stage compiler (EVAL/KEEP fold onto it
     * like onto any scan), exercising pure functions on known inputs —
@@ -3002,9 +2659,6 @@ object Esql {
     """ROW a = 1, b = "two", c = 2.5
       || EVAL d = a + 10, up = TO_UPPER(b), r = ROUND(c * 2, 1), lg = LOG(2, 8), sg = TO_LONG(SIGNUM(0 - a))
       || KEEP a, b, c, d, up, r, lg, sg""".stripMargin
-
-  def j239(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j239Query)
 
   /** j241_esql_bucket_duration — BUCKET's DURATION form, the multi-unit
     * time rounding DATE_TRUNC deliberately rejects (`BUCKET(ts, 3
@@ -3021,9 +2675,6 @@ object Esql {
       || STATS n = COUNT(*), cents = SUM(ROUND(value * 100)) BY b3h
       || SORT b3h
       || LIMIT 40""".stripMargin
-
-  def j241(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j241Query)
 
   /** j242_esql_fuse — ES|QL 9.x FUSE, the FORK-merger: two branches
     * rank the corpus by different signals (a lexical MATCH leg by
@@ -3043,9 +2694,6 @@ object Esql {
       || SORT fuse_score DESC, doc_id
       || LIMIT 15""".stripMargin
 
-  def j242(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j242Query)
-
   /** j243_esql_trig — the trig/geometry scalar family SIN / COS / TAN /
     * ATAN2 / CBRT / PI / TO_RADIANS / TO_DEGREES: single libm
     * applications under the j234 float rule (ROUND 6dp in the query,
@@ -3060,9 +2708,6 @@ object Esql {
       || EVAL sn = ROUND(SIN(rad), 6), cs = ROUND(COS(rad), 6), tn = ROUND(TAN(TO_RADIANS(user_id % 80)), 6), at2 = ROUND(ATAN2(value, 1 + user_id % 10), 6), cb = ROUND(CBRT(value), 6), pi2 = ROUND(PI() * 2, 6), bak = ROUND(TO_DEGREES(rad), 6)
       || STATS n = COUNT(*), mn_sn = MIN(sn), mx_sn = MAX(sn), mn_cs = MIN(cs), mx_cs = MAX(cs), mx_tn = MAX(tn), mx_at = MAX(at2), mx_cb = MAX(cb), mx_pi = MAX(pi2), mx_bak = MAX(bak) BY event_type
       || SORT event_type""".stripMargin
-
-  def j243(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j243Query)
 
   /** j244_esql_first_last — the FIRST/LAST positional aggregates (ES|QL
     * 9.x): value at the earliest/latest sort key per group — d8's LWW
@@ -3079,9 +2724,6 @@ object Esql {
       || EVAL cents = ROUND(value * 100)
       || STATS n = COUNT(*), first_cents = FIRST(cents, ts), last_cents = LAST(cents, ts), first_user = FIRST(user_id, ts), last_user = LAST(user_id, ts), last_big = LAST(cents, ts) WHERE cents >= 5000 BY event_type
       || SORT event_type""".stripMargin
-
-  def j244(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j244Query)
 
   /** j245_esql_rerank — the RERANK stage (ES|QL 9.1) in the standard
     * retrieve-then-rerank shape: a cheap first ranking (MATCH filter +
@@ -3103,9 +2745,6 @@ object Esql {
       || LIMIT 10
       || KEEP doc_id, n_chars, _rerank, new_rank""".stripMargin
 
-  def j245(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j245Query)
-
   /** j246_esql_trig_inverse — the inverse-trig + hyperbolic half of the
     * ES|QL math surface: ASIN / ACOS / ATAN / SINH / COSH / TANH / E /
     * TAU (j243's siblings). The probe argument (user_id%200−100)/100.0
@@ -3122,9 +2761,6 @@ object Esql {
       || STATS n = COUNT(*), mn_as = MIN(asn), mx_as = MAX(asn), mx_ac = MAX(acs), mx_at = MAX(atn), mn_sh = MIN(sh), mx_ch = MAX(ch), mx_th = MAX(th), mx_hy = MAX(hy), e_c = MAX(ec), tau_c = MAX(tauc) BY event_type
       || SORT event_type""".stripMargin
 
-  def j246(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j246Query)
-
   /** j247_esql_hash_encode — the hash/encoding scalar family: SHA256
     * (lowercase hex, MD5's sibling), TO_BASE64 / FROM_BASE64 (the
     * round-trip is part of the fixture: rt = decode(encode(source))),
@@ -3138,9 +2774,6 @@ object Esql {
       || EVAL h8 = SUBSTRING(SHA256(source), 1, 8), b64 = TO_BASE64(lang), rt = FROM_BASE64(TO_BASE64(source)), bl = TO_LONG(BIT_LENGTH(lang)), byl = TO_LONG(BYTE_LENGTH(text))
       || STATS n = COUNT(*), hashes = COUNT_DISTINCT(h8), mn_h = MIN(h8), mn_b64 = MIN(b64), mn_rt = MIN(rt), mn_bl = MIN(bl), mx_byl = MAX(byl) BY lang
       || SORT lang""".stripMargin
-
-  def j247(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j247Query)
 
   /** j248_esql_round_to_mv — ROUND_TO (ES|QL 9.1's fixed-point
     * bucketing: round DOWN to the largest literal point ≤ x, clamp
@@ -3158,9 +2791,6 @@ object Esql {
       || SORT band, ap
       || LIMIT 30""".stripMargin
 
-  def j248(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j248Query)
-
   /** j249_esql_ts — the TS source command + the *_OVER_TIME inner
     * aggregate family (ES|QL 9.1 time-series): per-series-per-day inner
     * rollup (MAX/MIN/SUM/COUNT/AVG/FIRST/LAST_OVER_TIME over exact
@@ -3175,9 +2805,6 @@ object Esql {
       || EVAL mxavg = ROUND(mxavg, 6)
       || SORT day
       || LIMIT 20""".stripMargin
-
-  def j249(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j249Query)
 
   /** j250_esql_ts_rate — RATE (ES|QL 9.1's counter-rate aggregate)
     * through the same TS rollup: per-second rate of increase with
@@ -3196,9 +2823,6 @@ object Esql {
       || SORT day
       || LIMIT 20""".stripMargin
 
-  def j250(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j250Query)
-
   /** j251_esql_fulltext_ext — MATCH_PHRASE + KQL, the remaining ES|QL
     * 9.1 full-text functions (j231's MATCH/QSTR siblings): the phrase
     * leg is j36's adjacency device on the analyzed field; the KQL leg
@@ -3214,9 +2838,6 @@ object Esql {
       || WHERE MATCH_PHRASE(text, "spark join") OR KQL("lang:fr and not source:src2* and (dup or vector)")
       || KEEP doc_id, lang, source, n_chars
       || SORT doc_id""".stripMargin
-
-  def j251(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j251Query)
 
   /** j253_esql_completion — the COMPLETION inference stage (ES|QL 9.1)
     * in the retrieve-then-summarize shape: MATCH filter + top-10 cut,
@@ -3235,9 +2856,6 @@ object Esql {
       || KEEP doc_id, summary, n_sum
       || SORT doc_id""".stripMargin
 
-  def j253(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j253Query)
-
   /** j254_esql_show_info — SHOW INFO, the last source command (the
     * command surface is now FROM / ROW / TS / SHOW — complete against
     * the ES|QL 9.1 list): one metadata row, every field pinned (the
@@ -3247,9 +2865,6 @@ object Esql {
     """SHOW INFO
       || EVAL major = TO_LONG(SUBSTRING(version, 1, 1))
       || KEEP date, hash, version, major""".stripMargin
-
-  def j254(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j254Query)
 
   /** j255_esql_ts_delta — the promql-descended half of the ES|QL 9.2
     * time-series functions through the same [[tsStats]] rollup: DELTA
@@ -3269,9 +2884,6 @@ object Esql {
       || SORT day
       || LIMIT 20""".stripMargin
 
-  def j255(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j255Query)
-
   /** j256_esql_mv_math — the remaining numeric multivalue functions over
     * the REAL float-array column (j238's siblings): MV_PERCENTILE
     * (linear interpolation at rank p/100·(n−1) over the sorted
@@ -3287,9 +2899,6 @@ object Esql {
       || STATS n = COUNT(*), mx90 = MAX(p90), mn90 = MIN(p90), mx50 = MAX(p50), mxpw = MAX(pw), mnpw = MIN(pw), mxpad = MAX(pad) BY label
       || SORT label""".stripMargin
 
-  def j256(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j256Query)
-
   /** j257_esql_sample_agg — the SAMPLE aggregate (ES|QL 9.1) in STATS:
     * N of the group's values under the deterministic md5-of-id draw
     * (see the compiler case — the j210 stage device as an aggregate),
@@ -3303,9 +2912,6 @@ object Esql {
     """FROM documents
       || STATS n = COUNT(*), pick = SAMPLE(source, 3, doc_id), pick_s1 = SAMPLE(source, 2, doc_id) WHERE STARTS_WITH(source, "src1") BY lang
       || SORT lang""".stripMargin
-
-  def j257(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j257Query)
 
   /** j260_esql_st_distance — the ES|QL geo functions over the engine's
     * WKT-string geo_point representation: TO_GEOPOINT builds/validates
@@ -3331,17 +2937,14 @@ object Esql {
     * row-local projections into one map-combined STATS; at 100 TB the
     * only exchange is the 5-group agg. */
   val j260Query: String =
-    """FROM events
-      || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
-      || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
-      || EVAL d = ROUND(ST_DISTANCE(p, TO_GEOPOINT("POINT(-74.0 40.7)")), 6)
-      || EVAL px = ST_X(p), py = ST_Y(p)
-      || WHERE lat >= 40.7 - 2000000.0 / 111000.0 AND lat <= 40.7 + 2000000.0 / 111000.0 AND lon >= 0.0 - 74.0 - 2000000.0 / (111000.0 * COS(TO_RADIANS(40.7 + 2000000.0 / 111000.0))) AND lon <= 0.0 - 74.0 + 2000000.0 / (111000.0 * COS(TO_RADIANS(40.7 + 2000000.0 / 111000.0))) AND d <= 2000000.0
-      || STATS n = COUNT(*), mn_d = MIN(d), mx_d = MAX(d), mn_x = MIN(px), mx_y = MAX(py) BY event_type
-      || SORT event_type""".stripMargin
-
-  def j260(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j260Query)
+    s"""FROM events
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
+       || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
+       || EVAL d = ROUND(ST_DISTANCE(p, TO_GEOPOINT("POINT(-74.0 40.7)")), 6)
+       || EVAL px = ST_X(p), py = ST_Y(p)
+       || WHERE lat >= 40.7 - 2000000.0 / 111000.0 AND lat <= 40.7 + 2000000.0 / 111000.0 AND lon >= 0.0 - 74.0 - 2000000.0 / (111000.0 * COS(TO_RADIANS(40.7 + 2000000.0 / 111000.0))) AND lon <= 0.0 - 74.0 + 2000000.0 / (111000.0 * COS(TO_RADIANS(40.7 + 2000000.0 / 111000.0))) AND d <= 2000000.0
+       || STATS n = COUNT(*), mn_d = MIN(d), mx_d = MAX(d), mn_x = MIN(px), mx_y = MAX(py) BY event_type
+       || SORT event_type""".stripMargin
 
   private val geoShapeDdl =
     "struct<xmin:double,xmax:double,ymax:double,ymin:double," +
@@ -3461,16 +3064,13 @@ object Esql {
     * the oracle checks all four independently. Pure comparisons on
     * exact-arithmetic doubles; the envelope constructor constant-folds. */
   val j266Query: String =
-    """FROM events
-      || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
-      || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
-      || EVAL env = TO_GEOSHAPE("BBOX (-120.0, -60.0, 45.0, 10.0)")
-      || EVAL inside = ST_INTERSECTS(p, env), within = ST_WITHIN(p, env), cont = ST_CONTAINS(env, p), disj = ST_DISJOINT(p, env)
-      || STATS n = COUNT(*), n_int = COUNT(*) WHERE inside, n_within = COUNT(*) WHERE within, n_cont = COUNT(*) WHERE cont, n_disj = COUNT(*) WHERE disj BY event_type
-      || SORT event_type""".stripMargin
-
-  def j266(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j266Query)
+    s"""FROM events
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
+       || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
+       || EVAL env = TO_GEOSHAPE("BBOX (-120.0, -60.0, 45.0, 10.0)")
+       || EVAL inside = ST_INTERSECTS(p, env), within = ST_WITHIN(p, env), cont = ST_CONTAINS(env, p), disj = ST_DISJOINT(p, env)
+       || STATS n = COUNT(*), n_int = COUNT(*) WHERE inside, n_within = COUNT(*) WHERE within, n_cont = COUNT(*) WHERE cont, n_disj = COUNT(*) WHERE disj BY event_type
+       || SORT event_type""".stripMargin
 
   /** j269_esql_st_extent — ES|QL 9.x's ST_EXTENT_AGG + the envelope
     * extractors ST_XMIN/ST_XMAX/ST_YMIN/ST_YMAX: the per-type bounding
@@ -3480,16 +3080,13 @@ object Esql {
     * the per-agg filter to bind that composition too. Everything
     * map-combined min/max — order-independent, no float hazard. */
   val j269Query: String =
-    """FROM events
-      || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
-      || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
-      || STATS n = COUNT(*), ext = ST_EXTENT_AGG(p), ext_e = ST_EXTENT_AGG(p) WHERE lat >= 0.0 BY event_type
-      || EVAL xmin = ST_XMIN(ext), xmax = ST_XMAX(ext), ymin = ST_YMIN(ext), ymax = ST_YMAX(ext), n_ymin = ST_YMIN(ext_e)
-      || DROP ext, ext_e
-      || SORT event_type""".stripMargin
-
-  def j269(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j269Query)
+    s"""FROM events
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
+       || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
+       || STATS n = COUNT(*), ext = ST_EXTENT_AGG(p), ext_e = ST_EXTENT_AGG(p) WHERE lat >= 0.0 BY event_type
+       || EVAL xmin = ST_XMIN(ext), xmax = ST_XMAX(ext), ymin = ST_YMIN(ext), ymax = ST_YMAX(ext), n_ymin = ST_YMIN(ext_e)
+       || DROP ext, ext_e
+       || SORT event_type""".stripMargin
 
   /** j264_esql_grid_fns — the ES|QL grid-key functions ST_GEOHASH +
     * ST_GEOTILE as STATS BY keys (how ES|QL spells grid aggregations):
@@ -3499,32 +3096,26 @@ object Esql {
     * shared GeoOps fragments; the geohash is unrolled long shift/mask
     * arithmetic generated for BOTH engines from one loop. */
   val j264Query: String =
-    """FROM events
-      || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
-      || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
-      || EVAL gh = ST_GEOHASH(p, 4), gt = ST_GEOTILE(p, 6)
-      || STATS n = COUNT(*), tiles = COUNT_DISTINCT(gt) BY gh
-      || SORT n DESC, gh
-      || LIMIT 20""".stripMargin
-
-  def j264(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j264Query)
+    s"""FROM events
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
+       || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
+       || EVAL gh = ST_GEOHASH(p, 4), gt = ST_GEOTILE(p, 6)
+       || STATS n = COUNT(*), tiles = COUNT_DISTINCT(gt) BY gh
+       || SORT n DESC, gh
+       || LIMIT 20""".stripMargin
 
   /** j276_esql_geohex — ST_GEOHEX as a STATS BY key (the ES|QL
     * spelling of the j275 geohex_grid agg; same shared fragment, same
     * documented axial-ids-not-H3 deviation): top-20 resolution-2 hex
     * cells by doc count with per-cell user diversity. */
   val j276Query: String =
-    """FROM events
-      || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
-      || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
-      || EVAL hx = ST_GEOHEX(p, 2)
-      || STATS n = COUNT(*), users = COUNT_DISTINCT(user_id) BY hx
-      || SORT n DESC, hx
-      || LIMIT 20""".stripMargin
-
-  def j276(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j276Query)
+    s"""FROM events
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
+       || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
+       || EVAL hx = ST_GEOHEX(p, 2)
+       || STATS n = COUNT(*), users = COUNT_DISTINCT(user_id) BY hx
+       || SORT n DESC, hx
+       || LIMIT 20""".stripMargin
 
   /** j270's polygon — ONE Scala constant generates the WKT literal in
     * the ES|QL query AND the quantized vertex arrays in the DuckDB
@@ -3552,16 +3143,13 @@ object Esql {
     * concavity is actually exercised. */
   val j270Query: String =
     s"""FROM events
-       || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
        || WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0
        || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
        || EVAL poly = TO_GEOSHAPE("$j270Wkt")
        || EVAL inside = ST_INTERSECTS(p, poly), within = ST_WITHIN(p, poly), cont = ST_CONTAINS(poly, p), disj = ST_DISJOINT(p, poly)
        || STATS n_box = COUNT(*), n_int = COUNT(*) WHERE inside, n_within = COUNT(*) WHERE within, n_cont = COUNT(*) WHERE cont, n_disj = COUNT(*) WHERE disj BY event_type
        || SORT event_type""".stripMargin
-
-  def j270(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j270Query)
 
   /** j272_esql_st_centroid — ES|QL's spatial STATS completions (r12
     * verdict item 5): ST_CENTROID_AGG (the ES|QL twin of j268's
@@ -3573,7 +3161,7 @@ object Esql {
     * envelope numbers are exact vertex quantizations. */
   val j272Query: String =
     s"""FROM events
-       || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
        || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
        || STATS n = COUNT(*), cen = ST_CENTROID_AGG(p), cen_n = ST_CENTROID_AGG(p) WHERE lat >= 0.0 BY event_type
        || EVAL cx = ROUND(ST_X(cen), 6), cy = ROUND(ST_Y(cen), 6), cnx = ROUND(ST_X(cen_n), 6)
@@ -3581,9 +3169,6 @@ object Esql {
        || EVAL exmin = ST_XMIN(env), exmax = ST_XMAX(env), eymin = ST_YMIN(env), eymax = ST_YMAX(env)
        || DROP cen, cen_n, env
        || SORT event_type""".stripMargin
-
-  def j272(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j272Query)
 
   private def ringWkt(r: Seq[(Double, Double)]): String =
     "(" + r.map { case (x, y) => s"$x $y" }.mkString(", ") + ")"
@@ -3604,7 +3189,7 @@ object Esql {
     * all three independently). Same bbox-leading WHERE as j270. */
   val j273Query: String =
     s"""FROM events
-       || EVAL lat = (event_id * 7919 % 17000) / 100.0 - 85.0, lon = (event_id * 104729 % 36000) / 100.0 - 180.0
+       || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
        || WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0
        || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
        || EVAL donut = TO_GEOSHAPE("POLYGON(${ringWkt(j273Outer)}, ${ringWkt(j273Hole)})")
@@ -3613,67 +3198,67 @@ object Esql {
        || STATS n_box = COUNT(*), n_donut = COUNT(*) WHERE ind, n_solid = COUNT(*) WHERE ins, n_hole = COUNT(*) WHERE inh BY event_type
        || SORT event_type""".stripMargin
 
-  def j273(s: SparkSession, d: String): DataFrame =
-    compile(s, d, j273Query)
-
+  /** Each declared ES|QL query: its name and its text, compiled against
+    * the fixture tables in the data directory. */
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j270_geo_polygon" -> j270,
-    "j273_geo_polygon_holes" -> j273,
-    "j272_esql_st_centroid" -> j272,
-    "j269_esql_st_extent" -> j269,
-    "j266_esql_st_predicates" -> j266,
-    "j264_esql_grid_fns" -> j264,
-    "j276_esql_geohex" -> j276,
-    "j260_esql_st_distance" -> j260,
-    "j257_esql_sample_agg" -> j257,
-    "j256_esql_mv_math" -> j256,
-    "j255_esql_ts_delta" -> j255,
-    "j254_esql_show_info" -> j254,
-    "j253_esql_completion" -> j253,
-    "j251_esql_fulltext_ext" -> j251,
-    "j249_esql_ts" -> j249,
-    "j250_esql_ts_rate" -> j250,
-    "j244_esql_first_last" -> j244,
-    "j245_esql_rerank" -> j245,
-    "j246_esql_trig_inverse" -> j246,
-    "j247_esql_hash_encode" -> j247,
-    "j248_esql_round_to_mv" -> j248,
-    "j241_esql_bucket_duration" -> j241,
-    "j242_esql_fuse" -> j242,
-    "j243_esql_trig" -> j243,
-    "j236_esql_stats_ext" -> j236,
-    "j237_esql_scalars_ext" -> j237,
-    "j238_esql_mv_arith" -> j238,
-    "j239_esql_row" -> j239,
-    "j281_esql_knn" -> j281,
-    "j235_esql_categorize" -> j235,
-    "j234_esql_math" -> j234,
-    "j229_esql_mv_position" -> j229,
-    "j230_esql_top" -> j230,
-    "j231_esql_fulltext" -> j231,
-    "j223_esql_date_diff" -> j223,
-    "j224_esql_date_fns" -> j224,
-    "j225_esql_multi_index" -> j225,
-    "j226_esql_change_point" -> j226,
-    "j215_esql_fork" -> j215,
-    "j217_esql_strings" -> j217,
-    "j218_esql_mv" -> j218,
-    "j219_esql_stats_fns" -> j219,
-    "j220_esql_bucket" -> j220,
-    "j221_esql_weighted_avg" -> j221,
-    "j222_esql_cidr" -> j222,
-    "j188_esql" -> j188,
-    "j194_esql_dissect_grok" -> j194,
-    "j195_esql_mv_expand" -> j195,
-    "j200_esql_lookup_join" -> j200,
-    "j201_esql_enrich" -> j201,
-    "j208_esql_stats_where" -> j208,
-    "j209_esql_inlinestats" -> j209,
-    "j210_esql_sample" -> j210,
-    "j211_esql_date_trunc" -> j211,
-    "j212_esql_case" -> j212,
-    "j213_esql_drop_rename" -> j213,
-    "j214_esql_like_in" -> j214)
+    "j270_geo_polygon" -> j270Query,
+    "j273_geo_polygon_holes" -> j273Query,
+    "j272_esql_st_centroid" -> j272Query,
+    "j269_esql_st_extent" -> j269Query,
+    "j266_esql_st_predicates" -> j266Query,
+    "j264_esql_grid_fns" -> j264Query,
+    "j276_esql_geohex" -> j276Query,
+    "j260_esql_st_distance" -> j260Query,
+    "j257_esql_sample_agg" -> j257Query,
+    "j256_esql_mv_math" -> j256Query,
+    "j255_esql_ts_delta" -> j255Query,
+    "j254_esql_show_info" -> j254Query,
+    "j253_esql_completion" -> j253Query,
+    "j251_esql_fulltext_ext" -> j251Query,
+    "j249_esql_ts" -> j249Query,
+    "j250_esql_ts_rate" -> j250Query,
+    "j244_esql_first_last" -> j244Query,
+    "j245_esql_rerank" -> j245Query,
+    "j246_esql_trig_inverse" -> j246Query,
+    "j247_esql_hash_encode" -> j247Query,
+    "j248_esql_round_to_mv" -> j248Query,
+    "j241_esql_bucket_duration" -> j241Query,
+    "j242_esql_fuse" -> j242Query,
+    "j243_esql_trig" -> j243Query,
+    "j236_esql_stats_ext" -> j236Query,
+    "j237_esql_scalars_ext" -> j237Query,
+    "j238_esql_mv_arith" -> j238Query,
+    "j239_esql_row" -> j239Query,
+    "j281_esql_knn" -> j281Query,
+    "j235_esql_categorize" -> j235Query,
+    "j234_esql_math" -> j234Query,
+    "j229_esql_mv_position" -> j229Query,
+    "j230_esql_top" -> j230Query,
+    "j231_esql_fulltext" -> j231Query,
+    "j223_esql_date_diff" -> j223Query,
+    "j224_esql_date_fns" -> j224Query,
+    "j225_esql_multi_index" -> j225Query,
+    "j226_esql_change_point" -> j226Query,
+    "j215_esql_fork" -> j215Query,
+    "j217_esql_strings" -> j217Query,
+    "j218_esql_mv" -> j218Query,
+    "j219_esql_stats_fns" -> j219Query,
+    "j220_esql_bucket" -> j220Query,
+    "j221_esql_weighted_avg" -> j221Query,
+    "j222_esql_cidr" -> j222Query,
+    "j188_esql" -> j188Query,
+    "j194_esql_dissect_grok" -> j194Query,
+    "j195_esql_mv_expand" -> j195Query,
+    "j200_esql_lookup_join" -> j200Query,
+    "j201_esql_enrich" -> j201Query,
+    "j208_esql_stats_where" -> j208Query,
+    "j209_esql_inlinestats" -> j209Query,
+    "j210_esql_sample" -> j210Query,
+    "j211_esql_date_trunc" -> j211Query,
+    "j212_esql_case" -> j212Query,
+    "j213_esql_drop_rename" -> j213Query,
+    "j214_esql_like_in" -> j214Query
+  ).map { case (name, q) => name -> ((s: SparkSession, d: String) => compile(s, d, q)) }
 
   /** DuckDB within-test generator for a ring set — the SAME ray cast
     * as [[pointInShape]] (quantized BIGINT cross-products, NULL
@@ -3800,8 +3385,8 @@ object Esql {
          |  CAST(count(*) FILTER (NOT inside) AS BIGINT) AS n_disj
          |FROM rel GROUP BY event_type ORDER BY event_type""".stripMargin,
     "j276_esql_geohex" -> {
-      val lat = "((event_id * 7919 % 17000) / 100.0 - 85.0)"
-      val lon = "((event_id * 104729 % 36000) / 100.0 - 180.0)"
+      val lat = s"(${GeoOps.SynthLatSql})"
+      val lon = s"(${GeoOps.SynthLonSql})"
       s"""WITH geo AS (
          |  SELECT ${GeoOps.geohexSql(lon, lat, 2)} AS hx, user_id
          |  FROM 'events.parquet')
@@ -3810,8 +3395,8 @@ object Esql {
          |FROM geo GROUP BY hx ORDER BY n DESC, hx LIMIT 20""".stripMargin
     },
     "j264_esql_grid_fns" -> {
-      val lat = "(event_id * 7919 % 17000) / 100.0 - 85.0"
-      val lon = "(event_id * 104729 % 36000) / 100.0 - 180.0"
+      val lat = GeoOps.SynthLatSql
+      val lon = GeoOps.SynthLonSql
       s"""WITH geo AS (
          |  SELECT ${GeoOps.geohashSql(lon, lat, 4)} AS gh,
          |    CONCAT('6/',

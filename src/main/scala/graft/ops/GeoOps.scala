@@ -37,13 +37,19 @@ object GeoOps {
   def synthLat(id: Column): Column = (id * 7919 % 17000) / 100.0 - 85.0
   def synthLon(id: Column): Column = (id * 104729 % 36000) / 100.0 - 180.0
 
+  /** [[synthLat]] and [[synthLon]] of `event_id` as text: the one
+    * spelling that the ES|QL geo queries and the DuckDB oracles
+    * interpolate. */
+  private[ops] val SynthLatSql = "(event_id * 7919 % 17000) / 100.0 - 85.0"
+  private[ops] val SynthLonSql = "(event_id * 104729 % 36000) / 100.0 - 180.0"
+
   /** The oracles' `geo` CTE: every event's (event_type, lat, lon) by
     * [[synthLat]] and [[synthLon]]. */
   private[ops] val GeoEventsSql =
-    """geo AS (
+    s"""geo AS (
       |  SELECT event_type,
-      |    (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-      |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+      |    $SynthLatSql  AS lat,
+      |    $SynthLonSql AS lon
       |  FROM 'events.parquet')""".stripMargin
 
   private def withGeo(df: DataFrame): DataFrame = df
@@ -420,10 +426,10 @@ object GeoOps {
     s"(CAST(CAST($q AS BIGINT) AS VARCHAR) || ',' || CAST(CAST($r AS BIGINT) AS VARCHAR))"
   }
 
-  private val geoSql = """
+  private val geoSql = s"""
     SELECT event_type, user_id,
-      (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-      (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+      $SynthLatSql  AS lat,
+      $SynthLonSql AS lon
     FROM 'events.parquet'"""
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -463,8 +469,8 @@ object GeoOps {
     "j274_geo_line" -> s"""
       WITH geo AS (
         SELECT event_type, event_id,
-          (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-          (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+          $SynthLatSql  AS lat,
+          $SynthLonSql AS lon
         FROM 'events.parquet'),
       rk AS (
         SELECT event_type, event_id, lat, lon,
@@ -516,8 +522,8 @@ object GeoOps {
     "j265_geo_distance_sort" -> s"""
       WITH geo AS (
         SELECT event_id, event_type,
-          (event_id * 7919 % 17000) / 100.0 - 85.0  AS lat,
-          (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+          $SynthLatSql  AS lat,
+          $SynthLonSql AS lon
         FROM 'events.parquet')
       SELECT event_id, event_type, $HaversineSql AS dist
       FROM geo ORDER BY dist ASC, event_id ASC LIMIT 20""",

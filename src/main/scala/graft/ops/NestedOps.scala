@@ -176,9 +176,10 @@ object NestedOps {
     * DELIBERATE RESTRICTION — at most ONE sequence per `by` key: real
     * ES EQL resets its state machine after a match and emits EVERY
     * completed sequence; this operator (and its streaming twin
-    * Sync.sequenceStream, which parks a matched key) reports only the
-    * first. The full reset-after-match emission — every greedy
-    * non-overlapping completion per key — is j199_eql_sequence_multi,
+    * Sync.sequenceStream, the first match per key of the reset-after-
+    * match machine) reports only the first. The full reset-after-match
+    * emission — every greedy non-overlapping completion per key — is
+    * j199_eql_sequence_multi,
     * whose bounded-fixpoint shape subsumes this one; j168 is kept as
     * the cheaper single-shot variant (one window, no fixpoint), which
     * is what alerting pipelines that only page once per entity want.

@@ -746,13 +746,42 @@ object Sync {
       }.toDF()
   }
 
-  case class SeqSt(done: Boolean, views: List[Long], clicks: List[Long],
+  case class SeqMultiSt(n: Long, views: List[Long], clicks: List[Long],
       errors: List[Long])
-  case class SeqMatch(user_id: Long, t1_us: Long, t2_us: Long, t3_us: Long,
-      span_s: Long)
+  case class SeqMultiMatch(user_id: Long, seq_n: Long, t1_us: Long,
+      t2_us: Long, t3_us: Long, span_s: Long)
 
   /** j168 streaming form — EQL `sequence by user_id with maxspan [view]
-    * [click] [purchase] until [error]` as a live per-user NFA
+    * [click] [purchase] until [error]`: the FIRST match per key of
+    * [[sequenceMultiStream]] (`seq_n = 1`, with `seq_n` dropped). Up to
+    * a key's first match the two machines are one machine: the same
+    * candidate test, the same maxspan horizon prune, the same emitted
+    * row (latest start, then earliest middle — the batch j168 tiebreak
+    * verbatim). StreamingSpec replays the full fixture log and pins the
+    * emission set equal to batch j168 row for row.
+    *
+    * DELIBERATE RESTRICTION (matches batch j168, NOT full ES EQL): at
+    * most one sequence is emitted per key. After its first match a key
+    * keeps [[sequenceMultiStream]]'s state — horizon-bounded candidate
+    * lists and the match counter, not an empty parked record — and its
+    * later matches are filtered out.
+    *
+    * Ordering contract: intra-batch rows are sorted before folding;
+    * across batches the per-key feed must be event-time ordered (the
+    * funnelStream contract). */
+  def sequenceStream(events: DataFrame,
+      spanUs: Long = 21600000000L,
+      untilType: String = "error"): DataFrame =
+    // maxspan + until are the rule's parameters here exactly as in the
+    // batch fragment (NestedOps.seqEarliest) — StreamingSpec pins batch
+    // ≡ stream at NON-default values (j228: 12h/signup), so the knobs
+    // cannot drift between the two engines
+    sequenceMultiStream(events, spanUs, untilType)
+      .filter(col("seq_n") === 1L).drop("seq_n")
+
+  /** j199 streaming form — EQL `sequence by user_id with maxspan [view]
+    * [click] [purchase] until [error]` with ES EQL's real
+    * reset-after-match semantics, as a live per-user NFA
     * (flatMapGroupsWithState, Update mode). Unlike [[funnelStream]]'s
     * greedy first-step machine, EQL's earliest-COMPLETION semantics
     * needs candidate tracking: the state holds the user's view/click/
@@ -760,94 +789,18 @@ object Sync {
     * event — the state bound is events-per-maxspan-window, exactly the
     * bound a real EQL engine carries). Each arriving purchase is tested
     * against the candidates (some view with a click strictly between,
-    * span within maxspan, no error inside the open interval); the first
-    * purchase that completes emits the j168 row (latest start, then
-    * earliest middle — the batch tiebreak verbatim) and the user's
-    * machine parks. StreamingSpec replays the full fixture log and pins
-    * the emission set equal to batch j168 row for row.
-    *
-    * DELIBERATE RESTRICTION (matches batch j168, NOT full ES EQL): the
-    * machine parks after its first match, so at most one sequence is
-    * emitted per key; real EQL clears its candidate lists and keeps
-    * matching. The reset-after-match twin is [[sequenceMultiStream]]
-    * (j199), which clears state instead of parking.
-    *
-    * Ordering contract: intra-batch rows are sorted before folding;
-    * across batches the per-key feed must be event-time ordered (the
-    * funnelStream contract). */
-  def sequenceStream(events: DataFrame,
-      spanUs: Long = 21600000000L,
-      untilType: String = "error"): DataFrame = {
-    // maxspan + until are the rule's parameters here exactly as in the
-    // batch fragment (NestedOps.seqEarliest) — StreamingSpec pins batch
-    // ≡ stream at NON-default values (j228: 12h/signup), so the knobs
-    // cannot drift between the two engines
-    require(!Set("view", "click", "purchase")(untilType),
-      s"until type '$untilType' collides with a sequence step")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), col("event_type"), col("ts_us"))
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqSt, SeqMatch](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[FunnelEvent], state: GroupState[SeqSt]) =>
-          var st = state.getOption.getOrElse(SeqSt(false, Nil, Nil, Nil))
-          var out: Option[SeqMatch] = None
-          rows.toSeq.sortBy(e => (e.ts_us, e.event_type)).foreach { e =>
-            if (!st.done) {
-              e.event_type match {
-                case "view" => st = st.copy(views = e.ts_us :: st.views)
-                case "click" => st = st.copy(clicks = e.ts_us :: st.clicks)
-                case t if t == untilType =>
-                  st = st.copy(errors = e.ts_us :: st.errors)
-                case "purchase" =>
-                  val p = e.ts_us
-                  val valid = st.views.filter(v => p - v <= spanUs &&
-                    st.clicks.exists(c => c > v && c < p) &&
-                    !st.errors.exists(te => te > v && te < p))
-                  if (valid.nonEmpty) {
-                    val t1 = valid.max
-                    val t2 = st.clicks.filter(c => c > t1 && c < p).min
-                    out = Some(SeqMatch(key, t1, t2, p, (p - t1) / 1000000L))
-                    st = SeqSt(done = true, Nil, Nil, Nil)
-                  }
-                case _ => ()
-              }
-              if (!st.done) {
-                // prune to the maxspan horizon: a candidate older than
-                // ts − maxspan can never satisfy p − v ≤ maxspan for any
-                // later purchase (bounded state at any stream length)
-                val h = e.ts_us - spanUs
-                st = st.copy(views = st.views.filter(_ >= h),
-                  clicks = st.clicks.filter(_ >= h),
-                  errors = st.errors.filter(_ >= h))
-              }
-            }
-          }
-          state.update(st)
-          out.iterator
-      }.toDF()
-  }
-
-  case class SeqMultiSt(n: Long, views: List[Long], clicks: List[Long],
-      errors: List[Long])
-  case class SeqMultiMatch(user_id: Long, seq_n: Long, t1_us: Long,
-      t2_us: Long, t3_us: Long, span_s: Long)
-
-  /** j199 streaming form — [[sequenceStream]] with ES EQL's real
-    * reset-after-match semantics: a completed match CLEARS the candidate
+    * span within maxspan, no error inside the open interval); a
+    * completing purchase emits the match (latest start, then earliest
+    * middle — the batch tiebreak verbatim) and CLEARS the candidate
     * lists (nothing at or before the matching purchase can join a later
-    * sequence) instead of parking the key, so every greedy
-    * non-overlapping completion is emitted, numbered `seq_n` per key by
-    * the persisted counter. Semantics mirror batch
-    * [[graft.ops.NestedOps.j199]] exactly — each arriving purchase is
-    * tested against the candidates accumulated since the last match,
+    * sequence), so every greedy non-overlapping completion is emitted,
+    * numbered `seq_n` per key by the persisted counter. Semantics mirror
+    * batch [[graft.ops.NestedOps.j199]] exactly — each arriving purchase
+    * is tested against the candidates accumulated since the last match,
     * which is precisely the batch fixpoint's "events strictly after the
     * previous t3" restriction; StreamingSpec replays the fixture log
     * multi-batch and pins the emission set equal to batch j199 row for
-    * row. State bound: the maxspan horizon prune (sequenceStream's) plus
-    * the clear on match — never larger than sequenceStream's state. */
+    * row. [[sequenceStream]] is this machine's first match per key. */
   def sequenceMultiStream(events: DataFrame,
       spanUs: Long = 21600000000L,
       untilType: String = "error"): DataFrame = {

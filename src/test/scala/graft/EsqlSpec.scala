@@ -65,7 +65,7 @@ class EsqlSpec extends AnyFunSuite {
     val kept = Esql.compile(s, TestSpark.sf0001,
       "FROM events | KEEP event_id, event_type | LIMIT 3")
     assert(kept.columns.toSeq === Seq("event_id", "event_type"))
-    val p = ops.Esql.j188(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j188Query)
       .queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters"), p)
     assert(p.contains("EqualTo(event_type,purchase)"), p)
@@ -222,7 +222,7 @@ class EsqlSpec extends AnyFunSuite {
   }
 
   test("RENAME/DROP are metadata-only: WHERE on the renamed column pushes as the original; dropped columns leave the read schema") {
-    val p = ops.Esql.j213(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j213Query)
       .queryExecution.executedPlan.toString
     // the filter arrived through RENAME value AS v — it must reach the
     // scan as a predicate on the ORIGINAL column name
@@ -232,7 +232,7 @@ class EsqlSpec extends AnyFunSuite {
   }
 
   test("LIKE prefix pushes as StartsWith; IN folds to an In pushdown") {
-    val p = ops.Esql.j214(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j214Query)
       .queryExecution.executedPlan.toString
     assert(p.contains("StringStartsWith(source,src1)"), p)
     assert(p.contains("In(lang"), p)
@@ -319,7 +319,7 @@ class EsqlSpec extends AnyFunSuite {
   }
 
   test("FORK branch filters push to each branch's scan copy") {
-    val p = ops.Esql.j215(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j215Query)
       .queryExecution.executedPlan.toString
     // both branches' WHERE predicates must reach their parquet scans —
     // the SURVEY row's claim, pinned
@@ -407,7 +407,7 @@ class EsqlSpec extends AnyFunSuite {
   }
 
   test("multi-index FROM pushes a shared WHERE into BOTH scans; only _index is legal METADATA") {
-    val p = ops.Esql.j225(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j225Query)
       .queryExecution.executedPlan.toString
     // the union is plan-level: each index keeps its own parquet scan and
     // the WHERE reaches both as a pushed filter
@@ -489,7 +489,7 @@ class EsqlSpec extends AnyFunSuite {
   }
 
   test("j231: the keyword leg still pushes to the scan beside row-local full-text legs") {
-    val p = ops.Esql.j231(s, TestSpark.sf0001)
+    val p = Esql.compile(s, TestSpark.sf0001, Esql.j231Query)
       .queryExecution.executedPlan.toString
     assert(p.contains("EqualTo(lang,en)"), p)
   }
@@ -497,10 +497,10 @@ class EsqlSpec extends AnyFunSuite {
   test("j223/j226: the WHERE pushes to the scan beneath the date stages") {
     // the date projections (DATE_DIFF/NOW, DATE_TRUNC) and the bounded
     // window must not block predicate pushdown — the 100 TB property
-    val p223 = ops.Esql.j223(s, TestSpark.sf0001)
+    val p223 = Esql.compile(s, TestSpark.sf0001, Esql.j223Query)
       .queryExecution.executedPlan.toString
     assert(p223.contains("EqualTo(event_type,purchase)"), p223)
-    val p226 = ops.Esql.j226(s, TestSpark.sf0001)
+    val p226 = Esql.compile(s, TestSpark.sf0001, Esql.j226Query)
       .queryExecution.executedPlan.toString
     assert(p226.contains("EqualTo(event_type,purchase)"), p226)
     // CHANGE_POINT's window runs AFTER the aggregate: exactly one
