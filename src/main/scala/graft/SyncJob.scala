@@ -213,7 +213,9 @@ object SyncJob {
     *
     *   - ONE union stream, not two: a cell merge needs BOTH sides' stamps
     *     for the same key in one place before either store is written,
-    *     or a relay could regress the other store's newer cells.
+    *     or a relay could regress the other store's newer cells. The
+    *     sink keeps each row's store, so a store is not sent a merged
+    *     row it sent unchanged itself.
     *   - side A is the C* DATA table itself (graft-cql with
     *     `writetime-of` over every data cell — C* IS its own per-cell
     *     merged state), polled incrementally on its update-ts column;
@@ -253,21 +255,25 @@ object SyncJob {
       .select(columns.map(n => col(stampOf.getOrElse(n, n)).as(n)): _*)
     val feedB = esStream(spark, b).load().select(columns.map(col): _*)
 
-    Sync.cellSyncSink(feedA.unionByName(feedB), a.pk, cfg.cells,
+    // store 0 is C*, store 1 is ES: each is sent only the merged rows it
+    // does not already hold
+    Sync.cellSyncSink(Seq(feedA, feedB), a.pk, cfg.cells,
       Seq(cfg.snapshotA, cfg.snapshotB),
-      s"${cfg.checkpointDir}/cell", cfg.interval) { affected =>
-      // one stable version per merged row: its greatest stamp. Stable
-      // across echo rounds, so relays converge instead of ping-ponging.
-      val docs = affected.withColumn("ts",
-        greatest(col("ts") +: cfg.cells.map(c => col(s"${c}_wt")): _*))
-      docs.write.format("graft-es").options(b.options)
-        .option("id-column", a.pk).option("version-column", "ts")
-        .mode("append").save()
-      affected.select(col(a.pk) +: cfg.cells.flatMap(c =>
-          Seq(col(c), col(s"${c}_wt").as(stampOf(s"${c}_wt")))): _*)
-        .write.format("graft-cql").options(a.options)
-        .option("writetime-of", writetimeOf)
-        .mode("append").save()
+      s"${cfg.checkpointDir}/cell", cfg.interval) {
+      case (0, affected) =>
+        affected.select(col(a.pk) +: cfg.cells.flatMap(c =>
+            Seq(col(c), col(s"${c}_wt").as(stampOf(s"${c}_wt")))): _*)
+          .write.format("graft-cql").options(a.options)
+          .option("writetime-of", writetimeOf)
+          .mode("append").save()
+      case (_, affected) =>
+        // one stable version per merged row: its greatest stamp. Stable
+        // across echo rounds, so relays converge instead of ping-ponging.
+        affected.withColumn("ts",
+            greatest(col("ts") +: cfg.cells.map(c => col(s"${c}_wt")): _*))
+          .write.format("graft-es").options(b.options)
+          .option("id-column", a.pk).option("version-column", "ts")
+          .mode("append").save()
     }
   }
 

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig}
 import org.apache.spark.sql.types._
@@ -912,15 +913,24 @@ object Sync {
       max(col("row_ts_us")).as("row_ts_us"))
 
   /** Runs `f` on each micro-batch of `df` and its epoch id, checkpointed
-    * at `checkpointDir`. */
+    * at `checkpointDir`. The micro-batch reaches `f` on `df`'s own session,
+    * not on the clone the query runs in (its plan is foreachBatch's
+    * `LogicalRDD`, so no row is copied): Spark's generated-code cache is
+    * keyed by the tasks' classloader, and each started query's clone runs
+    * its jobs under a fresh artifact classloader, so work planned on the
+    * clone recompiled every class in every new query (DESIGN.md, "One
+    * session for a sink's per-batch work"). */
   private def eachBatch(df: DataFrame, checkpointDir: String, trigger: Trigger)(
       f: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream.outputMode("append").option("checkpointLocation", checkpointDir)
-      .trigger(trigger).foreachBatch(f).start()
+      .trigger(trigger).foreachBatch { (batch: DataFrame, epochId: Long) =>
+        f(GraftShim.ofRows(df.sparkSession, batch.queryExecution.logical), epochId)
+      }.start()
 
   /** Snapshot state of the three LWW sinks, one protocol for all of
-    * them. A round writes the new state to `<dir>.tmp` (Spark's job commit
-    * marks it complete with `_SUCCESS`), then swaps it in: delete `<dir>`,
+    * them. A round writes the new state to `<dir>.tmp` (Spark's job commit,
+    * or the last step of [[commitSnapshot]]'s copy, marks it complete with
+    * `_SUCCESS`), then swaps it in: delete `<dir>`,
     * rename `<dir>.tmp`. Offsets commit after the sink, so a crash replays
     * the round. Recovery, before every read: a missing `<dir>` beside a
     * complete `<dir>.tmp` is a swap that died between delete and rename,
@@ -999,12 +1009,36 @@ object Sync {
   }
 
   /** Commit `df` to every one of `dirs` ([[readSnapshot]] has the
-    * protocol): all `<dir>.tmp` are written before any is swapped in, so
-    * no write reads a snapshot that has already been replaced. */
+    * protocol): all `<dir>.tmp` are complete before any is swapped in, so
+    * no write reads a snapshot that has already been replaced. `df` is
+    * written once, to `<dirs.head>.tmp`; every other `<dir>.tmp` is a
+    * file copy of it, data files first and `_SUCCESS` last. */
   private def commitSnapshot(df: DataFrame, dirs: Seq[String]): Unit = {
-    dirs.foreach(dir => df.write.mode("overwrite").parquet(tmpOf(dir)))
-    dirs.foreach(dir => swapIn(
-      new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), dir))
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.write.mode("overwrite").parquet(tmpOf(dirs.head))
+    dirs.tail.foreach(dir => copyDir(conf, tmpOf(dirs.head), tmpOf(dir)))
+    dirs.foreach(dir => swapIn(new Path(dir).getFileSystem(conf), dir))
+  }
+
+  /** Replaces `to` by a copy of the written snapshot directory `from`:
+    * its data files (the names [[snapshotFooters]] reads), then its
+    * `_SUCCESS` marker, so a copy cut short has no marker and
+    * [[readSnapshot]] treats it as an uncommitted write. */
+  private def copyDir(conf: org.apache.hadoop.conf.Configuration, from: String,
+      to: String): Unit = {
+    val (src, dst) = (new Path(from), new Path(to))
+    val (srcFs, dstFs) = (src.getFileSystem(conf), dst.getFileSystem(conf))
+    if (dstFs.exists(dst) && !dstFs.delete(dst, true))
+      throw new java.io.IOException(s"snapshot commit: could not delete $to")
+    if (!dstFs.mkdirs(dst))
+      throw new java.io.IOException(s"snapshot commit: could not create $to")
+    val data = srcFs.listStatus(src).toSeq.map(_.getPath).filterNot { f =>
+      f.getName.startsWith("_") || f.getName.startsWith(".")
+    }
+    (data :+ new Path(src, "_SUCCESS")).foreach { f =>
+      if (!FileUtil.copy(srcFs, f, dstFs, new Path(dst, f.getName), false, conf))
+        throw new java.io.IOException(s"snapshot commit: could not copy $f to $to")
+    }
   }
 
   private def tmpOf(dir: String): String = dir + ".tmp"
@@ -1079,14 +1113,20 @@ object Sync {
       .select((cellColumns(keyCol, dataCols) ++ extra.map(_._1)).map(col): _*)
   }
 
-  /** The wire loop's per-cell sink (SyncJob `merge: cell`): each
-    * micro-batch of wide change rows folds by [[mergeCellLww]] into the
-    * parquet snapshot(s), and `writeback` receives the merged rows of
-    * the keys this batch CHANGED — SyncJob relays them to the opposite
-    * store(s); it is not called when there are none. A key whose every
-    * incoming row already equals its committed snapshot row (same cells,
-    * same stamps) is the echo of an earlier relay and is not relayed
-    * again.
+  /** The wire loop's per-cell sink (SyncJob `merge: cell`): `feeds` are
+    * the stores' change feeds, store `i` being `feeds(i)`; each
+    * micro-batch of their wide change rows folds by [[mergeCellLww]] into
+    * the parquet snapshot(s), and `writeback(i, rows)` receives the merged
+    * rows of the keys this batch CHANGED that store `i` does not already
+    * hold — SyncJob writes them to that store; it is not called for a
+    * store with none. A key whose every incoming row already equals its
+    * committed snapshot row (same cells, same stamps) is the echo of an
+    * earlier relay and is relayed to no store. Otherwise it is relayed to
+    * every store except one whose own rows are its only incoming rows and
+    * are one cell tuple equal to the merged row: that store read exactly
+    * the merged row, and a later local write there carries a newer stamp,
+    * so it reaches the next batch (DESIGN.md, "A store is not sent a row
+    * it already holds").
     *
     * The snapshots are rewritten only when some merged row differs from
     * its committed row in a cell, a stamp or the cursor `ts`, or when a
@@ -1106,49 +1146,65 @@ object Sync {
     * changes no row yet still rewrites every directory. A snapshot with
     * other columns (a reconfigured `cells:` list pointed at an old state
     * dir) fails loudly. */
-  def cellSyncSink(changes: DataFrame, keyCol: String, dataCols: Seq[String],
+  def cellSyncSink(feeds: Seq[DataFrame], keyCol: String, dataCols: Seq[String],
       snapshotDirs: Seq[String], checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow())(
-      writeback: DataFrame => Unit): StreamingQuery =
-    eachBatch(changes, checkpointDir, trigger) { (batch, _) =>
+      writeback: (Int, DataFrame) => Unit): StreamingQuery = {
+    require(feeds.nonEmpty, "cellSyncSink needs at least one store feed")
+    val columns = cellColumns(keyCol, dataCols)
+    val (isNew, store, toRelay, committed, differs, lowest, heldBy) =
+      ("_graft_new", "_graft_store", "_graft_relay", "_graft_committed",
+        "_graft_differs", "_graft_lo", "_graft_held_by")
+    val tagged = feeds.zipWithIndex
+      .map { case (f, i) => f.select(columns.map(col): _*).withColumn(store, lit(i)) }
+      .reduce(_ unionByName _)
+    eachBatch(tagged, checkpointDir, trigger) { (batch, _) =>
       val spark = batch.sparkSession
-      val columns = cellColumns(keyCol, dataCols)
       val base = readSnapshot(spark, snapshotDirs.head, columns)
       // ONE aggregation reads each feed once, merges the batch into the
       // snapshot and marks the keys to relay: those with an incoming row
       // whose cells or stamps differ from the committed row (every
       // incoming row equals it iff the least and the greatest incoming
       // cell tuples both do). It also keeps the committed row, so the
-      // keys whose merged row differs from it are marked too.
-      val (isNew, toRelay, committed, differs) =
-        ("_graft_new", "_graft_relay", "_graft_committed", "_graft_differs")
+      // keys whose merged row differs from it are marked too, and the
+      // store that sent every incoming row of a key as one cell tuple.
       val cells = dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt")))
-      val incoming = batch.select(columns.map(col): _*).withColumn(isNew, lit(true))
+      val incoming = batch.withColumn(isNew, lit(true))
       val old = max(when(!col(isNew), struct(cells: _*)))
       val lo = min(when(col(isNew), struct(cells: _*)))
       val hi = max(when(col(isNew), struct(cells: _*)))
       val merged = mergeCellLww(
-        base.fold(incoming)(_.withColumn(isNew, lit(false)).unionByName(incoming)),
+        base.fold(incoming)(_.withColumn(store, lit(null).cast("int"))
+          .withColumn(isNew, lit(false)).unionByName(incoming)),
         keyCol, dataCols,
         Seq(toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old)),
-          committed -> max(when(!col(isNew), struct(col("ts") +: cells: _*)))))
+          committed -> max(when(!col(isNew), struct(col("ts") +: cells: _*))),
+          heldBy -> when(min(col(store)) === max(col(store)) && lo <=> hi, min(col(store))),
+          lowest -> lo))
         .withColumn(differs, !(struct(col("ts") +: cells: _*) <=> col(committed)))
-        .drop(committed)
+        // the store's one tuple must also be the merged row
+        .withColumn(heldBy, when(col(lowest) <=> struct(cells: _*), col(heldBy)))
+        .drop(committed, lowest)
         .cache()
-      // one pass over the cached merge counts the relayed and changed keys
-      val counts = merged.agg(count_if(col(toRelay)), count_if(col(differs))).head()
+      def relayTo(i: Int) = col(toRelay) && !(col(heldBy) <=> i)
+      // one pass over the cached merge counts the changed keys and each
+      // store's relays
+      val counts = merged.agg(count_if(col(differs)),
+        feeds.indices.map(i => count_if(relayTo(i))): _*).head()
       // relay the merged row, not the raw change, so a relay can never
       // regress the other store
-      if (counts.getLong(0) > 0)
-        writeback(merged.where(col(toRelay)).drop(toRelay, differs))
+      feeds.indices.filter(i => counts.getLong(i + 1) > 0).foreach { i =>
+        writeback(i, merged.where(relayTo(i)).drop(toRelay, differs, heldBy))
+      }
       def leftover(dir: String) = {
         val tmp = new Path(tmpOf(dir))
         tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tmp)
       }
-      if (counts.getLong(1) > 0 || snapshotDirs.exists(leftover))
-        commitSnapshot(merged.drop(toRelay, differs), snapshotDirs)
+      if (counts.getLong(0) > 0 || snapshotDirs.exists(leftover))
+        commitSnapshot(merged.drop(toRelay, differs, heldBy), snapshotDirs)
       merged.unpersist()
     }
+  }
 
   /** i6 streaming form — the sync loop: each microbatch is LWW-merged into
     * the parquet snapshot at `targetDir` (read-modify-write per batch, the

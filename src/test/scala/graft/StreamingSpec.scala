@@ -15,6 +15,8 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
 case class Doc(doc_id: Long, text: String, ts: Timestamp)
 case class Vec(vec_id: Long, embedding: Array[Float], ts: Timestamp)
 case class CellRow(key: Long, ts: Long, status: Option[String], status_wt: Option[Long])
+case class StoreCellRow(store: Int, key: Long, ts: Long, status: Option[String],
+    status_wt: Option[Long])
 
 /** Streaming semantics the oracle can't see: watermark late-drop (i4),
   * within-watermark dedup (i5), the foreachBatch LWW sink (i6 streaming
@@ -441,40 +443,81 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("cellSyncSink relays the keys whose incoming row differs from the committed row, and only those") {
+  /** Runs `body` against a two-store cellSyncSink over one status cell:
+    * `round(a, b)` feeds one micro-batch holding store 0's rows `a` and
+    * store 1's rows `b` and returns what each store was sent, as store →
+    * key → status (a store sent nothing is absent); `merged()` reads the
+    * committed snapshot. Both feeds are filters of one MemoryStream, so a
+    * round's rows always land in one micro-batch. */
+  private def twoStoreSink(body: ((Seq[CellRow], Seq[CellRow]) => Map[Int, Map[Long, String]],
+      () => Map[Long, String]) => Unit): Unit = {
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val snap = tmp("cell-target") + "/snap"
-    val mem = MemoryStream[CellRow]
-    val relays = scala.collection.mutable.ArrayBuffer.empty[Map[Long, String]]
-    val q = Sync.cellSyncSink(mem.toDF(), "key", Seq("status"), Seq(snap),
-        tmp("cell-ckpt"), Trigger.ProcessingTime(0)) { df =>
-      relays += df.select($"key", $"status").as[(Long, String)].collect().toMap
+    val mem = MemoryStream[StoreCellRow]
+    val rows = mem.toDF()
+    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Map[Long, String])]
+    val q = Sync.cellSyncSink(Seq(0, 1).map(i => rows.where($"store" === i).drop("store")),
+        "key", Seq("status"), Seq(snap), tmp("cell-ckpt"), Trigger.ProcessingTime(0)) {
+      (i, df) => sent.add(i -> df.select($"key", $"status").as[(Long, String)].collect().toMap)
     }
-    def row(k: Long, ts: Long, v: String, wt: Long) = CellRow(k, ts, Some(v), Some(wt))
-    // the writeback's rows for one batch; None when it was not called
-    def round(rows: CellRow*): Option[Map[Long, String]] = {
-      val n = relays.size
-      mem.addData(rows: _*)
+    def round(a: Seq[CellRow], b: Seq[CellRow]): Map[Int, Map[Long, String]] = {
+      sent.clear()
+      mem.addData(Seq(0 -> a, 1 -> b).flatMap { case (i, rs) =>
+        rs.map(r => StoreCellRow(i, r.key, r.ts, r.status, r.status_wt)) }: _*)
       q.processAllAvailable()
-      assert(relays.size <= n + 1)
-      relays.drop(n).headOption
+      import scala.jdk.CollectionConverters._
+      val got = sent.asScala.toSeq
+      assert(got.map(_._1).distinct.size === got.size, s"a store was sent twice: $got")
+      got.toMap
     }
-    try {
-      assert(round(row(1, 10, "a", 10), row(2, 10, "b", 10)) ===
-        Some(Map(1L -> "a", 2L -> "b")))
+    try body(round, () => spark.read.parquet(snap).select($"key", $"status")
+      .as[(Long, String)].collect().toMap)
+    finally q.stop()
+  }
+
+  private def cellRow(k: Long, ts: Long, v: String, wt: Long) = CellRow(k, ts, Some(v), Some(wt))
+
+  test("cellSyncSink relays the keys whose incoming row differs from the committed row, and only those") {
+    twoStoreSink { (round, merged) =>
+      val row = cellRow _
+      // store 0's new rows: store 1 lacks them, store 0 sent them
+      assert(round(Seq(row(1, 10, "a", 10), row(2, 10, "b", 10)), Nil) ===
+        Map(1 -> Map(1L -> "a", 2L -> "b")))
       // the echo of that relay, one row with a new poll cursor `ts`: the
       // cells and stamps equal the committed rows, so nothing is relayed
-      assert(round(row(1, 10, "a", 10), row(2, 77, "b", 10)) === None)
-      // a store holding an older cell gets the committed (newer) row back
-      assert(round(row(1, 5, "old", 5)) === Some(Map(1L -> "a")))
-      // one echoed and one new row for the same key: the key is relayed
-      assert(round(row(2, 10, "b", 10), row(2, 20, "c", 20)) === Some(Map(2L -> "c")))
-      val merged = spark.read.parquet(snap).select($"key", $"status")
-        .as[(Long, String)].collect().toMap
-      assert(merged === Map(1L -> "a", 2L -> "c"))
-    } finally q.stop()
+      assert(round(Nil, Seq(row(1, 10, "a", 10), row(2, 77, "b", 10))) === Map())
+      // a store holding an older cell gets the committed (newer) row back;
+      // its row is not the merged row, so the key goes to both stores
+      assert(round(Nil, Seq(row(1, 5, "old", 5))) ===
+        Map(0 -> Map(1L -> "a"), 1 -> Map(1L -> "a")))
+      // one echoed and one new row for the same key: the key is relayed,
+      // to both stores, as the store sent two cell tuples
+      assert(round(Nil, Seq(row(2, 10, "b", 10), row(2, 20, "c", 20))) ===
+        Map(0 -> Map(2L -> "c"), 1 -> Map(2L -> "c")))
+      assert(merged() === Map(1L -> "a", 2L -> "c"))
+    }
+  }
+
+  test("cellSyncSink sends each store only the merged rows it does not already hold") {
+    twoStoreSink { (round, merged) =>
+      val row = cellRow _
+      // each store's unchanged own row goes to the other store only
+      assert(round(Seq(row(1, 10, "a", 10)), Seq(row(2, 10, "b", 10))) ===
+        Map(0 -> Map(2L -> "b"), 1 -> Map(1L -> "a")))
+      // a newer local write on store 0 goes to store 1 only
+      assert(round(Seq(row(1, 20, "a2", 20)), Nil) === Map(1 -> Map(1L -> "a2")))
+      // a key changed on both stores goes to both, whichever store won
+      assert(round(Seq(row(3, 30, "x", 30)), Seq(row(3, 40, "y", 40))) ===
+        Map(0 -> Map(3L -> "y"), 1 -> Map(3L -> "y")))
+      // a store holding an older cell gets the newer row back
+      assert(round(Nil, Seq(row(1, 5, "old", 5))) ===
+        Map(0 -> Map(1L -> "a2"), 1 -> Map(1L -> "a2")))
+      // both stores' rows equal the committed rows: an echo, sent nowhere
+      assert(round(Seq(row(2, 50, "b", 10)), Seq(row(2, 60, "b", 10))) === Map())
+      assert(merged() === Map(1L -> "a2", 2L -> "b", 3L -> "y"))
+    }
   }
 
   // ---- the snapshot commit protocol under fault injection: each
@@ -525,8 +568,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = tmp("cell-sync-fault") + "/snap"
     val mem = MemoryStream[CellRow]
-    val q = Sync.cellSyncSink(mem.toDF(), "key", Seq("status"), Seq(dir),
-      tmp("cell-sync-fault-ckpt"), Trigger.ProcessingTime(0))(_ => ())
+    val q = Sync.cellSyncSink(Seq(mem.toDF()), "key", Seq("status"), Seq(dir),
+      tmp("cell-sync-fault-ckpt"), Trigger.ProcessingTime(0))((_, _) => ())
     new SinkRun(dir, "key", { ks =>
       mem.addData(ks.map(k => CellRow(k, 10, Some(s"s$k"), Some(10))): _*)
       q.processAllAvailable()

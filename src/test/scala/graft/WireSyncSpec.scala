@@ -676,6 +676,109 @@ class WireSyncSpec extends AnyFunSuite {
     }
   }
 
+  /** A crash of one `merge: cell` round inside its snapshot commit,
+    * after its relays landed: `crash(base, round)` builds the disk state
+    * from the round's own committed snapshots (`round/snapA`,
+    * `round/snapB`), with `base/snapA` and `base/snapB` still the
+    * previous round's and the round's offsets uncommitted. One recovery
+    * round must then leave both snapshots and both stores as the
+    * uninterrupted round did, and no `<dir>.tmp` behind. */
+  private def crashInCommit(crash: (String, String) => Unit): Unit =
+    cellLoop { (cql, es, cfg, base, cqlWrite) =>
+      import org.apache.commons.io.FileUtils
+      def f(p: String) = new java.io.File(p)
+      def copy(from: String, to: String): Unit = {
+        FileUtils.deleteDirectory(f(to)); FileUtils.copyDirectory(f(from), f(to))
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("key").collect().map(_.toSeq).toSeq
+      def state() = (
+        rows(spark.read.parquet(s"$base/snapA")),
+        rows(spark.read.parquet(s"$base/snapB")),
+        rows(spark.read.format("graft-cql").option("host", cql.host)
+          .option("keyspace", "ks").option("table", "t")
+          .option("partition-key", "key").option("writetime-of", "status,val").load()),
+        rows(spark.read.format("graft-es").option("nodes", es.url)
+          .option("index", "t").load()))
+
+      cqlWrite((1L to 10L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+      Seq("snapA", "snapB").foreach(d => copy(s"$base/$d", s"$base/saved/$d"))
+
+      // the round under test relays to both stores: a C* change and a new
+      // key go to ES, an ES change goes to C*
+      cqlWrite(Seq((1L, 500L, "gold", 1L), (11L, 510L, "s11", 11L)))
+      Seq((2L, 520L, "es", 520L, 2L, 20L))
+        .toDF("key", "ts", "status", "status_wt", "val", "val_wt")
+        .write.format("graft-es").option("nodes", es.url).option("index", "t")
+        .option("id-column", "key").option("version-column", "ts")
+        .mode("append").save()
+      SyncJob.runOnce(spark, cfg)
+      val uninterrupted = state()
+      assert(uninterrupted._1.size === 11 && uninterrupted._4.size === 11)
+      Seq("snapA", "snapB", "ckpt").foreach(d => copy(s"$base/$d", s"$base/round/$d"))
+
+      Seq("snapA", "snapB").foreach(d => copy(s"$base/saved/$d", s"$base/$d"))
+      crash(base, s"$base/round")
+      copy(s"$base/round/ckpt", s"$base/ckpt")
+      val commits = f(s"$base/ckpt/cell/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      assert(f(s"$commits/$last").delete())
+      f(s"$commits/.$last.crc").delete()
+
+      SyncJob.runOnce(spark, cfg) // replays the round
+      assert(state() === uninterrupted)
+      assert(Seq("snapA", "snapB").forall(d => !f(s"$base/$d.tmp").exists()))
+    }
+
+  test("merge: cell — a crash after the one snapshot write, mid-copy, replays to the state of an uninterrupted run") {
+    crashInCommit { (base, round) =>
+      import org.apache.commons.io.FileUtils
+      val (head, other) = (new java.io.File(s"$base/snapA.tmp"), new java.io.File(s"$base/snapB.tmp"))
+      FileUtils.copyDirectory(new java.io.File(s"$round/snapA"), head)
+      // the copy into the other <dir>.tmp died before its _SUCCESS
+      FileUtils.copyDirectory(new java.io.File(s"$round/snapB"), other)
+      assert(new java.io.File(other, "_SUCCESS").delete())
+      new java.io.File(other, "._SUCCESS.crc").delete()
+    }
+  }
+
+  test("merge: cell — a crash with every <dir>.tmp complete, before any swap, replays to the state of an uninterrupted run") {
+    crashInCommit { (base, round) =>
+      import org.apache.commons.io.FileUtils
+      Seq("snapA", "snapB").foreach(d => FileUtils.copyDirectory(
+        new java.io.File(s"$round/$d"), new java.io.File(s"$base/$d.tmp")))
+    }
+  }
+
+  test("merge: cell — later busy rounds of one shape reuse the generated code: 0 compiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    cellLoop { (_, es, cfg, _, cqlWrite) =>
+      def compiles(body: => Unit): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        body
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      cqlWrite((1L to 20L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+      // each busy round: 5 new C* keys (relayed to ES) and 5 ES-side
+      // status changes (relayed to C*), then its echo round
+      val counts = (1 to 4).map { r =>
+        val stamp = 1000L * r
+        cqlWrite((1L to 5L).map(i => (100L * r + i, stamp + i, s"c$r", i)))
+        (1L to 5L).map(i => (i, stamp + i, s"e$r", stamp + i)).toDF("key", "ts", "status", "status_wt")
+          .write.format("graft-es").option("nodes", es.url).option("index", "t")
+          .option("id-column", "key").option("version-column", "ts")
+          .mode("append").save()
+        (compiles(SyncJob.runOnce(spark, cfg)), compiles(SyncJob.runOnce(spark, cfg)))
+      }
+      // the first busy round may compile the merge against a snapshot
+      assert(counts.tail.map(_._1) === Seq(0L, 0L, 0L), s"compiles per (busy, echo) round: $counts")
+    }
+  }
+
   /** Waits until the listeners have seen every event posted so far:
     * listener events arrive asynchronously on the shared queue, and a
     * fence job's start event queues behind all of them. */
