@@ -3130,6 +3130,15 @@ object Esql {
   private val j270Wkt: String =
     "POLYGON((" + j270Ring.map { case (x, y) => s"$x $y" }.mkString(", ") + "))"
 
+  /** A ring's bounding box as a predicate on the raw `lon`/`lat` columns,
+    * read off the ring's extent. */
+  private def boxWhere(ring: Seq[(Double, Double)]): String = {
+    val (xs, ys) = ring.unzip
+    s"lon >= ${xs.min} AND lon <= ${xs.max} AND lat >= ${ys.min} AND lat <= ${ys.max}"
+  }
+  /** The bounding box j270, j273 and their oracles' `boxed` CTE filter on. */
+  private val j270Box: String = boxWhere(j270Ring)
+
   /** j270_geo_polygon — WKT POLYGON geo_shape + the spatial relations
     * over it (r12 verdict item 3): TO_GEOSHAPE parses the ring once
     * into quantized integer vertices; ST_WITHIN/ST_CONTAINS/
@@ -3144,7 +3153,7 @@ object Esql {
   val j270Query: String =
     s"""FROM events
        || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
-       || WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0
+       || WHERE $j270Box
        || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
        || EVAL poly = TO_GEOSHAPE("$j270Wkt")
        || EVAL inside = ST_INTERSECTS(p, poly), within = ST_WITHIN(p, poly), cont = ST_CONTAINS(poly, p), disj = ST_DISJOINT(p, poly)
@@ -3176,6 +3185,8 @@ object Esql {
     (-130.0, 10.0), (-60.0, 10.0), (-60.0, 45.0), (-130.0, 45.0), (-130.0, 10.0))
   private val j273Hole: Seq[(Double, Double)] = Seq(
     (-110.0, 20.0), (-80.0, 20.0), (-80.0, 35.0), (-110.0, 35.0), (-110.0, 20.0))
+  require(boxWhere(j273Outer) == j270Box,
+    "j273's outer ring must span j270's bounding box: both filter on j270Box")
 
   /** j273_geo_polygon_holes — WKT polygons with HOLES (the geo_shape
     * case real ES ingest hits immediately after plain polygons): the
@@ -3190,7 +3201,7 @@ object Esql {
   val j273Query: String =
     s"""FROM events
        || EVAL lat = ${GeoOps.SynthLatSql}, lon = ${GeoOps.SynthLonSql}
-       || WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0
+       || WHERE $j270Box
        || EVAL p = TO_GEOPOINT(CONCAT("POINT(", TO_STRING(lon), " ", TO_STRING(lat), ")"))
        || EVAL donut = TO_GEOSHAPE("POLYGON(${ringWkt(j273Outer)}, ${ringWkt(j273Hole)})")
        || EVAL solid = TO_GEOSHAPE("POLYGON(${ringWkt(j273Outer)})"), hole = TO_GEOSHAPE("POLYGON(${ringWkt(j273Hole)})")
@@ -3285,9 +3296,9 @@ object Esql {
   /** The j270/j273 oracles' `boxed` CTE: the `geo` events inside the
     * polygon's bounding box. */
   private val BoxedSql =
-    """boxed AS (
+    s"""boxed AS (
       |  SELECT * FROM geo
-      |  WHERE lon >= -130.0 AND lon <= -60.0 AND lat >= 10.0 AND lat <= 45.0)""".stripMargin
+      |  WHERE $j270Box)""".stripMargin
 
   /** The TS-command oracles' events (`e`: user_id, event_type, t, cents)
     * bucketed by UTC day (`k`). */

@@ -20,10 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `_schema.json` — the table schema as a Spark DDL string,
   *   - data pages `*.jsonl` — one JSON object per row (exactly the NDJSON
   *     row shape an ES bulk request carries),
-  *   - commit manifests `_manifest-*.json` — each lists the data pages one
-  *     committed job/epoch produced. Readers see ONLY manifested pages, so
-  *     a torn write (job died before driver commit) is invisible — the
-  *     same reader-side guarantee a transactional bulk endpoint gives.
+  *   - commit manifests `_manifest-<ordinal>-<tag>.json` — each lists the
+  *     data pages one committed generation produced. Readers see ONLY
+  *     manifested pages, so a torn write (job died before driver commit)
+  *     is invisible — the same reader-side guarantee a transactional bulk
+  *     endpoint gives. Every commit publishes through [[supersedeTag]]:
+  *     the tag is the generation's idempotency key (a batch `page-tag`,
+  *     `epoch-<n>` for streaming epoch n, else the write's queryId).
   *
   * Everything in this object is driver/executor-agnostic plain-JDK I/O:
   * executors touch only the page files their split names.
@@ -32,14 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * store owner runs OUTSIDE a query: today, compaction). */
 object GraftSyncMaintenance {
   /** See [[GraftSyncStore.compact]]: N committed pages → 1, one atomic
-    * snapshot manifest, answers unchanged. Quiescent batch-lineage
-    * stores only. */
+    * snapshot manifest, answers unchanged. Quiescent stores only. */
   def compact(dir: String): Unit = GraftSyncStore.compact(dir)
 
   /** See [[GraftSyncStore.compactLww]]: the Cassandra tombstone
     * lifecycle — per-key LWW resolution at compaction, shadowed versions
     * purged, winning tombstones retained until `gcGraceUs` has passed
-    * (then purged). Quiescent batch-lineage stores only. */
+    * (then purged). Quiescent stores only. */
   def compactLww(dir: String, keyCols: Seq[String], tsCol: String,
       deletedCol: String, gcGraceUs: Long, nowUs: Long): Unit =
     GraftSyncStore.compactLww(dir, keyCols, tsCol, deletedCol, gcGraceUs, nowUs)
@@ -64,20 +66,17 @@ private[sources] object GraftSyncStore {
     else None
   }
 
-  /** Atomically publish a manifest for one committed job/epoch, named
+  /** Atomically publish a manifest for one committed generation, named
     * `_manifest-<ordinal>-<tag>.json`. The ORDINAL defines the feed order
     * the micro-batch offsets index into (manifests concatenate in ordinal
     * order — page names themselves are never globally sorted, because a
-    * later job's random queryId could sort before an earlier one's). A
-    * REPLAYED streaming epoch passes the same (ordinal=epochId, tag) and
-    * so rewrites the same manifest with the same page list — the sink's
-    * idempotency under retries.
+    * later job's random queryId could sort before an earlier one's).
     *
     * `replacesUpTo`: a SNAPSHOT manifest (compaction) additionally
     * records the highest ordinal it subsumes — readers ignore every
     * manifest at or below it (the LSM/iceberg snapshot rule), which is
     * what makes compaction a ONE-FILE atomic operation. */
-  def writeManifest(dir: String, ordinal: Long, tag: String,
+  private def writeManifest(dir: String, ordinal: Long, tag: String,
       pages: Seq[String], replacesUpTo: Option[Long] = None,
       sealedTags: Seq[String] = Nil): Unit = {
     val node = mapper.createObjectNode()
@@ -88,7 +87,7 @@ private[sources] object GraftSyncStore {
       val st = node.putArray("sealed_tags")
       sealedTags.sorted.foreach(st.add)
     }
-    atomicWrite(Paths.get(dir, f"$ManifestPrefix$ordinal%012d-$tag.json"),
+    atomicWrite(Paths.get(dir, manifestName(ordinal, tag)),
       mapper.writeValueAsBytes(node))
   }
 
@@ -96,35 +95,39 @@ private[sources] object GraftSyncStore {
   private def manifestName(ordinal: Long, tag: String): String =
     f"$ManifestPrefix$ordinal%012d-$tag.json"
 
+  /** The store's manifest filenames, in ordinal (= feed) order. */
+  private def manifests(dir: String): Seq[String] =
+    listFiles(dir).map(_.getFileName.toString)
+      .filter(n => n.startsWith(ManifestPrefix) && n.endsWith(".json")).sorted
+
+  /** The ordinal component of a manifest filename. */
+  private def manifestOrdinal(name: String): Long =
+    name.stripPrefix(ManifestPrefix).takeWhile(_.isDigit).toLong
+
+  private def readManifest(dir: String, name: String): JsonNode =
+    mapper.readTree(Files.readAllBytes(Paths.get(dir, name)))
+
+  private def manifestPages(node: JsonNode): Seq[String] =
+    node.get("pages").elements().asScala.map(_.asText()).toSeq
+
   /** The tag component of a manifest filename (`_manifest-<ord>-<tag>
-    * .json`). Exact structural parse — never a substring match. */
+    * .json`). Exact structural parse — never a substring match: an
+    * endsWith("-$tag.json") test would conflate tag "epoch-1" with
+    * "ts-rollup-epoch-1" and let a supersede destroy another tag's
+    * committed generation (r13 advice). */
   private def manifestTag(name: String): String =
     name.stripPrefix(ManifestPrefix).dropWhile(_.isDigit)
       .stripPrefix("-").stripSuffix(".json")
-
-  /** True iff `name` is the manifest of generation `tag` — ordinal
-    * digits, then EXACTLY this tag. An endsWith("-$tag.json") test would
-    * conflate tag "epoch-1" with "ts-rollup-epoch-1" and let a supersede
-    * destroy another tag's committed generation (r13 advice). */
-  private def manifestHasTag(name: String, tag: String): Boolean =
-    name.startsWith(ManifestPrefix) && name.endsWith(".json") &&
-      manifestTag(name) == tag && {
-        val digits = name.stripPrefix(ManifestPrefix).takeWhile(_.isDigit)
-        digits.nonEmpty && name == manifestName(digits.toLong, tag)
-      }
 
   /** Tags sealed by compaction snapshots: their rows live inside snapshot
     * pages and can no longer be individually superseded. Union over every
     * manifest carrying a `sealed_tags` list (snapshots chain the list
     * forward, so one read of the live manifest set is complete). */
   private def sealedTags(dir: String): Set[String] =
-    listFiles(dir).map(_.getFileName.toString)
-      .filter(_.startsWith(ManifestPrefix))
-      .flatMap { m =>
-        val node = mapper.readTree(Files.readAllBytes(Paths.get(dir, m)))
-        Option(node.get("sealed_tags")).toSeq
-          .flatMap(_.elements().asScala.map(_.asText()).toSeq)
-      }.toSet
+    manifests(dir).flatMap { m =>
+      Option(readManifest(dir, m).get("sealed_tags")).toSeq
+        .flatMap(_.elements().asScala.map(_.asText()).toSeq)
+    }.toSet
 
   /** Compact every committed generation into ONE page under ONE
     * snapshot manifest — ES force-merge for the NDJSON store, the
@@ -144,16 +147,12 @@ private[sources] object GraftSyncStore {
     * after it are pure GC of already-ignored files — a crash anywhere
     * leaves a store that reads correctly.
     *
-    * Batch lineage only, on a QUIESCENT store (no live writer/reader —
-    * the force-merge caveat): an epoch-lineage store's ordinals are
-    * epoch ids a restarted stream would collide with, so it is refused
-    * loudly. A post-compaction page-tag replay would re-append rows the
-    * snapshot already holds — compaction is for stores whose epochs are
-    * checkpoint-committed (the quiescence requirement covers it). */
+    * QUIESCENT stores only (no live writer/reader — the force-merge
+    * caveat). Streamed stores compact like any other: their `epoch-<n>`
+    * tags are sealed, so a post-compaction replay of a committed epoch is
+    * a no-op and the stream's next epoch lands after the snapshot. */
   def compact(dir: String): Unit = {
-    requireLineage(dir, wantEpochs = false)
-    val priorManifests = listFiles(dir).map(_.getFileName.toString)
-      .filter(_.startsWith(ManifestPrefix)).sorted
+    val priorManifests = manifests(dir)
     val pages = committedPages(dir)
     if (pages.size <= 1) return
     val ord = nextOrdinal(dir)
@@ -164,20 +163,26 @@ private[sources] object GraftSyncStore {
     finally out.close()
     Files.move(tmp, Paths.get(dir, page), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    // the snapshot SEALS every tag it subsumes (chaining forward tags
-    // already sealed by earlier snapshots): a post-compaction replay of a
-    // tagged generation finds its tag sealed and no-ops instead of
-    // appending rows the snapshot already holds (r13 advice). The list is
-    // bounded by the store's total distinct commit tags — names only,
-    // never data.
+    publishSnapshot(dir, ord, page, priorManifests, pages)
+  }
+
+  /** Compaction's commit: ONE atomic manifest for the snapshot `page` at
+    * ordinal `ord`, then GC of the prior manifests and pages it replaces
+    * (idempotent; they are already invisible to readers). The snapshot
+    * SEALS every tag it subsumes (chaining forward tags already sealed by
+    * earlier snapshots): a post-compaction replay of a tagged generation
+    * finds its tag sealed and no-ops instead of appending rows the
+    * snapshot already holds (r13 advice). The list is bounded by the
+    * store's total distinct commit tags — names only, never data. */
+  private def publishSnapshot(dir: String, ord: Long, page: String,
+      priorManifests: Seq[String], priorPages: Seq[String]): Unit = {
     val toSeal = (sealedTags(dir) ++ priorManifests.map(manifestTag))
       .filterNot(_ == "compact").toSeq
     writeManifest(dir, ord, "compact", Seq(page),
       replacesUpTo = Some(ord - 1), // the atomic cut-over
       sealedTags = toSeal)
-    // GC (idempotent; everything below is already invisible to readers)
-    priorManifests.foreach(m => Files.deleteIfExists(Paths.get(dir, m)))
-    pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
+    (priorManifests ++ priorPages)
+      .foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
   }
 
   /** LWW-compact a store that holds a CHANGE LOG with tombstones — the
@@ -207,17 +212,15 @@ private[sources] object GraftSyncStore {
     * drift), ordered by key then stamp — deterministic, and the order a
     * key-range scan of the real store (a CQL partition walk) would give.
     *
-    * Quiescent batch-lineage stores only (compact's rule). Store-local
+    * Quiescent stores only (compact's rule). Store-local
     * driver I/O like every maintenance op here; at real scale this exact
     * resolution is SyncOps i12's one-shuffle plan writing a fresh store —
     * the stand-in keeps it store-local so the lifecycle is testable
     * without a cluster. */
   def compactLww(dir: String, keyCols: Seq[String], tsCol: String,
       deletedCol: String, gcGraceUs: Long, nowUs: Long): Unit = {
-    requireLineage(dir, wantEpochs = false)
     require(keyCols.nonEmpty, "compactLww needs at least one key column")
-    val priorManifests = listFiles(dir).map(_.getFileName.toString)
-      .filter(_.startsWith(ManifestPrefix)).sorted
+    val priorManifests = manifests(dir)
     val pages = committedPages(dir)
     if (pages.isEmpty) return
     // newest per key: (ts, feed position) is a total order
@@ -256,46 +259,21 @@ private[sources] object GraftSyncStore {
     val page = f"compact-$ord%012d.jsonl"
     atomicWrite(Paths.get(dir, page),
       kept.map(_ + "\n").mkString.getBytes(UTF_8))
-    val toSeal = (sealedTags(dir) ++ priorManifests.map(manifestTag))
-      .filterNot(_ == "compact").toSeq
-    writeManifest(dir, ord, "compact", Seq(page),
-      replacesUpTo = Some(ord - 1), sealedTags = toSeal)
-    priorManifests.foreach(m => Files.deleteIfExists(Paths.get(dir, m)))
-    pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
+    publishSnapshot(dir, ord, page, priorManifests, pages)
   }
 
-  /** Publish (or REPUBLISH, on post-crash epoch replay) the manifest for
-    * streaming epoch `epochId`, then GC any pages the superseded
-    * publication of the same epoch referenced but the new list does not —
-    * the streaming twin of [[supersedeTag]]'s crash-safety order: atomic
-    * manifest swap FIRST, deletes after, so a crash between the two
-    * leaves only unreferenced orphans, never a manifest naming deleted
-    * (or torn) data. Page names carry a run-unique token, so the replay's
-    * staged bytes can never collide with the committed generation's. */
-  def republishEpoch(dir: String, epochId: Long, pages: Seq[String]): Unit = {
-    val priorName = manifestName(epochId, "epoch")
-    val priorPages = {
-      val p = Paths.get(dir, priorName)
-      if (!Files.isRegularFile(p)) Seq.empty[String]
-      else mapper.readTree(Files.readAllBytes(p))
-        .get("pages").elements().asScala.map(_.asText()).toSeq
-    }
-    writeManifest(dir, epochId, "epoch", pages)
-    val keep = pages.toSet
-    priorPages.distinct.filterNot(keep)
-      .foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
-  }
-
-  /** Publish a TAGGED batch commit with SUPERSEDE semantics: a page-tag
-    * is an idempotency key — the store holds exactly ONE committed
-    * generation per tag. If the tag already appears in a committed
-    * manifest, this commit REPLACES that generation: the new page list
-    * is published at the PRIOR ordinal (same position in the feed
-    * lineage, mirroring the streaming epoch path's ordinal=epochId
-    * rule), then the prior generation's pages that the new set does not
-    * reuse are deleted. This closes the replay hole name-keyed dedupe
-    * alone cannot: a post-crash foreachBatch re-execution may shuffle
-    * into a DIFFERENT partition layout (AQE coalescing, changed
+  /** Publish one commit with SUPERSEDE semantics — the store's only
+    * commit protocol. The tag is an idempotency key — the store holds
+    * exactly ONE committed generation per tag. A new tag lands at the
+    * next ordinal (max + 1), so the feed never reorders. If the tag
+    * already appears in a committed manifest, this commit REPLACES that
+    * generation: the new page list is published at the PRIOR ordinal
+    * (same position in the feed), then the prior generation's pages that
+    * the new set does not reuse are deleted. A replayed streaming epoch
+    * (tag `epoch-<n>`) and a replayed foreachBatch append (tag
+    * `rollup-epoch-<n>`) converge the same way. This closes the replay
+    * hole name-keyed dedupe alone cannot: a post-crash re-execution may
+    * shuffle into a DIFFERENT partition layout (AQE coalescing, changed
     * spark.sql.shuffle.partitions), landing the same rows under
     * different page names — merge would double-count; supersede
     * converges to the replay's exact output regardless of layout.
@@ -316,15 +294,9 @@ private[sources] object GraftSyncStore {
       pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
       return
     }
-    val prior = listFiles(dir).map(_.getFileName.toString)
-      .filter(manifestHasTag(_, tag))
-      .sorted
-    val priorPages = prior.flatMap { m =>
-      val node = mapper.readTree(Files.readAllBytes(Paths.get(dir, m)))
-      node.get("pages").elements().asScala.map(_.asText()).toSeq
-    }
-    val ordinal = prior.headOption
-      .map(_.stripPrefix(ManifestPrefix).takeWhile(_.isDigit).toLong)
+    val prior = manifests(dir).filter(manifestTag(_) == tag)
+    val priorPages = prior.flatMap(m => manifestPages(readManifest(dir, m)))
+    val ordinal = prior.headOption.map(manifestOrdinal)
       .getOrElse(nextOrdinal(dir))
     writeManifest(dir, ordinal, tag, pages) // atomic replace of the prior
     val keepName = manifestName(ordinal, tag)
@@ -335,42 +307,20 @@ private[sources] object GraftSyncStore {
       .foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
   }
 
-  /** The next free batch-commit ordinal: max over existing manifests + 1.
+  /** The next free ordinal: max over existing manifests + 1.
     * Driver-side only (one committing driver per store — the same
     * single-committer assumption a file-sink manifest makes). */
-  def nextOrdinal(dir: String): Long = {
-    val ords = listFiles(dir).map(_.getFileName.toString)
-      .filter(_.startsWith(ManifestPrefix))
-      .flatMap(n => n.stripPrefix(ManifestPrefix).takeWhile(_.isDigit) match {
-        case "" => None
-        case d => Some(d.toLong)
-      })
-    if (ords.isEmpty) 1L else ords.max + 1L
-  }
+  private def nextOrdinal(dir: String): Long =
+    manifests(dir).lastOption.fold(1L)(manifestOrdinal(_) + 1L)
 
-  /** A store's manifests are ONE writer lineage: either batch commits
-    * (max+1 ordinals) or streaming epochs (ordinal = epochId, stable under
-    * replay). Interleaving the two would let a later commit's manifest
-    * sort BEFORE existing ones — reordering the feed a checkpointed
-    * reader's offsets index into — so the sinks refuse it loudly instead
-    * of corrupting silently. (Batch-append then a FRESH stream into the
-    * same store restarts at epoch 0, which also sorts before the batch
-    * generation — same refusal.) */
-  def requireLineage(dir: String, wantEpochs: Boolean): Unit = {
-    val names = listFiles(dir).map(_.getFileName.toString)
-      .filter(_.startsWith(ManifestPrefix))
-    val (epochs, batches) = names.partition(_.endsWith("-epoch.json"))
-    val conflict = if (wantEpochs) batches else epochs
-    if (conflict.nonEmpty) throw new IllegalStateException(
-      s"graft-sync: store $dir already holds ${conflict.size} " +
-        s"${if (wantEpochs) "batch" else "epoch"}-committed manifest(s); " +
-        "a store is a single writer lineage (batch or streaming, not " +
-        "both) — write to a fresh directory or truncate first")
-  }
-
-  def deleteManifests(dir: String): Unit =
-    listFiles(dir).filter(_.getFileName.toString.startsWith(ManifestPrefix))
-      .foreach(Files.deleteIfExists(_))
+  /** The overwrite half of `SaveMode.Overwrite` (and of a streaming
+    * complete-mode epoch): drop every manifest and every page file except
+    * `keep`, the commit's own pages, before they are published. */
+  def dropAllExcept(dir: String, keep: Set[String]): Unit =
+    listFiles(dir).filter { f =>
+      val n = f.getFileName.toString
+      n.startsWith(ManifestPrefix) || (n.endsWith(".jsonl") && !keep(n))
+    }.foreach(Files.deleteIfExists(_))
 
   /** The committed page list in FEED ORDER: manifests concatenate by
     * ordinal (append order — the order micro-batch offsets index into,
@@ -383,37 +333,21 @@ private[sources] object GraftSyncStore {
     * flushed before the driver committed the manifest — torn jobs stay
     * invisible even mid-first-write. */
   def committedPages(dir: String): Seq[String] = {
-    val manifests = listFiles(dir)
-      .filter(_.getFileName.toString.startsWith(ManifestPrefix))
-      .sortBy(_.getFileName.toString)
+    val names = manifests(dir)
     val pages =
-      if (manifests.isEmpty && readSchema(dir).isEmpty)
+      if (names.isEmpty && readSchema(dir).isEmpty)
         listFiles(dir).map(_.getFileName.toString)
           .filter(_.endsWith(".jsonl")).sorted
       else {
-        val parsed = manifests.map { m =>
-          val ord = m.getFileName.toString.stripPrefix(ManifestPrefix)
-            .takeWhile(_.isDigit).toLong
-          (ord, mapper.readTree(Files.readAllBytes(m)))
-        }
+        val parsed = names.map(m => (manifestOrdinal(m), readManifest(dir, m)))
         // snapshot rule: a compaction manifest subsumes every manifest
         // at or below its replaces_up_to — those are pre-GC garbage
         val cutoff = parsed.flatMap { case (_, n) =>
           Option(n.get("replaces_up_to")).map(_.asLong)
         }.foldLeft(-1L)(math.max)
-        parsed.filter(_._1 > cutoff).flatMap { case (_, node) =>
-          node.get("pages").elements().asScala.map(_.asText()).toSeq
-        }
+        parsed.filter(_._1 > cutoff).flatMap { case (_, node) => manifestPages(node) }
       }
     pages.distinct.filter(p => Files.isRegularFile(Paths.get(dir, p)))
-  }
-
-  /** Overwrite semantics for `SaveMode.Overwrite`/`truncate()`: drop every
-    * manifest and every page file, keep the directory. */
-  def truncate(dir: String): Unit = {
-    deleteManifests(dir)
-    listFiles(dir).filter(_.getFileName.toString.endsWith(".jsonl"))
-      .foreach(Files.deleteIfExists(_))
   }
 
   private def listFiles(dir: String): Seq[Path] = {

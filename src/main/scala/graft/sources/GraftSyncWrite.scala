@@ -11,28 +11,36 @@ import org.apache.spark.sql.types._
 
 /** The `graft-sync` write path — an idempotent batched NDJSON bulk sink,
   * the ES `_bulk` analog (SURVEY §3.1): every task buffers rows and flushes
-  * them as one NDJSON page ("bulk request"), and commits are page-replace
-  * operations keyed by deterministic names, so any retry converges to the
+  * them as one NDJSON page ("bulk request"), and the driver commits the
+  * pages as one generation under a tag, so any retry converges to the
   * same store state instead of duplicating documents.
   *
   * Idempotency, the property that makes a sync pipeline safe to retry:
-  *   - batch: pages stage as `page-[<tag>-]<queryId>-<partition>.jsonl` —
-  *     attempt-unique (queryId is a fresh UUID per write), so a staged
-  *     attempt can never touch a COMMITTED generation's bytes; a retried
-  *     task overwrites its own attempt's page; the driver-side commit then
-  *     publishes ONE manifest naming exactly the committed pages
-  *     (atomically, tmp+rename), so readers never see a torn job.
-  *   - streaming: pages are `epoch-<epochId>-<runToken>-<partition>.jsonl`
-  *     (runToken unique per query run) and each epoch commit republishes
-  *     `_manifest-<epochId>-epoch.json` atomically, then GCs the
-  *     superseded run's pages. A replayed epoch (post-crash re-execution
-  *     of an un-committed batch) thus converges to exactly the replay's
-  *     output — exactly-once without any sink-side dedup state, the same
-  *     effect ES reaches with deterministic `_id` upserts.
+  * every commit — batch or streaming, append or overwrite — publishes
+  * through ONE store function, [[GraftSyncStore.supersedeTag]], which
+  * keeps exactly one generation per tag. The tag is the commit's
+  * idempotency key:
+  *   - streaming epoch `n`: `epoch-<n>` — a replayed epoch (post-crash
+  *     re-execution of an un-committed batch) supersedes its first
+  *     attempt at the same feed position, exactly-once without sink-side
+  *     dedup state (the SIGMOD 2018 Structured Streaming sink contract;
+  *     ES reaches the same effect with deterministic `_id` upserts);
+  *   - a batch write with `page-tag`: that tag;
+  *   - an untagged batch write: its queryId, a fresh UUID per write, so
+  *     every such write is a new generation.
+  * A new tag lands after every existing generation, so batch and
+  * streamed generations may follow each other in any order.
+  *
+  * Staged page names are unique to the write attempt —
+  * `page-[<tag>-]<queryId>-<partition>` for batch (queryId is fresh per
+  * attempt), `epoch-<n>-<runToken>-<partition>` for streaming (runToken is
+  * fresh per query run; the streaming queryId survives restarts) — so a
+  * replay never overwrites a COMMITTED generation's bytes before its
+  * atomic manifest publish, and abort deletes only its own attempt's
+  * pages.
   *
   * Scale: a task writes only its own partition's page; the driver commit
-  * handles O(#partitions) names, no data. Abort paths delete only the
-  * aborted attempt's page.
+  * handles O(#partitions) names, no data.
   */
 private[sources] class GraftSyncWriteBuilder(dir: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -46,21 +54,17 @@ private[sources] class GraftSyncWriteBuilder(dir: String, info: LogicalWriteInfo
   private val bulkRows: Int =
     Option(info.options.get("bulk-rows")).map(_.toInt).getOrElse(50000)
 
-  // Optional caller-supplied page identity. Batch page names default to
-  // the write's queryId — a fresh UUID per write — which is correct for
-  // independent writes but NOT replay-stable: a foreachBatch APPEND
-  // re-executed after a crash (same epoch, new queryId) would land the
-  // same rows under NEW page names and double-count. A deterministic tag
-  // (e.g. "rollup-epoch-7") is an IDEMPOTENCY KEY: the store commits
-  // exactly one generation per tag, and a commit whose tag is already
-  // manifested SUPERSEDES the prior generation (manifest replaced at the
-  // prior ordinal, stale pages deleted — GraftSyncStore.supersedeTag).
-  // Name-keyed dedupe alone is not enough: a replayed foreachBatch may
-  // shuffle into a different partition layout (AQE coalescing, changed
-  // shuffle-partition conf) and land the same rows under DIFFERENT page
-  // names, which a merge would double-count. Supersede also defines tag
-  // REUSE: two appends sharing a tag are last-write-wins by contract —
-  // one logical batch per tag, never a silent partial mix.
+  // Optional caller-supplied generation tag for a batch write. Without
+  // one the tag is the write's queryId — correct for independent writes
+  // but NOT replay-stable: a foreachBatch APPEND re-executed after a
+  // crash (same epoch, new queryId) would land the same rows as a second
+  // generation and double-count. A deterministic tag (e.g.
+  // "rollup-epoch-7") makes the replay SUPERSEDE the prior generation
+  // even when it shuffles into a different partition layout (AQE
+  // coalescing, changed shuffle-partition conf) and lands the same rows
+  // under DIFFERENT page names. Supersede also defines tag REUSE: two
+  // appends sharing a tag are last-write-wins by contract — one logical
+  // batch per tag, never a silent partial mix.
   private val pageTag: Option[String] = Option(info.options.get("page-tag"))
 
   override def build(): Write = {
@@ -68,13 +72,13 @@ private[sources] class GraftSyncWriteBuilder(dir: String, info: LogicalWriteInfo
     require(bulkRows > 0, s"graft-sync: bulk-rows must be positive, got $bulkRows")
     require(pageTag.forall(_.matches("[A-Za-z0-9._-]+")),
       s"graft-sync: page-tag must be a [A-Za-z0-9._-]+ token, got '${pageTag.get}'")
-    // "epoch" is the streaming lineage's manifest tag — a batch manifest
-    // named *-epoch.json would corrupt requireLineage's classification.
-    // "compact" is the snapshot manifest's tag — a user batch sharing it
-    // would supersede the compaction snapshot and delete its page,
-    // silently dropping the whole compacted store (r13 advice).
-    require(!pageTag.exists(t => t == "epoch" || t.endsWith("-epoch")),
-      "graft-sync: page-tag 'epoch'/'*-epoch' is reserved for the streaming sink")
+    // "epoch-<n>" is streaming epoch n's tag — a batch sharing it would
+    // supersede that epoch's generation. "compact" is the snapshot
+    // manifest's tag — a user batch sharing it would supersede the
+    // compaction snapshot and delete its page, silently dropping the
+    // whole compacted store (r13 advice).
+    require(!pageTag.exists(_.matches("epoch-[0-9]+")),
+      "graft-sync: page-tag 'epoch-<n>' is reserved for the streaming sink")
     require(!pageTag.contains("compact"),
       "graft-sync: page-tag 'compact' is reserved for compaction snapshots")
     // publish the schema marker BEFORE any task flushes a page: its
@@ -82,62 +86,43 @@ private[sources] class GraftSyncWriteBuilder(dir: String, info: LogicalWriteInfo
     // reader concurrent with the store's very first write sees an empty
     // committed set instead of in-flight pages
     GraftSyncStore.writeSchema(dir, info.schema())
-    new Write {
-      override def toBatch: BatchWrite =
-        new GraftSyncBatchWrite(dir, info.schema(), pageTag,
-          info.queryId(), doTruncate, bulkRows)
-      override def toStreaming: StreamingWrite =
-        new GraftSyncStreamingWrite(dir, info.schema(), bulkRows)
-    }
+    new GraftSyncWrite(dir, info.schema(), pageTag, info.queryId(),
+      doTruncate, bulkRows)
   }
 }
 
-private[sources] class GraftSyncBatchWrite(dir: String, schema: StructType,
+/** One write, batch or streaming: both commit through [[publish]]. */
+private[sources] class GraftSyncWrite(dir: String, schema: StructType,
     pageTag: Option[String], queryId: String, truncate: Boolean,
-    bulkRows: Int) extends BatchWrite {
+    bulkRows: Int) extends Write with BatchWrite with StreamingWrite {
 
-  // Tagged pages stage under ATTEMPT-UNIQUE names (tag + this write's
-  // queryId — a fresh UUID per write attempt), never under names derived
-  // from the tag alone (r13 advice, high): tag-only names let a replay or
-  // tag-reuse attempt overwrite the COMMITTED generation's pages in place
-  // BEFORE supersedeTag publishes — a crash mid-replay under a different
-  // shuffle layout would leave the committed manifest referencing pages
-  // whose bytes now hold a different row subset, and abort() would delete
-  // colliding names the committed manifest still references. With unique
-  // staging names, the committed generation's bytes are immutable until
-  // the atomic manifest publish, and abort deletes only this attempt's
-  // files. supersedeTag already GCs the superseded generation's pages
-  // after the publish, so tag reuse cannot accumulate orphans.
-  private val prefix =
-    pageTag.map(t => s"page-$t-$queryId").getOrElse(s"page-$queryId")
+  private val runToken = java.util.UUID.randomUUID().toString.take(8)
+
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  // both interfaces default to true; the class must pick one
+  override def useCommitCoordinator(): Boolean = true
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftSyncWriterFactory(dir, schema, prefix, bulkRows)
+    GraftSyncWriterFactory(dir, schema,
+      pageTag.fold(s"page-$queryId")(t => s"page-$t-$queryId"), bulkRows)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val pages = messages.flatMap(_.asInstanceOf[GraftSyncCommit].pages)
-    if (truncate) {
-      // overwrite = drop every previously-committed generation, keep ours
-      GraftSyncStore.deleteManifests(dir)
-      val keep = pages.toSet
-      val p = Paths.get(dir)
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try {
-          s.forEach { f =>
-            val n = f.getFileName.toString
-            if (n.endsWith(".jsonl") && !keep(n)) Files.deleteIfExists(f)
-          }
-        } finally s.close()
-      }
-    }
-    GraftSyncStore.requireLineage(dir, wantEpochs = false)
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    GraftSyncWriterFactory(dir, schema, runToken, bulkRows)
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    publish(pageTag.getOrElse(queryId), messages)
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    publish(s"epoch-$epochId", messages)
+
+  /** Overwrite (batch `SaveMode.Overwrite`, streaming complete mode) first
+    * drops every other generation, keeping this commit's own pages. */
+  private def publish(tag: String, messages: Array[WriterCommitMessage]): Unit = {
+    val pages = messages.flatMap(_.asInstanceOf[GraftSyncCommit].pages).toSeq
+    if (truncate) GraftSyncStore.dropAllExcept(dir, pages.toSet)
     GraftSyncStore.writeSchema(dir, schema)
-    pageTag match {
-      case Some(tag) => GraftSyncStore.supersedeTag(dir, tag, pages.toSeq)
-      case None => GraftSyncStore.writeManifest(dir,
-        GraftSyncStore.nextOrdinal(dir), queryId, pages.toSeq)
-    }
+    GraftSyncStore.supersedeTag(dir, tag, pages)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -146,56 +131,24 @@ private[sources] class GraftSyncBatchWrite(dir: String, schema: StructType,
         pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
       case _ => ()
     }
-}
-
-private[sources] class GraftSyncStreamingWrite(dir: String, schema: StructType,
-    bulkRows: Int) extends StreamingWrite {
-
-  // Run-unique staging token (one StreamingWrite is built per query RUN;
-  // a post-crash restart builds a fresh one). Same rationale as the batch
-  // tagged path: a replayed epoch may shuffle into a different partition
-  // layout, and epoch-only page names would overwrite the COMMITTED
-  // generation's bytes before the manifest republish — a crash mid-replay
-  // would leave the epoch's manifest referencing torn pages. Unique names
-  // keep the committed bytes immutable until the atomic manifest swap at
-  // commit(), which then GCs the superseded run's pages.
-  private val runToken = java.util.UUID.randomUUID().toString.take(8)
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftSyncStreamingWriterFactory(dir, schema, runToken, bulkRows)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    GraftSyncStore.requireLineage(dir, wantEpochs = true)
-    GraftSyncStore.writeSchema(dir, schema)
-    // ordinal = epochId: re-publishing a replayed epoch rewrites the SAME
-    // manifest name atomically — feed position unchanged — then the
-    // superseded run's pages for this epoch are GC'd
-    GraftSyncStore.republishEpoch(dir, epochId,
-      messages.flatMap(_.asInstanceOf[GraftSyncCommit].pages).toSeq)
-  }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case GraftSyncCommit(pages) =>
-        pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
-      case _ => ()
-    }
+    abort(messages)
 }
 
 private[sources] case class GraftSyncCommit(pages: Seq[String]) extends WriterCommitMessage
 
+/** Batch writers stage under `<prefix>-<partition>`, streaming writers
+  * under `epoch-<epochId>-<prefix>-<partition>`. */
 private[sources] case class GraftSyncWriterFactory(dir: String,
-    schema: StructType, prefix: String, bulkRows: Int) extends DataWriterFactory {
+    schema: StructType, prefix: String, bulkRows: Int)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftSyncDataWriter(dir, schema, f"$prefix-$partitionId%05d", bulkRows)
-}
-
-private[sources] case class GraftSyncStreamingWriterFactory(dir: String,
-    schema: StructType, runToken: String, bulkRows: Int) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftSyncDataWriter(dir, schema,
-      f"epoch-$epochId-$runToken-$partitionId%05d", bulkRows)
+      f"epoch-$epochId-$prefix-$partitionId%05d", bulkRows)
 }
 
 /** Serializes this partition's rows to NDJSON pages of at most `bulkRows`

@@ -1234,19 +1234,8 @@ object Sync {
     * Input frame must carry event_type/ts_us/value (the eventsUs shape). */
   def rollupSink(events: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    eachBatch(events, checkpointDir, trigger) { (batch, epochId) =>
-      // page-tag = the epoch: an idempotency KEY, not just a naming
-      // scheme — the store keeps exactly one committed generation per
-      // tag, and a replayed batch (post-crash re-execution) SUPERSEDES
-      // the first attempt's generation even when the replay shuffles
-      // into a different partition layout and lands the same rows
-      // under different page names (GraftSyncStore.supersedeTag).
-      // Exactly-once composition without sink-side state; a bare
-      // append would double-count the partials on replay.
-      graft.ops.NestedOps.hourlyRollup(graft.ops.NestedOps.hourlyCents(batch))
-        .write.format("graft-sync").mode("append")
-        .option("page-tag", s"rollup-epoch-$epochId")
-        .save(storeDir)
+    epochTaggedAppend(events, storeDir, checkpointDir, trigger, "rollup-epoch") {
+      batch => graft.ops.NestedOps.hourlyRollup(graft.ops.NestedOps.hourlyCents(batch))
     }
 
   /** i19 — the TS metrics-store ingest path (ES TSDB downsampling as a
@@ -1265,10 +1254,24 @@ object Sync {
     * a compaction. */
   def tsRollupSink(events: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    epochTaggedAppend(events, storeDir, checkpointDir, trigger, "ts-rollup-epoch")(
+      graft.ops.Esql.tsCellPartials)
+
+  /** Appends `fold(batch)` of each micro-batch to the graft-sync store at
+    * `storeDir` under the page tag `<tagPrefix>-<epochId>`. The tag is an
+    * idempotency KEY, not just a naming scheme: the store keeps exactly
+    * one committed generation per tag, so a replayed batch (post-crash
+    * re-execution) SUPERSEDES the first attempt's generation even when it
+    * shuffles into a different partition layout and lands the same rows
+    * under different page names (GraftSyncStore.supersedeTag).
+    * Exactly-once composition without sink-side state; a bare append
+    * would double-count the partials on replay. */
+  private def epochTaggedAppend(events: DataFrame, storeDir: String,
+      checkpointDir: String, trigger: Trigger, tagPrefix: String)(
+      fold: DataFrame => DataFrame): StreamingQuery =
     eachBatch(events, checkpointDir, trigger) { (batch, epochId) =>
-      graft.ops.Esql.tsCellPartials(batch)
-        .write.format("graft-sync").mode("append")
-        .option("page-tag", s"ts-rollup-epoch-$epochId")
+      fold(batch).write.format("graft-sync").mode("append")
+        .option("page-tag", s"$tagPrefix-$epochId")
         .save(storeDir)
     }
 }

@@ -391,29 +391,60 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
     assert(readAll().size === before.size + 5)
   }
 
-  test("compaction refuses an epoch-lineage store (live-stream force-merge caveat)") {
+  test("compacting a streamed store: answers unchanged, epoch replay a no-op, next epoch after") {
+    // a streamed store's generations are epoch-tagged (`epoch-<n>`), so
+    // compaction seals them exactly as it seals page tags
+    val src = freshStore("compact-epoch-src")
     val dir = freshStore("compact-epoch")
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Double)]
-    mem.addData((1L, 1.0), (2L, 2.0))
     val ck = Files.createTempDirectory("gsync-cmp-ck").toString
-    val q = mem.toDF().toDF("id", "v")
-      .writeStream.format("graft-sync")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow()).start(dir)
-    q.awaitTermination()
-    val e = intercept[IllegalStateException] {
-      graft.sources.GraftSyncMaintenance.compact(dir)
+    def append(rows: (Long, Double)*): Unit =
+      rows.toDF("id", "v").coalesce(1)
+        .write.format("graft-sync").mode("append").save(src)
+    def stream(checkpoint: String): Unit =
+      spark.readStream.format("graft-sync").load(src)
+        .writeStream.format("graft-sync")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow()).start(dir).awaitTermination()
+    def readAll() = spark.read.format("graft-sync").load(dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def names(): Seq[String] = {
+      val s = Files.list(Paths.get(dir))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      } finally s.close()
     }
-    assert(e.getMessage.contains("single writer lineage"), e.getMessage)
+    append((1L, 1.0), (2L, 2.0))
+    stream(ck) // epoch 0
+    append((3L, 3.0))
+    stream(ck) // epoch 1
+    val before = readAll()
+    assert(before === Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)))
+    graft.sources.GraftSyncMaintenance.compact(dir)
+    assert(names().count(_.endsWith(".jsonl")) === 1, names())
+    assert(names().filter(_.startsWith("_manifest-")) ===
+      Seq("_manifest-000000000003-compact.json"))
+    // 1. compaction does not change the answers
+    assert(readAll() === before, "compaction must not change answers")
+    // 2. a replay of a committed epoch (a fresh checkpoint's epoch 0)
+    // finds its tag sealed: a no-op, its staged pages GC'd
+    stream(Files.createTempDirectory("gsync-cmp-ck2").toString)
+    assert(readAll() === before, "a sealed epoch's replay must be a no-op")
+    assert(names().count(_.endsWith(".jsonl")) === 1, names())
+    // 3. the stream's next epoch lands after the snapshot
+    append((4L, 4.0))
+    stream(ck) // epoch 2
+    assert(readAll() === before :+ ((4L, 4.0)))
+    assert(names().filter(_.startsWith("_manifest-")) === Seq(
+      "_manifest-000000000003-compact.json", "_manifest-000000000004-epoch-2.json"))
   }
 
-  test("page-tag 'epoch' is refused — reserved for the streaming lineage") {
+  test("page-tag 'epoch-<n>' is refused — reserved for the streaming sink") {
     val dir = freshStore("tagepoch")
     val e = intercept[Exception] {
       Seq((1L, 1.0)).toDF("id", "v")
         .write.format("graft-sync").mode("append")
-        .option("page-tag", "epoch").save(dir)
+        .option("page-tag", "epoch-3").save(dir)
     }
     def msgs(t: Throwable): Seq[String] =
       Iterator.iterate(t: Throwable)(_.getCause).takeWhile(_ != null)
@@ -589,27 +620,90 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
     assert(drain() === 4L, "pages committed after query start must arrive")
   }
 
-  test("a store refuses mixed batch+streaming commit lineages") {
-    // interleaved lineages could insert a manifest BEFORE existing ones
-    // (epoch 0 sorts before batch ordinal 1), silently reordering the
-    // feed under a checkpointed reader — refused loudly instead
-    val dir = freshStore("lineage")
-    val five = Tables.eventsRaw(spark, TestSpark.sf0001)
-      .select($"event_id", $"value").limit(5)
-    five.write.format("graft-sync").mode("overwrite").save(dir)
-    val ck = Files.createTempDirectory("gsync-lineage-ck").toString
+  test("batch and streamed commits share one feed, in commit order") {
+    // every commit is a tagged generation at the next ordinal, so a batch
+    // write, a streamed epoch and another batch write follow each other
+    // in the feed, and a checkpointed reader gets each one exactly once
+    val dir = freshStore("onefeed")
+    val readCk = Files.createTempDirectory("gsync-onefeed-rck").toString
+    def batch(ids: Long*): Unit =
+      ids.map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+        .write.format("graft-sync").mode("append").save(dir)
+    def drain(): Seq[Long] = {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      spark.readStream.format("graft-sync").load(dir)
+        .writeStream
+        .foreachBatch { (delta: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen ++= delta.collect().map(_.getLong(0))
+          ()
+        }
+        .option("checkpointLocation", readCk)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      seen.toSeq.sorted
+    }
+    batch(1L, 2L)
+    assert(drain() === Seq(1L, 2L))
     val mem = MemoryStream[(Long, Double)](spark)
-    mem.addData((99L, 1.0))
-    val q = mem.toDF().toDF("event_id", "value")
+    mem.addData((10L, 10.0), (11L, 11.0))
+    mem.toDF().toDF("id", "v")
       .writeStream.format("graft-sync")
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow()).start(dir)
-    val e = intercept[Exception] { q.awaitTermination() }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("single writer lineage")), s"got: ${msgs(e)}")
-    // the refused epoch committed nothing: the store still reads cleanly
-    assert(spark.read.format("graft-sync").load(dir).count() === 5L)
+      .option("checkpointLocation",
+        Files.createTempDirectory("gsync-onefeed-ck").toString)
+      .trigger(Trigger.AvailableNow()).start(dir).awaitTermination()
+    assert(drain() === Seq(10L, 11L))
+    batch(20L, 21L)
+    assert(drain() === Seq(20L, 21L))
+    assert(spark.read.format("graft-sync").load(dir)
+      .collect().map(_.getLong(0)).toSeq === Seq(1L, 2L, 10L, 11L, 20L, 21L))
+    val manifests = {
+      val s = Files.list(Paths.get(dir))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("_manifest-")).toSeq.sorted
+      } finally s.close()
+    }
+    assert(manifests.size === 3, manifests)
+    assert(manifests(1) === "_manifest-000000000002-epoch-0.json", manifests)
+  }
+
+  test("a complete-mode stream's epoch replaces the store's other generations") {
+    // complete mode truncates: each epoch's commit drops every other
+    // generation, so the store holds exactly the latest full result
+    val dir = freshStore("complete")
+    val mem = MemoryStream[Long](spark)
+    val q = mem.toDF().toDF("k").groupBy($"k").count()
+      .writeStream.format("graft-sync").outputMode("complete")
+      .option("checkpointLocation",
+        Files.createTempDirectory("gsync-complete-ck").toString)
+      .start(dir)
+    try {
+      mem.addData(1L, 1L, 2L)
+      q.processAllAvailable()
+      mem.addData(2L, 3L)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.read.format("graft-sync").load(dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(got === Seq((1L, 2L), (2L, 2L), (3L, 1L)))
+  }
+
+  test("a manifest a crashed publish left half-written (.tmp) is not read") {
+    // atomicWrite stages `<manifest>.tmp` and renames it; a crash between
+    // the two must leave the store reading exactly its committed pages
+    val dir = freshStore("tmpmanifest")
+    Seq((1L, 1.0)).toDF("id", "v").coalesce(1)
+      .write.format("graft-sync").mode("append").save(dir)
+    Files.write(Paths.get(dir, "_manifest-000000000002-torn.json.tmp"),
+      """{"pages":["page-tor""".getBytes("UTF-8"))
+    val got = spark.read.format("graft-sync").load(dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got === Seq((1L, 1.0)))
+    // and the next commit still lands at ordinal 2
+    Seq((2L, 2.0)).toDF("id", "v").coalesce(1)
+      .write.format("graft-sync").mode("append").option("page-tag", "next")
+      .save(dir)
+    assert(Files.isRegularFile(Paths.get(dir, "_manifest-000000000002-next.json")))
   }
 
   test("a corrupt page fails loudly with file and line context") {
