@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.slf4j.LoggerFactory
 
 /** On-disk layout of the `graft-sync` store — the zero-egress stand-in for
   * the external systems the reference syncs (a paged CQL table scan on the
@@ -52,6 +53,7 @@ private[sources] object GraftSyncStore {
   val ManifestPrefix = "_manifest-"
 
   private val mapper = new ObjectMapper()
+  private val log = LoggerFactory.getLogger(getClass)
 
   def writeSchema(dir: String, schema: StructType): Unit = {
     val p = Paths.get(dir)
@@ -120,11 +122,13 @@ private[sources] object GraftSyncStore {
       .stripPrefix("-").stripSuffix(".json")
 
   /** Tags sealed by compaction snapshots: their rows live inside snapshot
-    * pages and can no longer be individually superseded. Union over every
-    * manifest carrying a `sealed_tags` list (snapshots chain the list
-    * forward, so one read of the live manifest set is complete). */
-  private def sealedTags(dir: String): Set[String] =
-    manifests(dir).flatMap { m =>
+    * pages and can no longer be individually superseded. Union over the
+    * `sealed_tags` lists of the snapshot (`compact`) manifests among
+    * `names`, the only manifests that carry one (snapshots chain the list
+    * forward, so one read of the live snapshots is complete). A commit
+    * thus reads no manifest of a store that was never compacted. */
+  private def sealedTags(dir: String, names: Seq[String]): Set[String] =
+    names.filter(manifestTag(_) == "compact").flatMap { m =>
       Option(readManifest(dir, m).get("sealed_tags")).toSeq
         .flatMap(_.elements().asScala.map(_.asText()).toSeq)
     }.toSet
@@ -150,12 +154,17 @@ private[sources] object GraftSyncStore {
     * QUIESCENT stores only (no live writer/reader — the force-merge
     * caveat). Streamed stores compact like any other: their `epoch-<n>`
     * tags are sealed, so a post-compaction replay of a committed epoch is
-    * a no-op and the stream's next epoch lands after the snapshot. */
+    * a no-op and the stream's next epoch lands after the snapshot. An
+    * epoch tag names a stream position, not a source: once a streamed
+    * store is compacted, only the same checkpoint or a full replay of the
+    * same source may write to it again. Another query started with a
+    * fresh checkpoint has each of its epochs up to the highest sealed one
+    * dropped, rows and all, with only a log warning. */
   def compact(dir: String): Unit = {
     val priorManifests = manifests(dir)
     val pages = committedPages(dir)
     if (pages.size <= 1) return
-    val ord = nextOrdinal(dir)
+    val ord = nextOrdinal(priorManifests)
     val page = f"compact-$ord%012d.jsonl"
     val tmp = Paths.get(dir, page + ".tmp")
     val out = Files.newOutputStream(tmp)
@@ -176,8 +185,8 @@ private[sources] object GraftSyncStore {
     * store's total distinct commit tags — names only, never data. */
   private def publishSnapshot(dir: String, ord: Long, page: String,
       priorManifests: Seq[String], priorPages: Seq[String]): Unit = {
-    val toSeal = (sealedTags(dir) ++ priorManifests.map(manifestTag))
-      .filterNot(_ == "compact").toSeq
+    val toSeal = (sealedTags(dir, priorManifests) ++
+      priorManifests.map(manifestTag)).filterNot(_ == "compact").toSeq
     writeManifest(dir, ord, "compact", Seq(page),
       replacesUpTo = Some(ord - 1), // the atomic cut-over
       sealedTags = toSeal)
@@ -255,7 +264,7 @@ private[sources] object GraftSyncStore {
       .filter { case (_, w) => !w.deleted || w.ts > nowUs - gcGraceUs }
       .sortBy { case (k, w) => (k, w.ts, w.pos) }
       .map(_._2.line)
-    val ord = nextOrdinal(dir)
+    val ord = nextOrdinal(priorManifests)
     val page = f"compact-$ord%012d.jsonl"
     atomicWrite(Paths.get(dir, page),
       kept.map(_ + "\n").mkString.getBytes(UTF_8))
@@ -290,14 +299,17 @@ private[sources] object GraftSyncStore {
     // no-op, not an append that double-counts the snapshot's rows (r13
     // advice). The staged pages are unreferenced; GC them. A writer that
     // wants to REPLACE a sealed generation must use a fresh tag.
-    if (sealedTags(dir).contains(tag)) {
+    val names = manifests(dir)
+    if (sealedTags(dir, names).contains(tag)) {
+      log.warn(s"graft-sync: $dir: tag '$tag' is sealed by compaction; " +
+        s"dropping its commit of ${pages.size} page(s)")
       pages.foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
       return
     }
-    val prior = manifests(dir).filter(manifestTag(_) == tag)
+    val prior = names.filter(manifestTag(_) == tag)
     val priorPages = prior.flatMap(m => manifestPages(readManifest(dir, m)))
     val ordinal = prior.headOption.map(manifestOrdinal)
-      .getOrElse(nextOrdinal(dir))
+      .getOrElse(nextOrdinal(names))
     writeManifest(dir, ordinal, tag, pages) // atomic replace of the prior
     val keepName = manifestName(ordinal, tag)
     prior.filterNot(_ == keepName)
@@ -307,11 +319,11 @@ private[sources] object GraftSyncStore {
       .foreach(p => Files.deleteIfExists(Paths.get(dir, p)))
   }
 
-  /** The next free ordinal: max over existing manifests + 1.
-    * Driver-side only (one committing driver per store — the same
-    * single-committer assumption a file-sink manifest makes). */
-  private def nextOrdinal(dir: String): Long =
-    manifests(dir).lastOption.fold(1L)(manifestOrdinal(_) + 1L)
+  /** The next free ordinal after the manifests `names` (in ordinal
+    * order): max + 1. Driver-side only (one committing driver per store —
+    * the same single-committer assumption a file-sink manifest makes). */
+  private def nextOrdinal(names: Seq[String]): Long =
+    names.lastOption.fold(1L)(manifestOrdinal(_) + 1L)
 
   /** The overwrite half of `SaveMode.Overwrite` (and of a streaming
     * complete-mode epoch): drop every manifest and every page file except

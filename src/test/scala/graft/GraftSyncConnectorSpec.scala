@@ -439,6 +439,38 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
       "_manifest-000000000003-compact.json", "_manifest-000000000004-epoch-2.json"))
   }
 
+  test("a compacted streamed store drops another source's epochs up to the sealed one") {
+    // epoch tags name stream positions, not sources: once compaction has
+    // sealed epoch-0 and epoch-1, a different query started with a fresh
+    // checkpoint commits its epochs 0 and 1 as replays (dropped, rows and
+    // all); its first unsealed epoch lands after the snapshot
+    val src = freshStore("sealed-epoch-src")
+    val other = freshStore("sealed-epoch-other")
+    val dir = freshStore("sealed-epoch")
+    val ck = Files.createTempDirectory("gsync-sealed-ck").toString
+    val ck2 = Files.createTempDirectory("gsync-sealed-ck2").toString
+    def append(store: String, rows: (Long, Double)*): Unit =
+      rows.toDF("id", "v").coalesce(1)
+        .write.format("graft-sync").mode("append").save(store)
+    def stream(from: String, checkpoint: String): Unit =
+      spark.readStream.format("graft-sync").load(from)
+        .writeStream.format("graft-sync")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow()).start(dir).awaitTermination()
+    def readAll() = spark.read.format("graft-sync").load(dir)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    append(src, (1L, 1.0)); stream(src, ck) // epoch 0
+    append(src, (2L, 2.0)); stream(src, ck) // epoch 1
+    graft.sources.GraftSyncMaintenance.compact(dir)
+    val compacted = Seq((1L, 1.0), (2L, 2.0))
+    append(other, (10L, 10.0)); stream(other, ck2) // epoch 0: sealed
+    assert(readAll() === compacted)
+    append(other, (11L, 11.0)); stream(other, ck2) // epoch 1: sealed
+    assert(readAll() === compacted)
+    append(other, (12L, 12.0)); stream(other, ck2) // epoch 2: lands
+    assert(readAll() === compacted :+ ((12L, 12.0)))
+  }
+
   test("page-tag 'epoch-<n>' is refused — reserved for the streaming sink") {
     val dir = freshStore("tagepoch")
     val e = intercept[Exception] {
