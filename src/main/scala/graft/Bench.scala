@@ -3,16 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC everywhere: the events ts_us mapping (Tables.eventsUs) and the
-      // DuckDB oracle's epoch_us() must agree on the epoch
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("WARN")
     // Untimed warmup. Default: run the FULL suite once at the smallest SF
     // so JIT + whole-stage-codegen compilation (cached by generated-code
     // text, which is data-independent) is paid before any timing starts —

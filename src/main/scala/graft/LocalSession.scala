@@ -1,11 +1,13 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The tool mains' local SparkSession: `local[N]` with N shuffle
-  * partitions, N from SPARK_GRAFT_CPUS (default 4, as Bench and Verify),
-  * UTC session time zone (Tables.eventsUs asserts it), no UI. */
-private[tools] object LocalSession {
+/** The local SparkSession of `Bench`, `Verify` and the tool mains:
+  * `local[N]` with N shuffle partitions, N from SPARK_GRAFT_CPUS (default
+  * 4), no UI, and UTC everywhere — the events ts_us mapping
+  * (Tables.eventsUs) and the DuckDB oracle's epoch_us() must agree on the
+  * epoch. */
+private[graft] object LocalSession {
   def apply(logLevel: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder().master(s"local[$cpus]")

@@ -142,8 +142,8 @@ private[sources] class CqlTable(host: String, port: Int, ks: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new CqlScanBuilder(host, port, ks, table, schema,
       Cql.of(options, "partition-key"),
-      Option(options.get("token-splits")).map(_.toInt).getOrElse(4),
-      Option(options.get("page-size")).map(_.toInt).getOrElse(1000),
+      ReadOptions.positiveInt(options, "graft-cql", "token-splits").getOrElse(4),
+      ReadOptions.positiveInt(options, "graft-cql", "page-size").getOrElse(1000),
       Option(options.get("incremental-column")),
       Option(options.get("writetime-of")))
 
@@ -202,7 +202,7 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
   override def createReaderFactory(): PartitionReaderFactory =
     new CqlReaderFactory(required)
 
-  /** The poll-by-timestamp stream ([[TsWindowStream]]) over the native
+  /** The poll-by-timestamp stream ([[MarkWindowStream]]) over the native
     * protocol: mark = `SELECT max(ts)` (a scan-aggregate server-side — the
     * honest cost of poll-by-timestamp on C*; real deployments index the ts
     * or use CDC, the reference scans exactly like this). The window
@@ -214,7 +214,7 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
       "graft-cql: streaming reads need .option(\"incremental-column\", <bigint col>)"))
     require(required.fieldNames.contains(col),
       s"graft-cql: incremental-column '$col' is not in the read schema")
-    new TsWindowStream(() => maxTs(col),
+    new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
       (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }
 

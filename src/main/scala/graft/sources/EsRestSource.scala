@@ -229,8 +229,8 @@ private[sources] class EsRestTable(node: String, index: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EsRestScanBuilder(node, index, schema,
-      Option(options.get("read-slices")).map(_.toInt).getOrElse(4),
-      Option(options.get("scroll-size")).map(_.toInt).getOrElse(1000),
+      ReadOptions.positiveInt(options, "graft-es", "read-slices").getOrElse(4),
+      ReadOptions.positiveInt(options, "graft-es", "scroll-size").getOrElse(1000),
       Option(options.get("scroll-keepalive")).getOrElse("1m"),
       Option(options.get("incremental-column")))
 
@@ -308,7 +308,7 @@ private[sources] class EsRestScan(node: String, index: String,
   override def createReaderFactory(): PartitionReaderFactory =
     new EsRestReaderFactory(required, pushed)
 
-  /** The poll-by-timestamp stream ([[TsWindowStream]]) over the real
+  /** The poll-by-timestamp stream ([[MarkWindowStream]]) over the real
     * wire — exactly how the reference detects changed rows (the update-ts
     * column it reads from `_timestamp`-style fields). The mark comes from
     * a size-0 `max` aggregation; each window still reads as sliced PIT
@@ -318,7 +318,7 @@ private[sources] class EsRestScan(node: String, index: String,
       "graft-es: streaming reads need .option(\"incremental-column\", <epoch-µs long col>)"))
     require(required.fieldNames.contains(col),
       s"graft-es: incremental-column '$col' is not in the read schema")
-    new TsWindowStream(() => maxTs(col),
+    new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
       (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -32,10 +32,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `SupportsPushDownRequiredColumns`: only the pruned columns are
   *     parsed out of each JSON object (plus nothing else — filter columns
   *     are always part of the pruned schema Spark hands down).
-  *   - `MicroBatchStream`: the page list is an append-only feed; an offset
-  *     is "number of committed pages consumed", so each micro-batch plans
-  *     exactly the new pages — the incremental-sync read the reference's
-  *     change-feed loop implements by bookmarking its scan position.
+  *   - `MicroBatchStream`: the committed generations are an append-only
+  *     feed read through the shared [[MarkWindowStream]]; an offset is the
+  *     highest generation (manifest) ordinal consumed, so each micro-batch
+  *     plans exactly the pages of the new generations — the
+  *     incremental-sync read the reference's change-feed loop implements
+  *     by bookmarking its scan position.
   *
   * Usage: `spark.read.format("graft-sync").load(dir)` /
   * `spark.readStream.format("graft-sync").load(dir)`; schema comes from
@@ -85,7 +87,7 @@ private[sources] class GraftSyncTable(dir: String, schema: StructType)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftSyncScanBuilder(dir, schema,
-      Option(options.get("max-pages-per-trigger")).map(_.toInt),
+      ReadOptions.positiveInt(options, "graft-sync", "max-pages-per-trigger"),
       Option(options.get("starting-offset")).getOrElse("earliest"))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -236,15 +238,32 @@ private[sources] class GraftSyncScan(dir: String, fullSchema: StructType,
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      GraftSyncStore.committedPages(dir)
-        .map(p => GraftSyncPage(dir, p): InputPartition).toArray
+      splits(GraftSyncStore.committedPages(dir))
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftSyncReaderFactory(fullSchema, required, pushed, limit)
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftSyncMicroBatchStream(dir, fullSchema, required, pushed,
-      maxPagesPerTrigger, startingOffset)
+  /** The generation feed as a [[MarkWindowStream]]: mark = the highest
+    * generation ordinal (from manifest file names alone), a batch = the
+    * pages of the generations in (prev, mark] (see
+    * [[GraftSyncStore.window]] for the compaction and rewrite rules), and
+    * `max-pages-per-trigger` admits whole generations up to that many
+    * pages, at least one. `starting-offset` = earliest (default: the whole
+    * feed) or latest (only generations committed after the query starts);
+    * only a FRESH query consults it, a checkpointed restart resumes from
+    * its stored offset. */
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    require(startingOffset == "earliest" || startingOffset == "latest",
+      s"graft-sync: starting-offset must be earliest|latest, got '$startingOffset'")
+    val mark = () => GraftSyncStore.mark(dir)
+    new MarkWindowStream(mark, (from, to) => splits(GraftSyncStore.window(dir, from, to)),
+      new GraftSyncReaderFactory(fullSchema, required, pushed),
+      if (startingOffset == "latest") mark else () => 0L,
+      maxPagesPerTrigger, GraftSyncStore.admit(dir, _, _, _))
+  }
+
+  private def splits(pages: Seq[String]): Array[InputPartition] =
+    pages.map(GraftSyncPage(dir, _)).toArray
 }
 
 /** One committed page = one split. At 100 TB the page list is just longer;
@@ -313,79 +332,4 @@ private[sources] class GraftSyncPageReader(path: java.nio.file.Path,
 
   override def get(): InternalRow = row
   override def close(): Unit = reader.close()
-}
-
-/** Offsets are positions in the committed-page list: the feed is
-  * append-only (manifests only ever add pages), so pages[start..end) is a
-  * deterministic, replayable micro-batch — exactly a paged scan with a
-  * bookmark, which is how the reference's sync loop reads its source
-  * incrementally. Truncating/rewriting the store mid-query is a contract
-  * violation and fails loudly below. */
-private[sources] class GraftSyncMicroBatchStream(dir: String,
-    fullSchema: StructType, required: StructType, pushed: Array[Filter],
-    maxPagesPerTrigger: Option[Int], startingOffset: String = "earliest")
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  private case class PageOffset(n: Long) extends Offset {
-    override def json(): String = n.toString
-  }
-
-  // Trigger.AvailableNow contract: pin the feed's end at query start so
-  // the run drains exactly the pages committed by then and terminates,
-  // even if a writer keeps appending concurrently.
-  @volatile private var availableNowEnd: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(GraftSyncStore.committedPages(dir).size.toLong)
-
-  // Admission control: `max-pages-per-trigger` bounds each micro-batch
-  // (the paged-endpoint fetch-size knob — a huge backlog drains in
-  // bounded batches instead of one giant catch-up job). Composes with
-  // AvailableNow: Spark keeps planning batches until the pinned end.
-  override def getDefaultReadLimit: ReadLimit =
-    maxPagesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val end = availableNowEnd.getOrElse(
-      GraftSyncStore.committedPages(dir).size.toLong)
-    val s = start.asInstanceOf[PageOffset].n
-    limit match {
-      case mf: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        PageOffset(math.min(end, s + mf.maxFiles()))
-      case _ => PageOffset(end)
-    }
-  }
-  override def reportLatestOffset(): Offset =
-    PageOffset(GraftSyncStore.committedPages(dir).size.toLong)
-
-  /** `starting-offset` = earliest (default: the whole committed feed) or
-    * latest (only pages committed after the query starts) — the standard
-    * backlog knob of a feed source. Only consulted for a FRESH query; a
-    * checkpointed restart resumes from its stored offset. */
-  override def initialOffset(): Offset = startingOffset match {
-    case "earliest" => PageOffset(0L)
-    case "latest" =>
-      PageOffset(GraftSyncStore.committedPages(dir).size.toLong)
-    case other => throw new IllegalArgumentException(
-      s"graft-sync: starting-offset must be earliest|latest, got '$other'")
-  }
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead")
-  override def deserializeOffset(json: String): Offset =
-    PageOffset(json.trim.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s, e) = (start.asInstanceOf[PageOffset].n, end.asInstanceOf[PageOffset].n)
-    val pages = GraftSyncStore.committedPages(dir)
-    if (e > pages.size) throw new IllegalStateException(
-      s"graft-sync: offset $e beyond committed page count ${pages.size} — " +
-        "the store was truncated while a stream was reading it")
-    pages.slice(s.toInt, e.toInt)
-      .map(p => GraftSyncPage(dir, p): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftSyncReaderFactory(fullSchema, required, pushed)
-
-  override def commit(end: Offset): Unit = () // source-side state: none
-  override def stop(): Unit = ()
 }

@@ -58,7 +58,7 @@ private[sources] object GraftSyncStore {
   def writeSchema(dir: String, schema: StructType): Unit = {
     val p = Paths.get(dir)
     Files.createDirectories(p)
-    atomicWrite(p.resolve(SchemaFile), schema.toDDL.getBytes(UTF_8))
+    atomicWrite(p.resolve(SchemaFile))(_.write(schema.toDDL.getBytes(UTF_8)))
   }
 
   def readSchema(dir: String): Option[StructType] = {
@@ -70,9 +70,10 @@ private[sources] object GraftSyncStore {
 
   /** Atomically publish a manifest for one committed generation, named
     * `_manifest-<ordinal>-<tag>.json`. The ORDINAL defines the feed order
-    * the micro-batch offsets index into (manifests concatenate in ordinal
-    * order — page names themselves are never globally sorted, because a
-    * later job's random queryId could sort before an earlier one's).
+    * and is the mark a stream's offsets hold (generations concatenate in
+    * ordinal order — page names themselves are never globally sorted,
+    * because a later job's random queryId could sort before an earlier
+    * one's).
     *
     * `replacesUpTo`: a SNAPSHOT manifest (compaction) additionally
     * records the highest ordinal it subsumes — readers ignore every
@@ -89,8 +90,8 @@ private[sources] object GraftSyncStore {
       val st = node.putArray("sealed_tags")
       sealedTags.sorted.foreach(st.add)
     }
-    atomicWrite(Paths.get(dir, manifestName(ordinal, tag)),
-      mapper.writeValueAsBytes(node))
+    atomicWrite(Paths.get(dir, manifestName(ordinal, tag)))(
+      _.write(mapper.writeValueAsBytes(node)))
   }
 
   /** Manifest filename for one (ordinal, tag). */
@@ -128,10 +129,8 @@ private[sources] object GraftSyncStore {
     * forward, so one read of the live snapshots is complete). A commit
     * thus reads no manifest of a store that was never compacted. */
   private def sealedTags(dir: String, names: Seq[String]): Set[String] =
-    names.filter(manifestTag(_) == "compact").flatMap { m =>
-      Option(readManifest(dir, m).get("sealed_tags")).toSeq
-        .flatMap(_.elements().asScala.map(_.asText()).toSeq)
-    }.toSet
+    names.filter(manifestTag(_) == "compact").flatMap(m =>
+      readManifest(dir, m).path("sealed_tags").elements().asScala.map(_.asText())).toSet
 
   /** Compact every committed generation into ONE page under ONE
     * snapshot manifest — ES force-merge for the NDJSON store, the
@@ -161,30 +160,27 @@ private[sources] object GraftSyncStore {
     * fresh checkpoint has each of its epochs up to the highest sealed one
     * dropped, rows and all, with only a log warning. */
   def compact(dir: String): Unit = {
-    val priorManifests = manifests(dir)
     val pages = committedPages(dir)
-    if (pages.size <= 1) return
-    val ord = nextOrdinal(priorManifests)
-    val page = f"compact-$ord%012d.jsonl"
-    val tmp = Paths.get(dir, page + ".tmp")
-    val out = Files.newOutputStream(tmp)
-    try pages.foreach(p => Files.copy(Paths.get(dir, p), out))
-    finally out.close()
-    Files.move(tmp, Paths.get(dir, page), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    publishSnapshot(dir, ord, page, priorManifests, pages)
+    if (pages.size > 1)
+      publishSnapshot(dir, pages)(out => pages.foreach(p => Files.copy(Paths.get(dir, p), out)))
   }
 
-  /** Compaction's commit: ONE atomic manifest for the snapshot `page` at
-    * ordinal `ord`, then GC of the prior manifests and pages it replaces
+  /** Compaction's commit: `write` fills the snapshot page
+    * `compact-<ord>.jsonl` (unreferenced, so invisible), then ONE atomic
+    * manifest publishes it at the next ordinal `ord`, then the prior
+    * manifests and `priorPages`, the pages it replaces, are deleted
     * (idempotent; they are already invisible to readers). The snapshot
     * SEALS every tag it subsumes (chaining forward tags already sealed by
     * earlier snapshots): a post-compaction replay of a tagged generation
     * finds its tag sealed and no-ops instead of appending rows the
     * snapshot already holds (r13 advice). The list is bounded by the
     * store's total distinct commit tags — names only, never data. */
-  private def publishSnapshot(dir: String, ord: Long, page: String,
-      priorManifests: Seq[String], priorPages: Seq[String]): Unit = {
+  private def publishSnapshot(dir: String, priorPages: Seq[String])(
+      write: java.io.OutputStream => Unit): Unit = {
+    val priorManifests = manifests(dir)
+    val ord = nextOrdinal(priorManifests)
+    val page = f"compact-$ord%012d.jsonl"
+    atomicWrite(Paths.get(dir, page))(write)
     val toSeal = (sealedTags(dir, priorManifests) ++
       priorManifests.map(manifestTag)).filterNot(_ == "compact").toSeq
     writeManifest(dir, ord, "compact", Seq(page),
@@ -229,7 +225,6 @@ private[sources] object GraftSyncStore {
   def compactLww(dir: String, keyCols: Seq[String], tsCol: String,
       deletedCol: String, gcGraceUs: Long, nowUs: Long): Unit = {
     require(keyCols.nonEmpty, "compactLww needs at least one key column")
-    val priorManifests = manifests(dir)
     val pages = committedPages(dir)
     if (pages.isEmpty) return
     // newest per key: (ts, feed position) is a total order
@@ -264,11 +259,7 @@ private[sources] object GraftSyncStore {
       .filter { case (_, w) => !w.deleted || w.ts > nowUs - gcGraceUs }
       .sortBy { case (k, w) => (k, w.ts, w.pos) }
       .map(_._2.line)
-    val ord = nextOrdinal(priorManifests)
-    val page = f"compact-$ord%012d.jsonl"
-    atomicWrite(Paths.get(dir, page),
-      kept.map(_ + "\n").mkString.getBytes(UTF_8))
-    publishSnapshot(dir, ord, page, priorManifests, pages)
+    publishSnapshot(dir, pages)(_.write(kept.map(_ + "\n").mkString.getBytes(UTF_8)))
   }
 
   /** Publish one commit with SUPERSEDE semantics — the store's only
@@ -334,33 +325,95 @@ private[sources] object GraftSyncStore {
       n.startsWith(ManifestPrefix) || (n.endsWith(".jsonl") && !keep(n))
     }.foreach(Files.deleteIfExists(_))
 
-  /** The committed page list in FEED ORDER: manifests concatenate by
-    * ordinal (append order — the order micro-batch offsets index into,
-    * stable because committed manifests are never reordered), pages sorted
-    * within each manifest, first occurrence wins.
+  /** One committed generation: the manifest `name` at `ordinal` (`name`
+    * is empty for the one generation of a hand-assembled directory). */
+  final case class Generation(ordinal: Long, name: String)
+
+  /** The store's generations in FEED (ordinal) order, from the manifest
+    * file names alone. Everything a reader sees derives from this list:
+    * the batch scan's [[committedPages]] and a stream's [[mark]],
+    * [[window]] and [[admit]].
     *
-    * The "every *.jsonl, name-sorted" fallback applies ONLY to
-    * hand-assembled dirs (no `_schema.json`): a sink-produced store always
-    * carries the schema marker, so its readers never see pages a task
-    * flushed before the driver committed the manifest — torn jobs stay
-    * invisible even mid-first-write. */
-  def committedPages(dir: String): Seq[String] = {
-    val names = manifests(dir)
-    val pages =
-      if (names.isEmpty && readSchema(dir).isEmpty)
-        listFiles(dir).map(_.getFileName.toString)
-          .filter(_.endsWith(".jsonl")).sorted
-      else {
-        val parsed = names.map(m => (manifestOrdinal(m), readManifest(dir, m)))
-        // snapshot rule: a compaction manifest subsumes every manifest
-        // at or below its replaces_up_to — those are pre-GC garbage
-        val cutoff = parsed.flatMap { case (_, n) =>
-          Option(n.get("replaces_up_to")).map(_.asLong)
-        }.foldLeft(-1L)(math.max)
-        parsed.filter(_._1 > cutoff).flatMap { case (_, node) => manifestPages(node) }
-      }
-    pages.distinct.filter(p => Files.isRegularFile(Paths.get(dir, p)))
+    * A hand-assembled directory (pages copied in: no `_schema.json` and no
+    * manifest) is one generation at ordinal 1 holding every `*.jsonl`,
+    * name-sorted. A sink-produced store always carries the schema marker,
+    * so its readers never see pages a task flushed before the driver
+    * committed the manifest — torn jobs stay invisible even
+    * mid-first-write. */
+  def generations(dir: String): Seq[Generation] = {
+    val gens = manifests(dir).map(n => Generation(manifestOrdinal(n), n))
+    val whole = Seq(Generation(1L, ""))
+    if (gens.isEmpty && readSchema(dir).isEmpty && pages(dir, whole).nonEmpty) whole else gens
   }
+
+  /** The pages of `gens` in feed order, pages sorted within a generation,
+    * first occurrence wins, files that are gone dropped. */
+  private def pages(dir: String, gens: Seq[Generation]): Seq[String] =
+    gens.flatMap { g =>
+      if (g.name.nonEmpty) manifestPages(readManifest(dir, g.name))
+      else listFiles(dir).map(_.getFileName.toString).filter(_.endsWith(".jsonl")).sorted
+    }.distinct.filter(p => Files.isRegularFile(Paths.get(dir, p)))
+
+  /** The generations that a reader which has consumed every generation up
+    * to ordinal `from` reads in (from, to], in feed order. Of the store's
+    * manifests only the compaction snapshot is read, for its
+    * `replaces_up_to` r: every manifest at or below r is pre-GC garbage
+    * (the snapshot rule), and the snapshot holds their rows. So
+    *   - a reader that has consumed nothing (`from` = 0) reads it whole;
+    *   - a reader at or past r skips it: it holds only rows that reader
+    *     has consumed;
+    *   - a reader in between fails: the snapshot merges rows it has read
+    *     with rows it has not. */
+  private def unread(dir: String, gens: Seq[Generation], from: Long,
+      to: Long): Seq[Generation] = {
+    val snapshot = gens.filter(g => manifestTag(g.name) == "compact").lastOption
+    val r = snapshot.fold(0L)(g => readManifest(dir, g.name).path("replaces_up_to").asLong(0L))
+    if (from < r && (from > 0 || snapshot.exists(_.ordinal > to)))
+      throw new IllegalStateException(s"graft-sync: $dir was compacted up to generation " +
+        s"$r while a stream had read only up to $from; restart it with a fresh checkpoint")
+    val cut = if (from < r) r else math.max(from, snapshot.fold(0L)(_.ordinal))
+    gens.filter(g => g.ordinal > cut && g.ordinal <= to)
+  }
+
+  /** The committed page list in FEED ORDER: what a reader that has
+    * consumed nothing reads. */
+  def committedPages(dir: String): Seq[String] =
+    pages(dir, unread(dir, generations(dir), 0L, Long.MaxValue))
+
+  /** A stream's mark: the highest generation ordinal, 0 for an empty
+    * store. Reads no manifest. */
+  def mark(dir: String): Long = generations(dir).lastOption.fold(0L)(_.ordinal)
+
+  /** The pages of one stream batch (from, to]: the generations [[unread]]
+    * gives a reader at `from`. A superseded generation keeps its ordinal,
+    * so a reader past it never reads it again (its tag is the idempotency
+    * key), and every later generation keeps its place. */
+  def window(dir: String, from: Long, to: Long): Seq[String] = {
+    val gens = generations(dir)
+    val last = gens.lastOption.fold(0L)(_.ordinal)
+    if (to > last) throw rewritten(dir, to, last)
+    pages(dir, unread(dir, gens, from, to))
+  }
+
+  /** The end of a stream's next batch from `from` with the store at mark
+    * `to`: `to` itself, or under a page budget the last of the whole
+    * generations whose pages fit it (at least one generation). Reads the
+    * manifests of the generations it admits, plus one. */
+  def admit(dir: String, from: Long, to: Long, maxPages: Option[Int]): Long = {
+    if (to < from) throw rewritten(dir, from, to)
+    maxPages.fold(to) { n =>
+      val gens = unread(dir, generations(dir), from, to)
+      val total = gens.iterator.map(g => pages(dir, Seq(g)).size.toLong).scanLeft(0L)(_ + _)
+      val fit = gens.iterator.zip(total.drop(1)).takeWhile(_._2 <= n).map(_._1).toSeq
+      if (fit.size == gens.size) to else fit.lastOption.getOrElse(gens.head).ordinal
+    }
+  }
+
+  /** An overwrite restarts ordinals at 1, so a store mark below a reader's
+    * means the store was rewritten under it. */
+  private def rewritten(dir: String, readerMark: Long, storeMark: Long) = new IllegalStateException(
+    s"graft-sync: a stream has read $dir up to generation $readerMark but its last is " +
+      s"$storeMark — the store was overwritten or truncated while a stream was reading it")
 
   private def listFiles(dir: String): Seq[Path] = {
     val p = Paths.get(dir)
@@ -372,9 +425,12 @@ private[sources] object GraftSyncStore {
     }
   }
 
-  def atomicWrite(target: Path, bytes: Array[Byte]): Unit = {
+  /** `write` fills `<target>.tmp`, which then replaces `target` in one
+    * atomic rename: a reader sees the old file or the whole new one. */
+  def atomicWrite(target: Path)(write: java.io.OutputStream => Unit): Unit = {
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-    Files.write(tmp, bytes)
+    val out = Files.newOutputStream(tmp)
+    try write(out) finally out.close()
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }

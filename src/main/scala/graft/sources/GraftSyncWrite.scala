@@ -179,7 +179,7 @@ private[sources] class GraftSyncDataWriter(dir: String, schema: StructType,
   private def flushChunk(): Unit = {
     val page = f"$prefix-c$chunkIdx%04d.jsonl"
     Files.createDirectories(Paths.get(dir))
-    GraftSyncStore.atomicWrite(Paths.get(dir, page), buf.toString.getBytes(UTF_8))
+    GraftSyncStore.atomicWrite(Paths.get(dir, page))(_.write(buf.toString.getBytes(UTF_8)))
     flushed += page
     buf.setLength(0)
     rowsInChunk = 0

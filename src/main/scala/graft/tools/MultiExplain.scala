@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.LocalSession
+
 /** Dump formatted plans for many queries in one JVM.
   * Usage: runMain graft.tools.MultiExplain <outDir> <suffix> <dataDir> <q1> [q2...]
   * Core count / shuffle partitions come from SPARK_GRAFT_CPUS (default 4)

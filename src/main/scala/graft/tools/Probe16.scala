@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 
 /** r16 measurement probe (read-only; not part of any query path).

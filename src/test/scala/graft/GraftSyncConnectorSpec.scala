@@ -21,6 +21,11 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
   private def freshStore(tag: String): String =
     Files.createTempDirectory(s"gsync-$tag").toString + "/store"
 
+  /** The messages of `t` and of its causes, outermost first. */
+  private def msgs(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).toSeq
+
   test("batch round-trip: bulk sink then scan returns identical rows and schema") {
     val dir = freshStore("rt")
     val src = Tables.eventsRaw(spark, TestSpark.sf0001)
@@ -311,9 +316,6 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
         .write.format("graft-sync").mode("append")
         .option("page-tag", "compact").save(dir)
     }
-    def msgs(t: Throwable): Seq[String] =
-      Iterator.iterate(t: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(x => Option(x.getMessage).getOrElse("")).toSeq
     assert(msgs(e).exists(_.contains("reserved for compaction")), e)
   }
 
@@ -478,9 +480,6 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
         .write.format("graft-sync").mode("append")
         .option("page-tag", "epoch-3").save(dir)
     }
-    def msgs(t: Throwable): Seq[String] =
-      Iterator.iterate(t: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(x => Option(x.getMessage).getOrElse("")).toSeq
     assert(msgs(e).exists(_.contains("reserved for the streaming sink")), e)
   }
 
@@ -699,6 +698,76 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
     assert(manifests(1) === "_manifest-000000000002-epoch-0.json", manifests)
   }
 
+  /** One untagged generation holding each id. */
+  private def appendIds(dir: String, ids: Long*): Unit =
+    ids.foreach(id => Seq((id, id * 1.0)).toDF("id", "v").coalesce(1)
+      .write.format("graft-sync").mode("append").save(dir))
+
+  /** The ids a checkpointed AvailableNow stream over `dir` reads. */
+  private def drainIds(dir: String, ck: String): Seq[Long] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    spark.readStream.format("graft-sync").load(dir).writeStream
+      .foreachBatch { (d: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen ++= d.collect().map(_.getLong(0)); ()
+      }
+      .option("checkpointLocation", ck)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    seen.toSeq.sorted
+  }
+
+  test("a supersede with fewer pages leaves a checkpointed reader's later generations in place") {
+    // offsets name generations: the replay keeps rollup-7's ordinal, the
+    // reader (already past it) does not read it again, and row 200's
+    // generation is the next one it reads
+    val dir = freshStore("shift")
+    val ck = Files.createTempDirectory("gsync-shift-ck").toString
+    val rows = (0L until 10L).map(i => (i, i * 1.5))
+    def tagged(parts: Int): Unit =
+      rows.toDF("id", "v").repartition(parts)
+        .write.format("graft-sync").mode("append")
+        .option("page-tag", "rollup-7").option("bulk-rows", "3").save(dir)
+    tagged(5) // 5 pages
+    appendIds(dir, 100L)
+    assert(drainIds(dir, ck) === (0L until 10L) :+ 100L)
+    tagged(2) // the replay: same rows, 4 pages
+    appendIds(dir, 200L)
+    assert(drainIds(dir, ck) === Seq(200L))
+  }
+
+  test("a reader that drained the store resumes after compaction with exactly the next generation") {
+    val dir = freshStore("cmp-resume")
+    val ck = Files.createTempDirectory("gsync-cmp-resume-ck").toString
+    appendIds(dir, 1L, 2L, 3L)
+    assert(drainIds(dir, ck) === Seq(1L, 2L, 3L))
+    graft.sources.GraftSyncMaintenance.compact(dir)
+    appendIds(dir, 4L)
+    assert(drainIds(dir, ck) === Seq(4L))
+    // a reader that has consumed nothing reads the snapshot whole
+    val fresh = Files.createTempDirectory("gsync-cmp-fresh-ck").toString
+    assert(drainIds(dir, fresh) === Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("a reader behind a compaction fails naming it") {
+    val dir = freshStore("cmp-behind")
+    val ck = Files.createTempDirectory("gsync-cmp-behind-ck").toString
+    appendIds(dir, 1L)
+    assert(drainIds(dir, ck) === Seq(1L))
+    appendIds(dir, 2L, 3L)
+    graft.sources.GraftSyncMaintenance.compact(dir)
+    val e = intercept[Exception](drainIds(dir, ck))
+    assert(msgs(e).exists(_.contains("was compacted up to generation 3")), msgs(e))
+  }
+
+  test("a store overwritten under a checkpointed reader fails loudly") {
+    val dir = freshStore("rewritten")
+    val ck = Files.createTempDirectory("gsync-rewritten-ck").toString
+    appendIds(dir, 1L, 2L, 3L)
+    assert(drainIds(dir, ck) === Seq(1L, 2L, 3L))
+    Seq((9L, 9.0)).toDF("id", "v").write.format("graft-sync").mode("overwrite").save(dir)
+    val e = intercept[Exception](drainIds(dir, ck))
+    assert(msgs(e).exists(_.contains("overwritten or truncated")), msgs(e))
+  }
+
   test("a complete-mode stream's epoch replaces the store's other generations") {
     // complete mode truncates: each epoch's commit drops every other
     // generation, so the store holds exactly the latest full result
@@ -746,8 +815,6 @@ class GraftSyncConnectorSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       spark.read.format("graft-sync").schema("id BIGINT").load(dir).count()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(m => m.contains("corrupt page") && m.contains("line 2")),
       s"got: ${msgs(e)}")
   }

@@ -123,6 +123,50 @@ class SyncJobSpec extends AnyFunSuite {
     assert(snapB2 === Map(1L -> "a1-v2", 2L -> "a2"))
   }
 
+  test("a row sync loop survives a compaction of its graft-sync feed between rounds") {
+    // the feed's stream resumes past the compaction snapshot, which holds
+    // only rows it has consumed, and reads the generation after it
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = tmp("synccompact")
+    val cfg = SyncConfig.fromYaml(
+      s"""cassandra:
+         |  feed: $root/feedA
+         |  snapshot: $root/snapA
+         |  format: graft-sync
+         |elasticsearch:
+         |  feed: $root/feedB
+         |  snapshot: $root/snapB
+         |checkpoint_dir: $root/ckpt
+         |""".stripMargin)
+    val written = Seq.newBuilder[Change]
+    def appendA(rows: Change*): Unit = {
+      written ++= rows
+      rows.map(c => (c.key, c.ts.getTime * 1000L, c.uid, c.payload))
+        .toDF("key", "ts", "uid", "payload")
+        .write.format("graft-sync").mode("append").save(cfg.sideA)
+    }
+    Seq(Change(3, ts("2024-01-01 09:00:00"), 9, "b3")).toDF()
+      .write.mode("append").parquet(cfg.sideB)
+    appendA(Change(1, ts("2024-01-01 10:00:00"), 1, "a1"),
+      Change(2, ts("2024-01-01 10:00:00"), 2, "a2"))
+    SyncJob.runOnce(spark, cfg)
+    appendA(Change(1, ts("2024-01-01 11:00:00"), 3, "a1-v2"),
+      Change(3, ts("2024-01-01 11:00:00"), 4, "a3"))
+    SyncJob.runOnce(spark, cfg)
+    graft.sources.GraftSyncMaintenance.compact(cfg.sideA)
+    appendA(Change(2, ts("2024-01-01 12:00:00"), 5, "a2-v2"),
+      Change(4, ts("2024-01-01 12:00:00"), 6, "a4"))
+    val (na, nb) = SyncJob.runOnce(spark, cfg)
+    val all = written.result().toDF()
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.select($"key", $"uid", $"payload").as[(Long, Long, String)].collect()
+        .map { case (k, u, p) => k -> (u, p) }.toMap
+    val want = byKey(graft.streaming.Sync.mergeLww(all.limit(0), all))
+    assert(byKey(spark.read.parquet(cfg.snapshotB)) === want)
+    assert((na, nb) === (1L, want.size.toLong))
+  }
+
   test("bidirectional sync converges and incremental rounds are idempotent") {
     val spark = TestSpark.spark
     import spark.implicits._

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.LocalSession
 import graft.ops.Esql
 
 /** Dev-loop profiler for the j260 pipeline — times cumulative stage
