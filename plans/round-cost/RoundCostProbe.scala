@@ -7,18 +7,27 @@ import scala.collection.mutable
 import graft.sources.{CqlProtocol, EsHttp}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.AppendData
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What one `SyncJob.runOnce` of a `merge: cell` loop costs, round by
   * round: wall time, Spark jobs and stages, generated classes compiled
-  * (`CodegenMetrics.METRIC_COMPILATION_TIME`'s count), rows read, the
-  * graft-cql and graft-es writes it planned, and the requests the CQL and
-  * ES stubs served.
+  * (`CodegenMetrics.METRIC_COMPILATION_TIME`'s count) and the time spent
+  * compiling them (the sum of CodeGenerator's "Code generated in <t> ms"
+  * lines), rows read, the graft-cql and graft-es writes it planned, and
+  * the requests the CQL and ES stubs served. The executed plan of the
+  * first busy round's merge (the frame the round caches) is written to
+  * `<out.json>.merge-plan.txt`.
   *
   * The load is perfbench's `cell-wire` shape: 2000 C* rows and 300 ES docs
   * preloaded; each iteration writes 200 new C* keys, 200 ES-side
@@ -42,6 +51,8 @@ object RoundCostProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val compileMicros = new AtomicLong
+    countCompileTime(compileMicros)
     val cql = new CqlStubServer().start()
     val es = new EsStubServer().start()
     val base = java.nio.file.Files.createTempDirectory("round-cost").toString
@@ -147,25 +158,52 @@ object RoundCostProbe {
       val counters: Seq[(String, () => Long)] = Seq(
         "jobs" -> (() => jobs.get), "stages" -> (() => stages.get),
         "compiles" -> (() => CodegenMetrics.METRIC_COMPILATION_TIME.getCount),
+        "compile_us" -> (() => compileMicros.get),
         "rows_in" -> (() => rowsIn.get),
         "cql_write_plans" -> (() => cqlWrites.get), "es_write_plans" -> (() => esWrites.get),
         "cql_batch_requests" -> (() => cql.batchRequests.get.toLong),
         "cql_execute_requests" -> (() => cql.executeRequests.get.toLong),
         "es_bulk_requests" -> (() => es.bulkRequests.get.toLong),
         "es_searches" -> (() => es.searches.get.toLong))
+      // the executed plans of the frames a round caches: its merge
+      val mergePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      @volatile var capturePlans = false
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }).flatMap(nodes)
+      spark.listenerManager.register(new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (capturePlans) nodes(qe.executedPlan).foreach {
+            case m: InMemoryTableScanExec =>
+              val plan = m.relation.cachedPlan match {
+                case a: AdaptiveSparkPlanExec => a.executedPlan
+                case p => p
+              }
+              if (!mergePlans.contains(plan.treeString)) mergePlans.add(plan.treeString)
+            case _ => ()
+          }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
       val rounds = mutable.ArrayBuffer.empty[String]
       def round(iteration: Int, kind: String): Unit = {
         fence()
         val before = counters.map(_._2())
+        capturePlans = iteration == 1 && kind == "busy"
         val t0 = System.nanoTime()
         SyncJob.runOnce(spark, cfg)
         val ms = (System.nanoTime() - t0) / 1e6
         fence()
+        capturePlans = false
         // the fence's own job is not the round's
         val deltas = counters.zip(before).map { case ((n, c), b) =>
           n -> (c() - b - (if (n == "jobs" || n == "stages") 1 else 0)) }
         val line = (Seq("\"iteration\":" + iteration, "\"kind\":\"" + kind + "\"",
-          f"\"wall_ms\":$ms%.1f") ++ deltas.map { case (n, d) => s"\"$n\":$d" })
+          f"\"wall_ms\":$ms%.1f") ++ deltas.map {
+            case ("compile_us", d) => f"\"compile_ms\":${d / 1000.0}%.1f"
+            case (n, d) => s"\"$n\":$d"
+          })
           .mkString("{", ",", "}")
         println(s"[round-cost] $line")
         rounds += line
@@ -193,8 +231,31 @@ object RoundCostProbe {
       }
       val doc = s"""{"iterations":$iterations,"rounds":[\n${rounds.mkString(",\n")}\n]}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(out), doc.getBytes("UTF-8"))
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.write(java.nio.file.Paths.get(out + ".merge-plan.txt"),
+        mergePlans.asScala.mkString("\n").getBytes("UTF-8"))
     } finally {
       client.close(); cql.stop(); es.stop(); spark.stop()
     }
+  }
+
+  /** Adds the time of every "Code generated in <t> ms" line CodeGenerator
+    * logs to `micros`, through an appender of its own: the logger's lines
+    * reach no other appender. */
+  private def countCompileTime(micros: AtomicLong): Unit = {
+    val pattern = """Code generated in ([0-9.]+) ms""".r.unanchored
+    val appender = new AbstractAppender("compile-time", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = e.getMessage.getFormattedMessage match {
+        case pattern(ms) => micros.addAndGet(math.round(ms.toDouble * 1000))
+        case _ => ()
+      }
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val logger = new LoggerConfig(name, Level.INFO, false)
+    logger.addAppender(appender, Level.INFO, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
   }
 }

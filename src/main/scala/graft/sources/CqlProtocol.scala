@@ -150,6 +150,9 @@ private[graft] object CqlProtocol {
     * type with no CQL encoding fails analysis. */
   def orderKey(c: Column): Column = GraftShim.mapExpr(c)(CqlOrderKey)
 
+  /** [[orderKey]] of one Catalyst value of type `dt` (null for null). */
+  def orderKeyOf(v: Any, dt: DataType): Array[Byte] = encode(rawOf(v, dt), dt)
+
   private case class CqlOrderKey(child: Expression)
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = BinaryType
@@ -157,8 +160,7 @@ private[graft] object CqlProtocol {
     override def checkInputDataTypes(): TypeCheckResult =
       try { cqlTypeOf(child.dataType); TypeCheckResult.TypeCheckSuccess }
       catch { case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage) }
-    override protected def nullSafeEval(v: Any): Any =
-      encode(rawOf(v, child.dataType), child.dataType)
+    override protected def nullSafeEval(v: Any): Any = orderKeyOf(v, child.dataType)
     override protected def withNewChildInternal(c: Expression): CqlOrderKey = copy(child = c)
   }
 

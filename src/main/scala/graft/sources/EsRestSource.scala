@@ -277,12 +277,18 @@ private[sources] class EsRestScan(node: String, index: String,
       s"Prefilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.catalogString}"
 
-  /** `GET /{index}/_count` → row statistics (bytes unknown): lets
-    * Catalyst see a small index as broadcastable-ish instead of the
-    * DSv2 "unknown = huge" default. */
+  /** Set when Spark turns this scan into a stream ([[toMicroBatchStream]]). */
+  @volatile private var streamed = false
+
+  /** A batch scan's `GET /{index}/_count` → row statistics (bytes
+    * unknown): lets Catalyst see a small index as broadcastable-ish
+    * instead of the DSv2 "unknown = huge" default. A stream's scan reports
+    * none: Spark reads them for every micro-batch, and the count is of
+    * the whole index, not the batch's window. */
   override def estimateStatistics(): Statistics = new Statistics {
     private val rows: Option[Long] =
-      try {
+      if (streamed) None
+      else try {
         val (code, body) = EsHttp.request("GET", s"$node/$index/_count", None)
         if (code == 200)
           Some(new ObjectMapper().readTree(body).path("count").asLong())
@@ -318,6 +324,7 @@ private[sources] class EsRestScan(node: String, index: String,
       "graft-es: streaming reads need .option(\"incremental-column\", <epoch-µs long col>)"))
     require(required.fieldNames.contains(col),
       s"graft-es: incremental-column '$col' is not in the read schema")
+    streamed = true
     new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
       (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }

@@ -1086,12 +1086,15 @@ object Sync {
     * [[cellSyncSink]] fold any number of micro-batches and re-merge
     * snapshots.
     *
-    * Scale shape: ONE map-combined keyed aggregation — constant state per
-    * (key × cell), no window, no join; at 100 TB this is a single shuffle
-    * on the key (and none at all once the snapshot is bucketed on it). */
+    * Scale shape: ONE keyed aggregation, [[CellMerge]], with constant
+    * state per key: a map-side partial aggregate, one shuffle on the key
+    * (none at all once the snapshot is bucketed on it) and a final
+    * aggregate, planned as ObjectHashAggregate — no sort, no window, no
+    * join. */
   def mergeCellLww(rows: DataFrame, keyCol: String,
       dataCols: Seq[String]): DataFrame =
-    mergeCellLww(rows, keyCol, dataCols, Nil)
+    mergeCells(rows.withColumn(StoreCol, lit(0)), keyCol, dataCols)
+      .drop(CellMerge.Relay, CellMerge.Differs, CellMerge.HeldBy)
 
   /** The per-cell snapshot layout — [[mergeCellLww]]'s input and output
     * columns: the key, the poll cursor `ts`, then each cell and its
@@ -1099,18 +1102,23 @@ object Sync {
   def cellColumns(keyCol: String, dataCols: Seq[String]): Seq[String] =
     keyCol +: "ts" +: dataCols.flatMap(c => Seq(c, s"${c}_wt"))
 
-  /** [[mergeCellLww]] plus `extra` (name, aggregate) columns computed in
-    * the same aggregation and appended after the merged columns. */
-  private def mergeCellLww(rows: DataFrame, keyCol: String, dataCols: Seq[String],
-      extra: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
+  /** The column that tags a [[cellSyncSink]] row with the store that
+    * sent it; null for a committed snapshot row. */
+  private val StoreCol = "_graft_store"
+
+  /** [[mergeCellLww]] over rows tagged by [[StoreCol]], by [[CellMerge]]:
+    * its three flags follow the merged columns. */
+  private[graft] def mergeCells(rows: DataFrame, keyCol: String,
+      dataCols: Seq[String]): DataFrame = {
     require(dataCols.nonEmpty, "mergeCellLww needs at least one data column")
-    val aggs = dataCols.flatMap { c =>
-      val ord = when(col(s"${c}_wt").isNotNull,
-        struct(col(s"${c}_wt"), graft.sources.CqlProtocol.orderKey(col(c))))
-      Seq(max_by(col(c), ord).as(c), max(col(s"${c}_wt")).as(s"${c}_wt"))
-    } ++ (max(col("ts")).as("ts") +: extra.map { case (n, e) => e.as(n) })
-    rows.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
-      .select((cellColumns(keyCol, dataCols) ++ extra.map(_._1)).map(col): _*)
+    val inputs = (cellColumns(keyCol, dataCols).tail :+ StoreCol).map(col)
+    val merge = GraftShim.aggregate(inputs)(CellMerge(_, dataCols))
+    // the aggregate's own result projection unpacks its struct, so no
+    // projection runs after it
+    val out = cellColumns(keyCol, dataCols).tail ++ Seq(CellMerge.Relay, CellMerge.Differs,
+      CellMerge.HeldBy)
+    val fields = out.map(f => merge.getField(f).as(f))
+    rows.groupBy(col(keyCol)).agg(fields.head, fields.tail: _*)
   }
 
   /** The wire loop's per-cell sink (SyncJob `merge: cell`): `feeds` are
@@ -1152,56 +1160,39 @@ object Sync {
       writeback: (Int, DataFrame) => Unit): StreamingQuery = {
     require(feeds.nonEmpty, "cellSyncSink needs at least one store feed")
     val columns = cellColumns(keyCol, dataCols)
-    val (isNew, store, toRelay, committed, differs, lowest, heldBy) =
-      ("_graft_new", "_graft_store", "_graft_relay", "_graft_committed",
-        "_graft_differs", "_graft_lo", "_graft_held_by")
+    import CellMerge.{Differs, HeldBy, Relay}
     val tagged = feeds.zipWithIndex
-      .map { case (f, i) => f.select(columns.map(col): _*).withColumn(store, lit(i)) }
+      .map { case (f, i) => f.select(columns.map(col): _*).withColumn(StoreCol, lit(i)) }
       .reduce(_ unionByName _)
     eachBatch(tagged, checkpointDir, trigger) { (batch, _) =>
       val spark = batch.sparkSession
       val base = readSnapshot(spark, snapshotDirs.head, columns)
       // ONE aggregation reads each feed once, merges the batch into the
-      // snapshot and marks the keys to relay: those with an incoming row
-      // whose cells or stamps differ from the committed row (every
-      // incoming row equals it iff the least and the greatest incoming
-      // cell tuples both do). It also keeps the committed row, so the
-      // keys whose merged row differs from it are marked too, and the
-      // store that sent every incoming row of a key as one cell tuple.
-      val cells = dataCols.flatMap(c => Seq(col(c), col(s"${c}_wt")))
-      val incoming = batch.withColumn(isNew, lit(true))
-      val old = max(when(!col(isNew), struct(cells: _*)))
-      val lo = min(when(col(isNew), struct(cells: _*)))
-      val hi = max(when(col(isNew), struct(cells: _*)))
-      val merged = mergeCellLww(
-        base.fold(incoming)(_.withColumn(store, lit(null).cast("int"))
-          .withColumn(isNew, lit(false)).unionByName(incoming)),
-        keyCol, dataCols,
-        Seq(toRelay -> (lo.isNotNull && !(lo <=> old && hi <=> old)),
-          committed -> max(when(!col(isNew), struct(col("ts") +: cells: _*))),
-          heldBy -> when(min(col(store)) === max(col(store)) && lo <=> hi, min(col(store))),
-          lowest -> lo))
-        .withColumn(differs, !(struct(col("ts") +: cells: _*) <=> col(committed)))
-        // the store's one tuple must also be the merged row
-        .withColumn(heldBy, when(col(lowest) <=> struct(cells: _*), col(heldBy)))
-        .drop(committed, lowest)
+      // committed snapshot row and flags each key: relay (an incoming row
+      // differs from the committed row), differs (the merged row does)
+      // and held-by (the store whose rows are the merged row). The batch
+      // comes first in the union, so its generated scan keeps the codegen
+      // stage id it has in a round without a snapshot and is reused.
+      val merged = mergeCells(
+        base.fold(batch)(b => batch.unionByName(b.withColumn(StoreCol, lit(null).cast("int")))),
+        keyCol, dataCols)
         .cache()
-      def relayTo(i: Int) = col(toRelay) && !(col(heldBy) <=> i)
+      def relayTo(i: Int) = col(Relay) && !(col(HeldBy) <=> i)
       // one pass over the cached merge counts the changed keys and each
       // store's relays
-      val counts = merged.agg(count_if(col(differs)),
+      val counts = merged.agg(count_if(col(Differs)),
         feeds.indices.map(i => count_if(relayTo(i))): _*).head()
       // relay the merged row, not the raw change, so a relay can never
       // regress the other store
       feeds.indices.filter(i => counts.getLong(i + 1) > 0).foreach { i =>
-        writeback(i, merged.where(relayTo(i)).drop(toRelay, differs, heldBy))
+        writeback(i, merged.where(relayTo(i)).drop(Relay, Differs, HeldBy))
       }
       def leftover(dir: String) = {
         val tmp = new Path(tmpOf(dir))
         tmp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tmp)
       }
       if (counts.getLong(0) > 0 || snapshotDirs.exists(leftover))
-        commitSnapshot(merged.drop(toRelay, differs, heldBy), snapshotDirs)
+        commitSnapshot(merged.drop(Relay, Differs, HeldBy), snapshotDirs)
       merged.unpersist()
     }
   }

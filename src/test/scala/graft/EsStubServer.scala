@@ -40,6 +40,7 @@ class EsStubServer {
   val pitOpens = new AtomicInteger()
   val pitDeletes = new AtomicInteger()
   val searches = new AtomicInteger() // PIT searches (`POST /_search`)
+  val counts = new AtomicInteger() // `GET /<index>/_count`
   @volatile var lastSourceIncludes: Seq[String] = Nil
   @volatile var lastQuery: String = ""
   @volatile var failNextBulkItem: Boolean = false
@@ -81,6 +82,7 @@ class EsStubServer {
           .set[JsonNode]("properties", indices(idx)._1)
         (200, mapper.writeValueAsString(root))
       case ("GET", idx :: "_count" :: Nil) if indices.contains(idx) =>
+        counts.incrementAndGet()
         (200, s"""{"count":${indices(idx)._2.size}}""")
       case ("POST", idx :: "_refresh" :: Nil) if indices.contains(idx) =>
         (200, """{"_shards":{"successful":1}}""")

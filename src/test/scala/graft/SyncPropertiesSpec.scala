@@ -93,11 +93,12 @@ class SyncPropertiesSpec extends AnyFunSuite {
   /** Random wide rows over `keys` keys (offset by `base`). Stamps come
     * from {null, 1, 2, 3}, so equal stamps are common; a stamped cell is a
     * live value or a null tombstone, an unstamped one carries nothing. */
-  private def genWide(rnd: Random, base: Long, keys: Int, n: Int): Seq[Row] = {
+  private def genWide(rnd: Random, base: Long, keys: Int, n: Int,
+      xs: Seq[Double] = Seq(-1.5, -0.0, 0.0, 1.5, -2.25, 1e300)): Seq[Row] = {
     def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
     val values: Map[String, Seq[Any]] = Map(
       "n" -> Seq(-2L, -1L, 0L, 1L, 2L, Long.MinValue, Long.MaxValue),
-      "x" -> Seq(-1.5, -0.0, 0.0, 1.5, -2.25, 1e300),
+      "x" -> xs,
       "s" -> Seq("", "a", "b", "Z", "é", "日本", "ab"))
     Seq.fill(n) {
       val cellVals = cells.flatMap { case (c, _) =>
@@ -183,6 +184,77 @@ class SyncPropertiesSpec extends AnyFunSuite {
     val composed = mergeCells(once.unionByName(wideDf(bs)))
     assert(composed === mergeCells(wideDf(as ++ bs)))
     assert(composed === reconcile(as ++ bs))
+  }
+
+  // ---- the cell sync's merge and flags against the struct-aggregate form
+
+  /** The sink's merge as SortAggregate plans it: `max_by` per cell over a
+    * (stamp, orderKey) struct, and the flags from the least, greatest and
+    * committed cell tuples — kept here as the reference for [[CellMerge]]. */
+  private def structMerge(rows: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.CellMerge.{Differs, HeldBy, Relay}
+    val store = col("_graft_store")
+    val isNew = store.isNotNull
+    val cellCols = cells.flatMap { case (c, _) => Seq(col(c), col(s"${c}_wt")) }
+    val tuple = struct(cellCols: _*)
+    val old = max(when(!isNew, tuple))
+    val (lo, hi) = (min(when(isNew, tuple)), max(when(isNew, tuple)))
+    val aggs = cells.flatMap { case (c, _) =>
+      val ord = when(col(s"${c}_wt").isNotNull,
+        struct(col(s"${c}_wt"), graft.sources.CqlProtocol.orderKey(col(c))))
+      Seq(max_by(col(c), ord).as(c), max(col(s"${c}_wt")).as(s"${c}_wt"))
+    } ++ Seq(max(col("ts")).as("ts"),
+      (lo.isNotNull && !(lo <=> old && hi <=> old)).as(Relay),
+      max(when(!isNew, struct(col("ts") +: cellCols: _*))).as("committed"),
+      when(min(store) === max(store) && lo <=> hi, min(store)).as(HeldBy),
+      lo.as("lo"))
+    rows.groupBy(col("key")).agg(aggs.head, aggs.tail: _*)
+      .withColumn(Differs, !(struct(col("ts") +: cellCols: _*) <=> col("committed")))
+      .withColumn(HeldBy, when(col("lo") <=> tuple, col(HeldBy)))
+      .select((Sync.cellColumns("key", cells.map(_._1)) ++ Seq(Relay, Differs, HeldBy)).map(col): _*)
+  }
+
+  test("the cell sync's merge and its three flags equal the struct-aggregate form") {
+    val rnd = new Random(47)
+    val xs = Seq(-1.5, -0.0, 0.0, 1.5, Double.NaN, -Double.NaN)
+    // per key: at most one committed snapshot row, then incoming rows from
+    // two stores, each a copy of the committed row (an echo), a copy of
+    // the key's previous incoming row, or a fresh row; stamps from
+    // {null, 1, 2, 3} force ties
+    def fresh(k: Long) = genWide(rnd, k, 1, 1, xs).head
+    def tag(r: Row, store: Any) = Row.fromSeq(r.toSeq :+ store)
+    def withTs(r: Row) = Row.fromSeq(r.getLong(0) +: rnd.nextInt(5).toLong +: r.toSeq.drop(2))
+    val rows = (0L until 600L).flatMap { k =>
+      val committed = if (rnd.nextInt(4) > 0) Some(fresh(k)) else None
+      val oneStore = if (rnd.nextBoolean()) Some(rnd.nextInt(2)) else None
+      val incoming = (1 to rnd.nextInt(5)).scanLeft(Option.empty[Row]) { (prev, _) =>
+        Some(rnd.nextInt(3) match {
+          case 0 if committed.nonEmpty => withTs(committed.get)
+          case 1 if prev.nonEmpty => withTs(prev.get)
+          case _ => fresh(k)
+        })
+      }.flatten
+      committed.map(tag(_, null)).toSeq ++
+        incoming.map(r => tag(r, oneStore.getOrElse(rnd.nextInt(2))))
+    }
+    val schema = wideSchema.add("_graft_store", IntegerType)
+    // spread each key over partitions, so partial aggregates merge, and
+    // past 128 keys a task, so the aggregate also falls back to sorting
+    val input = TestSpark.spark.createDataFrame(rnd.shuffle(rows).asJava, schema).repartition(3)
+    def collect(d: DataFrame) = d.collect().map(_.toSeq.map(comparable)).toSet
+    val got = collect(Sync.mergeCells(input, "key", cells.map(_._1)))
+    val want = collect(structMerge(input))
+    assert(got.size === want.size && want.size === rows.map(_.getLong(0)).distinct.size)
+    (want -- got).toSeq.sortBy(_.head.asInstanceOf[Long]).headOption.foreach { w =>
+      val k = w.head
+      fail(s"key $k: merge gave ${got.find(_.head == k)}, the struct form gave $w; " +
+        s"rows ${rows.filter(_.getLong(0) == k).mkString("; ")}")
+    }
+    // the cases the flags distinguish all occur
+    val flags = got.toSeq.map(r => (r(8), r(9), r(10) != null))
+    Seq((true, true, false), (false, false, false), (true, true, true), (false, true, false))
+      .foreach(f => assert(flags.contains(f), s"no key with (relay, differs, held) = $f"))
   }
 
   test("cosine scores are within [-1, 1] and self-similarity rounds to 1") {

@@ -779,6 +779,73 @@ class WireSyncSpec extends AnyFunSuite {
     }
   }
 
+  /** One busy round over `cellLoop`: an initial sync of 20 C* keys and
+    * its echo, then 5 new C* keys and 5 ES-side status changes; `busy`
+    * gets the ES stub and the round that merges them. */
+  private def busyRound(busy: (EsStubServer, () => Unit) => Unit): Unit =
+    cellLoop { (_, es, cfg, _, cqlWrite) =>
+      cqlWrite((1L to 20L).map(i => (i, i * 10L, s"s$i", i)))
+      SyncJob.runOnce(spark, cfg)
+      SyncJob.runOnce(spark, cfg) // the echo round
+      cqlWrite((101L to 105L).map(i => (i, 1000L + i, "c", i)))
+      (1L to 5L).map(i => (i, 1000L + i, "e", 1000L + i)).toDF("key", "ts", "status", "status_wt")
+        .write.format("graft-es").option("nodes", es.url).option("index", "t")
+        .option("id-column", "key").option("version-column", "ts")
+        .mode("append").save()
+      busy(es, () => SyncJob.runOnce(spark, cfg))
+    }
+
+  test("merge: cell — the busy round merges by ObjectHashAggregate, with no sort") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    /** `p` and every node below it, through adaptive plans, query stages
+      * and cached relations. */
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }).flatMap(nodes)
+    busyRound { (_, round) =>
+      // the merge is the one frame the round caches
+      val merges = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          nodes(qe.executedPlan).foreach {
+            case m: InMemoryTableScanExec => merges.add(m.relation.cachedPlan)
+            case _ => ()
+          }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try { round(); awaitListeners() } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      assert(!merges.isEmpty, "the busy round cached no merge")
+      merges.asScala.foreach { plan =>
+        val all = nodes(plan)
+        assert(all.exists(_.isInstanceOf[ObjectHashAggregateExec]), plan.treeString)
+        assert(!all.exists(n => n.isInstanceOf[SortAggregateExec] || n.isInstanceOf[SortExec]),
+          plan.treeString)
+      }
+    }
+  }
+
+  test("merge: cell — a busy round sends ES no _count; a batch scan still estimates its rows from it") {
+    busyRound { (es, round) =>
+      es.counts.set(0)
+      round()
+      assert(es.counts.get === 0)
+      val scan = spark.read.format("graft-es").option("nodes", es.url).option("index", "t").load()
+      assert(scan.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(25)))
+      assert(es.counts.get === 1)
+    }
+  }
+
   /** Waits until the listeners have seen every event posted so far:
     * listener events arrive asynchronously on the shared queue, and a
     * fence job's start event queues behind all of them. */
