@@ -214,30 +214,18 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
       "graft-cql: streaming reads need .option(\"incremental-column\", <bigint col>)"))
     require(required.fieldNames.contains(col),
       s"graft-cql: incremental-column '$col' is not in the read schema")
-    val poll = new CqlMarkPoll(host, port, s"SELECT max($col) FROM $ks.$table")
-    new MarkWindowStream(() => poll.mark().getOrElse(Long.MinValue),
-      (from, to) => partitions(Some((col, from, to))), createReaderFactory(),
-      onStop = () => poll.close())
+    new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
+      (from, to) => partitions(Some((col, from, to))), createReaderFactory())
   }
-}
 
-/** A stream's mark poll over ONE connection: opened by the first poll,
-  * reopened by the poll after a failed one, closed when the stream stops. */
-private[sources] final class CqlMarkPoll(host: String, port: Int, cql: String) {
-  private var client: CqlProtocol.Client = _
-
-  def mark(): Option[Long] = synchronized {
-    if (client == null) client = new CqlProtocol.Client(host, port)
+  private def maxTs(col: String): Option[Long] = {
+    val client = new CqlProtocol.Client(host, port)
     try {
-      val res = client.query(cql)
+      val res = client.query(s"SELECT max($col) FROM $ks.$table")
         .getOrElse(throw new java.io.IOException("graft-cql: Void for max()"))
       res.rows.headOption.flatMap(r => Option(r(0)))
         .map(b => java.nio.ByteBuffer.wrap(b).getLong)
-    } catch { case e: Exception => close(); throw e }
-  }
-
-  def close(): Unit = synchronized {
-    if (client != null) try client.close() finally client = null
+    } finally client.close()
   }
 }
 

@@ -29,15 +29,13 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * Trigger.AvailableNow once per run: the mark is pinned, so a run drains
   * what was there when it started and ends even if a writer keeps
   * appending. Spark runs an AvailableNow query over a source without
-  * SupportsTriggerAvailableNow as one batch, which would drop the budget.
-  * `onStop` releases what `mark` holds open (graft-cql's one connection). */
+  * SupportsTriggerAvailableNow as one batch, which would drop the budget. */
 private[sources] class MarkWindowStream(mark: () => Long,
     window: (Long, Long) => Array[InputPartition],
     readerFactory: PartitionReaderFactory,
     initialMark: () => Long = () => Long.MinValue,
     maxPerTrigger: Option[Int] = None,
-    admit: (Long, Long, Option[Int]) => Long = (_, to, _) => to,
-    onStop: () => Unit = () => ())
+    admit: (Long, Long, Option[Int]) => Long = (_, to, _) => to)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private case class MarkOffset(mark: Long) extends Offset {
@@ -75,5 +73,5 @@ private[sources] class MarkWindowStream(mark: () => Long,
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = onStop()
+  override def stop(): Unit = ()
 }

@@ -274,35 +274,4 @@ class CqlConnectorSpec extends AnyFunSuite {
       assert(back(0).isNullAt(1) && back(1).getString(1) === "b")
     }
   }
-
-  test("a ProcessingTime stream polls its mark over one connection, not one per trigger") {
-    import graft.sources.CqlProtocol
-    import org.apache.spark.sql.streaming.Trigger
-    withStub { stub =>
-      val client = new CqlProtocol.Client("127.0.0.1", stub.port)
-      def insert(id: Long): Unit = client.batch(Seq(("INSERT INTO ks.events (id, ts) VALUES (?, ?)",
-        Seq(id, id * 10).map(CqlProtocol.encode(_, org.apache.spark.sql.types.LongType)))))
-      val feed = spark.readStream.format("graft-cql")
-        .option("host", stub.host).option("keyspace", "ks")
-        .option("table", "events").option("partition-key", "id")
-        .option("incremental-column", "ts").option("token-splits", "1").load()
-      val batches = new java.util.concurrent.atomic.AtomicInteger()
-      val before = stub.connections.get
-      val q = feed.writeStream.trigger(Trigger.ProcessingTime(50))
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.count(); batches.incrementAndGet(); ()
-        }.start()
-      try {
-        // one new row per batch: every trigger polls, each batch reads
-        (1 to 3).foreach { i =>
-          insert(i)
-          val deadline = System.nanoTime() + 60000000000L
-          while (batches.get < i && System.nanoTime() < deadline) Thread.sleep(10)
-          assert(batches.get === i, s"batch $i did not run")
-        }
-      } finally { q.stop(); client.close() }
-      // one reader connection per batch (one token range), plus the poll's
-      assert(stub.connections.get - before === 3 + 1)
-    }
-  }
 }

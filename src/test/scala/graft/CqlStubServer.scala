@@ -53,7 +53,6 @@ class CqlStubServer {
   val selectRequests = new AtomicInteger()
   val prepareRequests = new AtomicInteger()
   val executeRequests = new AtomicInteger()
-  val connections = new AtomicInteger() // client connections accepted
   @volatile var lastSelectCols: Seq[String] = Nil
 
   // prepared-statement registry: md5(text) — C*'s own id derivation —
@@ -85,7 +84,6 @@ class CqlStubServer {
       while (running) {
         try {
           val s = server.accept()
-          connections.incrementAndGet()
           val t = new Thread(() => serve(s))
           t.setDaemon(true)
           t.start()
