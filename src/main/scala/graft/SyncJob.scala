@@ -249,7 +249,7 @@ object SyncJob {
     val columns = Sync.cellColumns(a.pk, cfg.cells)
     // the connector's stamp column for each `<cell>_wt`, read and write
     val writetimeOf = cfg.cells.mkString(",")
-    val stampOf = Cql.writetimeCols(Some(writetimeOf)).map { case (s, c) => s"${c}_wt" -> s }
+    val stampOf = Cql.writetimeCols(cfg.cells).map { case (s, c) => s"${c}_wt" -> s }
 
     val feedA = cqlStream(spark, a).option("writetime-of", writetimeOf).load()
       .select(columns.map(n => col(stampOf.getOrElse(n, n)).as(n)): _*)

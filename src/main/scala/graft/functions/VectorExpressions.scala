@@ -298,43 +298,33 @@ case class SpanPositions(toks: Expression, term: Expression, prefix: Expression)
 }
 
 object VectorExpressions {
-  private val ident = FunctionIdentifier("vec_dot")
-  private val info = new ExpressionInfo(classOf[DotProduct].getName, "vec_dot")
-  private val builder: Seq[Expression] => Expression = es => DotProduct(es(0), es(1))
+  private type Builder = Seq[Expression] => Expression
 
-  private val sigIdent = FunctionIdentifier("hp_sig")
-  private val sigInfo = new ExpressionInfo(classOf[HyperplaneSig].getName, "hp_sig")
-  private val sigBuilder: Seq[Expression] => Expression =
-    es => HyperplaneSig(es(0), es(1), es(2), es(3))
+  /** The native functions, one (identifier, info, builder) each: the list
+    * both [[register]] and [[GraftExtensions]] install. */
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("vec_dot", classOf[DotProduct], es => DotProduct(es(0), es(1))),
+    fn("hp_sig", classOf[HyperplaneSig], es => HyperplaneSig(es(0), es(1), es(2), es(3))),
+    fn("vec_sum", classOf[VecSum], es => VecSum(es(0))),
+    fn("span_pos", classOf[SpanPositions], {
+      case Seq(toks, term) => SpanPositions(toks, term, Literal(false))
+      case Seq(toks, term, prefix) => SpanPositions(toks, term, prefix)
+      case es => throw new IllegalArgumentException(
+        s"span_pos expects 2 or 3 arguments, got ${es.size}")
+    }))
 
-  private val sumIdent = FunctionIdentifier("vec_sum")
-  private val sumInfo = new ExpressionInfo(classOf[VecSum].getName, "vec_sum")
-  private val sumBuilder: Seq[Expression] => Expression = es => VecSum(es(0))
-
-  private val spanIdent = FunctionIdentifier("span_pos")
-  private val spanInfo = new ExpressionInfo(classOf[SpanPositions].getName, "span_pos")
-  private val spanBuilder: Seq[Expression] => Expression = {
-    case Seq(toks, term) => SpanPositions(toks, term, Literal(false))
-    case Seq(toks, term, prefix) => SpanPositions(toks, term, prefix)
-    case es => throw new IllegalArgumentException(
-      s"span_pos expects 2 or 3 arguments, got ${es.size}")
-  }
+  private def fn(name: String, cls: Class[_], builder: Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
   /** Imperative registration — used by query functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    spark.sessionState.functionRegistry.registerFunction(sigIdent, sigInfo, sigBuilder)
-    spark.sessionState.functionRegistry.registerFunction(sumIdent, sumInfo, sumBuilder)
-    spark.sessionState.functionRegistry.registerFunction(spanIdent, spanInfo, spanBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (ident, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+    }
 
   /** `spark.sql.extensions`-style injection for cluster deployments. */
   class GraftExtensions extends (SparkSessionExtensions => Unit) {
-    override def apply(ext: SparkSessionExtensions): Unit = {
-      ext.injectFunction((ident, info, builder))
-      ext.injectFunction((sigIdent, sigInfo, sigBuilder))
-      ext.injectFunction((sumIdent, sumInfo, sumBuilder))
-      ext.injectFunction((spanIdent, spanInfo, spanBuilder))
-    }
+    override def apply(ext: SparkSessionExtensions): Unit =
+      functions.foreach(ext.injectFunction)
   }
 }

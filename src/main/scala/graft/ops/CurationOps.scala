@@ -111,7 +111,7 @@ object CurationOps {
       .withColumn("d3", dupFrac("__g3"))
       .withColumn("keep", when(col("d2") <= 0.10, 1).otherwise(0))
       // keepTokens: a caller that needs the token array next (e.g.
-      // curateStream's shingle probe) avoids re-splitting the text
+      // curateStreamReleasable's shingle probe) avoids re-splitting the text
       .drop(Seq("__g2", "__g3") ++ (if (keepTokens) Nil else Seq("__toks")): _*)
   }
 
@@ -212,7 +212,7 @@ object CurationOps {
     // frame would re-scan the corpus and shuffle, and would silently KEEP
     // a null-text doc the stream's `> cut` predicate drops)
     val qualKept = repKept.filter(qualityLogit($"text") > qualityCut)
-    // gate on the UNROUNDED ratio (same boundary as Sync.curateStream) —
+    // gate on the UNROUNDED ratio (same boundary as Sync.curateStreamReleasable) —
     // j22's presentation rounding could otherwise flip a doc whose true
     // ratio sits within 5e-7 of the threshold
     val contaminated = PipelineOps.contamination(s, d)

@@ -466,7 +466,7 @@ object FusionOps {
     * Per (lang, qualityLogit-decile), the Gopher rule-battery pass rate
     * (both signals are the SHARED single-source definitions:
     * CurationOps.qualityLogit and CorpusQualityOps.gopherPass — the same
-    * Columns j65/j133/curateStream and j115/gopherGateStream gate on).
+    * Columns j65/j133/curateStreamReleasable and j115/gopherGateStream gate on).
     * A well-calibrated pair shows pass_rate rising with decile; flat or
     * inverted bands are where the two filters would fight each other in
     * a curation chain. Deciles are per-lang ntile over (score, doc_id) —

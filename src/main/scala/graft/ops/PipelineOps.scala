@@ -1251,7 +1251,7 @@ object PipelineOps {
     * means use
     * the sorted-fold device ([[Parity.sortedFoldSum]]) for oracle
     * parity; at scale a plain fp-tolerant sum() suffices. */
-  /** Shared SemDeDup clustering core (j53 + Sync.semDedupStream): K=8
+  /** Shared SemDeDup clustering core (j53 + Sync.semDedupStreamReleasable): K=8
     * deterministic seeds (first 8 ids), then LLOYD'S ALGORITHM TO
     * CONVERGENCE — per-round sorted-fold per-dimension means + cosine
     * reassignment (centroid-id tiebreak) until the ASSIGNMENT is

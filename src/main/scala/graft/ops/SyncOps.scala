@@ -142,8 +142,8 @@ object SyncOps {
     * in the driver; co-partitioned merge IS that loop distributed). The
     * report aggregates map-side to |classes|×|event_types| rows. */
   /** The event-row checksum — ONE definition shared by batch i13 and the
-    * streaming [[graft.streaming.Sync.syncDiffStream]] (h9's canonical-
-    * string discipline: money as integer cents, props verbatim), so the
+    * streaming [[graft.streaming.Sync.syncDiffStreamReleasable]] (h9's
+    * canonical-string discipline: money as integer cents, props verbatim), so the
     * two reconcile surfaces can't disagree about row identity. */
   def eventChecksum(df: DataFrame): DataFrame = df.withColumn("cs",
     md5(concat_ws("|", col("user_id"), col("event_type"),

@@ -472,10 +472,6 @@ object TextOps {
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    def trace(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_J21_TRACE"))
-        System.err.println(s"[j21] $msg @${System.nanoTime() / 1000000}ms")
-    trace("start")
     val Seq(c1, c2) = pairs.columns.toSeq.map(col)
     // edges / init labels stay LAZY plans over the checkpointed pair RDD —
     // they are two cheap projections; materializing them as their own
@@ -519,7 +515,6 @@ object TextOps {
       releaseCheckpoint(labels) // superseded round — free its blocks now
       labels = next
       rounds += 1
-      trace(s"round $rounds changed=$changed")
     }
     // 25 pointer-jumping rounds cover components of diameter ~2^25; if we
     // ever exit non-converged the result would silently diverge from the

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -54,60 +56,38 @@ class CqlProvider extends TableProvider
   override def supportsExternalMetadata(): Boolean = true
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val base = Cql.systemSchema(Cql.hostOf(options), Cql.portOf(options),
-      Cql.of(options, "keyspace"), Cql.of(options, "table"))
+    val opts = new ConnectorOptions("graft-cql", options)
+    val (host, port) = opts.hostPort("host", 9042)
+    val base = Cql.systemSchema(host, port, opts.required("keyspace"),
+      opts.required("table"))
     // writetime-of=<dataCol>[,<dataCol>...]: expose C*'s per-cell
     // WRITETIME as synthetic bigint columns — the reference's actual
     // update-timestamp source (it reads WRITETIME() for LWW ordering).
     // One column keeps the legacy name `writetime`; a list yields one
     // `writetime_<col>` per entry (the per-cell sync loop reads EVERY
     // data cell's stamp in one scan).
-    Option(options.get("writetime-of")) match {
-      case None => base
-      case Some(of) =>
-        val cs = Cql.writetimeCols(Some(of))
-        cs.values.foreach(c => require(base.fieldNames.contains(c),
-          s"graft-cql: writetime-of column '$c' is not in $base"))
-        StructType(base.fields ++ cs.keys.map(StructField(_, LongType)))
-    }
+    val stamps = Cql.writetimeCols(opts.columnList("writetime-of").getOrElse(Nil))
+    stamps.values.foreach(opts.inSchema("writetime-of", _, base))
+    StructType(base.fields ++ stamps.keys.map(StructField(_, LongType)))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     GraftSyncStore.checkSchema(schema) // same value domain as graft-sync
-    val opts = new CaseInsensitiveStringMap(properties)
-    new CqlTable(Cql.hostOf(opts), Cql.portOf(opts),
-      Cql.of(opts, "keyspace"), Cql.of(opts, "table"), schema)
+    val opts = new ConnectorOptions("graft-cql", properties)
+    val (host, port) = opts.hostPort("host", 9042)
+    new CqlTable(host, port, opts.required("keyspace"), opts.required("table"), schema)
   }
 }
 
 private[graft] object Cql {
-  def of(options: CaseInsensitiveStringMap, key: String): String = {
-    val v = options.get(key)
-    require(v != null && v.nonEmpty, s"graft-cql: .option(\"$key\", ...) is required")
-    v
-  }
-  /** The stamp-column map a `writetime-of` option value induces: stamp
-    * column name → the data column whose WRITETIME a read exposes in it
-    * and a write binds from it as `USING TIMESTAMP`. Insertion-ordered
-    * (schema order = option order). */
-  def writetimeCols(writetimeOf: Option[String]): scala.collection.immutable.ListMap[String, String] =
-    writetimeOf match {
-      case None => scala.collection.immutable.ListMap.empty
-      case Some(of) =>
-        val cs = of.split(",").map(_.trim).filter(_.nonEmpty)
-        require(cs.nonEmpty, "graft-cql: writetime-of must name at least one column")
-        if (cs.length == 1) scala.collection.immutable.ListMap("writetime" -> cs.head)
-        else scala.collection.immutable.ListMap(
-          cs.map(c => s"writetime_$c" -> c).toIndexedSeq: _*)
-    }
-
-  def hostOf(options: CaseInsensitiveStringMap): String =
-    of(options, "host").split(":").head
-  def portOf(options: CaseInsensitiveStringMap): Int = {
-    val h = of(options, "host").split(":")
-    if (h.length > 1) h(1).toInt else 9042
-  }
+  /** The stamp-column map of the `writetime-of` cells: stamp column name →
+    * the data column whose WRITETIME a read exposes in it and a write
+    * binds from it as `USING TIMESTAMP`. Insertion-ordered (schema order =
+    * option order); no cells, no stamps. */
+  def writetimeCols(cells: Seq[String]): ListMap[String, String] =
+    if (cells.length == 1) ListMap("writetime" -> cells.head)
+    else ListMap(cells.map(c => s"writetime_$c" -> c): _*)
 
   /** Schema from `system_schema.columns` — the drivers' metadata query,
     * issued over the same wire protocol as data reads. */
@@ -139,13 +119,15 @@ private[sources] class CqlTable(host: String, port: Int, ks: String,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val opts = new ConnectorOptions("graft-cql", options)
     new CqlScanBuilder(host, port, ks, table, schema,
-      Cql.of(options, "partition-key"),
-      ReadOptions.positiveInt(options, "graft-cql", "token-splits").getOrElse(4),
-      ReadOptions.positiveInt(options, "graft-cql", "page-size").getOrElse(1000),
-      Option(options.get("incremental-column")),
-      Option(options.get("writetime-of")))
+      opts.inSchema("partition-key", opts.required("partition-key"), schema),
+      opts.positiveInt("token-splits").getOrElse(4),
+      opts.positiveInt("page-size").getOrElse(1000),
+      opts.column("incremental-column", schema),
+      Cql.writetimeCols(opts.columnList("writetime-of").getOrElse(Nil)))
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new CqlWriteBuilder(host, port, ks, table, info)
@@ -153,8 +135,8 @@ private[sources] class CqlTable(host: String, port: Int, ks: String,
 
 private[sources] class CqlScanBuilder(host: String, port: Int, ks: String,
     table: String, fullSchema: StructType, pk: String, splits: Int,
-    pageSize: Int, incrementalCol: Option[String] = None,
-    writetimeOf: Option[String] = None)
+    pageSize: Int, incrementalCol: Option[String],
+    stamps: ListMap[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = fullSchema
@@ -168,13 +150,13 @@ private[sources] class CqlScanBuilder(host: String, port: Int, ks: String,
 
   override def build(): Scan =
     new CqlScan(host, port, ks, table, required, pk, splits, pageSize,
-      incrementalCol, writetimeOf)
+      incrementalCol, stamps)
 }
 
 private[sources] class CqlScan(host: String, port: Int, ks: String,
     table: String, required: StructType, pk: String, splits: Int,
-    pageSize: Int, incrementalCol: Option[String] = None,
-    writetimeOf: Option[String] = None)
+    pageSize: Int, incrementalCol: Option[String],
+    stamps: ListMap[String, String])
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -195,7 +177,7 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
     val bounds = (0 until splits).map(i => Long.MinValue + step * i) :+ Long.MaxValue
     (0 until splits).map { i =>
       CqlTokenRange(host, port, ks, table, pk, bounds(i), bounds(i + 1),
-        i == 0, pageSize, window, writetimeOf): InputPartition
+        i == 0, pageSize, window, stamps): InputPartition
     }.toArray
   }
 
@@ -209,14 +191,9 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
     * conjunct rides WITH the token-range predicate, which requires ALLOW
     * FILTERING — C*'s own spelling for a non-key predicate, again the
     * reference's actual query shape. */
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    val col = incrementalCol.getOrElse(throw new IllegalArgumentException(
-      "graft-cql: streaming reads need .option(\"incremental-column\", <bigint col>)"))
-    require(required.fieldNames.contains(col),
-      s"graft-cql: incremental-column '$col' is not in the read schema")
-    new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
-      (from, to) => partitions(Some((col, from, to))), createReaderFactory())
-  }
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+    MarkWindowStream.byTimestamp("graft-cql", incrementalCol, maxTs,
+      partitions, createReaderFactory())
 
   private def maxTs(col: String): Option[Long] = {
     val client = new CqlProtocol.Client(host, port)
@@ -233,7 +210,7 @@ private[sources] class CqlScan(host: String, port: Int, ks: String,
 private[sources] case class CqlTokenRange(host: String, port: Int, ks: String,
     table: String, pk: String, lo: Long, hi: Long, includeLo: Boolean,
     pageSize: Int, window: Option[(String, Long, Long)],
-    writetimeOf: Option[String])
+    stamps: ListMap[String, String])
   extends InputPartition
 
 private[sources] class CqlReaderFactory(required: StructType)
@@ -253,9 +230,8 @@ private[sources] class CqlRangeReader(range: CqlTokenRange,
   private val cql = {
     // synthetic writetime columns read as WRITETIME(<data col>) —
     // positional decode, so no alias is needed
-    val wt = Cql.writetimeCols(range.writetimeOf)
     val cols = fields.map { f =>
-      wt.get(f.name).map(c => s"WRITETIME($c)").getOrElse(f.name)
+      range.stamps.get(f.name).map(c => s"WRITETIME($c)").getOrElse(f.name)
     }.mkString(", ")
     val loOp = if (range.includeLo) ">=" else ">"
     val win = range.window.map { case (c, from, to) =>

@@ -32,43 +32,36 @@ import org.apache.spark.sql.types._
   *     Spark write relays every cell under its own writetime. */
 private[sources] class CqlWriteBuilder(host: String, port: Int, ks: String,
     table: String, info: LogicalWriteInfo) extends WriteBuilder {
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val schema = info.schema()
-      GraftSyncStore.checkSchema(schema)
-      def field(c: String, what: String): StructField =
-        schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-          s"graft-cql: $what '$c' is not in the written schema"))
-      def insert(cols: Seq[StructField], stamp: Option[String]) = CqlInsert(
-        s"INSERT INTO $ks.$table (${cols.map(_.name).mkString(", ")}) " +
-          s"VALUES (${cols.map(_ => "?").mkString(", ")})" +
-          stamp.fold("")(_ => " USING TIMESTAMP ?"),
-        cols.map(f => (schema.fieldIndex(f.name), f.dataType)),
-        stamp.map(schema.fieldIndex))
-      val tsCol = Option(info.options().get("using-timestamp-column"))
-      val stamps = Cql.writetimeCols(Option(info.options().get("writetime-of")))
-      require(tsCol.isEmpty || stamps.isEmpty,
-        "graft-cql: writetime-of and using-timestamp-column are exclusive")
-      tsCol.foreach { c =>
-        val dt = field(c, "using-timestamp-column").dataType
-        require(dt == LongType || dt == TimestampNTZType,
-          s"graft-cql: using-timestamp-column must be bigint/timestamp_ntz µs, got ${dt.simpleString}")
+  override def build(): Write = {
+    val schema = info.schema()
+    GraftSyncStore.checkSchema(schema)
+    val opts = new ConnectorOptions("graft-cql", info.options())
+    val tsCol = opts.column("using-timestamp-column", schema, LongType, TimestampNTZType)
+    val cells = opts.columnList("writetime-of")
+    require(tsCol.isEmpty || cells.isEmpty,
+      "graft-cql: writetime-of and using-timestamp-column are exclusive")
+    val stamps = Cql.writetimeCols(cells.getOrElse(Nil))
+    stamps.foreach { case (stamp, c) =>
+      opts.inSchema("writetime-of", c, schema)
+      opts.inSchema("writetime-of stamp", stamp, schema, LongType)
+    }
+    val batchRows = opts.positiveInt("batch-rows").getOrElse(64)
+    def insert(cols: Seq[StructField], stamp: Option[String]) = CqlInsert(
+      s"INSERT INTO $ks.$table (${cols.map(_.name).mkString(", ")}) " +
+        s"VALUES (${cols.map(_ => "?").mkString(", ")})" +
+        stamp.fold("")(_ => " USING TIMESTAMP ?"),
+      cols.map(f => (schema.fieldIndex(f.name), f.dataType)),
+      stamp.map(schema.fieldIndex))
+    val inserts =
+      if (stamps.isEmpty) Seq(insert(schema.fields.toSeq, tsCol))
+      else {
+        val stamped = stamps.keySet ++ stamps.values
+        val other = schema.fields.toSeq.filterNot(f => stamped(f.name))
+        stamps.toSeq.map { case (stamp, c) => insert(other :+ schema(c), Some(stamp)) }
       }
-      stamps.foreach { case (stamp, c) =>
-        field(c, "writetime-of column")
-        val dt = field(stamp, "writetime-of stamp column").dataType
-        require(dt == LongType,
-          s"graft-cql: writetime-of stamp column '$stamp' must be bigint µs, got ${dt.simpleString}")
-      }
-      val inserts =
-        if (stamps.isEmpty) Seq(insert(schema.fields.toSeq, tsCol))
-        else {
-          val stamped = stamps.keySet ++ stamps.values
-          val other = schema.fields.toSeq.filterNot(f => stamped(f.name))
-          stamps.toSeq.map { case (stamp, c) => insert(other :+ schema(c), Some(stamp)) }
-        }
-      new CqlBatchWrite(CqlWriterFactory(host, port, inserts, tsCol,
-        Option(info.options().get("batch-rows")).map(_.toInt).getOrElse(64)))
+    new Write {
+      override def toBatch: BatchWrite =
+        new CqlBatchWrite(CqlWriterFactory(host, port, inserts, tsCol, batchRows))
     }
   }
 }

@@ -67,13 +67,15 @@ class EsRestProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-es"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EsRest.mappingSchema(EsRest.nodeOf(options), EsRest.indexOf(options))
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val opts = new ConnectorOptions("graft-es", options)
+    EsRest.mappingSchema(EsRest.nodeOf(opts), EsRest.indexOf(opts))
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     GraftSyncStore.checkSchema(schema) // same value domain as graft-sync
-    val opts = new CaseInsensitiveStringMap(properties)
+    val opts = new ConnectorOptions("graft-es", properties)
     new EsRestTable(EsRest.nodeOf(opts), EsRest.indexOf(opts), schema)
   }
 }
@@ -81,20 +83,13 @@ class EsRestProvider extends TableProvider with DataSourceRegister {
 private[sources] object EsRest {
   private val mapper = new ObjectMapper()
 
-  def nodeOf(options: CaseInsensitiveStringMap): String = {
-    val n = options.get("nodes")
-    require(n != null && n.nonEmpty,
-      "graft-es: .option(\"nodes\", \"http://host:port\") is required")
-    n.split(",").head.stripSuffix("/") // one coordinating node is enough
-  }
+  // one coordinating node is enough
+  def nodeOf(opts: ConnectorOptions): String =
+    opts.required("nodes").split(",").head.stripSuffix("/")
 
-  def indexOf(options: CaseInsensitiveStringMap): String = {
-    // .load("idx") surfaces as path; .option("index", ...) wins
-    val i = Option(options.get("index")).orElse(Option(options.get("path")))
-    require(i.exists(_.nonEmpty), "graft-es: an index is required " +
-      "(.option(\"index\", ...) or .load(\"<index>\"))")
-    i.get
-  }
+  // .load("idx") surfaces as path; .option("index", ...) wins
+  def indexOf(opts: ConnectorOptions): String =
+    opts.required("index", opts.string("path"))
 
   /** Schema from `GET /{index}/_mapping` — the ES type → Spark type
     * subset of the connector's value domain. Unmapped/unsupported ES
@@ -227,12 +222,14 @@ private[sources] class EsRestTable(node: String, index: String,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val opts = new ConnectorOptions("graft-es", options)
     new EsRestScanBuilder(node, index, schema,
-      ReadOptions.positiveInt(options, "graft-es", "read-slices").getOrElse(4),
-      ReadOptions.positiveInt(options, "graft-es", "scroll-size").getOrElse(1000),
-      Option(options.get("scroll-keepalive")).getOrElse("1m"),
-      Option(options.get("incremental-column")))
+      opts.positiveInt("read-slices").getOrElse(4),
+      opts.positiveInt("scroll-size").getOrElse(1000),
+      opts.string("scroll-keepalive").getOrElse("1m"),
+      opts.column("incremental-column", schema))
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new EsRestWriteBuilder(node, index, info)
@@ -240,7 +237,7 @@ private[sources] class EsRestTable(node: String, index: String,
 
 private[sources] class EsRestScanBuilder(node: String, index: String,
     fullSchema: StructType, slices: Int, pageSize: Int, keepalive: String,
-    incrementalCol: Option[String] = None)
+    incrementalCol: Option[String])
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -266,7 +263,7 @@ private[sources] class EsRestScanBuilder(node: String, index: String,
 
 private[sources] class EsRestScan(node: String, index: String,
     required: StructType, pushed: Array[Filter], slices: Int,
-    pageSize: Int, keepalive: String, incrementalCol: Option[String] = None)
+    pageSize: Int, keepalive: String, incrementalCol: Option[String])
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -320,13 +317,9 @@ private[sources] class EsRestScan(node: String, index: String,
     * a size-0 `max` aggregation; each window still reads as sliced PIT
     * scans, the batch scan's parallelism. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    val col = incrementalCol.getOrElse(throw new IllegalArgumentException(
-      "graft-es: streaming reads need .option(\"incremental-column\", <epoch-µs long col>)"))
-    require(required.fieldNames.contains(col),
-      s"graft-es: incremental-column '$col' is not in the read schema")
     streamed = true
-    new MarkWindowStream(() => maxTs(col).getOrElse(Long.MinValue),
-      (from, to) => partitions(Some((col, from, to))), createReaderFactory())
+    MarkWindowStream.byTimestamp("graft-es", incrementalCol, maxTs,
+      partitions, createReaderFactory())
   }
 
   private def maxTs(col: String): Option[Long] = {

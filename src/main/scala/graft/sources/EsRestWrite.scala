@@ -3,7 +3,7 @@ package graft.sources
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructType}
 
 /** The `graft-es` sink: batched `_bulk` NDJSON requests — the reference's
   * actual ES write path (each document pair is `{"index":{"_index":i,
@@ -26,49 +26,38 @@ import org.apache.spark.sql.types.StructType
   * write-then-verify step the reference performs per sync round). */
 private[sources] class EsRestWriteBuilder(node: String, index: String,
     info: LogicalWriteInfo) extends WriteBuilder {
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val opts = info.options()
-      val idCol = Option(opts.get("id-column"))
-      val allowAuto = Option(opts.get("allow-auto-ids")).exists(_.toBoolean)
-      require(idCol.isDefined || allowAuto,
-        "graft-es: .option(\"id-column\", ...) is required — ids make " +
-          "retries convergent (upsert); pass allow-auto-ids=true to " +
-          "accept duplicate-on-retry semantics explicitly")
-      idCol.foreach(c => require(info.schema().fieldNames.contains(c),
-        s"graft-es: id-column '$c' is not in the written schema"))
-      // tombstone-column: rows where this boolean is true emit a bulk
-      // DELETE action instead of an index — how a sync round propagates
-      // LWW-winning tombstones to the ES side (delete of a missing doc
-      // is not_found, not an error — replays stay convergent)
-      val tombCol = Option(opts.get("tombstone-column"))
-      tombCol.foreach { c =>
-        require(info.schema().fieldNames.contains(c),
-          s"graft-es: tombstone-column '$c' is not in the written schema")
-        require(idCol.isDefined,
-          "graft-es: tombstone-column requires id-column (a delete names its _id)")
-      }
-      // version-column: each index action carries the row's own version
-      // with version_type=external_gte — ES's guard against a replayed or
-      // re-ordered relay clobbering a NEWER document (the reference writes
-      // its source timestamps as external versions for exactly this). A
-      // 409 version_conflict then means "the store already holds newer"
-      // and is a CORRECT no-op, not an error.
-      val verCol = Option(opts.get("version-column"))
-      verCol.foreach { c =>
-        require(info.schema().fieldNames.contains(c),
-          s"graft-es: version-column '$c' is not in the written schema")
-        require(info.schema()(c).dataType == org.apache.spark.sql.types.LongType,
-          s"graft-es: version-column must be bigint, got " +
-            info.schema()(c).dataType.simpleString)
-        require(idCol.isDefined,
-          "graft-es: version-column requires id-column (a version guards an _id)")
-      }
-      GraftSyncStore.checkSchema(info.schema())
-      new EsRestBatchWrite(node, index, info.schema(), idCol, tombCol, verCol,
-        Option(opts.get("bulk-size")).map(_.toInt).getOrElse(500),
-        Option(opts.get("bulk-retries")).map(_.toInt).getOrElse(3),
-        Option(opts.get("bulk-retry-wait-ms")).map(_.toLong).getOrElse(500L))
+  override def build(): Write = {
+    val schema = info.schema()
+    val opts = new ConnectorOptions("graft-es", info.options())
+    val idCol = opts.column("id-column", schema, StringType, IntegerType, LongType)
+    val allowAuto = opts.boolean("allow-auto-ids").getOrElse(false)
+    require(idCol.isDefined || allowAuto,
+      "graft-es: .option(\"id-column\", ...) is required — ids make " +
+        "retries convergent (upsert); pass allow-auto-ids=true to " +
+        "accept duplicate-on-retry semantics explicitly")
+    // tombstone-column: rows where this boolean is true emit a bulk
+    // DELETE action instead of an index — how a sync round propagates
+    // LWW-winning tombstones to the ES side (delete of a missing doc
+    // is not_found, not an error — replays stay convergent)
+    val tombCol = opts.column("tombstone-column", schema, BooleanType)
+    require(tombCol.isEmpty || idCol.isDefined,
+      "graft-es: tombstone-column requires id-column (a delete names its _id)")
+    // version-column: each index action carries the row's own version
+    // with version_type=external_gte — ES's guard against a replayed or
+    // re-ordered relay clobbering a NEWER document (the reference writes
+    // its source timestamps as external versions for exactly this). A
+    // 409 version_conflict then means "the store already holds newer"
+    // and is a CORRECT no-op, not an error.
+    val verCol = opts.column("version-column", schema, LongType)
+    require(verCol.isEmpty || idCol.isDefined,
+      "graft-es: version-column requires id-column (a version guards an _id)")
+    val bulkSize = opts.positiveInt("bulk-size").getOrElse(500)
+    val bulkRetries = opts.nonNegativeInt("bulk-retries").getOrElse(3)
+    val retryWaitMs = opts.nonNegativeLong("bulk-retry-wait-ms").getOrElse(500L)
+    GraftSyncStore.checkSchema(schema)
+    new Write {
+      override def toBatch: BatchWrite = new EsRestBatchWrite(node, index, schema,
+        idCol, tombCol, verCol, bulkSize, bulkRetries, retryWaitMs)
     }
   }
 }
@@ -97,8 +86,8 @@ private[sources] class EsRestBatchWrite(node: String, index: String,
 
 private[sources] case class EsRestWriterFactory(node: String, index: String,
     schema: StructType, idCol: Option[String], tombCol: Option[String],
-    verCol: Option[String], bulkSize: Int, bulkRetries: Int = 3,
-    retryWaitMs: Long = 500L) extends DataWriterFactory {
+    verCol: Option[String], bulkSize: Int, bulkRetries: Int,
+    retryWaitMs: Long) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new EsBulkWriter(node, index, schema, idCol, tombCol, verCol, bulkSize,
       bulkRetries, retryWaitMs)
@@ -108,8 +97,8 @@ private[sources] case class EsBulkCommit(docs: Long) extends WriterCommitMessage
 
 private[sources] class EsBulkWriter(node: String, index: String,
     schema: StructType, idCol: Option[String], tombCol: Option[String],
-    verCol: Option[String], bulkSize: Int, bulkRetries: Int = 3,
-    retryWaitMs: Long = 500L) extends DataWriter[InternalRow] {
+    verCol: Option[String], bulkSize: Int, bulkRetries: Int,
+    retryWaitMs: Long) extends DataWriter[InternalRow] {
 
   private val mapper = new ObjectMapper()
   private val fields = schema.fields
@@ -130,11 +119,9 @@ private[sources] class EsBulkWriter(node: String, index: String,
     idIdx.foreach { i =>
       require(!row.isNullAt(i), s"graft-es: null id in column '${idCol.get}'")
       idx.put("_id", fields(i).dataType match {
-        case org.apache.spark.sql.types.StringType => row.getUTF8String(i).toString
-        case org.apache.spark.sql.types.IntegerType => row.getInt(i).toString
-        case org.apache.spark.sql.types.LongType => row.getLong(i).toString
-        case other => throw new IllegalArgumentException(
-          s"graft-es: id-column must be string/int/long, got ${other.simpleString}")
+        case StringType => row.getUTF8String(i).toString
+        case IntegerType => row.getInt(i).toString
+        case LongType => row.getLong(i).toString
       })
     }
     // external_gte (not external): an equal version re-lands the SAME

@@ -62,15 +62,13 @@ class GraftSyncProvider extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     GraftSyncStore.checkSchema(schema)
-    new GraftSyncTable(
-      GraftSyncProvider.dirOf(new CaseInsensitiveStringMap(properties)), schema)
+    new GraftSyncTable(GraftSyncProvider.dirOf(properties), schema)
   }
 }
 
 private[sources] object GraftSyncProvider {
-  def dirOf(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null && p.nonEmpty, "graft-sync: a path is required")
+  def dirOf(options: util.Map[String, String]): String = {
+    val p = new ConnectorOptions("graft-sync", options).required("path")
     // strip a file: scheme if the caller went through a Hadoop-path API
     if (p.startsWith("file:")) new java.net.URI(p).getPath else p
   }
@@ -85,18 +83,19 @@ private[sources] class GraftSyncTable(dir: String, schema: StructType)
     TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
     TableCapability.TRUNCATE)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val opts = new ConnectorOptions("graft-sync", options)
     new GraftSyncScanBuilder(dir, schema,
-      ReadOptions.positiveInt(options, "graft-sync", "max-pages-per-trigger"),
-      Option(options.get("starting-offset")).getOrElse("earliest"))
+      opts.positiveInt("max-pages-per-trigger"),
+      opts.oneOf("starting-offset", "earliest", "latest").getOrElse("earliest"))
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftSyncWriteBuilder(dir, info)
 }
 
 private[sources] class GraftSyncScanBuilder(dir: String, fullSchema: StructType,
-    maxPagesPerTrigger: Option[Int] = None,
-    startingOffset: String = "earliest")
+    maxPagesPerTrigger: Option[Int], startingOffset: String)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
 
@@ -209,8 +208,8 @@ private[sources] object GraftSyncFilters {
 
 private[sources] class GraftSyncScan(dir: String, fullSchema: StructType,
     required: StructType, pushed: Array[Filter],
-    maxPagesPerTrigger: Option[Int] = None, limit: Option[Int] = None,
-    startingOffset: String = "earliest")
+    maxPagesPerTrigger: Option[Int], limit: Option[Int],
+    startingOffset: String)
     extends Scan with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -253,8 +252,6 @@ private[sources] class GraftSyncScan(dir: String, fullSchema: StructType,
     * only a FRESH query consults it, a checkpointed restart resumes from
     * its stored offset. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    require(startingOffset == "earliest" || startingOffset == "latest",
-      s"graft-sync: starting-offset must be earliest|latest, got '$startingOffset'")
     val mark = () => GraftSyncStore.mark(dir)
     new MarkWindowStream(mark, (from, to) => splits(GraftSyncStore.window(dir, from, to)),
       new GraftSyncReaderFactory(fullSchema, required, pushed),

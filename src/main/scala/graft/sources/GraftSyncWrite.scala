@@ -49,27 +49,24 @@ private[sources] class GraftSyncWriteBuilder(dir: String, info: LogicalWriteInfo
 
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
-  // bulk batch size: rows per page/request (the ES `_bulk` request-size
-  // knob). Bounded writer memory at any partition size.
-  private val bulkRows: Int =
-    Option(info.options.get("bulk-rows")).map(_.toInt).getOrElse(50000)
-
-  // Optional caller-supplied generation tag for a batch write. Without
-  // one the tag is the write's queryId — correct for independent writes
-  // but NOT replay-stable: a foreachBatch APPEND re-executed after a
-  // crash (same epoch, new queryId) would land the same rows as a second
-  // generation and double-count. A deterministic tag (e.g.
-  // "rollup-epoch-7") makes the replay SUPERSEDE the prior generation
-  // even when it shuffles into a different partition layout (AQE
-  // coalescing, changed shuffle-partition conf) and lands the same rows
-  // under DIFFERENT page names. Supersede also defines tag REUSE: two
-  // appends sharing a tag are last-write-wins by contract — one logical
-  // batch per tag, never a silent partial mix.
-  private val pageTag: Option[String] = Option(info.options.get("page-tag"))
-
   override def build(): Write = {
     GraftSyncStore.checkSchema(info.schema())
-    require(bulkRows > 0, s"graft-sync: bulk-rows must be positive, got $bulkRows")
+    val opts = new ConnectorOptions("graft-sync", info.options)
+    // bulk batch size: rows per page/request (the ES `_bulk` request-size
+    // knob). Bounded writer memory at any partition size.
+    val bulkRows = opts.positiveInt("bulk-rows").getOrElse(50000)
+    // Optional caller-supplied generation tag for a batch write. Without
+    // one the tag is the write's queryId — correct for independent writes
+    // but NOT replay-stable: a foreachBatch APPEND re-executed after a
+    // crash (same epoch, new queryId) would land the same rows as a second
+    // generation and double-count. A deterministic tag (e.g.
+    // "rollup-epoch-7") makes the replay SUPERSEDE the prior generation
+    // even when it shuffles into a different partition layout (AQE
+    // coalescing, changed shuffle-partition conf) and lands the same rows
+    // under DIFFERENT page names. Supersede also defines tag REUSE: two
+    // appends sharing a tag are last-write-wins by contract — one logical
+    // batch per tag, never a silent partial mix.
+    val pageTag = opts.string("page-tag")
     require(pageTag.forall(_.matches("[A-Za-z0-9._-]+")),
       s"graft-sync: page-tag must be a [A-Za-z0-9._-]+ token, got '${pageTag.get}'")
     // "epoch-<n>" is streaming epoch n's tag — a batch sharing it would

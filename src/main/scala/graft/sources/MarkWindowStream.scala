@@ -75,3 +75,19 @@ private[sources] class MarkWindowStream(mark: () => Long,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
+
+private[sources] object MarkWindowStream {
+  /** A wire connector's poll-by-timestamp stream over its
+    * `incremental-column` `col`: mark = `maxTs(col)` (Long.MinValue on an
+    * empty store), and each (from, to] window rides on every partition of
+    * the batch scan. A stream needs the option; a batch scan does not. */
+  def byTimestamp(connector: String, col: Option[String],
+      maxTs: String => Option[Long],
+      partitions: Option[(String, Long, Long)] => Array[InputPartition],
+      readerFactory: PartitionReaderFactory): MarkWindowStream = {
+    val c = col.getOrElse(throw new IllegalArgumentException(
+      s"$connector: incremental-column must be set for a streaming read, got ''"))
+    new MarkWindowStream(() => maxTs(c).getOrElse(Long.MinValue),
+      (from, to) => partitions(Some((c, from, to))), readerFactory)
+  }
+}

@@ -331,8 +331,8 @@ object Sync {
   private val ShingleArr = shingleArr("toks")
 
   /** 64-bit-hashed form of [[shingleArr]] — the probe-key shape shared by
-    * decontaminateStream / curateStream (and PipelineOps.shingleDf's shh
-    * column on the batch side). */
+    * decontaminateStream / curateStreamReleasable (and PipelineOps.shingleDf's
+    * shh column on the batch side). */
   private def shingleHashArr(toksCol: String): String =
     s"transform(${shingleArr(toksCol)}, x -> xxhash64(x))"
 
@@ -384,12 +384,9 @@ object Sync {
     * Corpus growth = restart against a refreshed snapshot (source offsets
     * live in the checkpoint); at 100 TB the index and shingle sets become
     * bucketed tables on their join keys so even the static shuffle is a
-    * one-time build. */
-  def lshDedupStream(docs: DataFrame, corpus: DataFrame,
-      gap: String = "10 minutes"): DataFrame =
-    lshDedupStreamReleasable(docs, corpus, gap)._1
-
-  /** [[lshDedupStream]] plus a release thunk that unpersists the two
+    * one-time build.
+    *
+    * Returns the stream and a release thunk that unpersists the two
     * static-side caches (shingle table + band index) — call it after
     * stopping the query. The restart-against-refreshed-snapshot pattern
     * otherwise accumulates one orphaned cache pair per restart unless the
@@ -453,7 +450,7 @@ object Sync {
   /** Incremental SemDeDup on an embedding change feed — the streaming
     * complement of the batch cluster-then-dedup pass (PipelineOps.j53),
     * and the third streaming dedup surface beside the shingle-LSH
-    * ([[lshDedupStream]]) and exact-hash (curateStream's first gate)
+    * ([[lshDedupStreamReleasable]]) and exact-hash (curateStreamReleasable's first gate)
     * paths: every arriving VECTOR is checked for semantic duplicates
     * against the existing corpus without a vec×vec join.
     *
@@ -472,14 +469,11 @@ object Sync {
     * keyed on the cluster id, so at 100 TB the corpus index becomes a
     * table bucketed by cluster and a batch's vectors touch only their
     * clusters' buckets. Corpus growth = restart against a refreshed
-    * snapshot (the [[lshDedupStream]] pattern); K grows with the corpus
+    * snapshot (the [[lshDedupStreamReleasable]] pattern); K grows with the corpus
     * (SemDeDup uses 50k clusters for LAION) which only shrinks the
-    * probed fraction. */
-  def semDedupStream(vecs: DataFrame, corpus: DataFrame,
-      gap: String = "10 minutes"): DataFrame =
-    semDedupStreamReleasable(vecs, corpus, gap)._1
-
-  /** [[semDedupStream]] plus a release thunk for its static-side caches
+    * probed fraction.
+    *
+    * Returns the stream and a release thunk for its static-side caches
     * (centroid frame + centroid row + clustered index) — call after
     * query.stop(). */
   def semDedupStreamReleasable(vecs: DataFrame, corpus: DataFrame,
@@ -524,7 +518,7 @@ object Sync {
       .select(col("vec_id"), col("ts"), col("cand_id"),
         round(col("cos"), 6).as("cos_sim"))
       // emission contract: one verdict per pair within the watermark
-      // (the [[lshDedupStream]] discipline)
+      // (the [[lshDedupStreamReleasable]] discipline)
       .dropDuplicatesWithinWatermark("vec_id", "cand_id")
     (out, () => { index.unpersist(); caRow.unpersist(); ca.unpersist(); () })
   }
@@ -552,23 +546,20 @@ object Sync {
     *
     * Survivors are emitted once (watermark-bounded dedup) with their gate
     * stats as provenance columns. Near-dup screening is deliberately NOT
-    * inline: it needs the collision join + verify of [[lshDedupStream]],
+    * inline: it needs the collision join + verify of [[lshDedupStreamReleasable]],
     * whose verdicts arrive per PAIR — run it alongside and feed its
     * verdicts to a quarantine/delete downstream, the usual asynchronous
     * dedup shape. Domain mixing and shuffle-sharding stay batch concerns
     * (corpus-level counts / a total order) and run at training-set
-    * export time. */
-  def curateStream(docs: DataFrame, corpus: DataFrame, evalDocs: DataFrame,
-      gap: String = "10 minutes"): DataFrame =
-    curateStreamReleasable(docs, corpus, evalDocs, gap)._1
-
-  /** [[curateStream]] plus a release thunk for its two static-side caches
+    * export time.
+    *
+    * Returns the stream and a release thunk for its two static-side caches
     * (corpus content-hash set + eval shingle array) — call after stopping
     * the query; same contract as [[lshDedupStreamReleasable]]. */
   def curateStreamReleasable(docs: DataFrame, corpus: DataFrame,
       evalDocs: DataFrame, gap: String = "10 minutes"): (DataFrame, () => Unit) = {
     // static sides: persist — stream-static joins re-execute the static
-    // plan each microbatch (same discipline as lshDedupStream)
+    // plan each microbatch (same discipline as lshDedupStreamReleasable)
     val corpusHashes = corpus
       .select(md5(col("text")).as("content_hash")).distinct().persist()
     // one-row broadcast of the eval hash set. Cost note: the per-row
@@ -655,7 +646,7 @@ object Sync {
   /** j115/j133 streaming form — the Gopher rule battery as an ingest
     * gate: arriving documents that fail any of the four rules are dropped
     * before they reach the corpus, with the per-rule flags carried as
-    * provenance columns (what [[curateStream]] does for the logit gate,
+    * provenance columns (what [[curateStreamReleasable]] does for the logit gate,
     * here for the rule battery).
     *
     * Scale shape: stateless — every rule is row-local arithmetic over the
@@ -865,15 +856,13 @@ object Sync {
     *
     * Scale shape: the replica snapshot is reduced to (key, checksum) and
     * persisted (stream-static joins re-execute the static plan per
-    * microbatch — the lshDedupStream discipline); the probe is a keyed
+    * microbatch — the lshDedupStreamReleasable discipline); the probe is a keyed
     * left join per arriving row; emission is watermark-deduped per
-    * (key, checksum) so a re-sent unchanged row reports once. */
-  def syncDiffStream(changes: DataFrame, replica: DataFrame,
-      emitInSync: Boolean = false, gap: String = "10 minutes"): DataFrame =
-    syncDiffStreamReleasable(changes, replica, emitInSync, gap)._1
-
-  /** [[syncDiffStream]] plus the static-cache release thunk (the
-    * `...Releasable` contract shared with lshDedupStream/curateStream). */
+    * (key, checksum) so a re-sent unchanged row reports once.
+    *
+    * Returns the stream and the static-cache release thunk (the
+    * `...Releasable` contract shared with lshDedupStreamReleasable and
+    * curateStreamReleasable). */
   def syncDiffStreamReleasable(changes: DataFrame, replica: DataFrame,
       emitInSync: Boolean = false, gap: String = "10 minutes")
       : (DataFrame, () => Unit) = {

@@ -220,7 +220,8 @@ class StreamingSpec extends AnyFunSuite {
       (200L, "one two three four five six seven eight nine ten")
     ).toDF("doc_id", "text")
     val mem = MemoryStream[Doc]
-    val q = Sync.lshDedupStream(mem.toDF(), corpus)
+    val (dups, release) = Sync.lshDedupStreamReleasable(mem.toDF(), corpus)
+    val q = dups
       .writeStream.format("memory").queryName("lsh_out").outputMode("append").start()
     try {
       mem.addData(
@@ -246,7 +247,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(out.map(r => (r._1, r._2)).toSeq === Seq((1L, 100L), (3L, 100L)))
       assert(out(0)._3 === 1.0)
       assert(out(1)._3 === 0.777778) // 7 shared / 9 union, rounded to 6dp
-    } finally q.stop()
+    } finally { q.stop(); release() }
   }
 
   test("streaming SemDeDup: arriving vectors probe only their cluster, once each") {
@@ -333,8 +334,9 @@ class StreamingSpec extends AnyFunSuite {
     val want = modelVerdicts(stream, corpus)
     assert(want.nonEmpty, "model produced no verdicts — test would be vacuous")
     val mem = MemoryStream[Doc]
-    val q = Sync.lshDedupStream(
+    val (dups, release) = Sync.lshDedupStreamReleasable(
       mem.toDF(), corpus.toSeq.toDF("doc_id", "text"))
+    val q = dups
       .writeStream.format("memory").queryName("lsh_model_out").outputMode("append").start()
     try {
       mem.addData(stream.toSeq.map { case (id, t) =>
@@ -344,7 +346,7 @@ class StreamingSpec extends AnyFunSuite {
         .select($"doc_id", $"cand_id", $"jaccard")
         .as[(Long, Long, Double)].collect().toSet
       assert(got === want)
-    } finally q.stop()
+    } finally { q.stop(); release() }
   }
 
   test("syncDiffStream classifies arriving changes against the replica (i13's twin)") {
@@ -383,7 +385,8 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = Seq((100L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val evalDocs = Seq((0L, "secret bench mark question answer key")).toDF("doc_id", "text")
     val mem = MemoryStream[Doc]
-    val q = Sync.curateStream(mem.toDF(), corpus, evalDocs)
+    val (clean, release) = Sync.curateStreamReleasable(mem.toDF(), corpus, evalDocs)
+    val q = clean
       .writeStream.format("memory").queryName("curate_out").outputMode("append").start()
     try {
       mem.addData(
@@ -414,7 +417,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(out.keySet === Set(2L, 5L))
       assert(out(2L) === 0.0)
       assert(out(5L) === 0.125) // 1 shared shingle of 8
-    } finally q.stop()
+    } finally { q.stop(); release() }
   }
 
   test("i6 streaming: foreachBatch LWW sink converges to newest-per-key") {
@@ -951,27 +954,29 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = Seq((100L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val evalDocs = Seq((0L, "secret bench mark question answer key")).toDF("doc_id", "text")
     val docSchema = org.apache.spark.sql.Encoders.product[Doc].schema
-    def run() = Sync.curateStream(
-      spark.readStream.schema(docSchema).parquet(src), corpus, evalDocs)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt).outputMode("append")
-      .trigger(Trigger.ProcessingTime(0)).start()
+    def run() = {
+      val (clean, release) = Sync.curateStreamReleasable(
+        spark.readStream.schema(docSchema).parquet(src), corpus, evalDocs)
+      (clean.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).outputMode("append")
+        .trigger(Trigger.ProcessingTime(0)).start(), release)
+    }
     Seq(Doc(1, "one two three four five six", ts("2024-01-01 10:00:00")))
       .toDF().write.mode("append").parquet(src)
-    val q1 = run()
-    try q1.processAllAvailable() finally q1.stop()
+    val (q1, release1) = run()
+    try q1.processAllAvailable() finally { q1.stop(); release1() }
     // "process restart": same checkpoint, new files — the re-sent copy of
     // doc 1 must be suppressed by the RESTORED watermark-dedup state, not
     // re-emitted; the fresh doc 7 flows through
     Seq(Doc(1, "one two three four five six", ts("2024-01-01 10:01:00")),
         Doc(7, "seven eight nine ten eleven twelve", ts("2024-01-01 10:01:30")))
       .toDF().write.mode("append").parquet(src)
-    val q2 = run()
+    val (q2, release2) = run()
     try {
       q2.processAllAvailable()
       val ids = spark.read.parquet(out).select($"doc_id").as[Long].collect().sorted
       assert(ids.toSeq === Seq(1L, 7L)) // doc 1 exactly once, across the restart
-    } finally q2.stop()
+    } finally { q2.stop(); release2() }
   }
 
   test("i8: sessionizer finalizes sessions only once the watermark passes their gap") {

@@ -594,6 +594,58 @@ class WireSyncSpec extends AnyFunSuite {
     }
   }
 
+  test("merge: cell — one long-running ProcessingTime loop merges two change sets on the same query") {
+    cellLoop { (cql, es, cfg, base, cqlWrite) =>
+      def esWrite(df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.format("graft-es").option("nodes", es.url).option("index", "t")
+          .option("id-column", "key").option("version-column", "ts")
+          .mode("append").save()
+      // key → (status, status stamp, val, val stamp) as each place holds it
+      type Cells = Map[Long, (String, Long, Long, Long)]
+      def cells(df: org.apache.spark.sql.DataFrame, stamp: String => String): Cells =
+        df.select($"key", $"status", col(stamp("status")), $"val", col(stamp("val")))
+          .as[(Long, String, Long, Long, Long)].collect()
+          .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
+      def esCells(): Cells = cells(spark.read.format("graft-es")
+        .option("nodes", es.url).option("index", "t").load(), c => s"${c}_wt")
+      def cqlCells(): Cells = cells(spark.read.format("graft-cql")
+        .option("host", cql.host).option("keyspace", "ks").option("table", "t")
+        .option("partition-key", "key").option("writetime-of", "status,val").load(),
+        c => s"writetime_$c")
+      def snapCells(side: String): Cells =
+        cells(spark.read.parquet(s"$base/$side"), c => s"${c}_wt")
+      def converged(want: Cells): Unit = {
+        assert(esCells() === want, "ES")
+        assert(cqlCells() === want, "C*")
+        assert(snapCells("snapA") === want && snapCells("snapB") === want, "snapshots")
+      }
+
+      val (q, _) = SyncJob.start(spark,
+        cfg.copy(interval = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)))
+      try {
+        // set 1: a new row on each side
+        cqlWrite(Seq((1L, 100L, "a", 10L)))
+        esWrite(Seq((2L, 200L, "b", 200L, 20L, 200L))
+          .toDF("key", "ts", "status", "status_wt", "val", "val_wt"))
+        q.processAllAvailable()
+        converged(Map(1L -> (("a", 100L, 10L, 100L)), 2L -> (("b", 200L, 20L, 200L))))
+
+        // set 2, same query: C* gets a newer status and ES a newer val for
+        // key 1 (disjoint cells), and ES a newer status for key 2. Partial
+        // writes name only the cells they set.
+        Seq((1L, 300L, "gold")).toDF("key", "ts", "status")
+          .write.format("graft-cql").option("host", cql.host)
+          .option("keyspace", "ks").option("table", "t")
+          .option("using-timestamp-column", "ts").mode("append").save()
+        esWrite(Seq((1L, 400L, 99L, 400L)).toDF("key", "ts", "val", "val_wt"))
+        esWrite(Seq((2L, 500L, "c", 500L)).toDF("key", "ts", "status", "status_wt"))
+        q.processAllAvailable()
+        converged(Map(1L -> (("gold", 300L, 99L, 400L)), 2L -> (("c", 500L, 20L, 200L))))
+        assert(q.isActive && q.exception.isEmpty)
+      } finally q.stop()
+    }
+  }
+
   test("merge: cell — a relay that fails mid-round leaves the snapshot uncommitted; the replay relays again") {
     cellLoop { (_, es, cfg, base, cqlWrite) =>
       def esStatus(k: Long): String =
